@@ -163,7 +163,7 @@ def main() -> None:
     # Parquet input, not .cache(): the in-memory columnar cache of the html
     # binary column scans SLOWER than a parquet file in the OS page cache
     # (measured 2.5x per-doc at 60k docs), and parquet is what production
-    # reads — same protocol as scripts/bench_scaling.py. Generation runs in
+    # reads — the same protocol as perfbench's workloads. Generation runs in
     # a SUBPROCESS JVM so the timed session's reused python workers and
     # heap never see the generator's allocation churn.
     import subprocess
@@ -218,8 +218,8 @@ def main() -> None:
     # understated steady-state ~7x in round 1; this VM additionally shows
     # BIMODAL whole-box slowdowns (identical config measured 7s and 27s an
     # hour apart — see "Single-box variance" in BENCH/BASELINE.md), so the
-    # authoritative steady-state figure is the fresh-pinned-JVM marginal
-    # rate from scripts/bench_scaling.py, not this JSON's docs_per_sec.
+    # repo's performance measure is perfbench (BENCHMARK.json), not this
+    # JSON's docs_per_sec.
     pipeline_sec, pipeline_spread = timed(
         5, lambda: force(run_pipeline(spark, pages, model=model))
     )
@@ -258,10 +258,10 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
     detail = {"detail": "per_query", "queries": timings, "spread": spreads}
-    # Noise-controlled round-over-round ratios (scripts/bench_ratio.py:
-    # prev and cur implementations interleaved in one pinned JVM) ride the
-    # sidecar when the ratio run exists — raw cross-run diffs are
-    # uninterpretable under this box's 2-4x bimodality.
+    # Noise-controlled round-over-round ratios (an earlier interleaved run
+    # of prev and cur implementations in one pinned JVM, recorded in
+    # BENCH/BASELINE.md) ride the sidecar when the ratio file exists — raw
+    # cross-run diffs are uninterpretable under this box's 2-4x bimodality.
     ratio_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         "BENCH",

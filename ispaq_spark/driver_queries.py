@@ -901,7 +901,7 @@ def q_langid_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale note: the grams x candidate-langs join is the CHECKABLE form, not
     the production form — the pipeline broadcasts the trained weight matrix
-    and scores map-only in Arrow batches (langid_udf); this query exists so
+    and scores map-only in its one Arrow stage; this query exists so
     the NB semantics have a full cross-engine value oracle.
 
     Graft slot: the per-target model join, ispaq/utils.py:558-673."""

@@ -1,4 +1,4 @@
 """Metric math as Spark stages — the graft of IRISMustangMetrics' R metric
 library (SURVEY.md §2.4/§2.6) into Catalyst column expressions (fast path)
-and Arrow-batched pandas UDFs (only where built-ins genuinely can't express
-the semantics: HTML extraction, hashed-ngram LM scoring)."""
+and one Arrow-batched pandas UDF for what built-ins genuinely can't express
+(extraction.py: HTML extraction, LM and langid scoring)."""

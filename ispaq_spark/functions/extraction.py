@@ -1,125 +1,72 @@
-"""HTML -> text extraction stage (Arrow-batched pandas UDF).
+"""The pipeline's one Arrow stage: html -> extraction + model scores.
 
 Graft slot: mergeTraces gap-fill — the cleaning step that turns raw stored
 bytes into the analyzable signal (IRISSeismic/R/Class-Stream.R:583-700,
-driven from ispaq/irisseismic.py:292-378). The byte-identical-per-url
-contract (BASELINE.json input_hint) is enforced by wrapping the *reference
-implementation itself* (ispaq_spark.reference_impl.extract_text) instead of
-re-implementing it: one code path, two callers.
+driven from ispaq/irisseismic.py:292-378) — plus the business-logic
+function that produces every metric its group owns in one call
+(ispaq/simple_metrics.py:146-239). The byte-identical-per-url contract
+(BASELINE.json input_hint) is enforced by wrapping the *reference
+implementation itself* (reference_impl.extract_text, perplexity,
+score_langid) instead of re-implementing it: one code path, two callers.
 
 This is inherently per-string work no Catalyst builtin expresses, so it is
-the sanctioned pandas-UDF slow path — Arrow-batched, never row-at-a-time.
+the sanctioned pandas-UDF slow path — Arrow-batched, never row-at-a-time,
+and crossed once per pipeline: every Python-computed column comes out of
+the same batch.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
-from ..reference_impl import extract_text
+from ..reference_impl import extract_text, perplexity, score_langid
 
-
-@F.pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    # html arrives as a Series of bytes/None (Arrow binary). map() keeps
-    # None -> None; extract_text returns None for undecodable bytes.
-    return html.map(extract_text)
-
-
-def extracted_col(html_col: str = "html") -> Column:
-    return extract_text_udf(F.col(html_col))
+# Every column the stage can produce, in output order, with its type.
+ARROW_COLUMNS = {
+    "extracted_text": "string",
+    "perplexity": "double",
+    "pred_lang": "string",
+    "lang_conf": "double",
+}
 
 
-def _langid_cols(texts: pd.Series, lid: dict) -> tuple[list, list]:
-    from ..reference_impl import score_langid as _lid_score
-
-    preds, confs = [], []
-    for t in texts:
-        if t is None:
-            preds.append(None)
-            confs.append(None)
-        else:
-            p, c = _lid_score(t, lid)
-            preds.append(p)
-            confs.append(c)
-    return preds, confs
-
-
-def fused_extract_ppl_udf(spark, model: dict[int, float], lid_model: dict):
-    """One-crossing fused stage:
-    html -> (extracted_text, perplexity, pred_lang, lang_conf).
-
-    The modular path round-trips the extracted text JVM->Python->JVM->Python
-    once per Arrow stage; fusing extraction + both model scorers cuts the
-    Arrow traffic and the Python batch count to one crossing. Calls the
-    same reference functions, so parity is unchanged.
-    """
-    from ..reference_impl import perplexity as _ppl
-
-    bcast = spark.sparkContext.broadcast(model)
-    bcast_lid = spark.sparkContext.broadcast(lid_model)
-
-    @F.pandas_udf(
-        "extracted_text string, perplexity double, "
-        "pred_lang string, lang_conf double"
-    )
-    def fused(html: pd.Series) -> pd.DataFrame:
-        m = bcast.value
-        lid = bcast_lid.value
-        texts = html.map(extract_text)
-        ppl = texts.map(lambda t: _ppl(t, m) if t is not None else None)
-        preds, confs = _langid_cols(texts, lid)
-        return pd.DataFrame(
-            {
-                "extracted_text": texts,
-                "perplexity": ppl,
-                "pred_lang": preds,
-                "lang_conf": confs,
-            }
-        )
-
-    return fused
-
-
-def fused_extract_ppl_scrub_udf(
-    spark, model: dict[int, float], lid_model: dict
+def arrow_stage_udf(
+    spark,
+    columns,
+    model: dict[int, float] | None = None,
+    lid_model: dict | None = None,
 ):
-    """html -> (extracted_text, perplexity, pred_lang, lang_conf,
-    scrubbed_text), ONE crossing.
+    """pandas UDF html -> struct of the requested ``columns`` (a subset of
+    ARROW_COLUMNS). Extraction always runs, since every score reads the
+    extracted text; the LM and the langid model are broadcast and scored
+    only when one of their columns is requested."""
+    cols = [c for c in ARROW_COLUMNS if c in columns]
+    want_ppl = "perplexity" in cols
+    want_lid = "pred_lang" in cols or "lang_conf" in cols
+    sc = spark.sparkContext
+    bcast = sc.broadcast(model) if want_ppl else None
+    bcast_lid = sc.broadcast(lid_model) if want_lid else None
 
-    Scrubbing here instead of the JVM regexp_replace chain removes five
-    java.util.regex passes (Matcher + string copy per rule per row) from
-    the shared-heap hot path — measured as the 32-thread scaling
-    bottleneck (BENCH/BASELINE.md 600k analysis): python workers are
-    separate processes with isolated heaps, so the regex allocation churn
-    stops serializing on the driver JVM's young-gen GC. Same
-    reference_impl.scrub_text chain, so bytes are identical."""
-    from ..reference_impl import perplexity as _ppl, scrub_text as _scrub
-
-    bcast = spark.sparkContext.broadcast(model)
-    bcast_lid = spark.sparkContext.broadcast(lid_model)
-
-    @F.pandas_udf(
-        "extracted_text string, perplexity double, "
-        "pred_lang string, lang_conf double, scrubbed_text string"
-    )
-    def fused(html: pd.Series) -> pd.DataFrame:
-        m = bcast.value
-        lid = bcast_lid.value
+    @F.pandas_udf(", ".join(f"{c} {ARROW_COLUMNS[c]}" for c in cols))
+    def stage(html: pd.Series) -> pd.DataFrame:
+        # html arrives as a Series of bytes/None (Arrow binary); extract_text
+        # returns None for undecodable bytes and every score keeps None.
         texts = html.map(extract_text)
-        ppl = texts.map(lambda t: _ppl(t, m) if t is not None else None)
-        preds, confs = _langid_cols(texts, lid)
-        scrubbed = texts.map(lambda t: _scrub(t) if t is not None else None)
-        return pd.DataFrame(
-            {
-                "extracted_text": texts,
-                "perplexity": ppl,
-                "pred_lang": preds,
-                "lang_conf": confs,
-                "scrubbed_text": scrubbed,
-            }
-        )
+        out = {"extracted_text": texts}
+        if want_ppl:
+            m = bcast.value  # unpickled once per Python worker
+            out["perplexity"] = texts.map(
+                lambda t: perplexity(t, m) if t is not None else None
+            )
+        if want_lid:
+            lid = bcast_lid.value
+            scored = [
+                score_langid(t, lid) if t is not None else (None, None)
+                for t in texts
+            ]
+            out["pred_lang"] = [p for p, _ in scored]
+            out["lang_conf"] = [c for _, c in scored]
+        return pd.DataFrame({c: out[c] for c in cols})
 
-    return fused
+    return stage

@@ -1,5 +1,5 @@
-"""fastText-capability language ID: distributed NB training + broadcast
-Arrow scoring.
+"""fastText-capability language ID: distributed NB training; broadcast
+Arrow scoring runs in the pipeline's one Arrow stage.
 
 Graft slot: the per-target evalresp model source (ispaq/utils.py:558-673,
 ispaq/evalresp.py:26-238) — an auxiliary model computed once, broadcast,
@@ -8,8 +8,9 @@ lid.176 via pandas/Arrow UDF batches"; the fasttext library is absent from
 this container, so the capability is rebuilt with the same architecture:
 hashed char-n-gram bag -> linear per-language scores -> softmax posterior
 (contract LANGID_*). One scorer function (reference_impl.score_langid) is
-called by BOTH the reference labeler and the pandas UDF here — float parity
-by construction, the same one-code-path discipline as the perplexity stage.
+called by BOTH the reference labeler and the pipeline's one Arrow stage
+(functions/extraction.py) — float parity by construction, the same
+one-code-path discipline as the perplexity scorer.
 
 Scale posture: training is a map-side partial bag-of-buckets reduction
 (mapInPandas emitting per-batch dense count matrices, ~L x 4096 ints per
@@ -25,15 +26,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..contract import LANGID_BUCKETS
-from ..reference_impl import (
-    langid_bucket_counts,
-    langid_model_from_counts,
-    score_langid as _score_langid,
-)
+from ..reference_impl import langid_bucket_counts, langid_model_from_counts
 
 
 def train_langid_distributed(
@@ -108,26 +105,3 @@ def train_langid_distributed(
         else:
             docs[idx[r["lang"]]] = r["docs"]
     return langid_model_from_counts(langs, counts, docs)
-
-
-def langid_udf(spark: SparkSession, lid_model: dict):
-    """pandas UDF: text -> struct<pred_lang string, lang_conf double>,
-    scoring with the broadcast model via the shared reference scorer."""
-    bcast = spark.sparkContext.broadcast(lid_model)
-
-    @F.pandas_udf("pred_lang string, lang_conf double")
-    def lid(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        m = bcast.value  # unpickled once per Python worker
-        for s in texts:
-            preds, confs = [], []
-            for t in s:
-                if t is None:
-                    preds.append(None)
-                    confs.append(None)
-                else:
-                    p, c = _score_langid(t, m)
-                    preds.append(p)
-                    confs.append(c)
-            yield pd.DataFrame({"pred_lang": preds, "lang_conf": confs})
-
-    return lid

@@ -1,32 +1,24 @@
-"""Hashed n-gram LM: distributed training + broadcast scoring.
+"""Hashed n-gram LM: distributed training.
 
 Graft slot: the evalresp per-target model (ispaq/utils.py:558-673,
 ispaq/evalresp.py:26-238) — an auxiliary model table computed once, then
 joined against every unit of work. Here: a KenLM-style stupid-backoff
 n-gram table (contract: FNV-1a-hashed "k|gram" keys -> counts), trained
 distributedly with explode + groupBy (map-side partial aggregation), then
-``sparkContext.broadcast`` to executors where an Arrow-batched pandas UDF
-scores each document with the SAME scorer the reference labeler uses
-(reference_impl.score_logprob) — one code path, exact parity.
-
-Broadcast lifecycle (SURVEY.md §4 custom item 2): the model dict rides the
-broadcast variable; each Python worker unpickles it once and every UDF batch
-reuses it.
+``sparkContext.broadcast`` to executors where the pipeline's one Arrow
+stage (functions/extraction.py) scores each document with the SAME scorer
+the reference labeler uses (reference_impl.score_logprob) — one code path,
+exact parity.
 """
 
 from __future__ import annotations
 
-import math
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from ..contract import LM_MIN_COUNT, LM_ORDER, ngram_hash
 from ..operators.dedup import shingles_of
-from ..reference_impl import TOTAL_UNIGRAMS_KEY, perplexity as _ref_perplexity
+from ..reference_impl import TOTAL_UNIGRAMS_KEY
 
 
 def kgrams_col(toks: Column, order: int = LM_ORDER) -> Column:
@@ -98,18 +90,3 @@ def train_lm_distributed(
         model[h] = model.get(h, 0.0) + float(row["count"])
     model[TOTAL_UNIGRAMS_KEY] = float(total1)
     return model
-
-
-def perplexity_udf(spark: SparkSession, model: dict[int, float]):
-    """Returns a pandas UDF scoring perplexity with the broadcast model."""
-    bcast = spark.sparkContext.broadcast(model)
-
-    @F.pandas_udf(DoubleType())
-    def ppl(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        m = bcast.value  # unpickled once per Python worker
-        for s in texts:
-            yield s.map(
-                lambda t: _ref_perplexity(t, m) if t is not None else None
-            )
-
-    return ppl

@@ -1,26 +1,21 @@
-"""PII + toxicity scrub stage — two interchangeable implementations.
+"""PII + toxicity scrub stage.
 
 Graft slot: the deterministic output-formatting contract of the reference's
 sinks (sigfig formatting ispaq/utils.py:364-370 — the 'output bytes are part
 of the spec' discipline), applied here to text: the scrubbed output must be
 byte-identical to the reference chain (contract.SCRUB_RULES, in order).
 
-Fast path: chained JVM ``regexp_replace`` — whole-stage codegen, no Python.
-Fallback: pandas UDF running the *same* compiled-regex chain as
-reference_impl.scrub_text. tests/test_scrub.py proves the two paths and the
-reference agree byte-for-byte on the fixture corpus; the pipeline defaults
-to the JVM path.
+One implementation: chained JVM ``regexp_replace`` — whole-stage codegen,
+no Python. tests/test_scrub.py proves it equals
+reference_impl.scrub_text byte-for-byte on the fixture corpus.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from ..contract import SCRUB_RULES
-from ..reference_impl import scrub_text
 
 
 def scrub_sql(text: Column) -> Column:
@@ -31,14 +26,5 @@ def scrub_sql(text: Column) -> Column:
     return out
 
 
-@F.pandas_udf(StringType())
-def scrub_pandas_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: scrub_text(t) if t is not None else None)
-
-
-def scrubbed_col(text_col: str, impl: str = "sql") -> Column:
-    if impl == "sql":
-        return scrub_sql(F.col(text_col))
-    if impl == "pandas":
-        return scrub_pandas_udf(F.col(text_col))
-    raise ValueError(f"unknown scrub impl: {impl!r}")
+def scrubbed_col(text_col: str) -> Column:
+    return scrub_sql(F.col(text_col))

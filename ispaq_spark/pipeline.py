@@ -5,9 +5,9 @@ Graft of ispaq's execute path (ispaq/ispaq.py:443-466 ->
 simple_metrics.py:83-258: day loop -> per-target fetch -> per-function rpy2
 calls -> concat -> sink) as ONE declarative DataFrame plan: Catalyst fuses
 every SQL metric set into the same WholeStageCodegen pass over the scan, and
-the two Arrow stages (extraction, perplexity) batch through the JVM<->Python
-boundary. There is no day loop — `ds` is a partition column and Spark
-parallelizes across all days and documents at once.
+the one Arrow stage (extraction, perplexity, langid) batches through the
+JVM<->Python boundary. There is no day loop — `ds` is a partition column
+and Spark parallelizes across all days and documents at once.
 
 Scale posture (north rule): optional salting repartition for skewed domains
 *before* the metric stages, AQE enabled in the session, model broadcast,
@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry import PipelineContext, resolve
+from .registry import PipelineContext, apply_columns, resolve
 from .schemas import DOC_METRICS
 
 
@@ -40,23 +40,20 @@ def run_pipeline(
     metric_sets: tuple[str, ...] | str = "default",
     model: dict | None = None,
     lid_model: dict | None = None,
-    scrub_impl: str = "sql",
     salt_buckets: int | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> DOC_METRICS-shaped DataFrame."""
-    ctx = PipelineContext(
-        spark=spark, model=model, lid_model=lid_model, scrub_impl=scrub_impl
-    )
+    ctx = PipelineContext(spark=spark, model=model, lid_model=lid_model)
 
     df = pages.withColumn("ds", F.date_format("warc_ts", "yyyy-MM-dd"))
     if salt_buckets:
         df = salt_repartition(df, salt_buckets)
 
-    sets = resolve(metric_sets)
-    for ms in sets:
-        df = ms.apply(df, ctx)
+    # The union of the requested columns, computed once: one Arrow stage
+    # however many sets ask for Python-computed columns.
+    produced = {c for ms in resolve(metric_sets) for c in ms.columns}
+    df = apply_columns(df, ctx, produced)
 
-    produced = {c for ms in sets for c in ms.columns}
     # Quarantine: extraction failure carries qualityFlag=-9 and flows to the
     # sink (ispaq/simple_metrics.py:128-140 — never fail the job for one row).
     if "extracted_text" in produced:

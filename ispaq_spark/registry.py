@@ -4,36 +4,39 @@ Graft of ispaq's metric-alias machinery: preference-file aliases resolve to
 concrete metric lists (ispaq/user_request.py:283-302), and the R catalog
 ``getMetricFunctionMetadata()`` maps business-logic groups -> functions ->
 metrics (IRISMustangMetrics/R/ISPAQUtils.R:30-301, inverted to
-``function_by_logic`` at user_request.py:470-488). Here each MetricSet
-declares the columns it produces, its execution kind (pure Catalyst SQL vs
-Arrow UDF), and its dependencies; the pipeline topologically folds the
-requested sets, so unrequested metric columns are simply never computed
-(the wide-layout version of ispaq's metricName filter,
+``function_by_logic`` at user_request.py:470-488). Here each MetricSet is a
+named column request plus the columns it consumes; resolution pulls in a
+provider for every missing dependency, and the pipeline computes the union
+of the requested columns once: every Python-computed column in one Arrow
+stage, the rest as Catalyst expressions. Unrequested metric columns are
+never computed (the wide-layout version of ispaq's metricName filter,
 ispaq/simple_metrics.py:247-256).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Callable
+from collections.abc import Collection
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-
 from pyspark.sql import functions as F
+
+from .functions.extraction import ARROW_COLUMNS, arrow_stage_udf
+from .functions.heuristics import keep_expr, with_heuristics
+from .functions.scrub import scrubbed_col
 
 
 @dataclass(frozen=True)
 class MetricSet:
     name: str
-    kind: str  # 'sql' (WholeStageCodegen) | 'arrow' (pandas UDF batches)
     columns: tuple[str, ...]
     # COLUMN names this set consumes; resolution pulls a provider set for any
     # column not yet present (input columns count as present).
     requires: tuple[str, ...] = ()
-    # apply(df, ctx) -> df with `columns` appended. ctx: PipelineContext.
-    apply: Callable[[DataFrame, "PipelineContext"], DataFrame] = field(
-        default=None, repr=False
-    )
+
+    def apply(self, df: DataFrame, ctx: "PipelineContext") -> DataFrame:
+        """``df`` with this set's columns appended."""
+        return apply_columns(df, ctx, self.columns)
 
 
 @dataclass
@@ -41,107 +44,18 @@ class PipelineContext:
     spark: object
     model: dict | None = None
     lid_model: dict | None = None
-    scrub_impl: str = "sql"
-    text_col: str = "extracted_text"
 
-    def ensure_models(self) -> None:
-        if self.model is None:
+    def ensure_models(self, columns: Collection[str]) -> None:
+        """Build the default model of each requested score the caller did
+        not supply; a request without scores builds none."""
+        if "perplexity" in columns and self.model is None:
             from .synthesize import default_model
 
             self.model = default_model()
-        if self.lid_model is None:
+        if {"pred_lang", "lang_conf"} & set(columns) and self.lid_model is None:
             from .synthesize import default_lid_model
 
             self.lid_model = default_lid_model()
-
-
-def _extraction(df: DataFrame, ctx: PipelineContext) -> DataFrame:
-    from .functions.extraction import extracted_col
-
-    return df.withColumn("extracted_text", extracted_col("html"))
-
-
-def _heuristics(df: DataFrame, ctx: PipelineContext) -> DataFrame:
-    from .functions.heuristics import with_heuristics
-
-    return with_heuristics(df, ctx.text_col)
-
-
-def _perplexity(df: DataFrame, ctx: PipelineContext) -> DataFrame:
-    from .functions.perplexity import perplexity_udf
-
-    ctx.ensure_models()
-    udf = perplexity_udf(ctx.spark, ctx.model)
-    return df.withColumn("perplexity", udf(F.col(ctx.text_col)))
-
-
-def _langid(df: DataFrame, ctx: PipelineContext) -> DataFrame:
-    """fastText-capability language ID (functions/langid.py): broadcast NB
-    model, Arrow-batched scoring, map-only."""
-    from .functions.langid import langid_udf
-
-    ctx.ensure_models()
-    udf = langid_udf(ctx.spark, ctx.lid_model)
-    df = df.withColumn("_lid", udf(F.col(ctx.text_col)))
-    return (
-        df.withColumn("pred_lang", F.col("_lid.pred_lang"))
-        .withColumn("lang_conf", F.col("_lid.lang_conf"))
-        .drop("_lid")
-    )
-
-
-def _scrub(df: DataFrame, ctx: PipelineContext) -> DataFrame:
-    from .functions.scrub import scrubbed_col
-
-    return df.withColumn(
-        "scrubbed_text", scrubbed_col(ctx.text_col, ctx.scrub_impl)
-    )
-
-
-def _decision(df: DataFrame, ctx: PipelineContext) -> DataFrame:
-    from .functions.heuristics import keep_expr
-
-    return df.withColumn("keep", keep_expr())
-
-
-def _extract_ppl_scrub(df: DataFrame, ctx: PipelineContext) -> DataFrame:
-    """Fully-fused Arrow stage: extraction + perplexity + langid + scrub in
-    ONE JVM<->Python crossing (functions/extraction.py
-    fused_extract_ppl_scrub_udf); keeps the five scrub regex passes off the
-    shared JVM heap."""
-    from .functions.extraction import fused_extract_ppl_scrub_udf
-
-    ctx.ensure_models()
-    udf = fused_extract_ppl_scrub_udf(ctx.spark, ctx.model, ctx.lid_model)
-    df = df.withColumn("_eps", udf(F.col("html")))
-    return (
-        df.withColumn("extracted_text", F.col("_eps.extracted_text"))
-        .withColumn("perplexity", F.col("_eps.perplexity"))
-        .withColumn("pred_lang", F.col("_eps.pred_lang"))
-        .withColumn("lang_conf", F.col("_eps.lang_conf"))
-        .withColumn("scrubbed_text", F.col("_eps.scrubbed_text"))
-        .drop("_eps")
-    )
-
-
-def _extract_ppl(df: DataFrame, ctx: PipelineContext) -> DataFrame:
-    """Fused Arrow stage: ONE JVM<->Python crossing computes extraction AND
-    perplexity (the modular path ships the extracted text back to the JVM
-    only to ship it to Python again for scoring — the dominant overhead at
-    scale, the analog of the reference's repeated rpy2 crossings per metric
-    group, ispaq/irismustangmetrics.py:56-93)."""
-    from .functions.extraction import fused_extract_ppl_udf
-
-    ctx.ensure_models()
-    udf = fused_extract_ppl_udf(ctx.spark, ctx.model, ctx.lid_model)
-    df = df.withColumn("_ep", udf(F.col("html")))
-    return (
-        df.withColumn("extracted_text", F.col("_ep.extracted_text"))
-        .withColumn("perplexity", F.col("_ep.perplexity"))
-        .withColumn("pred_lang", F.col("_ep.pred_lang"))
-        .withColumn("lang_conf", F.col("_ep.lang_conf"))
-        .drop("_ep")
-    )
 
 
 _HEUR_COLS = (
@@ -155,62 +69,47 @@ _HEUR_COLS = (
     "num_tox",
 )
 
+
+def apply_columns(
+    df: DataFrame, ctx: PipelineContext, columns: Collection[str]
+) -> DataFrame:
+    """Append ``columns`` to ``df``: every Arrow column from ONE Python
+    crossing over ``html`` (functions/extraction.py), then the Catalyst
+    stages in dependency order — heuristics, the JVM scrub, the decision."""
+    arrow = [c for c in ARROW_COLUMNS if c in columns]
+    if arrow:
+        ctx.ensure_models(arrow)
+        udf = arrow_stage_udf(ctx.spark, arrow, ctx.model, ctx.lid_model)
+        df = df.withColumn("_arrow", udf(F.col("html")))
+        df = df.withColumns({c: F.col(f"_arrow.{c}") for c in arrow})
+        df = df.drop("_arrow")
+    if any(c in columns for c in _HEUR_COLS):
+        df = with_heuristics(df, "extracted_text")
+    if "scrubbed_text" in columns:
+        df = df.withColumn("scrubbed_text", scrubbed_col("extracted_text"))
+    if "keep" in columns:
+        df = df.withColumn("keep", keep_expr())
+    return df
+
+
+_SCORES = tuple(ARROW_COLUMNS)
+
 REGISTRY: dict[str, MetricSet] = {
     m.name: m
     for m in (
-        MetricSet("extraction", "arrow", ("extracted_text",), (), _extraction),
-        MetricSet(
-            "extract_ppl",
-            "arrow",
-            ("extracted_text", "perplexity", "pred_lang", "lang_conf"),
-            (),
-            _extract_ppl,
-        ),
-        MetricSet(
-            "extract_ppl_scrub",
-            "arrow",
-            (
-                "extracted_text",
-                "perplexity",
-                "pred_lang",
-                "lang_conf",
-                "scrubbed_text",
-            ),
-            (),
-            _extract_ppl_scrub,
-        ),
-        MetricSet(
-            "heuristics", "sql", _HEUR_COLS, ("extracted_text",), _heuristics
-        ),
-        MetricSet(
-            "perplexity",
-            "arrow",
-            ("perplexity",),
-            ("extracted_text",),
-            _perplexity,
-        ),
-        MetricSet(
-            "langid",
-            "arrow",
-            ("pred_lang", "lang_conf"),
-            ("extracted_text",),
-            _langid,
-        ),
-        MetricSet(
-            "scrub", "sql", ("scrubbed_text",), ("extracted_text",), _scrub
-        ),
-        MetricSet(
-            "decision",
-            "sql",
-            ("keep",),
-            _HEUR_COLS + ("perplexity", "lang_conf"),
-            _decision,
-        ),
+        MetricSet("extraction", ("extracted_text",)),
+        MetricSet("extract_ppl", _SCORES),
+        # The scrub is the JVM regexp_replace chain whichever set asks.
+        MetricSet("extract_ppl_scrub", _SCORES + ("scrubbed_text",)),
+        MetricSet("heuristics", _HEUR_COLS, ("extracted_text",)),
+        MetricSet("perplexity", ("perplexity",), ("extracted_text",)),
+        MetricSet("langid", ("pred_lang", "lang_conf"), ("extracted_text",)),
+        MetricSet("scrub", ("scrubbed_text",), ("extracted_text",)),
+        MetricSet("decision", ("keep",), _HEUR_COLS + ("perplexity", "lang_conf")),
     )
 }
 
-# Default provider per column (modular stages; the fused stage is opted into
-# via aliases).
+# Default provider per column.
 DEFAULT_PROVIDER: dict[str, str] = {
     "extracted_text": "extraction",
     "perplexity": "perplexity",
@@ -226,13 +125,9 @@ DEFAULT_PROVIDER: dict[str, str] = {
 INPUT_COLS = frozenset({"url", "warc_ts", "html", "text", "lang", "ds"})
 
 # Preference-file-style aliases (ispaq/preference_files/default.txt Metrics
-# section analog). `default` uses the fused Arrow stage (one Python
-# crossing); `modular` keeps each stage separate.
+# section analog). Every alias plans one Arrow stage; `default`,
+# `fusedScrub` and `modular` request the same columns, so the same plan.
 ALIASES: dict[str, tuple[str, ...]] = {
-    # default: fused extract+ppl Arrow stage, JVM regexp_replace scrub.
-    # With ParallelGC the JVM scrub chain beats Python re by ~4x at bench
-    # shape; the fully-fused python-scrub variant stays available below
-    # (it wins only when JVM GC is the binding constraint).
     "default": ("extract_ppl", "heuristics", "scrub", "decision"),
     "fusedScrub": ("extract_ppl_scrub", "heuristics", "decision"),
     "modular": ("extraction", "heuristics", "perplexity", "scrub", "decision"),
@@ -244,7 +139,7 @@ ALIASES: dict[str, tuple[str, ...]] = {
 def resolve(names: tuple[str, ...] | str) -> list[MetricSet]:
     """Alias/name list -> ordered unique MetricSet list with column-level
     dependency resolution (a required column already provided by an earlier
-    set — e.g. perplexity from the fused stage — pulls no extra provider)."""
+    set — e.g. perplexity from extract_ppl — pulls no extra provider)."""
     if isinstance(names, str):
         names = (names,)
     # expand aliases per-name so ("default",) from a parsed request behaves

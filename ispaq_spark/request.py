@@ -16,7 +16,6 @@ validation :283-302; start/end semantics :389-409; preference defaults
       output: /data/metrics
     Preferences:
       salt_buckets: 256
-      scrub_impl: sql
 
 Section headers end with ':'; entries are 'name: v1, v2'; '#' starts a
 comment; Metrics/Targets are multi-valued, Data_Access/Preferences single-
@@ -24,7 +23,11 @@ valued — the exact rules of user_request.py:197-239.
 
 Resolution mirrors the reference: a requested metric alias is looked up in
 the file's Metrics section, else treated as a comma-separated list of
-concrete set/column names (user_request.py:283-289); a requested target
+concrete set/column names (user_request.py:283-289). Every set name is a
+request for columns; the pipeline computes the union of the requested
+columns with one Arrow stage (extraction, perplexity, langid) and Catalyst
+for the rest, so `default` (extract_ppl, heuristics, scrub, decision),
+`modular` and `fusedScrub` name the same plan. A requested target
 alias is looked up in Targets, else accepted as a literal URL glob when it
 looks like one, else rejected (:291-302, the SNCL-regex best-guess).
 Unknown metric names fail loudly with the valid vocabulary listed.
@@ -241,6 +244,7 @@ def run_request(
     pages: DataFrame | None = None,
     model: dict | None = None,
     resumable: bool = True,
+    lid_model: dict | None = None,
 ):
     """Execute a request end-to-end: read -> select -> pipeline -> sink.
 
@@ -267,11 +271,12 @@ def run_request(
             req.output_path,
             model=model,
             metric_sets=req.metric_sets,
+            lid_model=lid_model,
         )
     return run_pipeline(
         spark,
         pages,
         metric_sets=req.metric_sets,
         model=model,
-        scrub_impl=req.preferences.get("scrub_impl", "sql"),
+        lid_model=lid_model,
     )

@@ -15,6 +15,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """A quarter of physical RAM. ParallelGC grows the heap toward its cap
+    rather than collecting early, so a cap above what the machine has gets
+    the JVM killed by the kernel instead of collected."""
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{ram_mb // 4}m"
+
+
 def get_spark(
     app_name: str = "ispaq_spark",
     master: str | None = None,
@@ -41,7 +49,9 @@ def get_spark(
         # Local mode runs all executor threads inside the driver JVM; the
         # default 1g heap makes GC the scaling bottleneck at 32 threads.
         # (On a real cluster spark-submit owns these.)
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.memory": os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()
+        ),
         # Throughput collector: this is a batch engine — pause times don't
         # matter, reclaim rate does. At 32 executor threads the regex/array
         # allocation churn made G1 the scaling bottleneck (600k-doc leg:

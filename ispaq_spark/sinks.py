@@ -159,6 +159,7 @@ def run_resumable(
     model: dict | None = None,
     metric_sets="default",
     sink: MetricSink | None = None,
+    lid_model: dict | None = None,
 ) -> dict:
     """Compute + sink only the stale day partitions; returns a report
     {'computed': [...], 'skipped': [...]}. Drives any MetricSink backend
@@ -181,7 +182,7 @@ def run_resumable(
         subset = pages.where(
             F.date_format("warc_ts", "yyyy-MM-dd").isin(stale)
         )
-        sink.merge(run_pipeline(spark, subset, metric_sets, model))
+        sink.merge(run_pipeline(spark, subset, metric_sets, model, lid_model))
         sink.commit_snapshot({**seen, **fps})
     return {
         "computed": stale,

@@ -27,6 +27,17 @@ def model():
 
 
 @pytest.fixture(scope="session")
+def zz_lid_model():
+    """A langid model that knows only 'zz': it predicts 'zz' with
+    confidence 1.0 for every document with any character n-gram, so a
+    pred_lang of 'zz' shows which model scored a row."""
+    from ispaq_spark.reference_impl import train_langid
+    from ispaq_spark.synthesize import langid_corpus
+
+    return train_langid([("zz", text) for _, text in langid_corpus(30)])
+
+
+@pytest.fixture(scope="session")
 def fixture_pages(spark):
     """400 deterministic pages, cached for the whole session."""
     from ispaq_spark.synthesize import pages_df

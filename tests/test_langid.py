@@ -1,6 +1,6 @@
 """fastText-capability langid: distributed trainer parity, held-out
 accuracy gates (>=5 languages + 'und'), scorer float parity through the
-pandas UDF, and the lang_conf / stopword_ratio decoupling."""
+pipeline's Arrow stage, and the lang_conf / stopword_ratio decoupling."""
 
 from __future__ import annotations
 
@@ -8,8 +8,9 @@ import numpy as np
 import pytest
 
 from ispaq_spark.contract import LANGID_UND_CONF, LANGS, UNKNOWN_LANG
-from ispaq_spark.functions.langid import langid_udf, train_langid_distributed
-from ispaq_spark.reference_impl import score_langid, train_langid
+from ispaq_spark.functions.extraction import arrow_stage_udf
+from ispaq_spark.functions.langid import train_langid_distributed
+from ispaq_spark.reference_impl import extract_text, score_langid, train_langid
 from ispaq_spark.synthesize import default_lid_model, langid_corpus
 
 from pyspark.sql import functions as F
@@ -55,21 +56,24 @@ def test_confidence_band_margin():
 
 
 def test_udf_float_parity(spark):
+    """The pipeline's Arrow stage scores langid with the reference scorer:
+    exact IEEE equality on the extracted text, NULL html -> (None, None)."""
     lid = default_lid_model()
-    docs = [(i, text) for i, (_, text) in enumerate(langid_corpus(80))]
-    docs.append((len(docs), "zzqx wqvk pfgt"))
-    docs.append((len(docs), None))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    udf = langid_udf(spark, lid)
+    texts = [text for _, text in langid_corpus(80)] + ["zzqx wqvk pfgt", None]
+    docs = [
+        (i, None if t is None else t.encode("utf-8")) for i, t in enumerate(texts)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, html binary")
+    udf = arrow_stage_udf(spark, ("pred_lang", "lang_conf"), lid_model=lid)
     got = {
         r["doc_id"]: (r["out"]["pred_lang"], r["out"]["lang_conf"])
-        for r in df.select("doc_id", udf(F.col("text")).alias("out")).collect()
+        for r in df.select("doc_id", udf(F.col("html")).alias("out")).collect()
     }
-    for i, text in docs:
-        if text is None:
+    for i, html in docs:
+        if html is None:
             assert got[i] == (None, None)
         else:
-            pred, conf = score_langid(text, lid)
+            pred, conf = score_langid(extract_text(html), lid)
             assert got[i][0] == pred
             assert got[i][1] == conf  # exact IEEE equality, same code path
 

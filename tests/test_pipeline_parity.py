@@ -93,3 +93,50 @@ def test_salted_run_same_result(spark, fixture_pages, model, pipeline_rows):
     for url, r in rows.items():
         assert bool(r["keep"]) == bool(pipeline_rows[url]["keep"])
         assert r["scrubbed_text"] == pipeline_rows[url]["scrubbed_text"]
+
+
+PARITY_ALIASES = ("default", "modular", "fusedScrub", "heuristicsOnly", "scrubOnly")
+
+# Output column -> its field in the fixture labels (label_document's tuple).
+_LABEL_FIELDS = {
+    "extracted_text": "text",
+    "scrubbed_text": "scrubbed_text",
+    "keep": "keep",
+    "quality_flag": "quality_flag",
+}
+
+
+@pytest.fixture(scope="module")
+def reference_metrics(fixture_labels, model):
+    """compute_metrics for every extractable fixture doc: the metric values
+    label_document decides keep on."""
+    from ispaq_spark.reference_impl import compute_metrics
+
+    return {
+        url: compute_metrics(lab["text"], model)
+        for url, lab in fixture_labels.items()
+        if lab["text"] is not None
+    }
+
+
+@pytest.mark.parametrize("alias", PARITY_ALIASES)
+def test_alias_columns_match_reference(
+    spark, fixture_pages, model, fixture_labels, reference_metrics, alias
+):
+    """Every column each alias produces equals the reference labeler's
+    value exactly; quarantined rows carry NULL metrics."""
+    rows = {
+        r["url"]: r.asDict()
+        for r in run_pipeline(spark, fixture_pages, alias, model).collect()
+    }
+    assert set(rows) == set(fixture_labels)
+    produced = set(next(iter(rows.values()))) - {"url", "ds"}
+    assert {"extracted_text", "quality_flag"} <= produced
+    for url, lab in fixture_labels.items():
+        m = reference_metrics.get(url)
+        for c in produced:
+            if c in _LABEL_FIELDS:
+                want = lab[_LABEL_FIELDS[c]]
+            else:
+                want = None if m is None else getattr(m, c)
+            assert rows[url][c] == want, (alias, url, c)

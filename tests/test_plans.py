@@ -8,6 +8,7 @@ refactors; these do.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ispaq_spark import driver_queries as dq
@@ -83,6 +84,45 @@ def test_pipeline_python_is_arrow_only(spark):
     plan = plan_of(out)
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+
+
+# Registry aliases, registry set names and the preference file's own
+# Metrics aliases: every request the library accepts.
+_REQUESTS = (
+    "default", "modular", "fusedScrub", "heuristicsOnly", "scrubOnly",
+    "extraction", "perplexity", "langid", "extract_ppl", "extract_ppl_scrub",
+    "langOnly", "customStats",
+)
+
+
+@pytest.mark.parametrize("request_name", _REQUESTS)
+def test_every_request_plans_one_arrow_stage(spark, request_name):
+    """However many sets a request names, its Python work crosses the
+    JVM<->Python boundary exactly once."""
+    from ispaq_spark.pipeline import run_pipeline
+    from ispaq_spark.request import build_request
+    from ispaq_spark.synthesize import default_lid_model, default_model, pages_df
+
+    req = build_request("preference_files/default.txt", metrics=request_name)
+    out = run_pipeline(spark, pages_df(spark, 20), req.metric_sets,
+                       default_model(), default_lid_model())
+    assert plan_of(out).count("ArrowEvalPython") == 1, request_name
+
+
+def test_heuristics_only_builds_no_model(spark, monkeypatch):
+    """A request without scores never builds the LM or the langid model."""
+    import ispaq_spark.synthesize as synth
+    from ispaq_spark.pipeline import run_pipeline
+
+    def refuse():
+        raise AssertionError("model built for a request without scores")
+
+    pages = synth.pages_df(spark, 20)
+    monkeypatch.setattr(synth, "default_model", refuse)
+    monkeypatch.setattr(synth, "default_lid_model", refuse)
+    out = run_pipeline(spark, pages, "heuristicsOnly")
+    assert out.count() == 20
+    assert "perplexity" not in out.columns and "pred_lang" not in out.columns
 
 
 def test_heuristics_all_jvm(spark):

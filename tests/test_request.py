@@ -133,3 +133,20 @@ def test_run_request_without_sink_returns_df(spark):
     df = run_request(spark, req, pages=pages, model=default_model())
     assert df.count() == 60
     assert "word_count" in df.columns and "keep" not in df.columns
+
+
+@pytest.mark.parametrize("resumable", [True, False])
+def test_run_request_threads_lid_model(spark, tmp_path, zz_lid_model, resumable):
+    """The resumable and the direct path take the same model arguments:
+    the caller's langid model decides pred_lang in both."""
+    from pyspark.sql import functions as F
+
+    req = build_request(PREFS, metrics="langOnly",
+                        output_path=str(tmp_path / "metrics"))
+    got = run_request(spark, req, pages=pages_df(spark, 40),
+                      resumable=resumable, lid_model=zz_lid_model)
+    if resumable:
+        got = spark.read.parquet(req.output_path)
+    langs = {r["pred_lang"] for r in got.where(
+        F.col("extracted_text").isNotNull()).select("pred_lang").distinct().collect()}
+    assert langs == {"zz"}

@@ -125,3 +125,16 @@ def test_run_resumable_drives_any_sink(spark):
     r3 = run_resumable(spark, pages, model=model, sink=sink)
     assert r3["computed"] == [lost]
     pages.unpersist()
+
+
+def test_run_resumable_uses_caller_lid_model(spark, tmp_path, zz_lid_model):
+    """The caller's langid model decides pred_lang in the sink; the default
+    model never replaces it."""
+    out = str(tmp_path / "metrics")
+    pages = pages_df(spark, 60)
+    run_resumable(spark, pages, out, model=default_model(),
+                  lid_model=zz_lid_model)
+    langs = {r["pred_lang"] for r in spark.read.parquet(out)
+             .where(F.col("extracted_text").isNotNull())
+             .select("pred_lang").distinct().collect()}
+    assert langs == {"zz"}
