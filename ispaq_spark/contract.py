@@ -102,12 +102,16 @@ COMPILED_SYMBOL = re.compile(SYMBOL_PATTERN)
 
 # ---------------------------------------------------------------------------
 # Hashed n-gram LM contract (KenLM-style, SURVEY.md §2.6 graft substitution):
-# n-gram keys hashed with a fixed C-speed function; unseen n-grams back off
-# to a fixed floor logprob. Deterministic across executors and processes by
-# construction (no PYTHONHASHSEED dependence). crc32 is ~50x faster than a
-# pure-Python 64-bit FNV loop — it is the per-token hot path of the scorer.
-# Table-level collisions merely merge two n-grams' counts, identically on
-# the train and score side, so parity is unaffected.
+# an n-gram's key is a 64-bit word built from per-token hashes; unseen
+# n-grams back off to a fixed floor logprob. Each token is hashed ONCE
+# (crc32 over its UTF-8 bytes — a C call, no PYTHONHASHSEED dependence —
+# spread to 64 bits by an odd multiplier), and a k-gram's key folds its
+# token hashes with the rotate-xor of functions/heuristics._combine5 plus a
+# per-order tag. So the scorer keys every gram of a whole batch with a few
+# numpy ops per order, never building a gram string. Keys that collide
+# merely merge two n-grams' counts, identically in both trainers and at
+# scoring time; tests/test_perplexity.py pins that the default LM corpus
+# has none.
 # ---------------------------------------------------------------------------
 import zlib as _zlib
 
@@ -122,10 +126,31 @@ LM_FLOOR_LOGPROB = -12.0
 # parity is exact.
 LM_MIN_COUNT = 2
 
+_MASK64 = (1 << 64) - 1
+LM_TOKEN_MIX = 0x9E3779B97F4A7C15  # odd, so a bijection on 64-bit words
+LM_ROTATE = 13  # the rotate-xor step of heuristics._combine5
 
-def ngram_hash(s: str) -> int:
-    """Deterministic n-gram key hash: crc32 over UTF-8 bytes."""
-    return _zlib.crc32(s.encode("utf-8"))
+
+def order_tag(k: int) -> int:
+    """The tag xor-ed into every k-gram key."""
+    return (k * 0xD6E8FEB86659FD93) & _MASK64
+
+
+def token_hash(token: bytes) -> int:
+    """A token's 64-bit hash: crc32 of its UTF-8 bytes times LM_TOKEN_MIX."""
+    return (_zlib.crc32(token) * LM_TOKEN_MIX) & _MASK64
+
+
+def ngram_key(tokens: list[str]) -> int:
+    """The LM key of the k-gram ``tokens`` (k = len(tokens)):
+    acc = rotl(acc, LM_ROTATE) ^ token_hash(t) over its tokens, then xor the
+    order tag. reference_impl.ngram_keys is the same function over uint64
+    arrays."""
+    acc = 0
+    for t in tokens:
+        acc = ((acc << LM_ROTATE) | (acc >> (64 - LM_ROTATE))) & _MASK64
+        acc ^= token_hash(t.encode("utf-8"))
+    return acc ^ order_tag(len(tokens))
 
 
 # ---------------------------------------------------------------------------

@@ -22,11 +22,13 @@ from pyspark.sql import functions as F
 
 from ..contract import (
     LANGS,
+    PII_COMBINED_PATTERN,
     SCRUB_RULES,
     STOPWORDS,
     THRESHOLDS,
     UNKNOWN_LANG,
 )
+from ..session import session_memo
 
 TOKENS = "_tokens"  # internal working columns, dropped by the pipeline
 TOK_H = "_tok_h"
@@ -45,20 +47,26 @@ def tokens_col(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def stopword_hits(tokens: Column, lang: str) -> Column:
-    """Count (with duplicates) of tokens in the language's stopword set."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(tokens, lambda t: F.array_contains(sw, t)))
+def stopword_arrays(sc) -> dict[str, Column]:
+    """Per language, its stopword set as a literal array of xxhash64 longs
+    (xxhash64(lit) is constant-folded), built once per session: each is
+    ten Py4J calls, and with_heuristics and with_stopword_langid share them."""
+    return session_memo(
+        sc,
+        ("stopword_arrays",),
+        lambda: {
+            lang: F.array(*[F.xxhash64(F.lit(w)) for w in STOPWORDS[lang]])
+            for lang in LANGS
+        },
+    )
 
 
-def stopword_hits_hashed(tok_h: Column, lang: str) -> Column:
-    """Same count over the xxhash64'd token array: the stopword set becomes
-    a constant-folded literal array of longs (xxhash64(lit) is foldable),
-    so per-token membership is ≤|SW| long compares instead of string
-    compares — ~5x cheaper across the 5-language cascade. Collision risk
-    per corpus ~ |tokens|·|SW|/2^64 (the same accepted tradeoff as the
-    hashed 5-gram shingles)."""
-    sw = F.array(*[F.xxhash64(F.lit(w)) for w in STOPWORDS[lang]])
+def stopword_hits_hashed(tok_h: Column, sw: Column) -> Column:
+    """Count (with duplicates) of token hashes in the stopword array ``sw``
+    (stopword_arrays): per-token membership is ≤|SW| long compares instead
+    of string compares — ~5x cheaper across the 5-language cascade.
+    Collision risk per corpus ~ |tokens|·|SW|/2^64 (the same accepted
+    tradeoff as the hashed 5-gram shingles)."""
     return F.size(F.filter(tok_h, lambda h: F.array_contains(sw, h)))
 
 
@@ -111,8 +119,6 @@ def pii_count(text: Column) -> Column:
     Matcher allocation per pass per row was the dominant JVM cost at 32
     threads (contract.PII_COMBINED_PATTERN; reference_impl.count_pii uses
     the same pattern, so parity is exact)."""
-    from ..contract import PII_COMBINED_PATTERN
-
     return F.regexp_count(text, F.lit(PII_COMBINED_PATTERN)).cast("long")
 
 
@@ -121,53 +127,60 @@ def tox_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(pat)).cast("long")
 
 
-def with_heuristics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append all heuristic metric columns + stopword langid to ``df``.
+def _heuristic_projections(sc, text_col: str) -> tuple[dict[str, Column], ...]:
+    """with_heuristics' columns as four projections, each reading only
+    columns an earlier one materialized."""
+    text = F.col(text_col)
+    toks, tok_h = F.col(TOKENS), F.col(TOK_H)
+    n = F.size(toks)
+    # stopword_ratio (Gopher stop-word rule): max over languages of
+    # stopword hit count / word count. pred_lang/lang_conf are NOT produced
+    # here — they come from the fastText-capability classifier in the
+    # Arrow stage (functions/extraction.py).
+    hits = [stopword_hits_hashed(tok_h, sw) for sw in stopword_arrays(sc).values()]
+    return (
+        {TOKENS: F.when(text.isNotNull(), tokens_col(text))},
+        {
+            # One hash pass over the tokens feeds BOTH the stopword counts
+            # and the 5-gram shingles; materialized as a column so no HOF
+            # recomputes it (see token_hash_col).
+            TOK_H: token_hash_col(toks),
+            "word_count": F.when(text.isNotNull(), n.cast("long")),
+            "mean_word_len": (F.length(text) - n + F.lit(1)) / n,
+            "max_word_len": F.array_max(F.transform(toks, F.length)).cast("long"),
+        },
+        {
+            "stopword_ratio": F.greatest(*hits) / n,
+            "symbol_word_ratio": symbol_count(text) / n,
+            GRAMS: fivegram_col(tok_h, n),
+        },
+        {
+            "dup_5gram_frac": F.when(text.isNull(), F.lit(None).cast("double"))
+            .when(
+                F.col(GRAMS).isNotNull(),
+                F.lit(1.0) - F.size(F.array_distinct(GRAMS)) / F.size(GRAMS),
+            )
+            .otherwise(F.lit(0.0)),
+            "num_pii": F.when(text.isNotNull(), pii_count(text)),
+            "num_tox": F.when(text.isNotNull(), tox_count(text)),
+        },
+    )
 
+
+def with_heuristics(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Append all heuristic metric columns to ``df``.
+
+    The expressions are built once per session and text column and applied
+    as four projections, so a repeat call costs their analysis only.
     Null-safe: rows with NULL text get NULL metrics (quarantine rows flow
     through, the qualityFlag=-9 pattern of ispaq/simple_metrics.py:128-140).
     """
-    text = F.col(text_col)
-    df = df.withColumn(TOKENS, F.when(text.isNotNull(), tokens_col(text)))
-    toks = F.col(TOKENS)
-    n = F.size(toks)
-    # One hash pass over the tokens feeds BOTH langid and the 5-gram
-    # shingles; materialized as a column so no HOF recomputes it (see
-    # token_hash_col).
-    df = df.withColumn(TOK_H, token_hash_col(toks))
-
-    df = df.withColumn("word_count", F.when(text.isNotNull(), n.cast("long")))
-    df = df.withColumn(
-        "mean_word_len", (F.length(text) - n + F.lit(1)) / n
-    ).withColumn(
-        "max_word_len",
-        F.array_max(F.transform(toks, F.length)).cast("long"),
+    sc = df.sparkSession.sparkContext
+    projections = session_memo(
+        sc, ("heuristics", text_col), lambda: _heuristic_projections(sc, text_col)
     )
-
-    # stopword_ratio (Gopher stop-word rule): max over languages of
-    # stopword hit count / word count. pred_lang/lang_conf are NO LONGER
-    # produced here — they come from the fastText-capability classifier
-    # (functions/langid.py), decoupling lang_conf from stopword_ratio.
-    hit_cols = {lang: f"_sw_{lang}" for lang in LANGS}
-    for lang, c in hit_cols.items():
-        df = df.withColumn(c, stopword_hits_hashed(F.col(TOK_H), lang))
-    best = F.greatest(*[F.col(c) for c in hit_cols.values()])
-    df = df.withColumn("stopword_ratio", best / n).drop(*hit_cols.values())
-
-    df = df.withColumn("symbol_word_ratio", symbol_count(text) / n)
-    df = df.withColumn(GRAMS, fivegram_col(F.col(TOK_H), n))
-    df = df.withColumn(
-        "dup_5gram_frac",
-        F.when(text.isNull(), F.lit(None).cast("double"))
-        .when(
-            F.col(GRAMS).isNotNull(),
-            F.lit(1.0)
-            - F.size(F.array_distinct(GRAMS)) / F.size(GRAMS),
-        )
-        .otherwise(F.lit(0.0)),
-    )
-    df = df.withColumn("num_pii", F.when(text.isNotNull(), pii_count(text)))
-    df = df.withColumn("num_tox", F.when(text.isNotNull(), tox_count(text)))
+    for cols in projections:
+        df = df.withColumns(cols)
     return df.drop(TOKENS, TOK_H, GRAMS)
 
 
@@ -178,13 +191,14 @@ def with_stopword_langid(
     per-language stopword hit counts, ties broken by language code
     ascending (LANGS is sorted), 'und' on zero hits. The SQL-expressible
     langid twin (reference_impl.langid); the pipeline's production langid
-    is the classifier in functions/langid.py."""
+    is the classifier in the Arrow stage (functions/extraction.py)."""
     text = F.col(text_col)
     toks = tokens_col(text)
+    sw = stopword_arrays(df.sparkSession.sparkContext)
     df = df.withColumn(TOK_H, token_hash_col(toks))
     hit_cols = {lang: f"_sw_{lang}" for lang in LANGS}
     for lang, c in hit_cols.items():
-        df = df.withColumn(c, stopword_hits_hashed(F.col(TOK_H), lang))
+        df = df.withColumn(c, stopword_hits_hashed(F.col(TOK_H), sw[lang]))
     best = F.greatest(*[F.col(c) for c in hit_cols.values()])
     cascade = F.when(best <= 0, F.lit(UNKNOWN_LANG))
     for lang in LANGS:

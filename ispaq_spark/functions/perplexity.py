@@ -3,12 +3,12 @@
 Graft slot: the evalresp per-target model (ispaq/utils.py:558-673,
 ispaq/evalresp.py:26-238) — an auxiliary model table computed once, then
 joined against every unit of work. Here: a KenLM-style stupid-backoff
-n-gram table (contract: FNV-1a-hashed "k|gram" keys -> counts), trained
-distributedly with explode + groupBy (map-side partial aggregation), then
-``sparkContext.broadcast`` to executors where the pipeline's one Arrow
-stage (functions/extraction.py) scores each document with the SAME scorer
-the reference labeler uses (reference_impl.score_logprob) — one code path,
-exact parity.
+n-gram table (reference_impl.NgramLM: sorted 64-bit keys from
+contract.ngram_key -> counts), trained distributedly with explode + groupBy
+(map-side partial aggregation). The pipeline's one Arrow stage
+(functions/extraction.py) broadcasts it once per session and scores every
+Arrow batch with the SAME scorer the reference labeler uses
+(reference_impl.perplexities) — one code path, exact parity.
 """
 
 from __future__ import annotations
@@ -16,36 +16,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..contract import LM_MIN_COUNT, LM_ORDER, ngram_hash
+from ..contract import LM_MIN_COUNT, LM_ORDER
 from ..operators.dedup import shingles_of
-from ..reference_impl import TOTAL_UNIGRAMS_KEY
+from ..reference_impl import NgramLM
 
 
 def kgrams_col(toks: Column, order: int = LM_ORDER) -> Column:
-    """Array of "k|gram" strings for k=1..order — pure Catalyst, built with
-    the closure-free zip_with shingler so training counts never leave the
-    JVM and no optimizer rewrite can make gram construction O(len^2)."""
-
-    def kpart(k: int):
-        # Closure-free shingles (operators/dedup.py::shingles_of): the
-        # transform-with-slice form re-evaluates the inlined split per
-        # element (O(len^2) on a 10^6-token doc). The prefixing lambda
-        # below touches only its element argument, so it stays O(1) per
-        # element under any optimizer rewrite.
-        prefix = f"{k}|"
-        return F.coalesce(
-            F.transform(
-                shingles_of(toks, k),
-                lambda s: F.concat(F.lit(prefix), s),
-            ),
-            F.array().cast("array<string>"),
-        )
-
-    parts = [kpart(k) for k in range(1, order + 1)]
-    out = parts[0]
-    for p in parts[1:]:
-        out = F.concat(out, p)
-    return out
+    """Array of the 1..order-gram strings ("tok tok ...") — pure Catalyst,
+    built with the closure-free zip_with shingler so training counts never
+    leave the JVM and no optimizer rewrite can make gram construction
+    O(len^2) (see operators/dedup.py::shingles_of). A gram's order is its
+    token count: tokens never contain the separator."""
+    parts = [
+        F.coalesce(shingles_of(toks, k), F.array().cast("array<string>"))
+        for k in range(1, order + 1)
+    ]
+    return F.concat(*parts)
 
 
 def train_lm_distributed(
@@ -53,8 +39,8 @@ def train_lm_distributed(
     text_col: str = "text",
     order: int = LM_ORDER,
     min_count: int = LM_MIN_COUNT,
-) -> dict[int, float]:
-    """explode(kgrams) -> groupBy(gram).count() -> PRUNE -> driver dict.
+) -> NgramLM:
+    """explode(kgrams) -> groupBy(gram).count() -> PRUNE -> driver table.
 
     The shuffle is a hash-agg with map-side combine, but the *distinct*
     n-gram table after the agg is corpus-sized (singletons dominate,
@@ -66,9 +52,10 @@ def train_lm_distributed(
     probabilities) is computed PRE-prune by a separate map-only pass —
     deriving it from pruned rows would drop singleton mass.
 
-    Mirrors reference_impl.train_lm exactly, including prune-per-gram-
-    string before hash-merge; test_perplexity asserts table equality and
-    that the collected size stays bounded as the corpus grows.
+    Mirrors reference_impl.train_lm exactly: prune per gram string, then
+    key on the driver with the same NgramLM.from_counts; test_perplexity
+    asserts table equality and that the collected size stays bounded as
+    the corpus grows.
     """
     total1 = (
         corpus.select(
@@ -84,9 +71,4 @@ def train_lm_distributed(
         .where(F.col("count") >= min_count)
         .collect()
     )
-    model: dict[int, float] = {}
-    for row in rows:
-        h = ngram_hash(row["g"])
-        model[h] = model.get(h, 0.0) + float(row["count"])
-    model[TOTAL_UNIGRAMS_KEY] = float(total1)
-    return model
+    return NgramLM.from_counts([(r["g"], r["count"]) for r in rows], total1)

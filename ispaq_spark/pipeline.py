@@ -19,8 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .reference_impl import NgramLM
 from .registry import PipelineContext, apply_columns, resolve
 from .schemas import DOC_METRICS
+from .session import session_memo
 
 
 def salt_repartition(pages: DataFrame, buckets: int) -> DataFrame:
@@ -38,41 +40,51 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     metric_sets: tuple[str, ...] | str = "default",
-    model: dict | None = None,
+    model: NgramLM | None = None,
     lid_model: dict | None = None,
     salt_buckets: int | None = None,
 ) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> DOC_METRICS-shaped DataFrame."""
+    """pages(url, warc_ts, html, text, lang) -> DOC_METRICS-shaped DataFrame.
+
+    Every expression, the Arrow-stage UDF and the model broadcasts are
+    built on a session's first call and reused (session.session_memo), so
+    a repeat call costs one analysis of a few projections. A call with a
+    different model replaces (destroys) the session's broadcast of the old
+    one: run a DataFrame planned with one model before planning with
+    another."""
     ctx = PipelineContext(spark=spark, model=model, lid_model=lid_model)
 
-    df = pages.withColumn("ds", F.date_format("warc_ts", "yyyy-MM-dd"))
-    if salt_buckets:
-        df = salt_repartition(df, salt_buckets)
+    df = salt_repartition(pages, salt_buckets) if salt_buckets else pages
 
     # The union of the requested columns, computed once: one Arrow stage
     # however many sets ask for Python-computed columns.
-    produced = {c for ms in resolve(metric_sets) for c in ms.columns}
+    produced = frozenset(c for ms in resolve(metric_sets) for c in ms.columns)
     df = apply_columns(df, ctx, produced)
+    out = session_memo(
+        spark.sparkContext, ("output", produced), lambda: _output_columns(produced)
+    )
+    return df.select(*out)
 
-    # Quarantine: extraction failure carries qualityFlag=-9 and flows to the
-    # sink (ispaq/simple_metrics.py:128-140 — never fail the job for one row).
-    if "extracted_text" in produced:
-        df = df.withColumn(
-            "quality_flag",
-            F.when(F.col("extracted_text").isNull(), F.lit(-9)).otherwise(
-                F.lit(0)
-            ),
-        )
-    else:
-        df = df.withColumn("quality_flag", F.lit(0))
 
-    out_cols = ["url", "ds"] + [
+def _output_columns(produced: frozenset[str]) -> list:
+    """The DOC_METRICS columns of ``produced``, typed, plus quality_flag.
+    Quarantine: extraction failure carries qualityFlag=-9 and flows to the
+    sink (ispaq/simple_metrics.py:128-140 — never fail the job for one
+    row)."""
+    names = [
         f.name
         for f in DOC_METRICS.fields
-        if f.name in produced and f.name not in ("url", "ds")
+        if f.name in produced and f.name not in ("url", "ds", "quality_flag")
     ]
-    out_cols.append("quality_flag")
-    return df.select(*[F.col(c).cast(dict_field_type(c)) for c in out_cols])
+    flag = F.lit(0)
+    if "extracted_text" in produced:
+        flag = F.when(F.col("extracted_text").isNull(), F.lit(-9)).otherwise(flag)
+    return [
+        F.col("url").cast(dict_field_type("url")),
+        F.date_format("warc_ts", "yyyy-MM-dd").alias("ds"),
+        *[F.col(c).cast(dict_field_type(c)) for c in names],
+        flag.cast(dict_field_type("quality_flag")).alias("quality_flag"),
+    ]
 
 
 _TYPES = {f.name: f.dataType.simpleString() for f in DOC_METRICS.fields}

@@ -6,9 +6,9 @@ output, and keep/drop decision. The Spark pipeline (ispaq_spark.pipeline)
 must reproduce these byte-identically / with F1 >= 0.99 (BASELINE.json
 north_rule); tests/test_pipeline_parity.py is the gate.
 
-Every constant comes from ispaq_spark.contract, and the non-SQL stages of
-the Spark pipeline (extraction, perplexity, scrub) call the *same functions*
-defined here from inside their pandas UDFs — the reference's pattern of one
+Every constant comes from ispaq_spark.contract, and the pipeline's one
+Arrow stage (functions/extraction.py: extraction, perplexity, langid) calls
+the *same functions* defined here — the reference's pattern of one
 shared metric library dispatched from multiple entry points
 (IRISMustangMetrics/R/ISPAQUtils.R catalog consumed by every ispaq module).
 The SQL-expressible metrics are re-derived here with formulas chosen to be
@@ -21,6 +21,9 @@ from __future__ import annotations
 import html as _html
 import math
 import re
+import zlib
+from collections import Counter
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 import numpy as np
@@ -33,11 +36,14 @@ from .contract import (
     LM_FLOOR_LOGPROB,
     LM_MIN_COUNT,
     LM_ORDER,
+    LM_ROTATE,
+    LM_TOKEN_MIX,
     PII_RULE_NAMES,
     STOPWORDS,
     THRESHOLDS,
     UNKNOWN_LANG,
-    ngram_hash,
+    ngram_key,
+    order_tag,
 )
 
 # ---------------------------------------------------------------------------
@@ -81,92 +87,190 @@ def extract_text(html_bytes: bytes | None) -> str | None:
 
 # ---------------------------------------------------------------------------
 # Hashed n-gram LM (KenLM-style; SURVEY.md §2.6 graft substitution for the
-# evalresp broadcast model). Train = exact n-gram hash counting; score =
-# stupid-backoff over (order..1)-grams. Deterministic everywhere.
+# evalresp broadcast model). Train = exact n-gram counting, pruned, then
+# keyed by contract.ngram_key; score = stupid backoff over (order..1)-grams,
+# a whole batch of texts at a time in numpy. Deterministic everywhere.
 # ---------------------------------------------------------------------------
 
 LOG_BACKOFF = math.log(0.4)  # stupid-backoff alpha per level, in nats
-TOTAL_UNIGRAMS_KEY = ngram_hash("__total_unigrams__")
+# Tokens per scoring chunk: bounds the scorer's per-order working arrays
+# whatever the document lengths.
+LM_CHUNK_TOKENS = 1 << 16
+
+
+@dataclass(frozen=True, eq=False)
+class NgramLM:
+    """The LM table: sorted uint64 n-gram keys, their float64 counts, and
+    the PRE-prune unigram total (the denominator of unigram probabilities
+    must stay the true token count)."""
+
+    keys: np.ndarray
+    counts: np.ndarray
+    total: float
+
+    @classmethod
+    def from_counts(cls, gram_counts: list[tuple[str, int]], total: int) -> "NgramLM":
+        """Key the surviving ("tok tok ...", count) grams, summing the
+        counts of grams whose keys collide. The one finalisation step of
+        both trainers (this module's train_lm and
+        functions/perplexity.train_lm_distributed)."""
+        n = len(gram_counts)
+        keys = np.fromiter(
+            (ngram_key(g.split(" ")) for g, _ in gram_counts), np.uint64, n
+        )
+        counts = np.fromiter((c for _, c in gram_counts), np.float64, n)
+        uniq, inverse = np.unique(keys, return_inverse=True)
+        merged = np.bincount(inverse, counts, len(uniq)).astype(np.float64)
+        return cls(uniq, merged, float(total))
+
+    def __eq__(self, other: object) -> bool:
+        return (
+            isinstance(other, NgramLM)
+            and self.total == other.total
+            and np.array_equal(self.keys, other.keys)
+            and np.array_equal(self.counts, other.counts)
+        )
+
+    def __len__(self) -> int:
+        return len(self.keys)
 
 
 def train_lm(
     corpus: list[str],
     order: int = LM_ORDER,
     min_count: int = LM_MIN_COUNT,
-) -> dict[int, float]:
-    """Count n-grams (1..order) over tokenized docs, prune grams below
-    ``min_count``, then hash-merge -> {ngram_hash("k|gram"): count}, plus
-    the PRE-prune unigram total under TOTAL_UNIGRAMS_KEY (the denominator of
-    unigram probabilities must stay the true token count).
+) -> NgramLM:
+    """Count the n-grams (1..order) of the tokenized docs, prune grams below
+    ``min_count``, then key them (NgramLM.from_counts).
 
-    Prune-then-hash ordering matters: the distributed trainer
+    Prune-then-key ordering matters: the distributed trainer
     (functions/perplexity.py) prunes per gram *string* in the cluster before
-    the driver ever hashes, so the pure trainer does the same — under a
-    crc32 collision both sides then merge the same surviving counts.
-
-    The Spark-side distributed trainer produces the same table via
-    explode + groupBy + filter counting; test_perplexity asserts table
-    equality.
+    the driver keys anything, so this trainer does the same — under a key
+    collision both sides then merge the same surviving counts.
+    test_perplexity asserts table equality.
     """
-    counts: dict[str, float] = {}
+    counts: Counter[str] = Counter()
     total1 = 0
     for doc in corpus:
         toks = doc.split(" ")
         for k in range(1, order + 1):
-            for i in range(len(toks) - k + 1):
-                g = f"{k}|" + " ".join(toks[i : i + k])
-                counts[g] = counts.get(g, 0.0) + 1.0
+            counts.update(" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1))
         total1 += len(toks)
-    model: dict[int, float] = {}
-    for g, c in counts.items():
-        if c >= min_count:
-            h = ngram_hash(g)
-            model[h] = model.get(h, 0.0) + c
-    model[TOTAL_UNIGRAMS_KEY] = float(total1)
-    return model
+    return NgramLM.from_counts(
+        [(g, c) for g, c in counts.items() if c >= min_count], total1
+    )
 
 
-def score_logprob(text: str, model: dict[int, float], order: int = LM_ORDER) -> float:
-    """Mean per-token conditional logprob under stupid backoff:
-    p(w|ctx) ~ count(k-gram)/count((k-1)-gram prefix) at the longest seen k,
-    discounted by LOG_BACKOFF per level backed off; floor when even the
-    unigram is unseen."""
-    toks = text.split(" ")
-    if not toks:
-        return LM_FLOOR_LOGPROB
-    total1 = model.get(TOTAL_UNIGRAMS_KEY, 1.0)
-    total = 0.0
-    for i in range(len(toks)):
-        lp = LM_FLOOR_LOGPROB
-        for k in range(min(order, i + 1), 0, -1):
-            c = model.get(ngram_hash(f"{k}|" + " ".join(toks[i - k + 1 : i + 1])))
-            if c is None:
-                continue
-            if k == 1:
-                denom = total1
-            else:
-                # superset property: count(prefix) >= count(kgram), so under
-                # the uniform min_count prune any kept k-gram's (k-1) prefix
-                # is also kept — the lookup cannot miss.
-                denom = model.get(
-                    ngram_hash(f"{k - 1}|" + " ".join(toks[i - k + 1 : i])), c
-                )
-            lp = math.log(c / denom) + LOG_BACKOFF * (order - k)
-            break
-        total += lp
-    return total / len(toks)
+def token_hashes(text: str) -> np.ndarray:
+    """contract.token_hash of every token of ``text``, as uint64."""
+    toks = text.encode("utf-8").split(b" ")
+    crcs = np.fromiter(map(zlib.crc32, toks), np.uint64, len(toks))
+    return crcs * np.uint64(LM_TOKEN_MIX)
 
 
-def perplexity(text: str, model: dict[int, float], order: int = LM_ORDER) -> float:
-    return math.exp(-score_logprob(text, model, order))
+def ngram_keys(tok_h: np.ndarray, k: int) -> np.ndarray:
+    """contract.ngram_key of the k-gram starting at each index of the
+    token-hash array ``tok_h`` (len(tok_h) - k + 1 keys)."""
+    n = len(tok_h) - k + 1
+    if n <= 0:
+        return np.empty(0, np.uint64)
+    left, right = np.uint64(LM_ROTATE), np.uint64(64 - LM_ROTATE)
+    acc = tok_h[:n]
+    for j in range(1, k):
+        acc = ((acc << left) | (acc >> right)) ^ tok_h[j : j + n]
+    return acc ^ np.uint64(order_tag(k))
+
+
+def _token_logprobs(
+    tok_h: np.ndarray, pos: np.ndarray, model: NgramLM, order: int
+) -> np.ndarray:
+    """Stupid-backoff logprob of every token: p(w|ctx) ~ count(k-gram) /
+    count((k-1)-gram prefix) at the longest seen k, discounted by
+    LOG_BACKOFF per level backed off; the floor when even the unigram is
+    unseen. ``pos`` is each token's index in its document, so no gram
+    crosses a document boundary."""
+    n = len(tok_h)
+    # seen[k - 1][i]: count of the k-gram ending at token i, 0 if unseen.
+    seen = []
+    for k in range(1, order + 1):
+        c = np.zeros(n)
+        keys = ngram_keys(tok_h, k)
+        if len(keys) and len(model.keys):
+            # searchsorted over the queries in key order: each binary search
+            # starts from the last one's result (~2x faster than unsorted).
+            by_key = np.argsort(keys)
+            at = np.empty(len(keys), np.intp)
+            at[by_key] = np.searchsorted(model.keys, keys[by_key])
+            at[at == len(model.keys)] = 0
+            c[k - 1 :] = np.where(model.keys[at] == keys, model.counts[at], 0.0)
+            c[pos < k - 1] = 0.0
+        seen.append(c)
+    lp = np.full(n, LM_FLOOR_LOGPROB)
+    todo = np.ones(n, dtype=bool)
+    for k in range(order, 0, -1):
+        c = seen[k - 1]
+        hit = todo & (c > 0)
+        if k == 1:
+            denom = model.total
+        else:
+            # superset property: count(prefix) >= count(kgram), so under
+            # the uniform min_count prune any kept k-gram's (k-1) prefix is
+            # also kept — the lookup cannot miss (a miss falls back to the
+            # k-gram's own count).
+            prefix = np.zeros(n)
+            prefix[1:] = seen[k - 2][:-1]
+            denom = np.where(prefix > 0, prefix, c)[hit]
+        lp[hit] = np.log(c[hit] / denom) + LOG_BACKOFF * (order - k)
+        todo &= ~hit
+    return lp
+
+
+def perplexities(
+    texts: Iterable[str | None], model: NgramLM, order: int = LM_ORDER
+) -> list[float | None]:
+    """exp(-mean per-token logprob) of each text; None stays None.
+
+    One scorer for every caller: the pipeline's Arrow stage passes a whole
+    Arrow batch, ``perplexity`` a batch of one. The batch's tokens are keyed
+    and looked up with one searchsorted per order per LM_CHUNK_TOKENS
+    tokens, and each document's logprobs are summed with math.fsum, so a
+    text gets the same bits alone or in any batch."""
+    texts = list(texts)
+    docs = [i for i, t in enumerate(texts) if t is not None]
+    out: list[float | None] = [None] * len(texts)
+    if not docs:
+        return out
+    hashes = [token_hashes(texts[i]) for i in docs]
+    lens = np.fromiter(map(len, hashes), np.int64, len(hashes))
+    tok_h = np.concatenate(hashes)
+    pos = np.arange(len(tok_h)) - np.repeat(np.cumsum(lens) - lens, lens)
+    ctx = order - 1  # tokens of left context a chunk needs
+    lp = np.concatenate(
+        [
+            _token_logprobs(
+                tok_h[max(s - ctx, 0) : s + LM_CHUNK_TOKENS],
+                pos[max(s - ctx, 0) : s + LM_CHUNK_TOKENS],
+                model,
+                order,
+            )[min(s, ctx) :]
+            for s in range(0, len(tok_h), LM_CHUNK_TOKENS)
+        ]
+    )
+    for i, doc_lp in zip(docs, np.split(lp, np.cumsum(lens)[:-1])):
+        out[i] = math.exp(-math.fsum(doc_lp.tolist()) / len(doc_lp))
+    return out
+
+
+def perplexity(text: str, model: NgramLM, order: int = LM_ORDER) -> float:
+    return perplexities([text], model, order)[0]
 
 
 # ---------------------------------------------------------------------------
 # fastText-capability language ID (contract constants LANGID_*): hashed
 # char-n-gram bag -> per-language linear (NB) scores -> length-normalized
 # softmax posterior. One scorer, called identically by this reference
-# labeler and by the Spark pandas UDF (functions/langid.py) — float parity
-# by construction. Graft slot: the per-target evalresp model join
+# labeler and by the pipeline's Arrow stage (functions/extraction.py) —
+# float parity by construction. Graft slot: the per-target evalresp model join
 # (ispaq/utils.py:558-673).
 # ---------------------------------------------------------------------------
 
@@ -332,7 +436,7 @@ def langid(tokens: list[str]) -> tuple[str, int]:
 
 
 def compute_metrics(
-    text: str, model: dict[int, float], lid_model: dict | None = None
+    text: str, model: NgramLM, lid_model: dict | None = None
 ) -> DocMetrics:
     if lid_model is None:
         from .synthesize import default_lid_model
@@ -389,7 +493,7 @@ def decide_keep(m: DocMetrics) -> bool:
 
 def label_document(
     html_bytes: bytes | None,
-    model: dict[int, float],
+    model: NgramLM,
     lid_model: dict | None = None,
 ) -> tuple[str | None, str | None, bool, int]:
     """Full reference pipeline for one document:

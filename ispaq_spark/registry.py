@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from .functions.extraction import ARROW_COLUMNS, arrow_stage_udf
 from .functions.heuristics import keep_expr, with_heuristics
 from .functions.scrub import scrubbed_col
+from .reference_impl import NgramLM
+from .session import session_memo
 
 
 @dataclass(frozen=True)
@@ -42,7 +44,7 @@ class MetricSet:
 @dataclass
 class PipelineContext:
     spark: object
-    model: dict | None = None
+    model: NgramLM | None = None
     lid_model: dict | None = None
 
     def ensure_models(self, columns: Collection[str]) -> None:
@@ -75,21 +77,33 @@ def apply_columns(
 ) -> DataFrame:
     """Append ``columns`` to ``df``: every Arrow column from ONE Python
     crossing over ``html`` (functions/extraction.py), then the Catalyst
-    stages in dependency order — heuristics, the JVM scrub, the decision."""
-    arrow = [c for c in ARROW_COLUMNS if c in columns]
+    stages in dependency order — heuristics, then the JVM scrub and the
+    decision in one projection. The UDF and the heuristics, scrub and
+    decision expressions are built once per session (session.session_memo)."""
+    sc = ctx.spark.sparkContext
+    arrow = tuple(c for c in ARROW_COLUMNS if c in columns)
     if arrow:
         ctx.ensure_models(arrow)
         udf = arrow_stage_udf(ctx.spark, arrow, ctx.model, ctx.lid_model)
-        df = df.withColumn("_arrow", udf(F.col("html")))
-        df = df.withColumns({c: F.col(f"_arrow.{c}") for c in arrow})
-        df = df.drop("_arrow")
+        # one projection: Spark evaluates the identical calls once (one
+        # ArrowEvalPython, gated by tests/test_plans.py)
+        call = udf(F.col("html"))
+        df = df.withColumns({c: call.getField(c) for c in arrow})
     if any(c in columns for c in _HEUR_COLS):
         df = with_heuristics(df, "extracted_text")
-    if "scrubbed_text" in columns:
-        df = df.withColumn("scrubbed_text", scrubbed_col("extracted_text"))
-    if "keep" in columns:
-        df = df.withColumn("keep", keep_expr())
+    tail = tuple(c for c in ("scrubbed_text", "keep") if c in columns)
+    if tail:
+        df = df.withColumns(session_memo(sc, ("tail", tail), lambda: _tail(tail)))
     return df
+
+
+def _tail(names: tuple[str, ...]) -> dict:
+    out = {}
+    if "scrubbed_text" in names:
+        out["scrubbed_text"] = scrubbed_col("extracted_text")
+    if "keep" in names:
+        out["keep"] = keep_expr()
+    return out
 
 
 _SCORES = tuple(ARROW_COLUMNS)

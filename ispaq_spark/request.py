@@ -41,6 +41,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .reference_impl import NgramLM
+
 _MULTI_SECTIONS = {"metrics", "targets", "station_sncls", "stations"}
 _SINGLE_SECTIONS = {"data_access", "preferences"}
 _SECTION_CANON = {
@@ -242,7 +244,7 @@ def run_request(
     spark: SparkSession,
     req: UserRequest,
     pages: DataFrame | None = None,
-    model: dict | None = None,
+    model: NgramLM | None = None,
     resumable: bool = True,
     lid_model: dict | None = None,
 ):

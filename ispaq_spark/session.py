@@ -11,6 +11,7 @@ partition sizing.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -83,3 +84,32 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+
+
+_state: tuple[object, dict] | None = None
+_lock = threading.RLock()
+
+
+def session_state(sc) -> dict:
+    """A dict that lives as long as the SparkContext ``sc``: what a job
+    plans with (column expressions, pandas UDFs, model broadcasts) is made
+    once per session and reused by every later job. A new SparkContext (a
+    restarted session) starts from an empty dict; nothing built under a
+    stopped context is reused. Change it only inside session_memo's build,
+    which holds the lock."""
+    global _state
+    with _lock:
+        if _state is None or _state[0] is not sc:
+            _state = (sc, {})
+        return _state[1]
+
+
+def session_memo(sc, key, build):
+    """``build()`` once per (SparkContext, key); see session_state."""
+    with _lock:
+        state = session_state(sc)
+        if key not in state:
+            state[key] = build()
+        return state[key]

@@ -21,8 +21,9 @@ PSD csv/db round-trip (ispaq/PSD_metrics.py:121-153, PDF_aggregator.py:
     on a remote filesystem).
 
 Crash-safe ordering: data partitions land via dynamic overwrite FIRST, the
-snapshot manifest is replaced LAST — a failure between the two only causes
-recompute, never a stale partition being trusted. At cluster scale the
+snapshot manifest is replaced LAST, by a temp-file write and an atomic
+rename — a failure anywhere in between only causes recompute, never a
+stale partition being trusted or a torn manifest being read. At cluster scale the
 manifest is tiny (one row per day partition) and the fingerprint scan is a
 metadata-light aggregate over (url, warc_ts) only.
 """
@@ -34,6 +35,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .reference_impl import NgramLM
 
 MANIFEST = "_ds_manifest.json"
 
@@ -105,8 +108,11 @@ class ParquetManifestSink(MetricSink):
             return {}
 
     def commit_snapshot(self, fingerprints: dict[str, str]) -> None:
-        fs, jp = self._fs(f"{self.path}/{MANIFEST}")
-        out = fs.create(jp, True)  # overwrite = the atomic-replace analog
+        """Write the manifest to a temp file under the sink path, then
+        rename it over the old one: a reader sees the old manifest or the
+        new one, never a torn one."""
+        fs, tmp = self._fs(f"{self.path}/{MANIFEST}.tmp")
+        out = fs.create(tmp, True)
         try:
             out.write(
                 bytearray(
@@ -115,6 +121,18 @@ class ParquetManifestSink(MetricSink):
             )
         finally:
             out.close()
+        self._replace(tmp, self._fs(f"{self.path}/{MANIFEST}")[1])
+
+    def _replace(self, src, dst) -> None:
+        """Rename ``src`` over ``dst`` (Hadoop FileContext rename with
+        OVERWRITE: atomic on HDFS and on local filesystems)."""
+        hfs = self.spark._jvm.org.apache.hadoop.fs
+        fc = hfs.FileContext.getFileContext(
+            dst.toUri(), self.spark._jsc.hadoopConfiguration()
+        )
+        opts = self.spark.sparkContext._gateway.new_array(hfs.Options.Rename, 1)
+        opts[0] = hfs.Options.Rename.OVERWRITE
+        fc.rename(src, dst, opts)
 
     def partition_complete(self, ds: str) -> bool:
         fs, jp = self._fs(f"{self.path}/ds={ds}")
@@ -156,7 +174,7 @@ def run_resumable(
     spark: SparkSession,
     pages: DataFrame,
     path: str | None = None,
-    model: dict | None = None,
+    model: NgramLM | None = None,
     metric_sets="default",
     sink: MetricSink | None = None,
     lid_model: dict | None = None,

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import run_pipeline
+from ..reference_impl import NgramLM
 
 
 def streaming_pages(
@@ -38,7 +39,7 @@ def streaming_pages(
 def streaming_metrics(
     spark: SparkSession,
     pages_stream: DataFrame,
-    model: dict | None = None,
+    model: NgramLM | None = None,
 ) -> DataFrame:
     """Apply the batch metric stages to a stream — identical code path."""
     return run_pipeline(spark, pages_stream, model=model)
@@ -170,7 +171,7 @@ def run_stream_once(
     source_dir: str,
     checkpoint_dir: str,
     out_table: str = "stream_metrics_out",
-    model: dict | None = None,
+    model: NgramLM | None = None,
 ):
     """Drain all available input in micro-batches (availableNow), write
     per-doc metrics to an in-memory sink; returns the query after it

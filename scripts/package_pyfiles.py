@@ -2,7 +2,8 @@
 
 Produces dist/ispaq_spark.zip (the importable package, no tests/bench) and
 prints the submit command. The model artifacts ride the driver and reach
-executors via sparkContext.broadcast (functions/perplexity.py), so the zip
+executors via sparkContext.broadcast, once per session (the Arrow stage,
+functions/extraction.py), so the zip
 is all that ships — the evalresp-style external-binary path of the
 reference (ispaq/evalresp.py:26-238) has no executor-side install step
 here.

@@ -42,10 +42,10 @@ _CHECK_COLS = (
 @settings(max_examples=5, deadline=None)
 @given(corpus=_corpus)
 def test_heuristics_bitwise_parity(spark, corpus):
-    from ispaq_spark.reference_impl import compute_metrics
+    from ispaq_spark.reference_impl import compute_metrics, train_lm
 
     # model only affects perplexity, which is not among _CHECK_COLS
-    dummy_model: dict[int, float] = {}
+    dummy_model = train_lm([])
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(corpus)], "doc_id long, text string"
     )

@@ -138,3 +138,51 @@ def test_run_resumable_uses_caller_lid_model(spark, tmp_path, zz_lid_model):
              .where(F.col("extracted_text").isNotNull())
              .select("pred_lang").distinct().collect()}
     assert langs == {"zz"}
+
+
+def test_crash_before_manifest_rename_keeps_old_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the temp manifest is written but before it is renamed
+    over the old one leaves the old manifest readable, and the next run
+    equals a clean recompute."""
+    from ispaq_spark.sinks import ParquetManifestSink
+
+    out = str(tmp_path / "metrics")
+    model = default_model()
+    pages = pages_df(spark, 200).cache()
+    pages.count()
+    run_resumable(spark, pages, out, model=model)
+    sink = ParquetManifestSink(spark, out)
+    before = sink.read_snapshot()
+    assert before == read_manifest(out)
+
+    # change one day's input, then crash between temp write and rename
+    day = sorted(before)[0]
+    extra = pages.limit(1).withColumn(
+        "url", F.concat(F.col("url"), F.lit("-new"))
+    ).withColumn("warc_ts", F.to_timestamp(F.lit(f"{day} 12:00:00")))
+    changed = pages.unionByName(extra)
+
+    def crash(self, src, dst):
+        raise RuntimeError("crash before rename")
+
+    monkeypatch.setattr(ParquetManifestSink, "_replace", crash)
+    try:
+        run_resumable(spark, changed, out, model=model)
+        raise AssertionError("the injected crash did not happen")
+    except RuntimeError as e:
+        assert "crash before rename" in str(e)
+    assert (tmp_path / "metrics" / "_ds_manifest.json.tmp").exists()
+    assert sink.read_snapshot() == before
+
+    monkeypatch.undo()
+    r = run_resumable(spark, changed, out, model=model)
+    assert r["computed"] == [day]
+    clean = str(tmp_path / "clean")
+    run_resumable(spark, changed, clean, model=model)
+    a = spark.read.parquet(out).orderBy("url").toPandas()
+    b = spark.read.parquet(clean).orderBy("url").toPandas()
+    assert a.equals(b)
+    assert read_manifest(out) == read_manifest(clean)
+    pages.unpersist()
