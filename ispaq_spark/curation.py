@@ -9,7 +9,11 @@ Every stage is the scale-shaped form its driver-query twin certifies
 (`dedup_exact`, `minhash_lsh_neardup`, `quality_keep`, `decontaminate`,
 `domain_cap`, `split_assign`): hash-keyed shuffles only, broadcast
 benchmark n-grams, salted-lottery capping, and hash-gated splits that are
-identical on any cluster size and across retries. The composition itself
+identical on any cluster size and across retries. Exact dedup is one
+aggregate on the content hash and near dedup is one aggregate on LSH band
+buckets with the Jaccard check inside each bucket, so without a benchmark
+the whole recipe plans six Exchanges and no sort-merge join
+(`tests/test_plans.py`). The composition itself
 is what this module adds: one lazily-built DataFrame a caller writes once,
 plus an optional per-stage count report (the reference's summary report,
 ispaq/utils.py:119-147, recast as curation lineage).
@@ -86,7 +90,8 @@ def decontaminate(
 ) -> DataFrame:
     """Drop docs sharing any n-gram with the benchmark. The benchmark
     gram set is broadcast (benchmarks are model-sized); the corpus is
-    left-anti'd — it never shuffles."""
+    left-anti'd against the hit ids as they come, with no `distinct`: an
+    anti-join's result does not depend on duplicate keys."""
     bg = (
         with_shingles(benchmark, text_col, "_g", n)
         .select(F.explode("_g").alias("g"))
@@ -97,7 +102,6 @@ def decontaminate(
         .select(id_col, F.explode("_g").alias("g"))
         .join(F.broadcast(bg), "g")
         .select(id_col)
-        .distinct()
     )
     return docs.join(hits, id_col, "left_anti")
 

@@ -21,7 +21,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .contract import STOPWORDS
-from .operators.dedup import shingles_of as _shingles_of
+from .operators.dedup import (
+    lsh_candidate_pairs,
+    minhash_signatures,
+    shingles_of as _shingles_of,
+)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1156,28 +1160,9 @@ def _minhash_sql_cols() -> str:
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures over 3-word shingles (shingle -> salted hash ->
     min), k=4 permutations — the signature stage of MinHash-LSH near-dup
-    detection. Pure Catalyst: transform/slice/array_min, no Python."""
-    d = t(spark, sf_dir, "documents")
-    # Closure-free shingles (operators/dedup.py::shingles_of): a
-    # transform-with-slice lambda goes O(len^2) when the optimizer inlines
-    # split(text) into the per-element body (hostile-fixture finding).
-    toks = F.split(F.col("text"), " ")
-    d = d.where(F.size(toks) >= 3).withColumn(
-        "grams", _shingles_of(toks, 3)
-    )
-
-    def sig(j: int):
-        # NOTE: single-arg lambda only — a two-arg lambda would be treated
-        # by F.transform as (element, index) and shadow the closure var.
-        prefix = f"{j}|"
-        return F.array_min(
-            F.transform(
-                F.col("grams"),
-                lambda s: _hex_hash_spark(F.concat(F.lit(prefix), s)),
-            )
-        ).alias(f"mh{j}")
-
-    return d.select("doc_id", *[sig(j) for j in range(_N_MINHASH)])
+    detection. Pure Catalyst: transform/slice/array_min, no Python. This
+    certifies the library's `operators/dedup.py::minhash_signatures`."""
+    return minhash_signatures(t(spark, sf_dir, "documents"), n_hashes=_N_MINHASH)
 
 
 @qdef(
@@ -2563,43 +2548,16 @@ _LSH_SQL_BANDS = """
 
 
 def _band_candidates(sig: DataFrame) -> DataFrame:
-    """MinHash band-bucket candidate generator: (doc_a, doc_b) pairs that
-    agree on at least one of two 2-row bands. The shuffle carries band
-    keys, never documents — the scale-safe pair source for any verify
-    kernel (`_jaccard_verify`, cosine, edit distance)."""
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band_id"),
-                    F.col("mh0").alias("h1"),
-                    F.col("mh1").alias("h2"),
-                ),
-                F.struct(
-                    F.lit(1).alias("band_id"),
-                    F.col("mh2").alias("h1"),
-                    F.col("mh3").alias("h2"),
-                ),
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.h1", "band.h2")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.h1") == F.col("b.h1"))
-            & (F.col("a.h2") == F.col("b.h2"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])  # pair may agree on both bands
+    """MinHash band-bucket candidate generator: (doc_a < doc_b) pairs that
+    agree on at least one of two 2-row bands — the library's
+    `lsh_candidate_pairs` (one explode over band keys, one aggregate; the
+    shuffle carries band keys and ids, never documents), the scale-safe
+    pair source for any verify kernel (`_jaccard_verify`, cosine, edit
+    distance)."""
+    mh = sig.select("doc_id", *[f"mh{j}" for j in range(_N_MINHASH)])
+    return lsh_candidate_pairs(mh).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
-    return cand
 
 
 def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6064,11 +6022,11 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-matched against a second engine end-to-end, so the STACK of
     stages (not just each stage alone) is certified.
 
-    Scale shape: inherited from the certified stage twins — content-hash
-    window, band-key shuffles with verify only on candidates, map-only
-    predicates, per-source rank, zero-shuffle split; the count branches
-    are independent 1-row aggregates crossJoined at the end (no
-    driver-side collect)."""
+    Scale shape: inherited from the library operators — one aggregate on
+    the content hash, one aggregate on LSH band buckets with the Jaccard
+    verify inside each bucket, map-only predicates, per-source rank,
+    zero-shuffle split; the count branches are independent 1-row
+    aggregates crossJoined at the end (no driver-side collect)."""
     from .curation import (
         CurationPolicy,
         assign_split,

@@ -1,12 +1,15 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
 Design for 10^12 documents:
-  * exact: groupBy(content hash) — one shuffle on a 16-byte key, never on
-    the text itself.
+  * exact: one groupBy on the content hash with `min_by` picking the
+    winner row — a single shuffle on a 16-byte key plus the row, no
+    window and no second pass.
   * MinHash+LSH: signatures are computed in-row (transform/array_min, pure
-    Catalyst, no shuffle); banding shuffles only (band_id, band_key) pairs;
-    candidate verification touches text again only for the tiny candidate
-    set (semi-join back).
+    Catalyst, no shuffle); banding explodes each doc into its band keys
+    and shuffles (band, bkey, id, word set) once, into one aggregate per
+    bucket. Candidate pairs and the Jaccard check both live inside a
+    bucket, so there is no self-join and no join back to the corpus; the
+    only join left is the final anti-join against the dropped ids.
   * SimHash: relational explode + conditional agg; the bit-vote shuffle
     carries (doc, bit, ±1) longs only.
 All hashes derive from md5 (engine-portable) — swap for xxhash64 when DuckDB
@@ -18,27 +21,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 N_MINHASH_DEFAULT = 4
+ROWS_PER_BAND = 2
 
 
 def content_hash(text) -> F.Column:
     return F.md5(text)
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", keep_cols=None) -> DataFrame:
-    """Keep one row per distinct content hash (deterministic winner: min of
-    the first key column). The reference's drop_duplicates analog
-    (ispaq/concierge.py:1001-1005) made shuffle-cheap: the hash, not the
-    document, is the shuffle key."""
-    h = content_hash(F.col(text_col)).alias("_ch")
-    w_cols = keep_cols or df.columns
-    from pyspark.sql import Window
-
-    win = Window.partitionBy("_ch").orderBy(*w_cols[:1])
+def exact_dedup(
+    df: DataFrame, text_col: str = "text", order_col: str | None = None
+) -> DataFrame:
+    """Keep one row per distinct content hash: the one with the smallest
+    `order_col` (default: the first column), NULLs first — the reference's
+    drop_duplicates (ispaq/concierge.py:1001-1005) as one aggregate keyed
+    on the hash, never on the document."""
+    o = F.col(order_col or df.columns[0])
+    # min_by skips NULL keys; this key is never NULL and sorts them first
+    winner = F.min_by(F.struct(*df.columns), F.struct(o.isNotNull(), o))
     return (
-        df.withColumn("_ch", h)
-        .withColumn("_rn", F.row_number().over(win))
-        .where("_rn = 1")
-        .drop("_ch", "_rn")
+        df.groupBy(content_hash(F.col(text_col)))
+        .agg(winner.alias("_r"))
+        .select("_r.*")
     )
 
 
@@ -119,18 +122,16 @@ def with_shingles(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = N_MINHASH_DEFAULT,
-    shingle_k: int = 3,
+def _signatures(
+    df: DataFrame, text_col: str, k: int, n: int, *cols
 ) -> DataFrame:
-    """(id, mh0..mh{n-1}) — in-row, no shuffle, no Python."""
-    d = with_shingles(df, text_col, "_grams", shingle_k).where(
+    """`cols` + mh0..mh{n-1} of each doc with at least `k` tokens (docs
+    with fewer, or NULL text, have no signature and are dropped)."""
+    d = with_shingles(df, text_col, "_grams", k).where(
         F.col("_grams").isNotNull()
     )
 
+    # bind j here: a two-parameter transform lambda gets the element index
     def sig(j: int):
         prefix = f"{j}|"
         return F.array_min(
@@ -140,46 +141,60 @@ def minhash_signatures(
             )
         ).alias(f"mh{j}")
 
-    return d.select(id_col, *[sig(j) for j in range(n_hashes)])
+    return d.select(*cols, *[sig(j) for j in range(n)])
+
+
+def minhash_signatures(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_hashes: int = N_MINHASH_DEFAULT,
+    shingle_k: int = 3,
+) -> DataFrame:
+    """(id, mh0..mh{n-1}) — in-row, no shuffle, no Python."""
+    return _signatures(df, text_col, shingle_k, n_hashes, id_col)
+
+
+def _band_buckets(sigs: DataFrame, member: F.Column, rows: int) -> DataFrame:
+    """`members` of every band bucket holding >= 2 docs: one explode over
+    each doc's band keys, one aggregate. A doc crosses the shuffle once
+    per band, carrying only `member`."""
+    mh = [c for c in sigs.columns if c.startswith("mh")]
+    keys = F.array(
+        *[
+            F.struct(
+                F.lit(i // rows).alias("band"),
+                F.concat_ws("_", *mh[i : i + rows]).alias("bkey"),
+            )
+            for i in range(0, len(mh), rows)
+        ]
+    )
+    return (
+        sigs.select(member.alias("_m"), F.explode(keys).alias("_b"))
+        .groupBy("_b.band", "_b.bkey")
+        .agg(F.collect_list("_m").alias("members"))
+        .where(F.size("members") >= 2)
+    )
 
 
 def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str = "doc_id", rows_per_band: int = 2
+    sigs: DataFrame, id_col: str = "doc_id", rows_per_band: int = ROWS_PER_BAND
 ) -> DataFrame:
-    """Band the signature columns and self-join per band bucket ->
-    (id_a, id_b) candidate pairs (deduplicated across bands).
+    """Distinct (id_a < id_b) pairs sharing at least one band bucket, read
+    off each bucket's member list — no self-join."""
+    b = _band_buckets(sigs, F.col(id_col), rows_per_band)
+    a = b.select(F.explode("members").alias("id_a"), "members")
+    later = F.filter("members", lambda y: y > F.col("id_a"))
+    return a.select("id_a", F.explode(later).alias("id_b")).distinct()
 
-    The shuffle key is (band_idx, band_hash) — tiny. At scale, hot buckets
-    (boilerplate near-dups) are handled by AQE skew-join splitting.
-    """
-    mh_cols = [c for c in sigs.columns if c.startswith("mh")]
-    bands = [
-        mh_cols[i : i + rows_per_band]
-        for i in range(0, len(mh_cols), rows_per_band)
-    ]
-    exploded = None
-    for bi, cols in enumerate(bands):
-        b = sigs.select(
-            F.col(id_col),
-            F.lit(bi).alias("band"),
-            F.concat_ws("_", *[F.col(c) for c in cols]).alias("bkey"),
-        )
-        exploded = b if exploded is None else exploded.unionByName(b)
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+
+def _word_set(text_col: str) -> F.Column:
+    return F.array_distinct(F.split(F.col(text_col), " "))
+
+
+def _jaccard(ws_a: F.Column, ws_b: F.Column) -> F.Column:
+    inter = F.size(F.array_intersect(ws_a, ws_b))
+    return inter / (F.size(ws_a) + F.size(ws_b) - inter)
 
 
 def jaccard_verify(
@@ -190,19 +205,14 @@ def jaccard_verify(
     threshold: float = 0.8,
 ) -> DataFrame:
     """Exact word-set Jaccard for candidate pairs; keeps pairs >= threshold.
-    Joins the (small) candidate set back to the corpus twice — semi-join
-    shaped, so the corpus is scanned, never shuffled on text."""
-    ws = df.select(
-        F.col(id_col),
-        F.array_distinct(F.split(F.col(text_col), " ")).alias("ws"),
-    )
+    Joins the candidate set back to the corpus twice (`minhash_dedup`
+    runs the same check inside each bucket instead)."""
+    ws = df.select(F.col(id_col), _word_set(text_col).alias("ws"))
     a = ws.select(F.col(id_col).alias("id_a"), F.col("ws").alias("ws_a"))
     b = ws.select(F.col(id_col).alias("id_b"), F.col("ws").alias("ws_b"))
     j = pairs.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("ws_a", "ws_b"))
-    union = F.size("ws_a") + F.size("ws_b") - inter
     return (
-        j.withColumn("jaccard", inter / union)
+        j.withColumn("jaccard", _jaccard(F.col("ws_a"), F.col("ws_b")))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -214,16 +224,23 @@ def minhash_dedup(
     text_col: str = "text",
     threshold: float = 0.8,
 ) -> DataFrame:
-    """End-to-end near-dup removal: signatures -> LSH pairs -> Jaccard
-    verify -> drop the higher id of each confirmed pair (greedy, matches
-    the usual near-dedup convention of keeping the first-seen doc)."""
-    sigs = minhash_signatures(df, id_col, text_col)
-    pairs = lsh_candidate_pairs(sigs, id_col)
-    dups = (
-        jaccard_verify(df, pairs, id_col, text_col, threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
+    """End-to-end near-dup removal: drop each doc that shares a band
+    bucket with a lower id of word-set Jaccard >= threshold, i.e. the
+    higher id of each confirmed candidate pair (greedy, matches the usual
+    near-dedup convention of keeping the first-seen doc). The check runs
+    in the bucket; the corpus is joined once, by the final anti-join."""
+    doc = F.struct(F.col(id_col).alias("id"), _word_set(text_col).alias("ws"))
+    sigs = _signatures(df, text_col, 3, N_MINHASH_DEFAULT, doc.alias("_doc"))
+
+    def dup(x: F.Column) -> F.Column:
+        return F.exists(
+            "members",
+            lambda y: (y.id < x.id) & (_jaccard(y.ws, x.ws) >= threshold),
+        )
+
+    buckets = _band_buckets(sigs, F.col("_doc"), ROWS_PER_BAND)
+    dup_ids = F.transform(F.filter("members", dup), lambda x: x.id)
+    dups = buckets.select(F.explode(dup_ids).alias(id_col))
     return df.join(dups, id_col, "left_anti")
 
 

@@ -493,3 +493,59 @@ def test_grouping_sets_emit_grand_total_on_empty_input(spark, tmp_path):
     assert len(roll) == 1
     assert roll[0]["period"] == "ALL"
     assert roll[0]["n"] == 0 and roll[0]["sum_qty"] is None
+
+
+# ---------------------------------------------------------------------------
+# Curation: exact dedup as one aggregate, LSH as one band-bucket aggregate.
+# Exchange counts are taken with AQE off, so they are the static plan.
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture
+def aqe_off(spark):
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
+def _docs(spark):
+    return spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+
+def test_curate_corpus_six_exchanges_no_smj(spark, aqe_off):
+    """exact dedup -> LSH -> quality -> cap -> split plans at most six
+    Exchanges (18 with a content-hash window and a per-band self-join),
+    with no sort-merge join and no window keyed on the content hash."""
+    from ispaq_spark.curation import curate_corpus
+
+    plan = plan_of(curate_corpus(_docs(spark)).curated)
+    assert plan.count("Exchange") <= 6
+    assert "SortMergeJoin" not in plan
+    ops = [ln.lstrip(" :+-") for ln in plan.splitlines()]
+    windows = [op for op in ops if op.startswith("Window [")]
+    # the per-source cap is the only window
+    assert windows
+    assert all("windowspecdefinition(source#" in w for w in windows)
+
+
+def test_lsh_candidate_pairs_plans_no_join(spark, aqe_off):
+    from ispaq_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+
+    plan = plan_of(lsh_candidate_pairs(minhash_signatures(_docs(spark))))
+    assert "Join" not in plan
+
+
+def test_decontaminate_anti_join_takes_hits_without_distinct(spark, aqe_off):
+    """The hit ids feed the anti-join as they come: the broadcast gram
+    set's distinct is the only shuffle (four Exchanges with a `distinct`
+    on the hit ids)."""
+    from ispaq_spark.curation import decontaminate
+
+    docs = _docs(spark)
+    plan = plan_of(decontaminate(docs, docs.where("doc_id < 10")))
+    assert plan.count("Exchange") <= 3
