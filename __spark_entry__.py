@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry()    — flagship: the quality-filter metric stage over `documents`.
-queries()  — every implemented operator from SURVEY.md §2 (+ the
-             training-data-pipeline layer: dedup, similarity search, text
-             analysis), defined in ispaq_spark/driver_queries.py.
+queries()  — the queries of ispaq_spark/driver_queries.py: library
+             operators certified against DuckDB (dedup, curation,
+             similarity, BPE, langid, the two-stream signal operators),
+             then the remaining relational and text catalogue queries.
 oracle_sql() — DuckDB-equivalent SQL per query.
 """
 

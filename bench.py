@@ -51,17 +51,10 @@ BENCH_QUERIES = (
     "hist2d",
     "mode_per_group",
     "corr_per_group",
-    "dedup_exact",
-    "text_heuristics",
-    "dup_3gram",
     "langid_confusion",
-    "langid_nb_confusion",
-    "token_count",
-    "unigram_ppl",
     "minhash_signatures",
     "simhash16",
     "jaccard_pairs",
-    "cosine_topk",
     "ann_lsh_buckets",
     "rolling_range",
     "max_stalta",
@@ -69,7 +62,6 @@ BENCH_QUERIES = (
     "snr_window",
     "geo_radius",
     "merge_upsert",
-    "cosine_neardup",
     "ivf_topk",
     "ols_resid",
     "piecewise_model",
@@ -85,10 +77,8 @@ BENCH_QUERIES = (
     "int8_topk",
     "bm25_rank",
     "stratified_sample",
-    "arrow_token_stats",
     "variant_extract",
     "vocab_topk",
-    "udaf_trimmed_mean",
     "decontaminate",
     "pack_sequences",
     # round-3 additions
@@ -96,7 +86,6 @@ BENCH_QUERIES = (
     "orientation_scan",
     "psd_windows",
     "lsh_jaccard_verify",
-    "lsh_cosine_verify",
     "geo_radius_banded",
     "dsir_resample",
     "canonical_docs",
@@ -106,25 +95,14 @@ BENCH_QUERIES = (
     "source_overlap",
     "domain_cap",
     "inverted_index",
-    "semdedup",
     "bpe_pair_counts",
-    "ann_recall",
-    "ann_recall_probe4",
-    "mixture_weights",
     "char_entropy",
     "funnel_steps",
     "curation_report",
-    "tfidf_phrases",
-    "ngram_novelty",
     "lsh_containment_verify",
-    "dup_rate_by_source",
     # round-4 additions
-    "hash_embed",
-    "embed_ivf_chain",
     "substring_dedup",
     "dup_cluster_hist",
-    "weighted_sample",
-    "weighted_sample_quality",
     "intradoc_dedup",
 )
 

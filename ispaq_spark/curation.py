@@ -5,15 +5,16 @@ training-data job runs, built from the library's primitives —
     filter -> benchmark decontamination -> per-domain quota cap ->
     deterministic split assignment
 
-Every stage is the scale-shaped form its driver-query twin certifies
-(`dedup_exact`, `minhash_lsh_neardup`, `quality_keep`, `decontaminate`,
-`domain_cap`, `split_assign`): hash-keyed shuffles only, broadcast
-benchmark n-grams, salted-lottery capping, and hash-gated splits that are
-identical on any cluster size and across retries. Exact dedup is one
-aggregate on the content hash and near dedup is one aggregate on LSH band
-buckets with the Jaccard check inside each bucket, so without a benchmark
-the whole recipe plans six Exchanges and no sort-merge join
-(`tests/test_plans.py`). The composition itself
+Every stage is a library operator the driver queries certify against
+DuckDB (`curation_report` runs the recipe without a benchmark;
+`decontaminate`, `domain_cap` and `split_assign` run
+`contamination_hits`, `cap_per_source` and `assign_split`): hash-keyed
+shuffles only, broadcast benchmark n-grams, salted-lottery capping, and
+hash-gated splits that are identical on any cluster size and across
+retries. Exact dedup is one aggregate on the content hash and near dedup
+is one aggregate on LSH band buckets with the Jaccard check inside each
+bucket, so without a benchmark the whole recipe plans six Exchanges and no
+sort-merge join (`tests/test_plans.py`). The composition itself
 is what this module adds: one lazily-built DataFrame a caller writes once,
 plus an optional per-stage count report (the reference's summary report,
 ispaq/utils.py:119-147, recast as curation lineage).
@@ -40,7 +41,7 @@ from .operators.dedup import (
 
 @dataclass
 class CurationPolicy:
-    """Tunable knobs; defaults match the driver-query twins."""
+    """Tunable knobs; defaults match the `curation_report` driver query."""
 
     near_dup_threshold: float = 0.8
     min_tokens: int = 5
@@ -81,6 +82,30 @@ def quality_filter(
     )
 
 
+def contamination_hits(
+    docs: DataFrame,
+    benchmark: DataFrame,
+    n: int = 8,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Ids of docs sharing any word n-gram with the benchmark, once per
+    shared gram occurrence. The benchmark gram set is broadcast
+    (benchmarks are model-sized) into a left-semi join, so the corpus
+    side never shuffles."""
+    bg = (
+        with_shingles(benchmark, text_col, "_g", n)
+        .select(F.explode("_g").alias("g"))
+        .distinct()
+    )
+    return (
+        with_shingles(docs, text_col, "_g", n)
+        .select(id_col, F.explode("_g").alias("g"))
+        .join(F.broadcast(bg), "g", "left_semi")
+        .select(id_col)
+    )
+
+
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -88,21 +113,10 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Drop docs sharing any n-gram with the benchmark. The benchmark
-    gram set is broadcast (benchmarks are model-sized); the corpus is
+    """Drop docs sharing any n-gram with the benchmark: the corpus is
     left-anti'd against the hit ids as they come, with no `distinct`: an
     anti-join's result does not depend on duplicate keys."""
-    bg = (
-        with_shingles(benchmark, text_col, "_g", n)
-        .select(F.explode("_g").alias("g"))
-        .distinct()
-    )
-    hits = (
-        with_shingles(docs, text_col, "_g", n)
-        .select(id_col, F.explode("_g").alias("g"))
-        .join(F.broadcast(bg), "g")
-        .select(id_col)
-    )
+    hits = contamination_hits(docs, benchmark, n, id_col, text_col)
     return docs.join(hits, id_col, "left_anti")
 
 
@@ -113,7 +127,7 @@ def cap_per_source(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Salted-hash lottery rank per source, keep the first `cap` — the
-    deterministic, retry-stable C4 anti-skew quota (domain_cap twin)."""
+    deterministic, retry-stable C4 anti-skew quota."""
     w = Window.partitionBy(source_col).orderBy(
         hex_hash(F.concat(F.lit("cap|"), F.col(id_col).cast("string"))),
         id_col,

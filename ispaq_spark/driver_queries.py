@@ -1,13 +1,17 @@
-"""Driver-contract query registry: every SQL-expressible operator from
-SURVEY.md §2 as a (PySpark DataFrame plan, DuckDB oracle SQL) pair.
+"""Driver-contract query registry: (PySpark DataFrame plan, DuckDB oracle
+SQL) pairs. The library-backed queries run a library operator —
+`operators/`, `curation.py` or `functions/` — so the DuckDB oracle
+certifies the code users run, not a copy of it. The rest are catalogue
+queries: relational queries over the TPC-H-style fixtures, and text or
+embedding operators that exist only here. Those that reach no library
+function are listed in `tests/test_driver_contract.py`, which gates that
+no other query skips the library.
 
-Each entry is one operator family of the reference re-expressed Spark-first;
-docstrings cite the reference file:line being grafted. The paired `oracle`
-is ANSI-ish SQL DuckDB runs over the same parquet tables; the driver compares
-row counts, column names, and order-insensitive value hashes — so every
-computed column is aliased identically on both sides, doubles are rounded to
-6 decimals on both sides, and every window/top-k has a total deterministic
-order.
+The oracle states each operator relationally and independently of the
+library. The driver compares row counts, column names, and
+order-insensitive value hashes — so every computed column is aliased
+identically on both sides, doubles are rounded to 6 decimals on both
+sides, and every window/top-k has a total deterministic order.
 """
 
 from __future__ import annotations
@@ -15,16 +19,40 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
-import pandas  # module-level: resolves pandas_udf string annotations
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .contract import STOPWORDS
+from .curation import (
+    CurationPolicy,
+    assign_split,
+    cap_per_source,
+    contamination_hits,
+    quality_filter,
+)
+from .functions.heuristics import with_stopword_langid
+from .operators.bpe import pair_counts, word_frequencies
+from .operators.components import alternating_star_components
+from .operators.crosscorr import cogroup_xcorr, collected_xcorr
 from .operators.dedup import (
+    N_MINHASH_DEFAULT,
+    content_hash,
+    exact_dedup,
+    hex_hash,
+    jaccard,
     lsh_candidate_pairs,
+    minhash_dedup,
     minhash_signatures,
-    shingles_of as _shingles_of,
+    shingles_of,
+    signatures,
+    simhash,
+    word_set,
+)
+from .operators.similarity import lsh_bucket_col, make_planes
+from .operators.spectral import (
+    cogroup_welch,
+    collected_welch,
+    orientation_scan,
 )
 
 
@@ -63,13 +91,13 @@ def davg(c) -> F.Column:
 class QueryDef:
     name: str
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None -> rows-only check (non-SQL-expressible)
+    oracle: str
 
 
 _DEFS: list[QueryDef] = []
 
 
-def qdef(name: str, oracle: str | None):
+def qdef(name: str, oracle: str):
     def deco(fn):
         _DEFS.append(QueryDef(name, fn, oracle))
         return fn
@@ -604,33 +632,6 @@ def q_pairs_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @qdef(
-    "dedup_exact",
-    """
-    -- distinct INCLUDING the null group: dropDuplicates keeps one
-    -- representative per content value, and all-null is a content value;
-    -- bare count(DISTINCT) ignores nulls and undercounts by one in any
-    -- lang holding a null-text doc (hostile-sweep finding)
-    SELECT lang,
-           count(*) AS n_docs,
-           (count(DISTINCT text)
-            + max(CASE WHEN text IS NULL THEN 1 ELSE 0 END)) AS n_distinct
-    FROM documents GROUP BY lang
-    """,
-)
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """exact dedup (concierge.py:1001-1005 drop_duplicates) — dropDuplicates
-    on content within partition key, counted against the raw cardinality."""
-    d = t(spark, sf_dir, "documents")
-    raw = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
-    ded = (
-        d.dropDuplicates(["lang", "text"])
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_distinct"))
-    )
-    return raw.join(ded, "lang").select("lang", "n_docs", "n_distinct")
-
-
-@qdef(
     "rlike_filter",
     """
     SELECT event_type, count(*) AS n
@@ -711,91 +712,6 @@ def q_sigfig(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Text analysis over `documents` (the training-data-pipeline layer)
 # ===========================================================================
 
-_EN = STOPWORDS["en"]
-_EN_SQL = "[" + ", ".join(f"'{w}'" for w in _EN) + "]"
-
-
-@qdef(
-    "text_heuristics",
-    f"""
-    WITH w AS (
-      SELECT doc_id, text, str_split(text, ' ') AS words FROM documents
-    )
-    SELECT doc_id,
-           len(words) AS word_count,
-           round((length(text) - len(words) + 1) / len(words), 6)
-             AS mean_word_len,
-           list_max(list_transform(words, x -> length(x))) AS max_word_len,
-           round(len(list_filter(words, x -> list_contains({_EN_SQL}, x)))
-                 / len(words), 6) AS stopword_ratio_en
-    FROM w
-    """,
-)
-def q_text_heuristics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher/C4 heuristic metrics as pure Catalyst exprs (the pipeline's
-    heuristics stage, functions/heuristics.py, over the driver table)."""
-    d = t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    sw = F.array(*[F.lit(x) for x in _EN])
-    return d.select(
-        "doc_id",
-        n.cast("bigint").alias("word_count"),
-        r6((F.length("text") - n + F.lit(1)) / n).alias("mean_word_len"),
-        F.array_max(F.transform(toks, F.length)).cast("bigint").alias(
-            "max_word_len"
-        ),
-        r6(
-            F.size(F.filter(toks, lambda x: F.array_contains(sw, x))) / n
-        ).alias("stopword_ratio_en"),
-    )
-
-
-@qdef(
-    "dup_3gram",
-    """
-    WITH w AS (
-      SELECT doc_id, str_split(text, ' ') AS words FROM documents
-    ), g AS (
-      SELECT doc_id,
-             CASE WHEN len(words) >= 3 THEN
-               list_transform(range(1, len(words) - 1),
-                 i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])
-             ELSE [] END AS grams
-      FROM w
-    )
-    SELECT doc_id,
-           CASE WHEN len(grams) > 0 THEN
-             round(1.0 - len(list_distinct(grams)) / len(grams), 6)
-           ELSE 0.0 END AS dup_3gram_frac
-    FROM g
-    """,
-)
-def q_dup_3gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """repetition n-gram fraction (pipeline dup metric; rolling-window
-    shingle construction = seismicRoll-style strided windows, SURVEY.md §2.5)
-    entirely with transform/sequence/slice — arrays never leave the JVM."""
-    d = t(spark, sf_dir, "documents")
-    # The inline split() is safe ONLY because shingles_of is closure-free
-    # (top-level shifted slices, no lambda capturing `toks`): Catalyst's
-    # projection collapsing inlines this expression wherever the column is
-    # referenced, and a capture inside an interpreted HOF lambda would
-    # re-evaluate the split per shingle position — the O(len²) failure the
-    # hostile 10⁶-token fixture exposed.
-    toks = F.split(F.col("text"), " ")
-    grams = F.coalesce(
-        _shingles_of(toks, 3), F.array().cast("array<string>")
-    )
-    d = d.withColumn("grams", grams)
-    frac = F.when(
-        F.size("grams") > 0,
-        r6(
-            F.lit(1.0)
-            - F.size(F.array_distinct("grams")) / F.size("grams")
-        ),
-    ).otherwise(F.lit(0.0))
-    return d.select("doc_id", frac.alias("dup_3gram_frac"))
-
 
 def _langid_sql_cascade() -> str:
     hits = {
@@ -828,181 +744,8 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stopword-vote langid (the SQL-expressible twin of the pipeline's
     classifier langid stage) aggregated into a (labeled lang x predicted
     lang) confusion table."""
-    from .functions.heuristics import with_stopword_langid
-
-    d = t(spark, sf_dir, "documents")
-    h = with_stopword_langid(d, "text")
+    h = with_stopword_langid(t(spark, sf_dir, "documents"), "text")
     return h.groupBy("lang", "pred_lang").agg(F.count(F.lit(1)).alias("n"))
-
-
-_NB_BUCKETS = 512
-_NB_SQL = f"""
-    WITH docs AS (
-      SELECT doc_id, lang, text FROM documents WHERE text IS NOT NULL
-    ),
-    -- char n-grams by O(1) list indexing into a one-pass char split: the
-    -- substr(text, i, n)-per-position form re-scans to the codepoint
-    -- offset on every call (O(len^2) — the hostile 10^6-token document
-    -- turns that into ~10^13 char steps on BOTH engines); Spark twin uses
-    -- the same shifted-copy zip_with as the word shinglers.
-    cdocs AS (
-      SELECT doc_id, lang, str_split(text, '') AS cs FROM docs
-    ),
-    grams AS (
-      SELECT doc_id, lang,
-             (('0x' || substr(md5(g), 1, 8))::BIGINT % {_NB_BUCKETS})
-               AS bucket
-      FROM (
-        SELECT doc_id, lang,
-               unnest(list_transform(range(1, len(cs)),
-                      i -> cs[i] || cs[i+1])) AS g
-        FROM cdocs
-        UNION ALL
-        SELECT doc_id, lang,
-               unnest(list_transform(range(1, len(cs) - 1),
-                      i -> cs[i] || cs[i+1] || cs[i+2])) AS g
-        FROM cdocs
-        UNION ALL
-        SELECT doc_id, lang,
-               unnest(list_transform(range(1, len(cs) - 2),
-                      i -> cs[i] || cs[i+1] || cs[i+2] || cs[i+3])) AS g
-        FROM cdocs
-      )
-    ),
-    counts AS (
-      SELECT lang, bucket, count(*) AS c FROM grams GROUP BY lang, bucket
-    ),
-    totals AS (SELECT lang, sum(c) AS tot FROM counts GROUP BY lang),
-    cand AS (SELECT DISTINCT lang AS cl FROM docs),
-    scored AS (
-      SELECT g.doc_id, g.lang AS true_lang, c.cl,
-             sum(ln((coalesce(w.c, 0) + 0.5) / (t.tot + 0.5 * {_NB_BUCKETS})))
-               / count(*) AS s
-      FROM grams g
-      CROSS JOIN cand c
-      JOIN totals t ON t.lang = c.cl
-      LEFT JOIN counts w ON w.lang = c.cl AND w.bucket = g.bucket
-      GROUP BY g.doc_id, g.lang, c.cl
-    ),
-    ranked AS (
-      SELECT true_lang, cl,
-             row_number() OVER (PARTITION BY doc_id
-                                ORDER BY round(s, 6) DESC, cl ASC) AS rk
-      FROM scored
-    )
-    SELECT true_lang AS lang, cl AS pred_lang, count(*) AS n
-    FROM ranked WHERE rk = 1 GROUP BY true_lang, cl
-    """
-
-
-@qdef("langid_nb_confusion", _NB_SQL)
-def q_langid_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fastText-capability langid, end-to-end RELATIONAL twin: train a
-    hashed char-n-gram NB on the documents table's own labels, score every
-    document, emit the (label x argmax-prediction) confusion matrix. This
-    oracle-checks the same train->score math the pipeline stage runs
-    (functions/langid.py) through a second engine.
-
-    Scale note: the grams x candidate-langs join is the CHECKABLE form, not
-    the production form — the pipeline broadcasts the trained weight matrix
-    and scores map-only in its one Arrow stage; this query exists so
-    the NB semantics have a full cross-engine value oracle.
-
-    Graft slot: the per-target model join, ispaq/utils.py:558-673."""
-    d = (
-        t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select("doc_id", "lang", "text")
-    )
-    B = _NB_BUCKETS
-    # Char n-grams via the closure-free shifted-copy zipper over a one-pass
-    # char split. NEVER substr(text, i, n) per position: UTF8String.substring
-    # scans to the codepoint offset on each call, so that form is O(len^2)
-    # in document length (~10^13 char steps on the hostile 10^6-token doc).
-    # It also generated junk grams for docs SHORTER than n, because
-    # sequence(1, len-n+1) descends when the stop is negative; shingles_of
-    # is null-guarded for size < k, which explode() then drops — matching
-    # the oracle's empty range() on both counts.
-    gram_parts = []
-    for n in (2, 3, 4):
-        gram_parts.append(
-            d.select(
-                "doc_id",
-                "lang",
-                F.explode(
-                    _shingles_of(F.split(F.col("text"), ""), n, sep="")
-                ).alias("g"),
-            )
-        )
-    grams = gram_parts[0].unionAll(gram_parts[1]).unionAll(gram_parts[2])
-    grams = grams.select(
-        "doc_id",
-        "lang",
-        F.pmod(
-            F.conv(F.substring(F.md5("g"), 1, 8), 16, 10).cast("bigint"),
-            F.lit(B),
-        ).alias("bucket"),
-    )
-    counts = grams.groupBy("lang", "bucket").agg(F.count(F.lit(1)).alias("c"))
-    totals = counts.groupBy("lang").agg(F.sum("c").alias("tot"))
-    cand = d.select(F.col("lang").alias("cl")).distinct()
-    w = counts.withColumnRenamed("lang", "cl")
-    # Pre-aggregate gram INSTANCES to per-(doc, bucket) counts before the
-    # candidate-language expansion: sum(n * ln(p_bucket)) / sum(n) is the
-    # same score as summing per instance, but the candidate join and the
-    # weight lookup now run on <= 512 rows per doc instead of every char
-    # n-gram occurrence (~3x doc length) — the same map-side-combine move
-    # the production scorer gets for free from its broadcast weight matrix.
-    doc_buckets = grams.groupBy("doc_id", "lang", "bucket").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    scored = (
-        doc_buckets.crossJoin(F.broadcast(cand))
-        .join(F.broadcast(totals.withColumnRenamed("lang", "cl")), "cl")
-        .join(F.broadcast(w), ["cl", "bucket"], "left")
-        .groupBy("doc_id", F.col("lang").alias("true_lang"), "cl")
-        .agg(
-            (
-                F.sum(
-                    F.col("n")
-                    * F.log(
-                        (F.coalesce(F.col("c"), F.lit(0)) + F.lit(0.5))
-                        / (F.col("tot") + F.lit(0.5 * B))
-                    )
-                )
-                / F.sum("n")
-            ).alias("s")
-        )
-    )
-    win = Window.partitionBy("doc_id").orderBy(
-        F.round("s", 6).desc(), F.col("cl").asc()
-    )
-    ranked = scored.withColumn("rk", F.row_number().over(win))
-    return (
-        ranked.where(F.col("rk") == 1)
-        .groupBy(F.col("true_lang").alias("lang"), F.col("cl").alias("pred_lang"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@qdef(
-    "token_count",
-    """
-    SELECT lang,
-           CAST(sum(len(str_split(text, ' '))) AS BIGINT) AS ws_tokens,
-           CAST(sum(len(regexp_extract_all(text, '[a-z0-9]+'))) AS BIGINT)
-             AS re_tokens
-    FROM documents GROUP BY lang
-    """,
-)
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """token counting two ways (whitespace + regex tokenizer) — the BPE-ish
-    counting surface of the training-data layer, all JVM-side."""
-    d = t(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
-        F.sum(F.size(F.split("text", " "))).alias("ws_tokens"),
-        F.sum(F.regexp_count("text", F.lit("[a-z0-9]+"))).alias("re_tokens"),
-    )
 
 
 @qdef(
@@ -1012,110 +755,10 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """document fingerprinting via content hash (dedup key; both engines
+    """document fingerprinting via the dedup content hash (both engines
     agree on md5 hex)."""
     return t(spark, sf_dir, "documents").select(
-        "doc_id", F.md5("text").alias("fp")
-    )
-
-
-@qdef(
-    "quality_keep",
-    """
-    WITH w AS (
-      SELECT doc_id, lang, text, str_split(text, ' ') AS words FROM documents
-    ), m AS (
-      SELECT lang,
-             len(words) AS wc,
-             (length(text) - len(words) + 1) / len(words) AS mwl,
-             len(list_filter(words, x -> list_contains({EN}, x)))
-               / len(words) AS swr
-      FROM w
-    )
-    SELECT lang,
-           CASE WHEN wc >= 15 AND wc <= 100000
-                 AND mwl >= 2.0 AND mwl <= 12.0
-                 AND swr >= 0.0 THEN true ELSE false END AS keep,
-           count(*) AS n
-    FROM m GROUP BY lang, keep
-    """.replace("{EN}", _EN_SQL),
-)
-def q_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """keep/drop decision over the driver `documents` table (word-count +
-    mean-word-len + stopword gates — the SQL-expressible slice of the
-    pipeline's decision stage)."""
-    d = t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    sw = F.array(*[F.lit(x) for x in _EN])
-    mwl = (F.length("text") - n + F.lit(1)) / n
-    swr = F.size(F.filter(toks, lambda x: F.array_contains(sw, x))) / n
-    keep = (
-        (n >= 15)
-        & (n <= 100_000)
-        & (mwl >= 2.0)
-        & (mwl <= 12.0)
-        & (swr >= 0.0)
-    )
-    # Total decision: NULL text must be a DROP, not a third NULL group —
-    # three-valued logic leaves the conjunction NULL where the oracle's
-    # CASE (and any downstream filter) reads false (hostile-sweep finding)
-    keep = F.coalesce(keep, F.lit(False))
-    return d.groupBy("lang", keep.alias("keep")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-@qdef(
-    "unigram_ppl",
-    """
-    WITH tok AS (
-      SELECT doc_id, lang, unnest(str_split(text, ' ')) AS w FROM documents
-    ), freq AS (
-      SELECT w, count(*) AS c FROM tok GROUP BY w
-    ), tot AS (SELECT sum(c) AS total FROM freq),
-    doc AS (
-      -- decimal-sum means at both levels: quantize each addend at 1e-9
-      -- (absorbs the 1-ulp ln/exp implementation differences between
-      -- engines), then sum exactly so accumulation order cannot matter
-      SELECT tok.doc_id, tok.lang,
-             CAST(sum(CAST(-ln(freq.c / tot.total) AS DECIMAL(38,9)))
-                  AS DOUBLE) / count(*) AS nll
-      FROM tok JOIN freq ON tok.w = freq.w CROSS JOIN tot
-      GROUP BY tok.doc_id, tok.lang
-    )
-    SELECT lang,
-           round(CAST(sum(CAST(exp(nll) AS DECIMAL(38,9))) AS DOUBLE)
-                 / count(*), 4) AS avg_ppl
-    FROM doc GROUP BY lang
-    """,
-)
-def q_unigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """corpus-trained unigram perplexity, fully relational: explode tokens ->
-    frequency table -> broadcast join back -> per-doc mean NLL -> per-lang
-    mean perplexity. The SQL-checkable twin of the pipeline's hashed-ngram
-    LM stage (functions/perplexity.py)."""
-    d = t(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
-    )
-    freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    total = freq.agg(F.sum("c").alias("total"))
-    doc = (
-        tok.join(F.broadcast(freq), "w")
-        .crossJoin(F.broadcast(total))
-        .groupBy("doc_id", "lang")
-        # decimal-sum means at both levels, mirroring the oracle: the 1e-9
-        # quantization absorbs cross-engine ln/exp ulps and the exact sum
-        # removes accumulation-order noise (see dsum)
-        .agg(
-            (
-                dsum(-F.log(F.col("c") / F.col("total"))) / F.count(F.lit(1))
-            ).alias("nll")
-        )
-    )
-    return doc.groupBy("lang").agg(
-        F.round(dsum(F.exp("nll")) / F.count(F.lit(1)), 4).alias("avg_ppl")
+        "doc_id", content_hash(F.col("text")).alias("fp")
     )
 
 
@@ -1123,21 +766,12 @@ def q_unigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Dedup: MinHash / SimHash / n-gram Jaccard (training-data-pipeline layer)
 # ===========================================================================
 
-_N_MINHASH = 4
-
-
-def _hex_hash_spark(col):
-    """First 8 md5 hex chars -> bigint. Both engines agree on md5, so this is
-    a portable 32-bit content hash (used instead of murmur, which DuckDB
-    lacks)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-
 
 def _minhash_sql_cols() -> str:
     return ",\n           ".join(
         "list_min(list_transform(grams, s -> "
         f"(('0x' || substr(md5('{j}|' || s), 1, 8))::BIGINT))) AS mh{j}"
-        for j in range(_N_MINHASH)
+        for j in range(N_MINHASH_DEFAULT)
     )
 
 
@@ -1160,9 +794,8 @@ def _minhash_sql_cols() -> str:
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures over 3-word shingles (shingle -> salted hash ->
     min), k=4 permutations — the signature stage of MinHash-LSH near-dup
-    detection. Pure Catalyst: transform/slice/array_min, no Python. This
-    certifies the library's `operators/dedup.py::minhash_signatures`."""
-    return minhash_signatures(t(spark, sf_dir, "documents"), n_hashes=_N_MINHASH)
+    detection. Pure Catalyst: transform/slice/array_min, no Python."""
+    return minhash_signatures(t(spark, sf_dir, "documents"))
 
 
 @qdef(
@@ -1187,39 +820,10 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_simhash16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash (16-bit) near-dup fingerprint: per distinct token a content
-    hash votes +1/-1 on each bit; the sign vector packs into an int.
-
-    Computed IN-ROW (materialized token-hash array + 16 filter counts):
-    the document never leaves its partition and there is NO shuffle — at
-    10^12 documents this is a map-only stage, where the relational
-    explode -> (doc, bit) -> conditional-agg formulation (which the oracle
-    still uses) would shuffle 16x the distinct-token count."""
-    d = t(spark, sf_dir, "documents")
-    # NULL-text docs must drop, matching the oracle's unnest semantics (a
-    # NULL array unnests to zero rows); without this guard size(null) = -1
-    # flows through the bit votes and emits a spurious (doc_id, 0) row.
-    d = d.where(F.col("text").isNotNull())
-    d = d.withColumn(
-        "hw",
-        F.transform(
-            F.array_distinct(F.split("text", " ")),
-            lambda w: _hex_hash_spark(w),
-        ),
-    )
-    n = F.size("hw")
-    simhash = F.lit(0).cast("bigint")
-    for b in range(16):
-        ones = F.size(
-            F.filter(
-                F.col("hw"),
-                lambda h: F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)) == 1,
-            )
-        )
-        # votes = ones - (n - ones) > 0  <=>  2*ones > n
-        simhash = simhash + F.when(
-            (ones * 2) > n, F.lit(1 << b).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-    return d.select("doc_id", simhash.alias("simhash"))
+    hash votes +1/-1 on each bit; the sign vector packs into an int. A
+    NULL text explodes to no tokens and so has no row, as in the oracle's
+    unnest."""
+    return simhash(t(spark, sf_dir, "documents"), bits=16)
 
 
 _JACCARD_BLOCK_ORACLE = (
@@ -1241,47 +845,16 @@ _JACCARD_BLOCK_ORACLE = (
 )
 
 
-def _word_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, source, lang, ws): distinct-word set per document — the
-    unit the word-level Jaccard verify kernel scores."""
-    return t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        "lang",
-        F.array_distinct(F.split("text", " ")).alias("ws"),
+def _blocked_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a < doc_b, jaccard) for every pair in one (source, lang)
+    block, scored with the dedup word-set Jaccard. The blocked self-join
+    is O(B^2) per block: fine at oracle scale, quadratic at corpus scale,
+    where LSH band buckets prune first (`minhash_lsh_neardup`)."""
+    d = t(spark, sf_dir, "documents").select(
+        "doc_id", "source", "lang", word_set("text").alias("ws")
     )
-
-
-def _jaccard_verify(cand: DataFrame, words: DataFrame) -> DataFrame:
-    """Verify kernel: exact word-set Jaccard for a CANDIDATE pair frame.
-
-    cand: (doc_a, doc_b) from any candidate generator (LSH bands, ANN
-    buckets, or a blocked self-join); words: (doc_id, ws). The kernel only
-    ever touches candidate pairs — its cost is O(|cand|), so the scale
-    posture is whatever the candidate stage's is."""
-    wa = words.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("wa"))
-    wb = words.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("wb"))
-    j = cand.join(wa, "doc_a").join(wb, "doc_b")
-    inter = F.size(F.array_intersect("wa", "wb"))
-    union = F.size("wa") + F.size("wb") - inter
-    return j.select("doc_a", "doc_b", r6(inter / union).alias("jaccard"))
-
-
-@qdef("jaccard_pairs", _JACCARD_BLOCK_ORACLE)
-def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-set Jaccard near-dup scoring — the verify stage of LSH dedup,
-    fed here by a (source, lang)-blocked self-join candidate generator
-    (the nearest-compatible-neighbor pattern,
-    ispaq/crossCorrelation_metrics.py:182-323).
-
-    SCALE CAVEAT: the blocked self-join materializes O(B^2) pairs per
-    block — fine as the sf-small oracle form, quadratic at corpus scale.
-    The production path feeds the same `_jaccard_verify` kernel from a
-    candidate stage that prunes first: LSH band buckets
-    (`lsh_jaccard_verify` / `minhash_lsh_neardup`) or ANN buckets."""
-    d = _word_sets(spark, sf_dir)
     a, b = d.alias("a"), d.alias("b")
-    cand = a.join(
+    return a.join(
         b,
         (F.col("a.source") == F.col("b.source"))
         & (F.col("a.lang") == F.col("b.lang"))
@@ -1289,20 +862,28 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
+        jaccard(F.col("a.ws"), F.col("b.ws")).alias("jaccard"),
     )
-    return _jaccard_verify(cand, d.select("doc_id", "ws"))
+
+
+@qdef("jaccard_pairs", _JACCARD_BLOCK_ORACLE)
+def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Word-set Jaccard near-dup scoring — the verify stage of LSH dedup,
+    fed here by a (source, lang)-blocked self-join candidate generator
+    (the nearest-compatible-neighbor pattern,
+    ispaq/crossCorrelation_metrics.py:182-323). A pair with a NULL-text
+    member scores NULL on both engines."""
+    return _blocked_jaccard(spark, sf_dir).select(
+        "doc_a", "doc_b", r6("jaccard").alias("jaccard")
+    )
 
 
 # ===========================================================================
 # Similarity search over `embeddings`
 # ===========================================================================
 
-import random as _random
 
-_rng = _random.Random("lsh-planes")
-LSH_PLANES: list[list[int]] = [
-    [_rng.choice([-1, 1]) for _ in range(64)] for _ in range(8)
-]
+_LSH_PLANES = make_planes(8, 64)
 
 
 def _dot_sql(vec_expr: str, plane: list[int]) -> str:
@@ -1314,63 +895,6 @@ def _dot_sql(vec_expr: str, plane: list[int]) -> str:
 
 
 @qdef(
-    "cosine_topk",
-    """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    ), q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    s AS (
-      SELECT e.vec_id,
-             round(
-               list_sum(list_transform(range(1, 65), i -> e.v[i] * q.qv[i]))
-               / (sqrt(list_sum(list_transform(range(1, 65), i -> e.v[i] * e.v[i])))
-                  * sqrt(list_sum(list_transform(range(1, 65), i -> q.qv[i] * q.qv[i])))),
-               6) AS cos
-      FROM e CROSS JOIN q WHERE e.vec_id <> 0
-    )
-    SELECT vec_id, cos FROM s ORDER BY cos DESC, vec_id ASC LIMIT 10
-    """,
-)
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k ANN baseline: query vector broadcast against
-    every embedding; dot/norms via zip_with + aggregate (in-row, JVM-side,
-    no explode shuffle); deterministic order (cos desc, vec_id asc)."""
-    e = t(spark, sf_dir, "embeddings").where(
-        F.exists("embedding", lambda x: x != F.lit(0.0))
-    ).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = e.where("vec_id = 0").select(F.col("v").alias("qv"))
-    dot = F.aggregate(
-        F.zip_with("v", "qv", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nv = F.sqrt(
-        F.aggregate(
-            F.zip_with("v", "v", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    nq = F.sqrt(
-        F.aggregate(
-            F.zip_with("qv", "qv", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return (
-        e.where("vec_id <> 0")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", r6(dot / (nv * nq)).alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
-
-
-@qdef(
     "ann_lsh_buckets",
     f"""
     WITH e AS (
@@ -1378,7 +902,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE len(list_filter(embedding, x -> x <> 0)) > 0
     )
     SELECT
-      { ' + '.join(f"(CASE WHEN {_dot_sql('v', p)} >= 0 THEN {1 << j} ELSE 0 END)" for j, p in enumerate(LSH_PLANES)) }
+      { ' + '.join(f"(CASE WHEN {_dot_sql('v', p)} >= 0 THEN {1 << j} ELSE 0 END)" for j, p in enumerate(_LSH_PLANES)) }
         AS bucket,
       count(*) AS n
     FROM e GROUP BY bucket
@@ -1387,25 +911,15 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucketing — the scale path for ANN: 8 signed
     projections pack into a bucket id; search only needs the query's bucket
-    (+ neighbors). Hyperplanes are deterministic module constants, shared
-    verbatim with the oracle SQL."""
+    (+ neighbors). Hyperplanes are deterministic (`make_planes`), shared
+    verbatim with the oracle SQL; all-zero vectors have no direction and
+    are left out."""
     e = t(spark, sf_dir, "embeddings").where(
         F.exists("embedding", lambda x: x != F.lit(0.0))
-    ).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    bucket = F.lit(0)
-    for j, p in enumerate(LSH_PLANES):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        dot = F.aggregate(
-            F.zip_with("v", plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return e.groupBy(bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    return e.groupBy(
+        lsh_bucket_col("embedding", _LSH_PLANES).alias("bucket")
+    ).agg(F.count(F.lit(1)).alias("n"))
 
 
 # ===========================================================================
@@ -2302,12 +1816,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Similarity search, continued: embedding near-dup + IVF-style ANN
 # ===========================================================================
 
-_COS_SQL = (
-    "list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))"
-    " / (sqrt(list_sum(list_transform(range(1, 65), i -> a.v[i] * a.v[i])))"
-    " * sqrt(list_sum(list_transform(range(1, 65), i -> b.v[i] * b.v[i]))))"
-)
-
 
 def _cos_cols(lhs: str, rhs: str) -> F.Column:
     """Cosine over two array columns, JVM-side. CONTRACT: every similarity
@@ -2337,88 +1845,6 @@ def _cos_cols(lhs: str, rhs: str) -> F.Column:
         )
     )
     return dot / (nl * nr)
-
-
-_COSINE_BLOCK_ORACLE = f"""
-    WITH e AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    )
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round({_COS_SQL}, 6) AS cos
-    FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_COS_SQL} >= 0.30
-    """
-
-
-def _cosine_verify(cand: DataFrame, vecs: DataFrame, threshold: float) -> DataFrame:
-    """Verify kernel: exact cosine for a CANDIDATE pair frame.
-
-    cand: (vec_a, vec_b) from any candidate generator (ANN sign-LSH
-    buckets, label blocks); vecs: (vec_id, v, nrm) with the norm sqrt
-    precomputed per VECTOR (O(n)) rather than per PAIR — same IEEE value,
-    the HOF per pair is just the dot product. Cost is O(|cand|)."""
-    va = vecs.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    vb = vecs.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    j = cand.join(va, "vec_a").join(vb, "vec_b")
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("na") * F.col("nb"))
-    return (
-        j.where(cos >= threshold)
-        .select("vec_a", "vec_b", r6(cos).alias("cos"))
-    )
-
-
-def _normed_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "embeddings").where(
-        F.exists("embedding", lambda x: x != F.lit(0.0))
-    ).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.zip_with("v", "v", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return e.withColumn("nrm", nrm)
-
-
-@qdef("cosine_neardup", _COSINE_BLOCK_ORACLE)
-def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embedding-cosine near-duplicate pairs: label-blocked candidate
-    generation (the LSH-bucket analog, bounding the pair space) feeding
-    the pluggable `_cosine_verify` kernel, thresholded pre-rounding
-    identically in both engines.
-
-    SCALE CAVEAT: label blocking materializes O(B^2) pairs per block —
-    the sf-small oracle form. At corpus scale feed `_cosine_verify` from
-    a pruning candidate stage instead (sign-LSH buckets as in
-    `ann_lsh_buckets`, or IVF cells as in `ivf_topk`)."""
-    e = _normed_vectors(spark, sf_dir)
-    a, b = e.alias("a"), e.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.label") == F.col("b.label"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_a"),
-        F.col("b.vec_id").alias("vec_b"),
-    )
-    return _cosine_verify(cand, e.select("vec_id", "v", "nrm"), 0.30)
 
 
 @qdef(
@@ -2501,20 +1927,6 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _grams3_cols(d: DataFrame) -> DataFrame:
-    """doc_id + 3-gram shingle array + distinct-set column, closure-free
-    (operators/dedup.py::shingles_of: zip_with over shifted copies — a
-    transform-with-slice lambda here goes O(len^2) when the optimizer
-    inlines split(text) into the per-element body; hostile-fixture
-    finding)."""
-    toks = F.split(F.col("text"), " ")
-    return (
-        d.where(F.size(toks) >= 3)
-        .withColumn("grams", _shingles_of(toks, 3))
-        .withColumn("gset", F.array_distinct("grams"))
-    )
-
-
 _LSH_SQL_BANDS = """
     WITH w AS (
       SELECT doc_id, str_split(text, ' ') AS words FROM documents
@@ -2547,106 +1959,31 @@ _LSH_SQL_BANDS = """
 """
 
 
-def _band_candidates(sig: DataFrame) -> DataFrame:
-    """MinHash band-bucket candidate generator: (doc_a < doc_b) pairs that
-    agree on at least one of two 2-row bands — the library's
-    `lsh_candidate_pairs` (one explode over band keys, one aggregate; the
-    shuffle carries band keys and ids, never documents), the scale-safe
-    pair source for any verify kernel (`_jaccard_verify`, cosine, edit
-    distance)."""
-    mh = sig.select("doc_id", *[f"mh{j}" for j in range(_N_MINHASH)])
-    return lsh_candidate_pairs(mh).select(
-        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-    )
-
-
-def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, gset, mh0..mh3): 3-gram shingle set + 4 minhashes."""
-    d = _grams3_cols(t(spark, sf_dir, "documents"))
-
-    def mh(j: int):
-        prefix = f"{j}|"
-        return F.array_min(
-            F.transform(
-                F.col("grams"),
-                lambda s: _hex_hash_spark(F.concat(F.lit(prefix), s)),
-            )
-        ).alias(f"mh{j}")
-
-    return d.select("doc_id", "gset", *[mh(j) for j in range(_N_MINHASH)])
+def _scored_candidates(docs: DataFrame, sets: F.Column) -> DataFrame:
+    """(doc_a < doc_b) pairs sharing a MinHash band bucket — the library's
+    signatures and candidate generator, whose shuffle carries band keys
+    and ids, never documents — with each member's `sets` value as sa/sb
+    for a verify kernel. Only candidate pairs touch the sets."""
+    cand = lsh_candidate_pairs(minhash_signatures(docs)).toDF("doc_a", "doc_b")
+    s = docs.select("doc_id", sets.alias("s"))
+    sa = s.toDF("doc_a", "sa")
+    sb = s.toDF("doc_b", "sb")
+    return cand.join(sa, "doc_a").join(sb, "doc_b")
 
 
 @qdef("minhash_lsh_neardup", _LSH_SQL_BANDS.format(mh_cols=_minhash_sql_cols()))
 def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end MinHash-LSH near-dup detection: shingle -> 4 minhashes ->
-    2 bands of 2 rows -> band-bucket equi-join for candidates -> exact
-    Jaccard verify >= 0.5. The Spark side explodes (band_id, h1, h2) keys
-    and equi-joins them — the shape that scales (the shuffle carries band
-    keys, never documents); the oracle states the same candidate set as an
-    OR-join. Verification re-touches text only for the candidate pairs."""
-    sig = _minhash_sig(spark, sf_dir)
-    # Band keys only ride the candidate shuffle; the gram sets re-join by
-    # doc_id for the (tiny) verified candidate set.
-    cand = _band_candidates(sig)
-    ga = sig.select(F.col("doc_id").alias("doc_a"), F.col("gset").alias("ga"))
-    gb = sig.select(F.col("doc_id").alias("doc_b"), F.col("gset").alias("gb"))
-    cand = cand.join(ga, "doc_a").join(gb, "doc_b")
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size("ga") + F.size("gb") - inter
-    jac = inter / union
-    return cand.where(jac >= 0.5).select(
-        "doc_a", "doc_b", r6(jac).alias("jaccard")
-    )
-
-
-@qdef(
-    "sncl_reorder",
-    """
-    WITH ids AS (
-      SELECT doc_id,
-             source || '.' || lang || '.' || CAST(doc_id % 10 AS VARCHAR)
-               AS sncl
-      FROM documents
-    ), parts AS (
-      SELECT doc_id, sncl, str_split(sncl, '.') AS p FROM ids
-    )
-    SELECT doc_id, sncl,
-           array_to_string([p[3], p[2], p[1]], '.') AS reordered
-    FROM parts
-    """,
-)
-def q_sncl_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sncl_format element reordering (ispaq/concierge.py:125-128,419-427:
-    the N.S.L.C element order is configurable; parse by separator, emit in
-    the requested order) as split + element_at + concat_ws — pure string
-    expressions over a composite id built the same way in both engines."""
-    d = t(spark, sf_dir, "documents")
-    # F.concat, NOT concat_ws: the oracle's '||' PROPAGATES a NULL part
-    # (NULL sncl for a NULL lang/source) where concat_ws silently skips
-    # it — producing a 2-element split whose element_at(p, 3) then throws
-    # under ANSI mode instead of matching the oracle's NULL row.
-    sncl = F.concat(
-        F.col("source"),
-        F.lit("."),
-        F.col("lang"),
-        F.lit("."),
-        (F.col("doc_id") % 10).cast("string"),
-    )
-    d = d.withColumn("sncl", sncl)
-    p = F.split(F.col("sncl"), "\\.")
-    return d.select(
-        "doc_id",
-        "sncl",
-        # NULL sncl -> NULL reordered (concat_ws alone would emit '')
-        F.when(
-            F.col("sncl").isNotNull(),
-            F.concat_ws(
-                ".",
-                F.element_at(p, 3),
-                F.element_at(p, 2),
-                F.element_at(p, 1),
-            ),
-        ).alias("reordered"),
+    2 bands of 2 rows -> band-bucket candidates -> exact 3-gram-set
+    Jaccard verify >= 0.5. The oracle states the same candidate set as an
+    OR-join."""
+    docs = t(spark, sf_dir, "documents")
+    grams = F.array_distinct(shingles_of(F.split("text", " "), 3))
+    jac = jaccard(F.col("sa"), F.col("sb"))
+    return (
+        _scored_candidates(docs, grams)
+        .where(jac >= 0.5)
+        .select("doc_a", "doc_b", r6(jac).alias("jaccard"))
     )
 
 
@@ -2705,20 +2042,23 @@ _XCORR_ORACLE = """
     """
 
 
-def _xcorr_sides(spark: SparkSession, sf_dir: str):
-    # Two INDEPENDENT scans, not one filtered twice: a self-cogroup from a
-    # shared scan makes both sides carry the same expression IDs, and
-    # Spark's attribute dedup then prunes the right frame down to the key
-    # column (observed: right pandas frame = ['user_id'] only).
-    def side(evt: str) -> DataFrame:
-        return (
-            t(spark, sf_dir, "events")
-            .select("user_id", "ts", "event_id", "value", "event_type")
-            .where(F.col("event_type") == evt)
-            .drop("event_type")
-        )
+def _event_stream(spark: SparkSession, sf_dir: str, evt: str) -> DataFrame:
+    """(user_id, ts, event_id, value) of one event type. Each call is its
+    own scan: a self-cogroup from a shared scan makes both sides carry the
+    same expression IDs, and Spark's attribute dedup then prunes the right
+    frame down to the key column."""
+    return (
+        t(spark, sf_dir, "events")
+        .where(F.col("event_type") == evt)
+        .select("user_id", "ts", "event_id", "value")
+    )
 
-    return side("error"), side("click")
+
+def _xcorr_sides(spark: SparkSession, sf_dir: str):
+    return (
+        _event_stream(spark, sf_dir, "error"),
+        _event_stream(spark, sf_dir, "click"),
+    )
 
 
 @qdef("cogroup_xcorr", _XCORR_ORACLE)
@@ -2729,10 +2069,7 @@ def q_cogroup_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cogrouped applyInPandas: one Arrow batch per user carries both series;
     Pearson r over index lags -2..2, one-pass sum formula shared with the
     oracle (operators/crosscorr.py)."""
-    from .operators.crosscorr import cogroup_xcorr as _xc
-
-    left, right = _xcorr_sides(spark, sf_dir)
-    out = _xc(left, right)
+    out = cogroup_xcorr(*_xcorr_sides(spark, sf_dir))
     return out.select(
         "user_id", "best_lag", r6(F.col("peak_corr")).alias("peak_corr"), "n_pairs"
     )
@@ -2743,74 +2080,10 @@ def q_xcorr_collected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same two-stream peak cross-correlation, batch-vectorized: JVM-side
     sort_array(collect_list) per side -> equi-join -> one scalar pandas UDF
     scoring thousands of keys per Arrow batch (operators/crosscorr.py
-    collected_xcorr). The cogroup form pays ~10 ms of Python dispatch PER
-    KEY; this pays it per batch — the scale path when groups are tiny and
-    numerous. Identical oracle, identical results."""
-    from .operators.crosscorr import collected_xcorr as _xc
-
-    left, right = _xcorr_sides(spark, sf_dir)
-    out = _xc(left, right)
+    collected_xcorr). Identical oracle, identical results."""
+    out = collected_xcorr(*_xcorr_sides(spark, sf_dir))
     return out.select(
         "user_id", "best_lag", r6(F.col("peak_corr")).alias("peak_corr"), "n_pairs"
-    )
-
-
-# ===========================================================================
-# §2.9 table-returning UDTF (apply_PSD_metric surface)
-# ===========================================================================
-
-
-@qdef(
-    "udtf_repeated_ngrams",
-    """
-    WITH w AS (
-      SELECT doc_id, str_split(text, ' ') AS words FROM documents
-    ), g AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(words) - 1),
-                 i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS gram
-      FROM w WHERE len(words) >= 3
-    )
-    SELECT doc_id, gram, count(*) AS cnt
-    FROM g GROUP BY doc_id, gram HAVING count(*) >= 2
-    """,
-)
-def q_udtf_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table-returning Python UDTF in a LATERAL join — the surface of the
-    reference's table-returning metric functions (`apply_PSD_metric`
-    returns three tables per target, ispaq/irismustangmetrics.py:229-286):
-    one input row fans out to N output rows (repeated 3-grams with counts).
-    Demonstration of the UDTF API, NOT a hot-path pattern — per-row Python;
-    the production form of this exact computation is the pure-Catalyst
-    dup_3gram/text_heuristics family."""
-    from collections import Counter
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="gram string, cnt bigint")
-    class RepeatedNgrams:
-        def eval(self, text: str):
-            if text is None:
-                return
-            toks = text.split(" ")
-            if len(toks) < 3:
-                return
-            counts = Counter(
-                " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-            )
-            # >= 2 (not 3): the sf0.01 fixture has no 3-gram repeated 3x,
-            # which made the >=3 check pass vacuously with 0 rows both sides.
-            for gram, cnt in counts.items():
-                if cnt >= 2:
-                    yield gram, cnt
-
-    spark.udtf.register("repeated_ngrams", RepeatedNgrams)
-    t(spark, sf_dir, "documents").createOrReplaceTempView("_docs_udtf")
-    return spark.sql(
-        """
-        SELECT d.doc_id, s.gram, s.cnt
-        FROM _docs_udtf d, LATERAL repeated_ngrams(d.text) s
-        """
     )
 
 
@@ -3074,7 +2347,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.posexplode(
             F.coalesce(
-                _shingles_of(F.col("ws"), _SUB_W),
+                shingles_of(F.col("ws"), _SUB_W),
                 F.array().cast("array<string>"),
             )
         ).alias("pos", "gram"),
@@ -3201,7 +2474,7 @@ def q_intradoc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = words.withColumn(
         "gs",
         F.coalesce(
-            _shingles_of(F.col("ws"), 3), F.array().cast("array<string>")
+            shingles_of(F.col("ws"), 3), F.array().cast("array<string>")
         ),
     )
     # Self-guarding index sequence: on an empty gs, sequence(0, size-1)
@@ -3295,57 +2568,25 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERING: connected components over the graph whose
     edges are doc pairs with word-set Jaccard >= 0.8 (blocked on
     (source, lang) at test scale; behind MinHash-LSH candidates at corpus
-    scale — same composition as `minhash_lsh_neardup`). Each doc maps to
-    its component's minimum doc_id, i.e. the canonical representative the
-    dedup stage would keep. This is the endgame of every dedup pipeline:
-    pairs alone over-remove (A~B, B~C must not drop both B and C while
-    keeping neither edge's context).
+    scale). Each doc maps to its component's minimum doc_id, i.e. the
+    canonical representative the dedup stage would keep: pairs alone
+    over-remove (A~B, B~C must not drop both B and C).
 
-    Algorithm: large-star/small-star alternation (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — each round
-    rewires every node toward the minimum of its neighborhood, converging
-    in O(log d) rounds instead of the O(d) a plain min-label propagation
-    needs. This IS the certified path because long-chain dup clusters at
-    10^12 docs (URL redirect chains, boilerplate families) are exactly
-    where diameter-bound propagation stalls; the simpler
-    label-propagation twin stays available in operators/components.py and
-    is property-tested against this one. The oracle is an exact
-    recursive-CTE closure. The driver-side loop is control flow only —
-    every round's data movement is distributed. Grafts the reference's
-    channel-set grouping (ispaq/simple_metrics.py:103-151: targets
-    grouped into equivalence classes before per-class metrics)."""
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        "lang",
-        F.array_distinct(F.split("text", " ")).alias("ws"),
-    )
-    a, b = d.alias("a"), d.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.ws"), F.col("b.ws")))
-    union = F.size(F.col("a.ws")) + F.size(F.col("b.ws")) - inter
+    Algorithm: the library's large-star/small-star alternation
+    (operators/components.py), converging in O(log d) rounds; the oracle
+    is an exact recursive-CTE closure. Grafts the reference's channel-set
+    grouping (ispaq/simple_metrics.py:103-151: targets grouped into
+    equivalence classes before per-class metrics)."""
     pairs = (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where((inter / union) >= _CC_JACCARD)
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+        _blocked_jaccard(spark, sf_dir)
+        .where(F.col("jaccard") >= _CC_JACCARD)
+        .select("doc_a", "doc_b")
     )
-    from .operators.components import alternating_star_components
-
-    # Materialize the (expensive) pair join exactly once, then size the
-    # iteration's shuffle width to the edge count: the star edge set is
-    # component-members-sized (tiny next to the corpus), and iterating a
-    # small table across the session's full shuffle width spends more time
-    # scheduling empty tasks than rewiring stars. At 10^12 docs the same
-    # expression yields a wide shuffle. Lineage-cutting, convergence, and
-    # the O(diameter) label-propagation twin live in
-    # operators/components.py.
-    edges = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
+    # Materialize the pair join once, then size the iteration's shuffle
+    # width to the edge count: iterating a small edge table across the
+    # session's full shuffle width spends more time scheduling empty tasks
+    # than rewiring stars.
+    edges = pairs.localCheckpoint(eager=True)
     n_edges = edges.count()
     parts = max(2, min(spark.sparkContext.defaultParallelism,
                        n_edges // 250_000 + 1))
@@ -3626,7 +2867,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ispaq/user_request.py:320-364) with quota semantics added."""
     d = t(spark, sf_dir, "documents")
     bucket = F.pmod(
-        _hex_hash_spark(F.concat(F.lit("smp|"), F.col("doc_id").cast("string"))),
+        hex_hash(F.concat(F.lit("smp|"), F.col("doc_id").cast("string"))),
         F.lit(100),
     )
     rate = F.lit(_SAMPLE_DEFAULT_RATE)
@@ -3636,54 +2877,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.withColumn("bucket", bucket)
         .where(F.col("bucket") < rate)
         .select("doc_id", "lang", "bucket")
-    )
-
-
-@qdef(
-    "arrow_token_stats",
-    """
-    SELECT doc_id,
-           CAST(len(str_split(text, ' ')) AS BIGINT)       AS n_tokens,
-           CAST(octet_length(encode(text)) AS BIGINT)      AS n_bytes
-    FROM documents WHERE text IS NOT NULL
-    """,
-)
-def q_arrow_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInArrow surface: per-document token/byte counts computed directly
-    on pyarrow RecordBatches with pyarrow.compute kernels — the text never
-    materializes as Python objects (no pandas round-trip either; mapInPandas
-    pays Arrow->pandas->Arrow per batch, mapInArrow is the zero-copy floor
-    of the Python UDF surface). Rounds out §2.9 alongside pandas UDF,
-    cogrouped applyInPandas, applyInPandasWithState, and the Python UDTF.
-    API coverage — the production form of THIS computation is the pure
-    Catalyst `token_count`/`text_heuristics` family (JVM-side, no Python
-    at all); use mapInArrow where a real Arrow-native library (tokenizers,
-    image codecs) consumes the batches. Grafts the batch boundary of the
-    reference's vectorized R calls (ispaq/irismustangmetrics.py:56-93)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def stats(batches):
-        for batch in batches:
-            text = batch.column("text")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    pc.list_value_length(
-                        pc.split_pattern(text, " ")
-                    ).cast(pa.int64()),
-                    pc.binary_length(text).cast(pa.int64()),
-                ],
-                ["doc_id", "n_tokens", "n_bytes"],
-            )
-
-    d = (
-        t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    return d.mapInArrow(
-        stats, "doc_id bigint, n_tokens bigint, n_bytes bigint"
     )
 
 
@@ -3785,48 +2978,6 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @qdef(
-    "udaf_trimmed_mean",
-    """
-    WITH g AS (
-      SELECT source, list_sort(list(n_chars)) AS l, count(*) AS n,
-             CAST(floor(count(*) * 0.1) AS INT) AS k
-      FROM documents GROUP BY source
-    )
-    SELECT source,
-           round(list_aggregate(l[(k + 1):(n - k)], 'avg'), 6)
-             AS trimmed_mean_chars
-    FROM g
-    """,
-)
-def q_udaf_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-aggregate pandas UDF (the UDAF surface of §2.9): per-source
-    10%-trimmed mean of document length — a robust-statistic aggregate that
-    built-in SQL can't express without a full sort-collect, computed as a
-    Series->scalar Arrow aggregate. The reference's R metric functions are
-    exactly this shape (whole per-target series in, one scalar out,
-    ispaq/irismustangmetrics.py:56-93).
-
-    Scale note: a grouped-agg pandas UDF materializes each group in one
-    worker — right when groups are bounded (per-source, per-channel);
-    for unbounded groups use the two-stage approx_percentile prefilter
-    instead. Trim rule (sort, drop floor(n*0.1) per tail) is pinned
-    identically in the oracle's list_sort/list slice."""
-    import numpy as np
-
-    @F.pandas_udf("double")
-    def trimmed_mean(v: pandas.Series) -> float:
-        a = np.sort(v.to_numpy(dtype=np.float64))
-        k = int(np.floor(len(a) * 0.1))
-        return float(a[k : len(a) - k].mean())
-
-    return (
-        t(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(r6(trimmed_mean("n_chars")).alias("trimmed_mean_chars"))
-    )
-
-
-@qdef(
     "decontaminate",
     """
     WITH bench AS (
@@ -3851,42 +3002,18 @@ def q_udaf_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any n-gram
     with a held-out benchmark set (here: every 97th document stands in for
-    the eval suite). Training corpora MUST drop these rows — benchmark
-    leakage inflates downstream evals (the Lee et al. / GPT-3 appendix
-    n-gram-overlap protocol). Production uses 8-13-gram windows on natural
-    text; this fixture's 30-token synthetic vocabulary gives the same
-    selectivity at 3-grams (171/500 docs flagged at sf0.01 — the check has
-    teeth; 5-grams flag almost nothing and a vacuous pass proves nothing).
+    the eval suite) — the Lee et al. / GPT-3 appendix n-gram-overlap
+    protocol. Production uses 8-13-gram windows on natural text; this
+    fixture's 30-token synthetic vocabulary gives the same selectivity at
+    3-grams (171/500 docs flagged at sf0.01 — the check has teeth).
 
-    Scale shape: the benchmark gram set is eval-suite-sized (tiny next to
-    the corpus) — it builds once and BROADCASTS; candidate grams are
-    generated map-side and the left-semi broadcast join never shuffles the
-    corpus. The distinct on doc_id is corpus-row-bounded. Grafts the
-    reference's blocklisted-target subsetting
-    (ispaq/user_request.py:320-364, exclusion patterns)."""
-    docs = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-
-    def grams(df: DataFrame) -> DataFrame:
-        ws = F.split("text", " ")
-        return (
-            df.select(
-                "doc_id",
-                F.explode(_shingles_of(ws, 3)).alias("gram"),
-            )
-            .where(F.size(ws) >= 3)
-        )
-
-    bench_grams = (
-        grams(docs.where(F.col("doc_id") % 97 == 0))
-        .select("gram")
-        .distinct()
-    )
-    cand_grams = grams(docs.where(F.col("doc_id") % 97 != 0))
-    return (
-        cand_grams.join(F.broadcast(bench_grams), "gram", "left_semi")
-        .select("doc_id")
-        .distinct()
-    )
+    Scale shape: the benchmark gram set builds once and BROADCASTS into a
+    left-semi join, so the corpus never shuffles for the containment
+    check; only the final distinct on doc_id does."""
+    docs = t(spark, sf_dir, "documents")
+    bench = docs.where(F.col("doc_id") % 97 == 0)
+    cand = docs.where(F.col("doc_id") % 97 != 0)
+    return contamination_hits(cand, bench, 3).distinct()
 
 
 _PACK_BUDGET = 256  # tokens per training sequence (sandbox-sized)
@@ -4084,6 +3211,16 @@ _WELCH_ORACLE = """
 """
 
 
+def _welch_out(out: DataFrame) -> DataFrame:
+    return out.select(
+        "user_id",
+        "freq_bin",
+        r6("coherence").alias("coherence"),
+        r6("gain").alias("gain"),
+        r6("phase").alias("phase"),
+    )
+
+
 @qdef("welch_coherence", _WELCH_ORACLE)
 def q_welch_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-domain Welch cross-spectrum between two streams per user:
@@ -4093,42 +3230,19 @@ def q_welch_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     |Pxy|^2/(Pxx*Pyy) at bins 1..3 — the semantics of `crossSpectrum`
     (IRISSeismic/R/spectralUtils.R:44-214) feeding `transferFunctionMetric`
     (IRISMustangMetrics/R/transferFunctionMetric.R:252-280), as a cogrouped
-    applyInPandas (one Arrow batch per key carries both series). The oracle
-    states the DFT as explicit windowed cos/sin sums — the same numbers the
-    FFT computes. Phase is NULL below coherence 1e-3 on both sides (atan2
-    of an averaged-to-noise cross-spectrum is not comparable)."""
-    from .operators.spectral import cogroup_welch
-
-    left, right = _xcorr_sides(spark, sf_dir)
-    out = cogroup_welch(left, right)
-    return out.select(
-        "user_id",
-        "freq_bin",
-        r6("coherence").alias("coherence"),
-        r6("gain").alias("gain"),
-        r6("phase").alias("phase"),
-    )
+    applyInPandas (operators/spectral.py:cogroup_welch). The oracle states
+    the DFT as explicit windowed cos/sin sums — the same numbers the FFT
+    computes. Phase is NULL below coherence 1e-3 on both sides."""
+    return _welch_out(cogroup_welch(*_xcorr_sides(spark, sf_dir)))
 
 
 @qdef("welch_collected", _WELCH_ORACLE)
 def q_welch_collected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same Welch gain/phase/coherence semantics and oracle as
-    `welch_coherence`, restructured for group-count scale: JVM-side
-    sort_array(collect_list) per side, equi-join, ONE scalar pandas UDF
-    scoring thousands of keys per Arrow batch (vs one Python dispatch per
-    key) — the production shape at 10^9 keys, kept value-identical to the
-    cogroup form (operators/spectral.py:collected_welch)."""
-    from .operators.spectral import collected_welch
-
-    left, right = _xcorr_sides(spark, sf_dir)
-    out = collected_welch(left, right)
-    return out.select(
-        "user_id",
-        "freq_bin",
-        r6("coherence").alias("coherence"),
-        r6("gain").alias("gain"),
-        r6("phase").alias("phase"),
-    )
+    """Same Welch semantics and oracle as `welch_coherence`, restructured
+    for group-count scale: JVM-side sort_array(collect_list) per side,
+    equi-join, ONE scalar pandas UDF scoring thousands of keys per Arrow
+    batch (operators/spectral.py:collected_welch)."""
+    return _welch_out(collected_welch(*_xcorr_sides(spark, sf_dir)))
 
 
 @qdef(
@@ -4195,94 +3309,13 @@ def q_orientation_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """360-angle orientation scan (orientationCheck_metrics.py:298-368):
     rotate the horizontal pair (error, click streams as N/E analogs)
     through every integer azimuth and keep the angle maximizing Pearson
-    correlation with the reference stream (view). corr(N cos + E sin, ref)
-    expands in closed form over 10 per-key sums, so the WHOLE scan is
-    JVM-side: one aggregation shuffle for the sums, a 360-row angle
-    explode (map-side), and a max_by-struct argmax (map-side partial agg)
-    — zero Python on the path; the cogrouped (angles x samples) matrix-
-    product form lives in operators/spectral.py:cogroup_orientation and is
-    parity-tested against this plan. Ties break to the smaller angle on
-    both engines."""
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    ix = (
-        ev.where(F.col("event_type").isin("error", "click", "view"))
-        .select(
-            "user_id", "event_type", "value",
-            (F.row_number().over(w) - 1).alias("t"),
-        )
-    )
-
-    def side(evt: str, out: str) -> DataFrame:
-        return ix.where(F.col("event_type") == evt).select(
-            "user_id", "t", F.col("value").alias(out)
-        )
-
-    tri = (
-        side("error", "nv")
-        .join(side("click", "ev"), ["user_id", "t"])
-        .join(side("view", "rv"), ["user_id", "t"])
-    )
-    # the 10 sums are decimal (exact, associative — see dsum): the per-row
-    # products are deterministic IEEE doubles on both engines, and exact
-    # sums make the downstream closed-form corr identical regardless of
-    # accumulation order, so the rounded argmax cannot flip at a boundary
-    def ds(c, name):
-        return dsum(c).alias(name)
-
-    sums = (
-        tri.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            ds(F.col("nv"), "sn"),
-            ds(F.col("ev"), "se"),
-            ds(F.col("rv"), "sr"),
-            ds(F.col("nv") * F.col("nv"), "snn"),
-            ds(F.col("ev") * F.col("ev"), "see"),
-            ds(F.col("nv") * F.col("ev"), "sne"),
-            ds(F.col("nv") * F.col("rv"), "snr"),
-            ds(F.col("ev") * F.col("rv"), "ser"),
-            ds(F.col("rv") * F.col("rv"), "srr"),
-        )
-        .where(F.col("cnt") >= 8)
-    )
-    ang = sums.select(
-        "*",
-        F.explode(
-            F.sequence(F.lit(0).cast("bigint"), F.lit(359).cast("bigint"))
-        ).alias("angle"),
-    )
-    cth, sth = F.cos(F.radians("angle")), F.sin(F.radians("angle"))
-    sbr = cth * F.col("sn") + sth * F.col("se")
-    sbrr = (
-        cth * cth * F.col("snn")
-        + F.lit(2) * cth * sth * F.col("sne")
-        + sth * sth * F.col("see")
-    )
-    sbrf = cth * F.col("snr") + sth * F.col("ser")
-    den_a = F.col("cnt") * sbrr - sbr * sbr
-    den_b = F.col("cnt") * F.col("srr") - F.col("sr") * F.col("sr")
-    corr = (F.col("cnt") * sbrf - sbr * F.col("sr")) / (
-        F.sqrt(den_a) * F.sqrt(den_b)
-    )
-    # Round BEFORE the argmax: Spark and DuckDB accumulate the 10 sums in
-    # different orders, so an unrounded near-tie between adjacent angles
-    # could flip best_angle cross-engine (the semdedup convention).
-    scored = ang.where((den_a > 0) & (den_b > 0)).select(
-        "user_id", "cnt", "angle", r6(corr).alias("corr")
-    )
-    best = scored.groupBy("user_id").agg(
-        F.max(
-            F.struct(
-                F.col("corr"), (-F.col("angle")).alias("na"), F.col("cnt")
-            )
-        ).alias("b")
-    )
-    return best.select(
-        "user_id",
-        (-F.col("b.na")).alias("best_angle"),
-        F.col("b.corr").alias("best_corr"),
-        F.col("b.cnt").alias("n_samples"),
+    correlation with the reference stream (view), all JVM-side
+    (operators/spectral.py:orientation_scan). Ties break to the smaller
+    angle on both engines."""
+    return orientation_scan(
+        _event_stream(spark, sf_dir, "error"),
+        _event_stream(spark, sf_dir, "click"),
+        _event_stream(spark, sf_dir, "view"),
     )
 
 
@@ -4461,16 +3494,15 @@ _LSH_VERIFY_ORACLE = """
 )
 def q_lsh_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-fed verify chain: MinHash band buckets generate the pair
-    set (`_band_candidates` — shuffle carries band keys, never documents),
-    and the SAME word-set Jaccard kernel that `jaccard_pairs` runs over
-    its quadratic block join scores ONLY those candidates
-    (`_jaccard_verify`). This is the production wiring for the verify
-    stage at corpus scale: pair count is bounded by bucket collisions, not
-    block sizes, and the kernel's values are identical to the standalone
-    form for every surfaced pair."""
-    cand = _band_candidates(_minhash_sig(spark, sf_dir))
-    words = _word_sets(spark, sf_dir).select("doc_id", "ws")
-    return _jaccard_verify(cand, words)
+    set and the same word-set Jaccard that `jaccard_pairs` runs over its
+    quadratic block join scores ONLY those candidates — the production
+    wiring for the verify stage at corpus scale: pair count is bounded by
+    bucket collisions, not block sizes."""
+    docs = t(spark, sf_dir, "documents")
+    jac = jaccard(F.col("sa"), F.col("sb"))
+    return _scored_candidates(docs, word_set("text")).select(
+        "doc_a", "doc_b", r6(jac).alias("jaccard")
+    )
 
 
 # ===========================================================================
@@ -4532,7 +3564,7 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
-    ).withColumn("bucket", F.pmod(_hex_hash_spark(F.col("w")), F.lit(_DSIR_B)))
+    ).withColumn("bucket", F.pmod(hex_hash(F.col("w")), F.lit(_DSIR_B)))
     dist = tok.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("cs"),
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("ct"),
@@ -4590,27 +3622,16 @@ def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     finds pairs, `neardup_components` labels clusters, this picks what
     survives into the training set.
 
-    Scale shape: one groupBy on the signature with `max_by(doc_id,
-    struct(n_chars, -doc_id))` — a single shuffle with map-side partial
-    aggregation and NO window sort (the oracle states the same row via
-    row_number, but a per-cluster argmax never needs ordering within
-    Spark). Signature keys are content hashes, so the shuffle is
-    skew-bounded by true duplicate multiplicity. Grafts the reference's
-    epoch-preference dedup (ispaq/concierge.py:1001-1005: keep one row
-    per target, preferring the most complete epoch)."""
-    d = _grams3_cols(t(spark, sf_dir, "documents"))
-
-    def mh(j: int):
-        prefix = f"{j}|"
-        return F.array_min(
-            F.transform(
-                F.col("grams"),
-                lambda s: _hex_hash_spark(F.concat(F.lit(prefix), s)),
-            )
-        ).alias(f"mh{j}")
-
-    sig = d.select(
-        "doc_id", "n_chars", *[mh(j) for j in range(_N_MINHASH)]
+    Scale shape: the signature projection carries n_chars, and one
+    groupBy on the signature with `max_by(doc_id, struct(n_chars,
+    -doc_id))` is a single shuffle with map-side partial aggregation, no
+    window sort and no join (the oracle states the same row via
+    row_number). Grafts the reference's epoch-preference dedup
+    (ispaq/concierge.py:1001-1005: keep one row per target, preferring the
+    most complete epoch)."""
+    sig = signatures(
+        t(spark, sf_dir, "documents"), "text", 3, N_MINHASH_DEFAULT,
+        "doc_id", "n_chars",
     )
     return sig.groupBy("mh0", "mh1", "mh2", "mh3").agg(
         F.max_by(
@@ -4641,85 +3662,20 @@ def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test assignment: a salted content hash of
-    the document id buckets 0-99, thresholds 80/90 cut the three splits,
-    and the query rolls the assignment up per (lang, split) — the
-    mixture-verification report a dataset release ships with. Hash
-    assignment (never rand()) means a document's split is a pure function
-    of its id: stable across retries, cluster sizes, and later incremental
-    ingests — late-arriving documents can't migrate anyone else's split
-    (the leakage failure mode of fraction-based randomSplit). Map-side
-    predicate + one tiny (lang x 3)-row aggregate; at 10^12 docs this is
-    scan-bound. Grafts the reference's deterministic target->day work
-    partitioning (ispaq/concierge.py:219-268)."""
-    d = t(spark, sf_dir, "documents")
-    b = F.pmod(
-        _hex_hash_spark(
-            F.concat(F.lit("split|"), F.col("doc_id").cast("string"))
-        ),
-        F.lit(100),
-    )
-    d = d.withColumn(
-        "split",
-        F.when(b < 80, "train").when(b < 90, "val").otherwise("test"),
-    )
+    """Deterministic train/val/test assignment at 80/10/10: a salted
+    content hash of the document id buckets 0-99, and the query rolls the
+    assignment up per (lang, split) — the mixture-verification report a
+    dataset release ships with. A document's split is a pure function of
+    its id: stable across retries, cluster sizes, and later incremental
+    ingests. Map-side predicate + one tiny (lang x 3)-row aggregate.
+    Grafts the reference's deterministic target->day work partitioning
+    (ispaq/concierge.py:219-268)."""
+    policy = CurationPolicy(split_train_pct=80, split_val_pct=10)
+    d = assign_split(t(spark, sf_dir, "documents"), policy)
     return d.groupBy("lang", "split").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
     )
-
-
-def _lsh_bucket_sql() -> str:
-    return " + ".join(
-        f"(CASE WHEN {_dot_sql('v', p)} >= 0 THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(LSH_PLANES)
-    )
-
-
-@qdef(
-    "lsh_cosine_verify",
-    f"""
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    ), bk AS (
-      SELECT vec_id, v, {_lsh_bucket_sql()} AS bucket FROM e
-    )
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round({_COS_SQL}, 6) AS cos
-    FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    WHERE {_COS_SQL} >= 0.30
-    """,
-)
-def q_lsh_cosine_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate-fed COSINE verify chain — the embedding analog of
-    `lsh_jaccard_verify`: sign-LSH buckets (the same 8 deterministic
-    hyperplanes as `ann_lsh_buckets`) generate candidate pairs via a
-    bucket equi-join, and the pluggable `_cosine_verify` kernel scores
-    ONLY those candidates with exact cosine >= 0.30. This is the
-    production wiring that replaces `cosine_neardup`'s quadratic label
-    blocks at corpus scale: the shuffle carries (bucket, vec_id, vector)
-    and pair count is bounded by bucket collisions (2^8 buckets split the
-    sphere into orthants), not block sizes. Recall is tunable by probing
-    neighbor buckets (Hamming-1 on the bucket id) exactly as `ivf_topk`
-    probes second cells."""
-    e = _normed_vectors(spark, sf_dir)
-    bucket = F.lit(0)
-    for j, p in enumerate(LSH_PLANES):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        dot = F.aggregate(
-            F.zip_with("v", plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    bk = e.select("vec_id", bucket.alias("bucket"))
-    a = bk.select(F.col("vec_id").alias("vec_a"), "bucket")
-    b = bk.select(F.col("vec_id").alias("vec_b"), "bucket")
-    cand = a.join(b, "bucket").where(F.col("vec_a") < F.col("vec_b")).select(
-        "vec_a", "vec_b"
-    )
-    return _cosine_verify(cand, e.select("vec_id", "v", "nrm"), 0.30)
 
 
 @qdef(
@@ -4771,7 +3727,7 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split("text", " ")
     n = F.size(toks)
     bg = d.where(n >= 2).select(
-        F.explode(_shingles_of(toks, 2)).alias("bigram")
+        F.explode(shingles_of(toks, 2)).alias("bigram")
     )
     uni = d.select(F.explode(toks).alias("w"))
     bc = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c_ab"))
@@ -4918,34 +3874,20 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain quota capping (the C4/Gopher anti-skew curation rule: no
     host may contribute more than CAP documents): rank each source's docs
-    by a salted content hash — a deterministic shuffle-free lottery, so
-    the surviving set is reproducible across retries and identical on any
-    cluster size — and keep the first 60. kept_chars proves the SELECTION
-    matches cross-engine, not just the counts.
-
-    Scale shape: one shuffle on source + per-group rank. Each window
-    group sorts independently, so the cost is the largest domain's doc
-    count; for pathological whole-corpus-in-one-domain skew the rank-free
-    fallback is `stratified_sample`'s hash-threshold gate (keep iff
-    bucket < cap/|domain| x 100), which trades exact quota for zero
-    sort. Grafts the reference's per-target work quota (concierge chunked
-    day processing, ispaq/concierge.py:219-268)."""
-    d = t(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(
-        _hex_hash_spark(
-            F.concat(F.lit("cap|"), F.col("doc_id").cast("string"))
-        ),
-        "doc_id",
+    by a salted content hash — a deterministic lottery, so the surviving
+    set is reproducible across retries and identical on any cluster size
+    — and keep the first 60. kept_chars proves the SELECTION matches
+    cross-engine, not just the counts. The per-source doc count rides a
+    window on the same partitioning as the cap's rank, so the query is one
+    shuffle on source. Grafts the reference's per-target work quota
+    (concierge chunked day processing, ispaq/concierge.py:219-268)."""
+    d = t(spark, sf_dir, "documents").withColumn(
+        "n_docs", F.count(F.lit(1)).over(Window.partitionBy("source"))
     )
-    r = d.withColumn("rn", F.row_number().over(w))
-    return r.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(F.when(F.col("rn") <= 60, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_kept"),
-        F.sum(F.when(F.col("rn") <= 60, F.col("n_chars")).otherwise(0))
-        .cast("bigint")
-        .alias("kept_chars"),
+    return cap_per_source(d, 60).groupBy("source").agg(
+        F.max("n_docs").cast("bigint").alias("n_docs"),
+        F.count(F.lit(1)).cast("bigint").alias("n_kept"),
+        F.sum("n_chars").cast("bigint").alias("kept_chars"),
     )
 
 
@@ -5007,133 +3949,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _vdot(a, b) -> F.Column:
-    """Dot product of two array<double> columns, all-JVM (zip_with +
-    aggregate fold — no Python)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-_SEMDEDUP_K = 8
-# Pairwise cosines in the synthetic embeddings top out at ~0.51 (the
-# fixture has no planted near-dups), so the "duplicate" bar is scaled to
-# the fixture's own tail; production would run 0.9+.
-_SEMDEDUP_TAU = 0.35
-
-
-@qdef(
-    "semdedup",
-    f"""
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    ), c AS (
-      SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT {_SEMDEDUP_K}
-    ), a0 AS (
-      SELECT vec_id, cid,
-             round(list_cosine_similarity(v, cv), 6) AS cos
-      FROM e, c
-    ), a AS (
-      SELECT vec_id, cid FROM (
-        SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY cos DESC, cid) AS rn
-        FROM a0) WHERE rn = 1
-    ), av AS (
-      SELECT a.vec_id, a.cid, e.v FROM a JOIN e USING (vec_id)
-    ), p AS (
-      SELECT x.cid, y.vec_id AS dropped
-      FROM av x JOIN av y
-        ON x.cid = y.cid AND x.vec_id < y.vec_id
-      WHERE round(list_cosine_similarity(x.v, y.v), 6) >= {_SEMDEDUP_TAU}
-    ), nv AS (
-      SELECT cid, CAST(count(*) AS BIGINT) AS n_vecs FROM a GROUP BY cid
-    ), nd AS (
-      SELECT cid, CAST(count(*) AS BIGINT) AS n_pairs,
-             CAST(count(DISTINCT dropped) AS BIGINT) AS n_dropped
-      FROM p GROUP BY cid
-    )
-    SELECT nv.cid, nv.n_vecs,
-           COALESCE(nd.n_pairs, 0)::BIGINT AS n_pairs,
-           COALESCE(nd.n_dropped, 0)::BIGINT AS n_dropped
-    FROM nv LEFT JOIN nd ON nv.cid = nd.cid
-    """,
-)
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDedup (Abbas et al. 2023): assign every embedding to its nearest
-    of k deterministic centroids (here: the k lowest-vec_id vectors, so
-    both engines agree without an iterative trainer — `operators/kmeans.py`
-    is the production centroid source), then mark within-cluster pairs with
-    cosine >= tau and drop the higher id of each pair. Reports per-cluster
-    vector/pair/dropped counts; cosines rounded to 6 decimals BEFORE the
-    argmax and the threshold so double-noise can't flip either across
-    engines (ties broken by ascending cid on both sides).
-
-    Scale shape: centroid assignment is a broadcast of k×dim against a
-    map-only scan (crossJoin(broadcast) + max_by — no shuffle of the fact
-    side beyond the per-vec_id partial agg); the quadratic verify is ONE
-    applyInPandas over cid — a single exchange, then a numpy gram matrix
-    per cluster (no relational self-join, so the assignment subtree is
-    computed once, not per-branch). Cluster-blocked pairing is SemDedup's
-    whole trick: k scales with corpus size (k ~ n/50k) so block sizes stay
-    bounded, unlike the label-blocked `cosine_neardup` whose blocks grow
-    with the data."""
-    e = t(spark, sf_dir, "embeddings").where(
-        F.exists("embedding", lambda x: x != F.lit(0.0))
-    ).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cent = (
-        e.orderBy("vec_id")
-        .limit(_SEMDEDUP_K)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-    )
-    scored = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "cid",
-        "v",
-        r6(
-            _vdot(F.col("v"), F.col("cv"))
-            / (F.sqrt(_vdot(F.col("v"), F.col("v")))
-               * F.sqrt(_vdot(F.col("cv"), F.col("cv"))))
-        ).alias("cos"),
-    )
-    assigned = scored.groupBy("vec_id").agg(
-        F.max_by(
-            F.col("cid"),
-            F.struct(F.col("cos").alias("c"), (-F.col("cid")).alias("nc")),
-        ).alias("cid"),
-        F.first("v").alias("v"),
-    )
-
-    def cluster_stats(pdf: pandas.DataFrame) -> pandas.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        m = np.array(pdf["v"].tolist(), dtype=np.float64)  # (n, dim)
-        norms = np.sqrt((m * m).sum(axis=1))
-        cos = np.round((m @ m.T) / np.outer(norms, norms), 6)
-        iu = np.triu_indices(len(pdf), k=1)  # i<j, id-ordered rows
-        hit = cos[iu] >= _SEMDEDUP_TAU
-        dropped = np.unique(iu[1][hit])  # higher-id member of each pair
-        return pandas.DataFrame(
-            {
-                "cid": [int(pdf["cid"].iloc[0])],
-                "n_vecs": [len(pdf)],
-                "n_pairs": [int(hit.sum())],
-                "n_dropped": [len(dropped)],
-            }
-        )
-
-    return assigned.groupBy("cid").applyInPandas(
-        cluster_stats,
-        "cid bigint, n_vecs bigint, n_pairs bigint, n_dropped bigint",
-    )
-
-
 @qdef(
     "bpe_pair_counts",
     """
@@ -5160,640 +3975,17 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic total order so the LIMIT is stable cross-engine.
 
     Scale shape: the corpus collapses to the word-frequency table first
-    (map-side partial agg → vocab-sized shuffle), so pair generation and
-    everything after runs on |vocab| rows, not |corpus| — the reason BPE
-    training is feasible at 10^12 docs. Pair agg output is bounded by
+    (map-side partial agg → vocab-sized shuffle), so pair generation runs
+    on |vocab| rows, not |corpus|; the pair aggregate is bounded by
     alphabet² and the final top-k is a TakeOrdered (no global sort)."""
-    d = t(spark, sf_dir, "documents")
-    words = d.select(F.explode(F.split("text", " ")).alias("word")).where(
-        F.length("word") >= 2
-    )
-    freqs = words.groupBy("word").agg(
-        F.count(F.lit(1)).cast("bigint").alias("freq")
-    )
-    pairs = freqs.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word") - F.lit(1)),
-                lambda i: F.col("word").substr(i, F.lit(2)),
-            )
-        ).alias("pair"),
-        "freq",
+    vocab = word_frequencies(t(spark, sf_dir, "documents")).select(
+        "freq", F.split("word", "").alias("sym")
     )
     return (
-        pairs.groupBy("pair")
-        .agg(F.sum("freq").cast("bigint").alias("cnt"))
+        pair_counts(vocab)
+        .select(F.concat("a", "b").alias("pair"), "cnt")
         .orderBy(F.desc("cnt"), "pair")
         .limit(20)
-    )
-
-
-_ANN_RECALL_SQL = """
-    WITH e AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    ), q AS (
-      SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 5
-    ), bs AS (
-      SELECT q.qid, a.vec_id,
-             round(list_cosine_similarity(a.v, q.qv), 6) AS cos
-      FROM e a CROSS JOIN q WHERE a.vec_id <> q.qid
-    ), brute AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               row_number() OVER (PARTITION BY qid
-                                  ORDER BY cos DESC, vec_id) AS rn
-        FROM bs) WHERE rn <= 10
-    ), cent AS (
-      SELECT label, i, avg(v[i]) AS c
-      FROM e CROSS JOIN range(1, 65) t(i) GROUP BY label, i
-    ), qpos AS (
-      SELECT qid, i, qv[i] AS qx FROM q CROSS JOIN range(1, 65) t(i)
-    ), lc AS (
-      SELECT qid, label,
-             sum(c * qx) / (sqrt(sum(c * c)) * sqrt(sum(qx * qx))) AS ccos
-      FROM cent JOIN qpos USING (i) GROUP BY qid, label
-    ), probe AS (
-      SELECT qid, label FROM (
-        SELECT qid, label,
-               row_number() OVER (PARTITION BY qid
-                                  ORDER BY round(ccos, 6) DESC, label) AS rn
-        FROM lc) WHERE rn <= {probes}
-    ), cand AS (
-      SELECT p.qid, a.vec_id, a.v
-      FROM e a JOIN probe p USING (label) WHERE a.vec_id <> p.qid
-    ), cs AS (
-      SELECT c.qid, c.vec_id,
-             round(list_cosine_similarity(c.v, q.qv), 6) AS cos
-      FROM cand c JOIN q ON c.qid = q.qid
-    ), ivf AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               row_number() OVER (PARTITION BY qid
-                                  ORDER BY cos DESC, vec_id) AS rn
-        FROM cs) WHERE rn <= 10
-    ), nc AS (
-      SELECT qid, CAST(count(*) AS BIGINT) AS n_candidates
-      FROM cand GROUP BY qid
-    ), ov AS (
-      SELECT b.qid, CAST(count(*) AS BIGINT) AS n_overlap
-      FROM brute b JOIN ivf USING (qid, vec_id) GROUP BY b.qid
-    )
-    SELECT q.qid,
-           COALESCE(nc.n_candidates, 0)::BIGINT AS n_candidates,
-           COALESCE(ov.n_overlap, 0)::BIGINT AS n_overlap,
-           round(COALESCE(ov.n_overlap, 0) / 10.0, 6) AS recall_at_10
-    FROM q LEFT JOIN nc ON q.qid = nc.qid LEFT JOIN ov ON q.qid = ov.qid
-    """
-
-
-def _ann_recall_impl(
-    spark: SparkSession, sf_dir: str, probes: int
-) -> DataFrame:
-    """ANN quality evaluation: recall@10 of the IVF path (per-label
-    centroids, probe-N — exactly `ivf_topk`'s quantizer) against exact
-    brute-force top-10, for 5 fixed query vectors. The "measure, don't
-    guess" gate of the similarity layer: an ANN index is only as good as
-    its measured recall, so the evaluation itself must be a first-class,
-    cross-engine-checked operator. Also reports candidate-set size — the
-    pruning factor that recall is traded against.
-
-    Scale shape: queries and probe table are broadcast (5 rows / 10 rows);
-    the brute side is the deliberate full-scan baseline (5 × n — this is
-    an EVALUATION on a sample of queries, never the serving path); the IVF
-    side scans only the probed cells. All ranks are per-qid windows over
-    6-decimal-rounded cosines with vec_id tie-break, so both engines pick
-    identical top-k sets.
-
-    Measured on the sf0.01 fixture: recall@10 = 0.30 at probe-2 over 10
-    cells — the synthetic embeddings are diffuse Gaussians, so exact
-    neighbors scatter across cells. That unflattering number is the point:
-    the probe count is a measured dial, not a vibe."""
-    e = t(spark, sf_dir, "embeddings").where(
-        F.exists("embedding", lambda x: x != F.lit(0.0))
-    ).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = e.where("vec_id < 5").select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    rnw = Window.partitionBy("qid").orderBy(F.desc("cos"), "vec_id")
-
-    brute = (
-        e.alias("a")
-        .crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", r6(_cos_cols("a.v", "qv")).alias("cos"))
-        .withColumn("rn", F.row_number().over(rnw))
-        .where("rn <= 10")
-        .select("qid", "vec_id")
-    )
-    cent = (
-        e.select("label", F.posexplode("v").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(F.avg("x").alias("c"))
-    )
-    qpos = q.select("qid", F.posexplode("qv").alias("i", "qx"))
-    lc = (
-        cent.join(F.broadcast(qpos), "i")
-        .groupBy("qid", "label")
-        .agg(
-            (
-                F.sum(F.col("c") * F.col("qx"))
-                / (
-                    F.sqrt(F.sum(F.col("c") * F.col("c")))
-                    * F.sqrt(F.sum(F.col("qx") * F.col("qx")))
-                )
-            ).alias("ccos")
-        )
-    )
-    probe = (
-        lc.withColumn(
-            "rn",
-            F.row_number().over(
-                # round-before-rank (see ivf_topk): avg()-derived
-                # cosines are accumulation-order-dependent per engine
-                Window.partitionBy("qid").orderBy(
-                    F.desc(r6("ccos")), "label"
-                )
-            ),
-        )
-        .where(F.col("rn") <= probes)
-        .select("qid", "label")
-    )
-    cand = (
-        e.alias("a")
-        .join(F.broadcast(probe), "label")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.col("v"))
-    )
-    ivf = (
-        cand.alias("c")
-        .join(F.broadcast(q.withColumnRenamed("qid", "qid2")),
-              F.col("qid") == F.col("qid2"))
-        .select("qid", "vec_id", r6(_cos_cols("c.v", "qv")).alias("cos"))
-        .withColumn("rn", F.row_number().over(rnw))
-        .where("rn <= 10")
-        .select("qid", "vec_id")
-    )
-    nc = cand.groupBy("qid").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_candidates")
-    )
-    # both top-k sets are <= |queries| * k rows — broadcast, never SMJ
-    ov = brute.join(F.broadcast(ivf), ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_overlap")
-    )
-    # The output is driven from the QUERY table, not from nc: a query
-    # whose probed cells hold no candidate but itself must still emit a
-    # row (n_candidates=0, recall 0) — the worst-case recall row is the
-    # one the evaluation exists to surface.
-    return (
-        q.select("qid")
-        .join(F.broadcast(nc), "qid", "left")
-        .join(F.broadcast(ov), "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_candidates", F.lit(0))
-            .cast("bigint")
-            .alias("n_candidates"),
-            F.coalesce("n_overlap", F.lit(0))
-            .cast("bigint")
-            .alias("n_overlap"),
-            r6(F.coalesce("n_overlap", F.lit(0)) / F.lit(10.0)).alias(
-                "recall_at_10"
-            ),
-        )
-    )
-
-
-@qdef("ann_recall", _ANN_RECALL_SQL.format(probes=2))
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """probe-2 recall@10 — see `_ann_recall_impl` (0.30 on the diffuse
-    sf0.01 fixture)."""
-    return _ann_recall_impl(spark, sf_dir, 2)
-
-
-@qdef("ann_recall_probe4", _ANN_RECALL_SQL.format(probes=4))
-def q_ann_recall_probe4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """probe-4 recall@10: doubling probed cells ~doubles the candidate
-    set (≈95→≈200 of 500) and lifts recall 0.30 → 0.5-0.7 on the sf0.01
-    fixture — the measured recall-vs-cost dial, certified at two settings
-    so the TREND (not one point) is cross-engine-checked."""
-    return _ann_recall_impl(spark, sf_dir, 4)
-
-
-# ---------------------------------------------------------------------------
-# Text -> embedding -> ANN chain: derive real document embeddings from
-# documents.text (hashed TF + sign random projection, both engines share the
-# md5-derived hash so the vectors are bit-identical), then run the IVF
-# search + recall evaluation END TO END on those derived vectors — the proof
-# that the similarity stack composes from real text features, not just the
-# synthesized embeddings table.
-# ---------------------------------------------------------------------------
-
-_EMB_D = 64  # hashed feature buckets
-_EMB_K = 8  # projected output dimensions
-
-_EMBED_CTE = f"""
-    toks AS (
-      SELECT doc_id, unnest(str_split(text, ' ')) AS w
-      FROM documents WHERE text IS NOT NULL
-    ), tfreq AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(w), 1, 4))::BIGINT % {_EMB_D} AS f,
-             count(*) AS tf
-      FROM toks WHERE w <> '' GROUP BY 1, 2
-    ), proj AS (
-      SELECT fr.range AS f, jr.range AS j,
-             CASE WHEN ('0x' || substr(md5(fr.range::VARCHAR || '_' ||
-                          jr.range::VARCHAR), 1, 1))::BIGINT % 2 = 0
-                  THEN 1 ELSE -1 END AS s
-      FROM range(0, {_EMB_D}) fr CROSS JOIN range(0, {_EMB_K}) jr
-    ), rawv AS (
-      SELECT doc_id,
-             {", ".join(f"CAST(sum(CASE WHEN j = {k} THEN tf * s ELSE 0 END) AS DOUBLE) AS r{k}" for k in range(_EMB_K))}
-      FROM tfreq JOIN proj USING (f) GROUP BY doc_id
-    ), emb AS (
-      SELECT doc_id,
-             {", ".join(f"round(r{k} / nrm, 6) AS e{k}" for k in range(_EMB_K))}
-      FROM (SELECT *,
-              sqrt({" + ".join(f"r{k} * r{k}" for k in range(_EMB_K))}) AS nrm
-            FROM rawv)
-      WHERE nrm > 0
-    )
-"""
-
-
-def _sql_dot(a: str, b: str) -> str:
-    """Rounded dot product of two embedding-column row aliases (vectors are
-    L2-normalized upstream, so this IS the cosine)."""
-    return (
-        "round("
-        + " + ".join(f"{a}.e{k} * {b}.e{k}" for k in range(_EMB_K))
-        + ", 6)"
-    )
-
-
-def _hash_embed_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.text -> L2-normalized 8-dim (_EMB_K) embedding columns
-    (e0..e7), deterministic and engine-independent:
-
-      feature(w) = int(md5(w)[:4], 16) % 64 (_EMB_D)     (hashed TF buckets)
-      sign(f, j) = +-1 from md5(f + '_' + j)    (sign random projection)
-      e_j = sum_f tf(f) * sign(f, j), L2-normalized, rounded to 6 dp
-
-    The raw projections are exact integers (counts times +-1), so the
-    normalized doubles are bit-identical across Spark and DuckDB and the
-    driver's value hash matches exactly.
-
-    Scale shape: tokenize + feature-hash are map-side; ONE shuffle for the
-    (doc_id, feature) counts; the 512-row projection matrix broadcasts; ONE
-    shuffle for the per-doc conditional sums. No Python anywhere — the
-    whole embedder is Catalyst expressions (random projection a la
-    Achlioptas 2003 / hashing trick a la Weinberger et al. 2009)."""
-    d = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).where(F.col("w") != "")
-    feat = (
-        F.conv(F.substring(F.md5("w"), 1, 4), 16, 10).cast("bigint")
-        % _EMB_D
-    ).alias("f")
-    tf = (
-        toks.select("doc_id", feat)
-        .groupBy("doc_id", "f")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    proj = (
-        spark.range(_EMB_D)
-        .select(F.col("id").alias("f"))
-        .crossJoin(spark.range(_EMB_K).select(F.col("id").alias("j")))
-        .select(
-            "f",
-            "j",
-            F.when(
-                F.conv(
-                    F.substring(F.md5(F.concat_ws("_", "f", "j")), 1, 1),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 2
-                == 0,
-                F.lit(1),
-            )
-            .otherwise(F.lit(-1))
-            .alias("s"),
-        )
-    )
-    raw = (
-        tf.join(F.broadcast(proj), "f")
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.col("j") == k, F.col("tf") * F.col("s")
-                    ).otherwise(0)
-                )
-                .cast("double")
-                .alias(f"r{k}")
-                for k in range(_EMB_K)
-            ]
-        )
-    )
-    nrm = F.sqrt(
-        sum(F.col(f"r{k}") * F.col(f"r{k}") for k in range(_EMB_K))
-    )
-    return raw.where(nrm > 0).select(
-        "doc_id",
-        *[r6(F.col(f"r{k}") / nrm).alias(f"e{k}") for k in range(_EMB_K)],
-    )
-
-
-def _df_dot(a: str, b: str) -> F.Column:
-    return r6(
-        sum(
-            F.col(f"{a}.e{k}") * F.col(f"{b}.e{k}") for k in range(_EMB_K)
-        )
-    )
-
-
-@qdef(
-    "hash_embed",
-    f"""
-    WITH {_EMBED_CTE}
-    SELECT doc_id, {", ".join(f"e{k}" for k in range(_EMB_K))} FROM emb
-    """,
-)
-def q_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text -> embedding feature stage; see `_hash_embed_df` for the
-    construction and scale shape. Certified standalone so the chained ANN
-    query below debugs against a known-good embedding table."""
-    return _hash_embed_df(spark, sf_dir)
-
-
-_CHAIN_SQL = f"""
-    WITH {_EMBED_CTE},
-    cent AS (
-      SELECT doc_id AS cid, {", ".join(f"e{k}" for k in range(_EMB_K))}
-      FROM emb WHERE doc_id < 8
-    ), q AS (
-      SELECT doc_id AS qid, {", ".join(f"e{k}" for k in range(_EMB_K))}
-      FROM emb WHERE doc_id BETWEEN 8 AND 12
-    ), assign AS (
-      SELECT doc_id, cid, {", ".join(f"e{k}" for k in range(_EMB_K))}
-      FROM (
-        SELECT a.doc_id, c.cid,
-               {", ".join(f"a.e{k} AS e{k}" for k in range(_EMB_K))},
-               row_number() OVER (PARTITION BY a.doc_id
-                 ORDER BY {_sql_dot("a", "c")} DESC, c.cid) AS rn
-        FROM emb a CROSS JOIN cent c
-      ) WHERE rn = 1
-    ), brute AS (
-      SELECT qid, doc_id FROM (
-        SELECT q.qid, a.doc_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {_sql_dot("a", "q")} DESC, a.doc_id) AS rn
-        FROM emb a CROSS JOIN q WHERE a.doc_id <> q.qid
-      ) WHERE rn <= 5
-    ), probe AS (
-      SELECT qid, cid FROM (
-        SELECT q.qid, c.cid,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {_sql_dot("c", "q")} DESC, c.cid) AS rn
-        FROM cent c CROSS JOIN q
-      ) WHERE rn <= 2
-    ), cand AS (
-      SELECT p.qid, a.doc_id,
-             {", ".join(f"a.e{k} AS e{k}" for k in range(_EMB_K))}
-      FROM assign a JOIN probe p USING (cid)
-      WHERE a.doc_id <> p.qid
-    ), ivf AS (
-      SELECT qid, doc_id FROM (
-        SELECT c.qid, c.doc_id,
-               row_number() OVER (PARTITION BY c.qid
-                 ORDER BY {_sql_dot("c", "q")} DESC, c.doc_id) AS rn
-        FROM cand c JOIN q USING (qid)
-      ) WHERE rn <= 5
-    ), nc AS (
-      SELECT qid, CAST(count(*) AS BIGINT) AS n_candidates
-      FROM cand GROUP BY qid
-    ), ov AS (
-      SELECT b.qid, CAST(count(*) AS BIGINT) AS n_overlap
-      FROM brute b JOIN ivf USING (qid, doc_id) GROUP BY b.qid
-    )
-    SELECT q.qid,
-           COALESCE(nc.n_candidates, 0)::BIGINT AS n_candidates,
-           COALESCE(ov.n_overlap, 0)::BIGINT AS n_overlap,
-           round(COALESCE(ov.n_overlap, 0) / 5.0, 6) AS recall_at_5
-    FROM q LEFT JOIN nc ON q.qid = nc.qid LEFT JOIN ov ON q.qid = ov.qid
-"""
-
-
-@qdef("embed_ivf_chain", _CHAIN_SQL)
-def q_embed_ivf_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END similarity chain on REAL text features: text ->
-    `_hash_embed_df` embeddings -> deterministic IVF coarse quantizer
-    (cells seeded by the first 8 docs' embeddings — no iterative trainer,
-    so the whole chain is closed-form and cross-engine checkable) ->
-    probe-2 candidate search -> recall@5 vs exact brute force for 5 fixed
-    query docs. Proves the ANN stack (`ivf_topk`, `ann_recall`) composes
-    from derived features, not just the pre-synthesized embeddings table.
-
-    Scale shape: the embed stage is 2 shuffles (see `_hash_embed_df`);
-    centroids (8 rows) and queries (5 rows) BROADCAST everywhere; cell
-    assignment is a map-side broadcast argmax over the corpus; the IVF
-    side scans only probed cells; the brute side is evaluation-only (5 x
-    corpus, a deliberate baseline on sampled queries, never the serving
-    path). Every argmax/top-k orders by 6-dp-rounded cosine with id
-    tie-break on both engines.
-
-    Measured on the sf0.01 fixture: recall@5 = 0.6-1.0 (mean 0.88) while
-    scanning ~30-44% of the corpus per query — tighter than the Gaussian
-    `ann_recall` fixture because hashed-TF embeddings of same-language
-    docs genuinely cluster."""
-    emb = _hash_embed_df(spark, sf_dir)
-    ecols = [f"e{k}" for k in range(_EMB_K)]
-    cent = emb.where(F.col("doc_id") < 8).select(
-        F.col("doc_id").alias("cid"), *ecols
-    )
-    qv = emb.where(F.col("doc_id").between(8, 12)).select(
-        F.col("doc_id").alias("qid"), *ecols
-    )
-
-    assign = (
-        emb.alias("a")
-        .crossJoin(F.broadcast(cent.alias("c")))
-        .select(
-            "a.doc_id",
-            "c.cid",
-            *[F.col(f"a.{c}").alias(c) for c in ecols],
-            _df_dot("a", "c").alias("dc"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(
-                    F.desc("dc"), "cid"
-                )
-            ),
-        )
-        .where("rn = 1")
-        .select("doc_id", "cid", *ecols)
-    )
-    brute = (
-        emb.alias("a")
-        .crossJoin(F.broadcast(qv.alias("q")))
-        .where(F.col("a.doc_id") != F.col("qid"))
-        .select("qid", "a.doc_id", _df_dot("a", "q").alias("cos"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("cos"), "doc_id")
-            ),
-        )
-        .where("rn <= 5")
-        .select("qid", "doc_id")
-    )
-    probe = (
-        cent.alias("c")
-        .crossJoin(F.broadcast(qv.alias("q")))
-        .select("qid", "cid", _df_dot("c", "q").alias("cos"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("cos"), "cid")
-            ),
-        )
-        .where("rn <= 2")
-        .select("qid", "cid")
-    )
-    cand = (
-        assign.alias("a")
-        .join(F.broadcast(probe), "cid")
-        .where(F.col("doc_id") != F.col("qid"))
-        .select("qid", "doc_id", *ecols)
-    )
-    ivf = (
-        cand.alias("c")
-        .join(
-            F.broadcast(
-                qv.alias("q").select(
-                    F.col("qid").alias("qid2"),
-                    *[F.col(c).alias(f"q_{c}") for c in ecols],
-                )
-            ),
-            F.col("qid") == F.col("qid2"),
-        )
-        .select(
-            "qid",
-            "doc_id",
-            r6(
-                sum(
-                    F.col(f"e{k}") * F.col(f"q_e{k}")
-                    for k in range(_EMB_K)
-                )
-            ).alias("cos"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("cos"), "doc_id")
-            ),
-        )
-        .where("rn <= 5")
-        .select("qid", "doc_id")
-    )
-    nc = cand.groupBy("qid").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_candidates")
-    )
-    ov = (
-        brute.join(F.broadcast(ivf), ["qid", "doc_id"])
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
-    )
-    # Driven from the query table so a query with an empty candidate set
-    # still reports n_candidates=0 / recall 0 (see _ann_recall_impl).
-    return (
-        qv.select("qid")
-        .join(F.broadcast(nc), "qid", "left")
-        .join(F.broadcast(ov), "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_candidates", F.lit(0))
-            .cast("bigint")
-            .alias("n_candidates"),
-            F.coalesce("n_overlap", F.lit(0))
-            .cast("bigint")
-            .alias("n_overlap"),
-            r6(F.coalesce("n_overlap", F.lit(0)) / F.lit(5.0)).alias(
-                "recall_at_5"
-            ),
-        )
-    )
-
-
-@qdef(
-    "mixture_weights",
-    """
-    WITH s AS (
-      SELECT source,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(n_chars) AS BIGINT) AS n_chars
-      FROM documents GROUP BY source
-    ), tot AS (SELECT CAST(sum(n_docs) AS DOUBLE) AS n FROM s)
-    SELECT source, n_docs, n_chars,
-           round(n_docs / n, 6) AS p,
-           -- pw quantized at 1e-9 on both sides of the ratio: absorbs the
-           -- 1-ulp Math.pow/libm pow difference, and the decimal window
-           -- sum is accumulation-order-independent (see dsum)
-           round(CAST(CAST(pow(n_docs / n, 1.0 / 3.0) AS DECIMAL(38,9))
-                      AS DOUBLE)
-                 / CAST(sum(CAST(pow(n_docs / n, 1.0 / 3.0)
-                                 AS DECIMAL(38,9))) OVER () AS DOUBLE), 6)
-             AS w_temp
-    FROM s, tot
-    """,
-)
-def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled domain-mixture sampling weights (the multilingual
-    / multi-domain curation rule: sample source s with probability
-    p_s^(1/T) / Z, T=3, so tail domains are up-weighted without letting
-    any dominate — the mixture dial DoReMi-style reweighting tunes). Emits
-    raw share p and the T=3 weight per source.
-
-    Scale shape: one map-side-combined aggregate collapses the corpus to
-    |sources| rows; the temperature normalization is a single-partition
-    window over that dimension-sized table (constant rows at any corpus
-    scale — the corpus itself never re-shuffles). Grafts the reference's
-    per-virtual-network metric share reports (ispaq/utils.py:119-147)
-    into a sampling policy."""
-    d = t(spark, sf_dir, "documents")
-    s = d.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("n_chars"),
-    )
-    tot = s.agg(F.sum("n_docs").cast("double").alias("n"))
-    p = F.col("n_docs") / F.col("n")
-    w = Window.partitionBy()
-    return (
-        s.crossJoin(F.broadcast(tot))
-        # pw quantized at 1e-9 (absorbs Math.pow/libm pow ulps); the
-        # decimal window sum is order-independent — mirrors the oracle
-        .withColumn(
-            "pw",
-            F.pow(p, F.lit(1.0 / 3.0)).cast("decimal(38,9)"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_chars",
-            r6(p).alias("p"),
-            r6(
-                F.col("pw").cast("double")
-                / F.sum("pw").over(w).cast("double")
-            ).alias("w_temp"),
-        )
     )
 
 
@@ -6027,14 +4219,6 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify inside each bucket, map-only predicates, per-source rank,
     zero-shuffle split; the count branches are independent 1-row
     aggregates crossJoined at the end (no driver-side collect)."""
-    from .curation import (
-        CurationPolicy,
-        assign_split,
-        cap_per_source,
-        quality_filter,
-    )
-    from .operators.dedup import exact_dedup, minhash_dedup
-
     pol = CurationPolicy()
     d = t(spark, sf_dir, "documents").select("doc_id", "text", "source")
     s1 = exact_dedup(d, "text")
@@ -6069,176 +4253,6 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(cnt(s3, "n_quality"))
         .crossJoin(cnt(s4, "n_capped"))
         .crossJoin(splits)
-    )
-
-
-@qdef(
-    "tfidf_phrases",
-    """
-    WITH w AS (
-      SELECT source, str_split(text, ' ') AS words FROM documents
-    ), ph AS (
-      SELECT source,
-             unnest(list_transform(range(1, len(words)),
-                     i -> words[i] || ' ' || words[i+1])) AS phrase
-      FROM w WHERE len(words) >= 2
-    ), tf AS (
-      SELECT source, phrase, CAST(count(*) AS BIGINT) AS tf
-      FROM ph GROUP BY source, phrase
-    ), df AS (
-      SELECT phrase, CAST(count(*) AS BIGINT) AS df
-      FROM (SELECT DISTINCT source, phrase FROM tf) GROUP BY phrase
-    ), n AS (
-      SELECT CAST(count(DISTINCT source) AS DOUBLE) AS ns FROM documents
-    )
-    SELECT source, phrase, tf, round(score, 6) AS tfidf
-    FROM (
-      SELECT tf.source, tf.phrase, tf.tf,
-             tf.tf * ln(n.ns / df.df) AS score,
-             -- rank on the 6dp-ROUNDED score (round-before-rank
-             -- convention): Spark's Math.log and libm ln differ in the
-             -- last ulp, so mathematically-tied raw scores from
-             -- different (tf, df) pairs can order differently at the cut
-             row_number() OVER (
-               PARTITION BY tf.source
-               ORDER BY round(tf.tf * ln(n.ns / df.df), 6) DESC,
-                        tf.phrase) AS rn
-      FROM tf JOIN df USING (phrase) CROSS JOIN n
-    ) WHERE rn <= 5
-    """,
-)
-def q_tfidf_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Characteristic phrases per domain: tf-idf over 2-word phrases with
-    source-level document frequency, top-5 per source — the corpus
-    summarization a curation run uses to see WHAT each domain contributes
-    (complement of `bm25_rank`, which scores docs for a query).
-
-    Scale shape: phrase tf collapses the corpus map-side to the
-    (source × phrase) table; df is a second vocab-sized aggregate whose
-    output BROADCASTS back (phrase-df is model-sized, like idf tables
-    everywhere); the corpus-count scalar rides the same broadcast; the
-    final top-5 is a per-source rank over the already-collapsed tf table.
-    The fact table is never shuffled twice."""
-    d = t(spark, sf_dir, "documents")
-    w = d.select("source", F.split("text", " ").alias("words")).where(
-        F.size("words") >= 2
-    )
-    ph = w.select(
-        "source",
-        F.explode(_shingles_of(F.col("words"), 2)).alias("phrase"),
-    )
-    tf = ph.groupBy("source", "phrase").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    df_tab = (
-        tf.select("source", "phrase")
-        .distinct()
-        .groupBy("phrase")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    )
-    ns = d.agg(
-        F.countDistinct("source").cast("double").alias("ns")
-    )
-    scored = (
-        tf.join(F.broadcast(df_tab), "phrase")
-        .crossJoin(F.broadcast(ns))
-        .withColumn(
-            "score", F.col("tf") * F.log(F.col("ns") / F.col("df"))
-        )
-    )
-    # round-before-rank: cross-engine ln() differs in the last ulp, so
-    # the top-5 cut must order on the same 6dp value both engines emit
-    rn = F.row_number().over(
-        Window.partitionBy("source").orderBy(F.desc(r6("score")), "phrase")
-    )
-    return (
-        scored.withColumn("rn", rn)
-        .where("rn <= 5")
-        .select("source", "phrase", "tf", r6("score").alias("tfidf"))
-    )
-
-
-@qdef(
-    "ngram_novelty",
-    """
-    WITH s AS (
-      SELECT lang, text,
-             CASE WHEN (('0x' || substr(md5('split|' || doc_id), 1, 8))
-                        ::BIGINT) % 100 < 90
-                  THEN 'train' ELSE 'val' END AS split
-      FROM documents
-    ), g AS (
-      SELECT lang, split,
-             unnest(list_transform(range(1, len(words) - 6),
-                     i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2] || ' ' || words[i+3] || ' ' || words[i+4] || ' ' || words[i+5] || ' ' || words[i+6] || ' ' || words[i+7])) AS gram
-      FROM (SELECT lang, split, str_split(text, ' ') AS words FROM s)
-      WHERE len(words) >= 8
-    ), tr AS (
-      SELECT DISTINCT lang, gram FROM g WHERE split = 'train'
-    ), va AS (
-      SELECT DISTINCT lang, gram FROM g WHERE split = 'val'
-    ), novel AS (
-      SELECT va.lang, CAST(count(*) AS BIGINT) AS n_novel
-      FROM va LEFT JOIN tr ON va.lang = tr.lang AND va.gram = tr.gram
-      WHERE tr.gram IS NULL GROUP BY va.lang
-    ), tot AS (
-      SELECT lang, CAST(count(*) AS BIGINT) AS n_val_grams
-      FROM va GROUP BY lang
-    )
-    SELECT tot.lang, tot.n_val_grams,
-           COALESCE(novel.n_novel, 0)::BIGINT AS n_novel,
-           round(COALESCE(novel.n_novel, 0) / tot.n_val_grams, 6)
-             AS novelty
-    FROM tot LEFT JOIN novel ON tot.lang = novel.lang
-    """,
-)
-def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-novelty audit: the fraction of the val split's distinct
-    8-grams never seen in the train split, per language — high novelty =
-    a genuinely held-out eval set; low novelty = leakage the
-    decontamination stage must explain. Uses the same salted hash split
-    as `split_assign`/`curation.py`, so it audits the ACTUAL splits the
-    pipeline ships.
-
-    Scale shape: the gram explode is map-side; distinct + the
-    train-vs-val anti-join both key on (lang, gram) — one hash family,
-    no broadcast of the (corpus-sized) train gram set, which is exactly
-    why this is an anti-JOIN and not a decontaminate-style broadcast
-    (benchmarks are model-sized; a train split is not)."""
-    d = t(spark, sf_dir, "documents")
-    bucket = F.pmod(
-        _hex_hash_spark(
-            F.concat(F.lit("split|"), F.col("doc_id").cast("string"))
-        ),
-        F.lit(100),
-    )
-    s = d.select(
-        "lang",
-        F.split("text", " ").alias("words"),
-        F.when(bucket < 90, "train").otherwise("val").alias("split"),
-    ).where(F.size("words") >= 8)
-    g = s.select(
-        "lang",
-        "split",
-        F.explode(_shingles_of(F.col("words"), 8)).alias("gram"),
-    )
-    tr = g.where("split = 'train'").select("lang", "gram").distinct()
-    va = g.where("split = 'val'").select("lang", "gram").distinct()
-    novel = (
-        va.join(tr, ["lang", "gram"], "left_anti")
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_novel"))
-    )
-    tot = va.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_val_grams")
-    )
-    return tot.join(F.broadcast(novel), "lang", "left").select(
-        "lang",
-        "n_val_grams",
-        F.coalesce("n_novel", F.lit(0)).cast("bigint").alias("n_novel"),
-        r6(
-            F.coalesce("n_novel", F.lit(0)) / F.col("n_val_grams")
-        ).alias("novelty"),
     )
 
 
@@ -6278,52 +4292,15 @@ def q_lsh_containment_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment scoring over LSH band candidates:
     |A∩B| / min(|A|,|B|) — the quote/boilerplate detector Jaccard misses
     (a short doc wholly quoted inside a long one has LOW Jaccard but
-    containment 1.0; C4's span removal and news-wire syndication dedup
-    both key on this). Same band-bucket candidate generator and word-set
-    join shape as `lsh_jaccard_verify`; only the kernel's denominator
-    changes — which is the point of the pluggable-kernel verify design."""
-    cand = _band_candidates(_minhash_sig(spark, sf_dir))
-    words = _word_sets(spark, sf_dir).select("doc_id", "ws")
-    wa = words.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("wa"))
-    wb = words.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("wb"))
-    j = cand.join(wa, "doc_a").join(wb, "doc_b")
-    inter = F.size(F.array_intersect("wa", "wb"))
-    return j.select(
+    containment 1.0). Same candidates and word sets as
+    `lsh_jaccard_verify`; only the kernel's denominator changes."""
+    docs = t(spark, sf_dir, "documents")
+    sa, sb = F.col("sa"), F.col("sb")
+    inter = F.size(F.array_intersect(sa, sb))
+    return _scored_candidates(docs, word_set("text")).select(
         "doc_a",
         "doc_b",
-        r6(inter / F.least(F.size("wa"), F.size("wb"))).alias("containment"),
-    )
-
-
-@qdef(
-    "dup_rate_by_source",
-    """
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_distinct,
-           round(1.0 - count(DISTINCT md5(text)) / count(*), 6)
-             AS dup_rate
-    FROM documents GROUP BY source
-    """,
-)
-def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain exact-duplication rate — the audit column a curation run
-    reports per source BEFORE deciding cap/dedup policy (mirror-heavy
-    domains show high dup_rate and get capped harder; `curation_report`
-    then certifies what the policy actually removed).
-
-    Scale shape: one map-side-combined aggregate on source; the distinct
-    is hash-based (md5 of content, 16 bytes on the wire, never the text).
-    Grafts the reference's percent_availability-style per-target coverage
-    report (ispaq/simple_metrics.py) as a content-integrity column."""
-    d = t(spark, sf_dir, "documents")
-    return d.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.countDistinct(F.md5("text")).cast("bigint").alias("n_distinct"),
-        r6(
-            F.lit(1.0)
-            - F.countDistinct(F.md5("text")) / F.count(F.lit(1))
-        ).alias("dup_rate"),
+        r6(inter / F.least(F.size(sa), F.size(sb))).alias("containment"),
     )
 
 
@@ -6369,242 +4346,66 @@ def q_dup_cluster_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WS_K = 50  # weighted-sample size
-
-
-@qdef(
-    "weighted_sample",
-    f"""
-    WITH u AS (
-      SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars,
-             (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-              + 1) / 4294967297.0 AS uni
-      FROM documents WHERE text IS NOT NULL
-    )
-    SELECT doc_id, source, n_chars,
-           round(pow(uni, 1.0 / greatest(n_chars, 1)), 6) AS priority
-    FROM u
-    ORDER BY round(pow(uni, 1.0 / greatest(n_chars, 1)), 6) DESC, doc_id
-    LIMIT {_WS_K}
-    """,
-)
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weighted sampling without replacement (Efraimidis &
-    Spirakis 2006 A-ES priority sampling): each doc gets priority
-    u^(1/w) with u a hash-uniform in (0,1] derived from md5(doc_id) and w
-    its weight (chars here; quality score in production) — the global
-    top-k by priority IS a weighted sample without replacement. This is
-    the weighted companion to `stratified_sample`'s unweighted hash gate:
-    the standard primitive for length- or quality-proportional corpus
-    down-sampling, reproducible across retries because the randomness is
-    a pure function of doc_id.
-
-    Scale shape: priorities are map-side expressions (no RNG state, no
-    shuffle); the global top-k is TakeOrdered (per-partition heaps, k-row
-    driver merge) — the corpus never exchanges. Grafts the reference's
-    deterministic snippet selection (simple_metrics.py sampling of
-    windows) as a corpus-level policy."""
-    d = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    uni = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        + 1
-    ) / F.lit(4294967297.0)
-    prio = F.pow(uni, 1.0 / F.greatest(F.col("n_chars"), F.lit(1)))
-    # The top-k cut orders on the 6-dp-ROUNDED priority with doc_id
-    # tiebreak (the repo's round-before-argmax convention): Java Math.pow
-    # and libm pow can differ by 1 ulp, so a raw-double boundary could
-    # pick different rows per engine at a near-tie.
-    return (
-        d.select(
-            "doc_id",
-            "source",
-            F.col("n_chars").cast("bigint").alias("n_chars"),
-            r6(prio).alias("priority"),
-        )
-        .orderBy(F.desc("priority"), "doc_id")
-        .limit(_WS_K)
-    )
-
-
-@qdef(
-    "weighted_sample_quality",
-    f"""
-    WITH w AS (
-      SELECT doc_id, source, str_split(text, ' ') AS words,
-             (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-              + 1) / 4294967297.0 AS uni
-      FROM documents WHERE text IS NOT NULL
-    ), s AS (
-      SELECT doc_id, source, uni,
-             round(0.01 + len(list_filter(words, x -> list_contains({{EN}}, x)))
-                   / len(words), 6) AS quality_w
-      FROM w
-    )
-    SELECT doc_id, source, quality_w,
-           round(pow(uni, 1.0 / quality_w), 6) AS priority
-    FROM s
-    ORDER BY round(pow(uni, 1.0 / quality_w), 6) DESC, doc_id
-    LIMIT {_WS_K}
-    """.replace("{EN}", _EN_SQL),
-)
-def q_weighted_sample_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`weighted_sample` on the weight production would actually use: the
-    document QUALITY score (stopword ratio, the strongest SQL-expressible
-    Gopher-rule proxy, floored at 0.01 so every doc keeps a positive
-    inclusion probability) instead of raw length. A-ES priorities
-    u^(1/quality) make the top-k a quality-proportional sample without
-    replacement — the standard curation move of oversampling fluent text
-    when down-sampling a web corpus. Same determinism contract as
-    `weighted_sample` (hash-uniform u from doc_id, 6-dp-rounded priority
-    cut with doc_id tiebreak on both engines).
-
-    Scale shape: identical to `weighted_sample` — the weight adds one
-    per-row array expression (no shuffle, no Python), priorities are
-    map-side, and the cut is TakeOrdered (per-partition heaps, k-row
-    driver merge); the corpus never exchanges."""
-    d = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = F.split("text", " ")
-    sw = F.array(*[F.lit(x) for x in _EN])
-    swr = F.size(F.filter(toks, lambda x: F.array_contains(sw, x))) / F.size(
-        toks
-    )
-    qw = r6(F.lit(0.01) + swr)
-    uni = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        + 1
-    ) / F.lit(4294967297.0)
-    return (
-        d.select(
-            "doc_id",
-            "source",
-            qw.alias("quality_w"),
-            r6(F.pow(uni, 1.0 / qw)).alias("priority"),
-        )
-        .orderBy(F.desc("priority"), "doc_id")
-        .limit(_WS_K)
-    )
-
-
 # ===========================================================================
 # Registry accessors (consumed by __spark_entry__.py)
 # ===========================================================================
 
 
-# The driver certifies only the first 50 entries of queries() per round
-# (the CORRECTNESS_r* window cuts at exactly 50, in registration order).
-# Rotation rule: queries whose implementation is NEW or CHANGED this round
-# go first, then the least-recently-certified ones (the set absent from the
-# latest CORRECTNESS json), so every query re-earns a green row across
-# rounds and a silent regression can't hide outside the window.
+# The driver certifies only the first 50 entries of queries() per round, in
+# this order: every library-backed query first, then catalogue queries.
+# scripts/check_oracle.py sweeps all of queries() locally.
 _DRIVER_PRIORITY: list[str] = [
-    # -- round-5 NEW or CHANGED (40 queries; exact set computed by diffing
-    # every query's oracle string + spark-function source between the r4
-    # verdict commit 078a880 and HEAD). The hostile-fixture hardening
-    # (zero-norm exclusion at the scan, indexed-list_transform oracle grams,
-    # zipped unnests) and the closure-free shingle rewrite touched 27
-    # oracles, so all of them re-earn a driver row this round.
-    "weighted_sample_quality",  # new (A-ES sample on the quality score)
-    "geo_radius_banded",   # density-capped estimator (exact at fixture)
-    "neardup_components",  # alternating-star is now the certified path
-    "intradoc_dedup",      # self-guarding empty-gram expr + anti-join oracle
-    # weighted_sample rotated to the overflow list: weighted_sample_quality
-    # (above) runs the identical A-ES round-before-cut machinery on the
-    # quality weight, so the fixed path keeps a driver row via its twin.
-    "embed_ivf_chain",     # query-driven output (zero-candidate rows)
-    "ann_recall",          # same + zero-norm exclusion
-    # ann_recall_probe4 rotated to the overflow list: it is ann_recall's
-    # probe-count parameter twin (same oracle family, same chain), and the
-    # full local sweeps cover it on every fixture shape.
+    "langid_confusion",
+    "fingerprint",
+    "minhash_signatures",
+    "simhash16",
+    "jaccard_pairs",
     "ann_lsh_buckets",
+    "minhash_lsh_neardup",
+    "lsh_jaccard_verify",
+    "lsh_containment_verify",
     "canonical_docs",
-    "char_entropy",        # phantom-empty-char oracle fix
-    "chunk_dedup",         # zipped-unnest oracle
-    "cosine_neardup",
-    "cosine_topk",
-    "curation_report",
+    "neardup_components",
     "decontaminate",
-    "dup_3gram",
+    "split_assign",
+    "domain_cap",
+    "curation_report",
+    "cogroup_xcorr",
+    "xcorr_collected",
+    "welch_coherence",
+    "welch_collected",
+    "orientation_scan",
+    "bpe_pair_counts",
+    "geo_radius_banded",
+    "intradoc_dedup",
+    "char_entropy",
+    "chunk_dedup",
     "int8_topk",
     "ivf_topk",
-    "lsh_containment_verify",
-    "lsh_cosine_verify",
-    "lsh_jaccard_verify",
-    "langid_nb_confusion",  # closure-free char grams (hostile-sweep fix)
-    "dedup_exact",          # oracle counts the null-content group
-    "langid_confusion",     # NULL text predicts 'und', not NULL
-    "quality_keep",         # NULL text is a drop, not a NULL group
-    "minhash_lsh_neardup",
-    "minhash_signatures",
-    "ngram_novelty",
     "pmi_bigrams",
-    "semdedup",
-    "substring_dedup",     # zipped-unnest oracle
-    "tfidf_phrases",
-    "udtf_repeated_ngrams",
-    "cube_totals",         # derived grouping sets (empty-day std compliance)
-    # rollup_periods rotated to the overflow list: identical zero-row
-    # grand-total fix and grouping-set decimal hardening as cube_totals,
-    # which stays; covered by the full local sweeps.
-    # oracle-parity review fixes (round-before-rank/argmax, NULL-ordering,
-    # NULL-propagating concat, avg-vs-sum/count(*) NULL semantics):
-    "cogroup_xcorr",       # 6dp-rounded argmax over lag on both engines
-    # xcorr_collected rotated to the overflow list: same shared oracle and
-    # numpy kernel (operators/crosscorr.py) as cogroup_xcorr, which stays.
-    # -- decimal-sum hardening, second batch (fractional sums feeding
-    # emitted rounded values or the rounded argmax):
-    "merge_upsert",        # decimal o_totalprice sums in both runs
-    "orientation_scan",    # 10 decimal moment sums behind the corr argmax
-    "mode_per_group",      # NULLS LAST pinned in the mode tiebreak
-    "sncl_reorder",        # NULL-propagating concat, NULL-guarded reorder
-    "psd_windows",         # decimal-sum mean (fuzz-seed-101 rounding flip)
-    # -- decimal-sum hardening, third batch: SECOND moments (variance /
-    # correlation / OLS / SNR) rewritten as closed forms over decimal sums
-    # of x, x*x (and y, y*y, x*y) with the identical expression shape in
-    # the oracle — the built-in stddev_pop/corr/regr_* central-moment
-    # merges are accumulation-order-dependent across engines:
-    "basic_stats",         # rmsVariance = sqrt(E[x^2]-E[x]^2) closed form
-    "corr_per_group",      # Pearson corr from five decimal sums
-    "ols_resid",           # slope/intercept/resid-std from five sums
-    "snr_window",          # two conditional stddevs from per-half sums
-    # -- decimal-sum hardening of every emitted first moment over
-    # fractional doubles (the psd_windows fuzz finding, applied to the
-    # whole class proactively — see dsum/davg). dim_join_agg, unigram_ppl,
-    # and mixture_weights stay as the class representatives; state_flags,
-    # pivot_metrics, dsir_resample rotated to the overflow (identical
-    # dsum/davg change class, covered by the full local sweeps):
-    "dim_join_agg",        # decimal sum + mean of c_acctbal
-    "unigram_ppl",         # decimal-sum means at both nll/ppl levels
-    # (char_entropy also got the decimal treatment — it is already in the
-    # changed list above with its phantom-empty-char fix)
-    "mixture_weights",     # quantized pw + decimal window normalization
-    # -- changed earlier this round and still owed a driver row (these
-    # four were formerly mislabeled as pure rechecks; a qdef-block diff vs
-    # the r4 verdict commit 078a880 shows all four changed):
-    "bpe_pair_counts",
-    "salted_skew_agg",     # non-null count partials (parity-review fix)
+    "substring_dedup",
+    "cube_totals",
+    "merge_upsert",
+    "mode_per_group",
+    "psd_windows",
+    "basic_stats",
+    "corr_per_group",
+    "ols_resid",
+    "snr_window",
+    "dim_join_agg",
+    "salted_skew_agg",
     "source_overlap",
-    "variant_extract",     # fractional-variant integrality double-twin
+    "variant_extract",
+    "adaptive_quality_cut",
+    "asof_join",
+    "bm25_rank",
+    "funnel_steps",
+    "gaps",
+    "hist2d",
+    "interval_join",
+    "inverted_index",
+    "psd_quantiles",
 ]
-# The overflow — r03-certified UNCHANGED queries (adaptive_quality_cut,
-# arrow_token_stats, asof_join, bm25_rank, domain_cap, dup_rate_by_source,
-# funnel_steps, gaps, hist2d, interval_join, inverted_index, psd_quantiles,
-# sessionize, split_assign, stratified_sample, udaf_trimmed_mean,
-# vocab_topk, welch_coherence, welch_collected, ann_recall_probe4) plus the
-# changed-class twins rotated out above (state_flags, pivot_metrics,
-# dsir_resample, rollup_periods, weighted_sample, xcorr_collected) — is
-# covered by the full 98-query local sweeps (same comparison code as the
-# driver) at sf0.01 + sf0.001 + the hostile, degenerate, shuffled,
-# zero-row, and seeded-fuzz fixtures recorded in BENCH/BASELINE.md
-# (round-5 validation). Changed queries always outrank rechecks for the
-# driver's 50-row window.
 
 
 def _ordered_defs() -> list[QueryDef]:
@@ -6621,4 +4422,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {d.name: d.oracle for d in _ordered_defs() if d.oracle is not None}
+    return {d.name: d.oracle for d in _ordered_defs()}

@@ -1,7 +1,7 @@
 """Distributed BPE (byte-pair-encoding) tokenizer trainer over a document
 corpus — the vocabulary-learning stage of a training-data pipeline
-(`bpe_pair_counts` in driver_queries.py is the oracle-checked relational
-twin of one merge round's statistic).
+(the `bpe_pair_counts` driver query certifies `word_frequencies` and
+`pair_counts`, one merge round's statistic, against DuckDB).
 
 Scale shape: the corpus is collapsed ONCE to the word-frequency table
 (map-side partial agg → vocab-sized shuffle); every merge round after that
@@ -45,7 +45,7 @@ def word_frequencies(
     )
 
 
-def _pair_counts(vocab: DataFrame) -> DataFrame:
+def pair_counts(vocab: DataFrame) -> DataFrame:
     """Adjacent symbol-pair counts weighted by word frequency. In-row
     explode of arrays_zip(sym[:-1], sym[1:]) — no pre-shuffle blowup."""
     n = F.size("sym")
@@ -102,7 +102,7 @@ def train_bpe(
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
         top = (
-            _pair_counts(vocab)
+            pair_counts(vocab)
             .orderBy(F.desc("cnt"), "a", "b")
             .limit(1)
             .collect()

@@ -4,9 +4,7 @@ Two algorithms over (a, b) edge pairs:
 
 * ``label_propagation_components`` — simple min-label propagation, one
   shuffle round per graph-diameter step. Right for near-dup graphs (dense
-  clusters, tiny diameters) and used by the driver query
-  `neardup_components` (driver_queries.py), whose recursive-CTE oracle
-  checks the semantics cross-engine.
+  clusters, tiny diameters).
 
 * ``alternating_star_components`` — the large-star/small-star alternation
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -14,11 +12,12 @@ Two algorithms over (a, b) edge pairs:
   neighborhood, converging in O(log d) rounds instead of O(d). This is the
   10^12-edge path: web-graph-scale components with long chains (URL
   redirect chains, citation paths) where diameter-bound propagation would
-  take hundreds of rounds.
+  take hundreds of rounds. The `neardup_components` driver query runs it
+  against a recursive-CTE oracle.
 
 Both cut per-round lineage with eager localCheckpoint — unpersist cascades
 to dependent cached plans, so a persist/unpersist loop silently recomputes
-its whole history each round (see driver_queries.q_neardup_components).
+its whole history each round.
 
 Graft slot: the reference's channel-set grouping into equivalence classes
 (ispaq/simple_metrics.py:103-151).

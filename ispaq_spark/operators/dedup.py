@@ -122,7 +122,7 @@ def with_shingles(
     )
 
 
-def _signatures(
+def signatures(
     df: DataFrame, text_col: str, k: int, n: int, *cols
 ) -> DataFrame:
     """`cols` + mh0..mh{n-1} of each doc with at least `k` tokens (docs
@@ -152,7 +152,7 @@ def minhash_signatures(
     shingle_k: int = 3,
 ) -> DataFrame:
     """(id, mh0..mh{n-1}) — in-row, no shuffle, no Python."""
-    return _signatures(df, text_col, shingle_k, n_hashes, id_col)
+    return signatures(df, text_col, shingle_k, n_hashes, id_col)
 
 
 def _band_buckets(sigs: DataFrame, member: F.Column, rows: int) -> DataFrame:
@@ -188,11 +188,14 @@ def lsh_candidate_pairs(
     return a.select("id_a", F.explode(later).alias("id_b")).distinct()
 
 
-def _word_set(text_col: str) -> F.Column:
+def word_set(text_col: str) -> F.Column:
+    """Distinct space-separated words of `text_col` (NULL for NULL text)."""
     return F.array_distinct(F.split(F.col(text_col), " "))
 
 
-def _jaccard(ws_a: F.Column, ws_b: F.Column) -> F.Column:
+def jaccard(ws_a: F.Column, ws_b: F.Column) -> F.Column:
+    """|A ∩ B| / |A ∪ B| of two distinct-element arrays (NULL if either
+    is NULL)."""
     inter = F.size(F.array_intersect(ws_a, ws_b))
     return inter / (F.size(ws_a) + F.size(ws_b) - inter)
 
@@ -207,12 +210,12 @@ def jaccard_verify(
     """Exact word-set Jaccard for candidate pairs; keeps pairs >= threshold.
     Joins the candidate set back to the corpus twice (`minhash_dedup`
     runs the same check inside each bucket instead)."""
-    ws = df.select(F.col(id_col), _word_set(text_col).alias("ws"))
+    ws = df.select(F.col(id_col), word_set(text_col).alias("ws"))
     a = ws.select(F.col(id_col).alias("id_a"), F.col("ws").alias("ws_a"))
     b = ws.select(F.col(id_col).alias("id_b"), F.col("ws").alias("ws_b"))
     j = pairs.join(a, "id_a").join(b, "id_b")
     return (
-        j.withColumn("jaccard", _jaccard(F.col("ws_a"), F.col("ws_b")))
+        j.withColumn("jaccard", jaccard(F.col("ws_a"), F.col("ws_b")))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -229,13 +232,13 @@ def minhash_dedup(
     higher id of each confirmed candidate pair (greedy, matches the usual
     near-dedup convention of keeping the first-seen doc). The check runs
     in the bucket; the corpus is joined once, by the final anti-join."""
-    doc = F.struct(F.col(id_col).alias("id"), _word_set(text_col).alias("ws"))
-    sigs = _signatures(df, text_col, 3, N_MINHASH_DEFAULT, doc.alias("_doc"))
+    doc = F.struct(F.col(id_col).alias("id"), word_set(text_col).alias("ws"))
+    sigs = signatures(df, text_col, 3, N_MINHASH_DEFAULT, doc.alias("_doc"))
 
     def dup(x: F.Column) -> F.Column:
         return F.exists(
             "members",
-            lambda y: (y.id < x.id) & (_jaccard(y.ws, x.ws) >= threshold),
+            lambda y: (y.id < x.id) & (jaccard(y.ws, x.ws) >= threshold),
         )
 
     buckets = _band_buckets(sigs, F.col("_doc"), ROWS_PER_BAND)

@@ -12,15 +12,16 @@ Graft slots (the reference's largest math block):
   segments, segment-averaged auto/cross spectra; the Welch normalization
   constant (1/(fs*sum(w^2))) cancels in all three outputs and is omitted.
 
-* ``orientation_numpy`` / ``cogroup_orientation`` — the 360-angle
-  rotation x correlation argmax of `orientationCheck_metrics.py:298-368`:
-  rotate the horizontal pair (n, e) through every integer azimuth, Pearson-
-  correlate each rotation against a reference stream, keep the argmax
-  angle. The numpy form is ONE (angles x 2) @ (2 x samples) matrix product
-  per key; the relational closed-form twin (driver_queries.q_orientation_
-  scan) expands corr(n*cos+e*sin, ref) into 10 per-key sums so the whole
-  scan is JVM-side — that form is the production path, this cogroup is the
-  per-key-imperative surface and the parity witness.
+* ``orientation_scan`` / ``orientation_numpy`` / ``cogroup_orientation`` —
+  the 360-angle rotation x correlation argmax of
+  `orientationCheck_metrics.py:298-368`: rotate the horizontal pair (n, e)
+  through every integer azimuth, Pearson-correlate each rotation against a
+  reference stream, keep the argmax angle. ``orientation_scan`` expands
+  corr(n*cos+e*sin, ref) into 10 per-key sums so the whole scan is
+  JVM-side — the production path, certified by the `orientation_scan`
+  driver query. The numpy form is ONE (angles x 2) @ (2 x samples) matrix
+  product per key; its cogroup is the per-key-imperative surface and the
+  parity witness.
 
 Numeric contract with the SQL oracles: np.fft.rfft computes
 X[k] = sum_t x_t * exp(-2*pi*i*k*t/N), so re(X[k]) = sum_t x_t cos(...)
@@ -36,7 +37,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 NPERSEG = 8
@@ -262,4 +263,96 @@ def cogroup_orientation(
                 "n_samples int"
             ),
         )
+    )
+
+
+def _dsum(c: F.Column) -> F.Column:
+    """Accumulation-order-independent sum of a double column: each value
+    is cast to DECIMAL(38,9), summed exactly, and returned as double. A raw
+    double sum differs by ~n ulps between partial-aggregation trees, which
+    can flip a value rounded to 6 decimals."""
+    return F.sum(c.cast("decimal(38,9)")).cast("double")
+
+
+def orientation_scan(
+    north: DataFrame,
+    east: DataFrame,
+    reference: DataFrame,
+    key: str = "user_id",
+) -> DataFrame:
+    """(key, best_angle, best_corr, n_samples), all JVM-side: the three
+    (key, ts, event_id, value) streams align on their per-key (ts,
+    event_id) rank, corr(n*cos + e*sin, ref) at every integer azimuth
+    expands in closed form over 10 per-key sums (one aggregation shuffle),
+    the 360 angles explode map-side, and a max-struct aggregate takes the
+    argmax. Keys with fewer than MIN_ORIENT_N aligned samples are dropped.
+
+    The sums are decimal (see `_dsum`) and the correlation is rounded to 6
+    decimals BEFORE the argmax, ties to the smaller angle, so the picked
+    angle does not depend on accumulation order."""
+    w = Window.partitionBy(key).orderBy("ts", "event_id")
+
+    def indexed(df: DataFrame, out: str) -> DataFrame:
+        return df.select(
+            key,
+            (F.row_number().over(w) - 1).alias("t"),
+            F.col("value").alias(out),
+        )
+
+    tri = (
+        indexed(north, "nv")
+        .join(indexed(east, "ev"), [key, "t"])
+        .join(indexed(reference, "rv"), [key, "t"])
+    )
+    nv, ev, rv = F.col("nv"), F.col("ev"), F.col("rv")
+    sums = (
+        tri.groupBy(key)
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            _dsum(nv).alias("sn"),
+            _dsum(ev).alias("se"),
+            _dsum(rv).alias("sr"),
+            _dsum(nv * nv).alias("snn"),
+            _dsum(ev * ev).alias("see"),
+            _dsum(nv * ev).alias("sne"),
+            _dsum(nv * rv).alias("snr"),
+            _dsum(ev * rv).alias("ser"),
+            _dsum(rv * rv).alias("srr"),
+        )
+        .where(F.col("cnt") >= MIN_ORIENT_N)
+    )
+    ang = sums.select(
+        "*",
+        F.explode(
+            F.sequence(F.lit(0).cast("bigint"), F.lit(359).cast("bigint"))
+        ).alias("angle"),
+    )
+    cth, sth = F.cos(F.radians("angle")), F.sin(F.radians("angle"))
+    sbr = cth * F.col("sn") + sth * F.col("se")
+    sbrr = (
+        cth * cth * F.col("snn")
+        + F.lit(2) * cth * sth * F.col("sne")
+        + sth * sth * F.col("see")
+    )
+    sbrf = cth * F.col("snr") + sth * F.col("ser")
+    den_a = F.col("cnt") * sbrr - sbr * sbr
+    den_b = F.col("cnt") * F.col("srr") - F.col("sr") * F.col("sr")
+    corr = (F.col("cnt") * sbrf - sbr * F.col("sr")) / (
+        F.sqrt(den_a) * F.sqrt(den_b)
+    )
+    scored = ang.where((den_a > 0) & (den_b > 0)).select(
+        key, "cnt", "angle", F.round(corr, 6).alias("corr")
+    )
+    best = scored.groupBy(key).agg(
+        F.max(
+            F.struct(
+                F.col("corr"), (-F.col("angle")).alias("na"), F.col("cnt")
+            )
+        ).alias("b")
+    )
+    return best.select(
+        key,
+        (-F.col("b.na")).alias("best_angle"),
+        F.col("b.corr").alias("best_corr"),
+        F.col("b.cnt").alias("n_samples"),
     )

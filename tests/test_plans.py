@@ -203,17 +203,6 @@ def test_chunk_dedup_ranks_on_hash_key(spark):
     assert plan.count("Exchange") <= 5
 
 
-def test_weighted_sample_is_takeordered_no_shuffle(spark):
-    """A-ES priority sampling must be map-side priorities + a global top-k
-    (TakeOrdered): zero hash exchanges — the corpus never moves. Holds for
-    both the length-weighted and the quality-weighted variants."""
-    for name in ("weighted_sample", "weighted_sample_quality"):
-        plan = plan_of(dq.queries()[name](spark, SF_DIR))
-        assert "TakeOrderedAndProject" in plan, name
-        assert "Exchange hashpartitioning" not in plan, name
-        assert "Python" not in plan, name
-
-
 def test_dup_cluster_hist_never_shuffles_text(spark):
     """Both aggregates of the cluster-size histogram shuffle hashes and
     counts only: no exchange key or exchange input may carry the text
@@ -292,25 +281,6 @@ def test_pack_sequences_window_key_includes_bucket(spark):
     assert m, plan
     keys = m.group(1)
     assert "lang" in keys and "bkt" in keys, keys
-
-
-def test_hash_embed_two_shuffles_no_python(spark):
-    """The text->embedding stage is pure Catalyst: exactly two hash
-    shuffles (feature counts, per-doc sums), the 512-row projection matrix
-    broadcast, and zero Python operators."""
-    plan = plan_of(dq.queries()["hash_embed"](spark, SF_DIR))
-    assert plan.count("Exchange hashpartitioning") <= 2
-    assert "BroadcastHashJoin" in plan
-    assert "Python" not in plan
-
-
-def test_embed_chain_broadcasts_all_dimensions(spark):
-    """In the chained embed->IVF->recall query the centroid, query, probe
-    and top-k tables must all broadcast — any SortMergeJoin means a
-    dimension table shuffled the corpus."""
-    plan = plan_of(dq.queries()["embed_ivf_chain"](spark, SF_DIR))
-    assert "SortMergeJoin" not in plan
-    assert "Python" not in plan
 
 
 def test_pivot_single_aggregation_no_extra_job(spark):
@@ -408,17 +378,6 @@ def test_inverted_index_single_exchange(spark):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_semdedup_broadcast_assign_no_self_join(spark):
-    """semdedup: centroid assignment rides a broadcast (k x dim) against a
-    map-only scan, and the quadratic verify is a per-cluster Arrow group op
-    — no relational self-join, so no SortMergeJoin anywhere and the
-    assignment subtree appears once (single FlatMapGroupsInPandas)."""
-    plan = plan_of(dq.queries()["semdedup"](spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" in plan  # crossJoin(broadcast(cent))
-    assert "SortMergeJoin" not in plan
-    assert plan.count("FlatMapGroupsInPandas") == 1
-
-
 def test_bpe_pair_counts_vocab_collapse_then_takeordered(spark):
     """bpe_pair_counts: corpus collapses to the word-vocab aggregate before
     pair generation (two exchanges total: word agg, pair agg) and the
@@ -426,15 +385,6 @@ def test_bpe_pair_counts_vocab_collapse_then_takeordered(spark):
     plan = plan_of(dq.queries()["bpe_pair_counts"](spark, SF_DIR))
     assert plan.count("Exchange") == 2, plan
     assert "TakeOrderedAndProject" in plan
-
-
-def test_ann_recall_broadcasts_queries_and_probe(spark):
-    """ann_recall: query vectors and the probe table must ride broadcasts
-    (5 / 10 rows) — the fact side never shuffles on a join key; the only
-    nested-loop join is the deliberate brute-force evaluation baseline."""
-    plan = plan_of(dq.queries()["ann_recall"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_funnel_single_user_exchange(spark):

@@ -1,8 +1,7 @@
 """Round-3 operators: DSIR importance resampling, canonical-doc selection,
-deterministic splits, LSH-fed cosine verify — semantic edge cases on
-hand-built fixtures (known target mixtures, tied cluster quality, split
-stability under corpus growth, bucket-candidate recall vs the quadratic
-form)."""
+deterministic splits, the density-capped geo estimator — semantic edge
+cases on hand-built fixtures (known target mixtures, tied cluster quality,
+split stability under corpus growth, geo counts around the cap)."""
 
 from __future__ import annotations
 
@@ -13,9 +12,7 @@ from pyspark.sql import functions as F
 
 from ispaq_spark.driver_queries import (
     q_canonical_docs,
-    q_cosine_neardup,
     q_dsir_resample,
-    q_lsh_cosine_verify,
     q_split_assign,
 )
 
@@ -104,10 +101,10 @@ def test_split_assignments_stable_under_corpus_growth(spark, fx):
 
     def per_doc(sf):
         d = spark.read.parquet(f"{sf}/documents.parquet")
-        from ispaq_spark.driver_queries import _hex_hash_spark
+        from ispaq_spark.operators.dedup import hex_hash
 
         b = F.pmod(
-            _hex_hash_spark(
+            hex_hash(
                 F.concat(F.lit("split|"), F.col("doc_id").cast("string"))
             ),
             F.lit(100),
@@ -125,48 +122,6 @@ def test_split_assignments_stable_under_corpus_growth(spark, fx):
     # and the rollup totals reconcile with the per-doc assignment
     got = q_split_assign(spark, sf2).collect()
     assert sum(r["n_docs"] for r in got) == len(after)
-
-
-def test_lsh_cosine_verify_subset_of_quadratic_with_equal_scores(spark, fx):
-    """Every pair the bucket-candidate chain surfaces must appear in the
-    exhaustive label-blocked form with the identical rounded cosine (the
-    kernel is shared; only candidate generation differs)."""
-    sf_dir = tempfile.mkdtemp(prefix="r3vec_")
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    for i in range(60):
-        base = [rng.gauss(0, 1) for _ in range(64)]
-        rows.append((i, [float(x) for x in base], i % 3))
-        # a close near-duplicate of each 10th vector
-        if i % 10 == 0:
-            rows.append(
-                (
-                    1000 + i,
-                    [float(x + rng.gauss(0, 0.01)) for x in base],
-                    i % 3,
-                )
-            )
-    _write(
-        spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int"),
-        sf_dir,
-        "embeddings",
-    )
-    lsh = {
-        (r["vec_a"], r["vec_b"]): r["cos"]
-        for r in q_lsh_cosine_verify(spark, sf_dir).collect()
-    }
-    # near-dup pairs land in the same sign-LSH bucket with high probability;
-    # all 6 planted pairs within label blocks must be found
-    assert sum(1 for (a, b) in lsh if b == 1000 + a) >= 5
-    block = {
-        (r["vec_a"], r["vec_b"]): r["cos"]
-        for r in q_cosine_neardup(spark, sf_dir).collect()
-    }
-    for (a, b), c in lsh.items():
-        if (a, b) in block:  # same-label pairs: scores must agree exactly
-            assert block[(a, b)] == c
 
 
 def _geo_tables(spark, n_sup: int, n_cust: int):

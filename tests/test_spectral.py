@@ -16,6 +16,7 @@ from ispaq_spark.operators.spectral import (
     collected_welch,
     hann,
     orientation_numpy,
+    orientation_scan,
     welch_xspec,
 )
 
@@ -134,13 +135,11 @@ def test_orientation_too_short_returns_none():
 
 def test_cogroup_orientation_matches_relational_query(spark, sf_dir):
     """The (angles x samples) matrix-product cogroup form and the all-JVM
-    closed-form scan (driver_queries.q_orientation_scan) must agree on the
-    real test tables."""
+    closed-form scan (`orientation_scan`) must agree on the real test
+    tables."""
     from pyspark.sql import functions as F
 
-    from ispaq_spark.driver_queries import q_orientation_scan, t
-
-    ev = t(spark, sf_dir, "events")
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
 
     def side(evt):
         return ev.where(F.col("event_type") == evt).select(
@@ -158,7 +157,9 @@ def test_cogroup_orientation_matches_relational_query(spark, sf_dir):
     }
     want = {
         r["user_id"]: (r["best_angle"], r["best_corr"], r["n_samples"])
-        for r in q_orientation_scan(spark, sf_dir).collect()
+        for r in orientation_scan(
+            side("error"), side("click"), side("view")
+        ).collect()
     }
     assert set(got) == set(want) and len(want) > 0
     for uid in want:
