@@ -1,4 +1,5 @@
-"""Reusable distributed operators beyond the reference's own set — the
-training-data-pipeline layer (dedup, similarity search, windows) that makes
-the engine useful at 100 TB. Each operator is pure DataFrame composition;
-driver_queries.py certifies them against DuckDB oracles."""
+"""Distributed operators beyond the reference's own set: exact and
+MinHash-LSH dedup (`curate_corpus` runs it), connected components,
+hyperplane-LSH similarity buckets, the BPE trainer, and the two-stream
+correlation and spectral operators. driver_queries.py certifies each one
+against a DuckDB oracle."""

@@ -9,7 +9,7 @@ runs on |vocab| rows, never |corpus| — the reason BPE training is feasible
 at 10^12 documents. Per round: adjacent-pair counts are an in-row
 arrays_zip explode plus an aggregation whose output is bounded by the
 current symbol alphabet squared; the argmax pair is a 1-row TakeOrdered
-collect (model-sized, like kmeans' k×dim); the merge rewrite is a
+collect (model-sized, independent of the corpus); the merge rewrite is a
 vectorized Arrow pass over the vocab. Each round's vocab cuts lineage with
 localCheckpoint — never persist/unpersist in the loop (the recompute
 cascade documented in operators/components.py).

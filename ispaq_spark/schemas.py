@@ -9,7 +9,6 @@ StructType constant, per SURVEY.md §1.3.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     BooleanType,
     DoubleType,
@@ -32,15 +31,6 @@ PAGES = StructType(
         StructField("html", BinaryType(), True),
         StructField("text", StringType(), True),
         StructField("lang", StringType(), True),
-    ]
-)
-
-# Reference-truth labels fixture (FIXTURES.md §1): the F1 / byte-identity gate.
-LABELS = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("keep", BooleanType(), False),
-        StructField("scrubbed_text", StringType(), True),
     ]
 )
 
@@ -74,18 +64,6 @@ DOC_METRICS = StructType(
     ]
 )
 
-# Long/EAV metric view (ispaq sink shape, ispaq/utils.py:317-326).
-METRICS_EAV = StructType(
-    [
-        StructField("target", StringType(), False),
-        StructField("start", TimestampType(), False),
-        StructField("end", TimestampType(), False),
-        StructField("metricName", StringType(), False),
-        StructField("value", DoubleType(), True),
-        StructField("qualityFlag", IntegerType(), False),
-    ]
-)
-
 # Per-partition lineage/rollup (graft analog of the psd/pdf aggregate tables,
 # DDL pattern ispaq/utils.py:119-147; FIXTURES.md §3).
 ROLLUP = StructType(
@@ -95,35 +73,5 @@ ROLLUP = StructType(
         StructField("docs_kept", LongType(), False),
         StructField("docs_dropped", LongType(), False),
         StructField("docs_error", LongType(), False),
-    ]
-)
-
-METRIC_HIST = StructType(
-    [
-        StructField("partition_id", StringType(), False),
-        StructField("metricName", StringType(), False),
-        StructField("hist_bin", DoubleType(), False),
-        StructField("hits", LongType(), False),
-    ]
-)
-
-# Multimodal side-band: opaque media blobs + typed metadata (mapInPandas
-# decode stages operate on this; SURVEY round-prompt "multimodal columns").
-MEDIA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("media_type", StringType(), False),  # image|audio|video
-        StructField("payload", BinaryType(), True),
-        StructField("meta_width", IntegerType(), True),
-        StructField("meta_height", IntegerType(), True),
-        StructField("meta_duration_ms", LongType(), True),
-    ]
-)
-
-EMBEDDING = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("embedding", ArrayType(DoubleType()), False),
-        StructField("label", IntegerType(), True),
     ]
 )

@@ -64,63 +64,6 @@ def streaming_rollup(metrics: DataFrame) -> DataFrame:
     )
 
 
-def streaming_sessions(
-    events: DataFrame, gap: str = "10 minutes", late: str = "1 hour"
-) -> DataFrame:
-    """Watermarked SESSION-window aggregation — the streaming twin of the
-    batch `sessionize` driver query (lag-gap windows): consecutive events
-    of a user closer than `gap` merge into one session row (start, end,
-    n_events). `F.session_window` keeps per-(user, open-session) state and
-    finalizes a session only once the watermark passes its end + gap, so
-    state is bounded by the number of OPEN sessions — not stream length.
-    Append mode: each closed session emits exactly once.
-
-    Graft slot: the reference's per-target gap/session segmentation
-    (gapsMetric day windows, SURVEY.md §2.5) as an unbounded-stream
-    invariant."""
-    return (
-        events.withWatermark("ts", late)
-        .groupBy(
-            F.col("user_id"), F.session_window(F.col("ts"), gap).alias("w")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def run_sessions_once(
-    spark,
-    source_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    schema: str = "user_id bigint, ts timestamp",
-    gap: str = "10 minutes",
-):
-    """Drain available events through the session-window aggregation into
-    an exactly-once parquet sink."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
-    q = (
-        streaming_sessions(stream, gap=gap)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(q, 300)
-    return q
-
-
 def run_rollup_stream_once(
     spark: SparkSession,
     source_dir: str,

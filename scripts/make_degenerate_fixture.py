@@ -5,7 +5,7 @@ The hostile fixture (make_hostile_fixture.py) concentrates VALUE edge
 cases at normal cardinality; this one concentrates CARDINALITY edge
 cases — the shapes a per-day pipeline is guaranteed to hit in production
 (a nearly-empty day partition, a re-crawl day that is 100% duplicates, a
-single-source day) and that tiny-k algorithms (IVF k-means, LSH banding,
+single-source day) and that tiny-k algorithms (IVF centroids, LSH banding,
 stratified cuts) must survive without crashing or diverging from the SQL
 oracle:
 

@@ -278,9 +278,8 @@ def test_merge_execution_attempt_is_recorded_or_succeeds(spark, tmp_path):
     supports row-level operations the merge must actually run and the
     replace semantics are verified; in this container the attempt must be
     BLOCKED by Spark's own capability check with the exact
-    UNSUPPORTED_FEATURE.TABLE_OPERATION error (recorded here the way the
-    protobuf gate records its acquisition attempt — see
-    streaming/running_stats.py). Routes probed: (a) a Spark-managed
+    UNSUPPORTED_FEATURE.TABLE_OPERATION error, recorded here as the
+    reason the merge cannot run. Routes probed: (a) a Spark-managed
     parquet table in spark_catalog (V1 — no SupportsRowLevelOperations),
     (b) JDBCTableCatalog over the embedded Derby that ships with pyspark
     (V2, but row-level ops unimplemented). DuckDB 1.0.0 (the second
