@@ -67,8 +67,6 @@ BENCH_QUERIES = (
     "piecewise_model",
     "state_flags",
     "rollup_periods",
-    "cogroup_xcorr",
-    "xcorr_collected",
     "minhash_lsh_neardup",
     "asof_join",
     "chunk_dedup",
@@ -82,8 +80,6 @@ BENCH_QUERIES = (
     "decontaminate",
     "pack_sequences",
     # round-3 additions
-    "welch_collected",
-    "orientation_scan",
     "psd_windows",
     "lsh_jaccard_verify",
     "geo_radius_banded",

@@ -33,7 +33,6 @@ from .curation import (
 from .functions.heuristics import with_stopword_langid
 from .operators.bpe import pair_counts, word_frequencies
 from .operators.components import alternating_star_components
-from .operators.crosscorr import cogroup_xcorr, collected_xcorr
 from .operators.dedup import (
     N_MINHASH_DEFAULT,
     content_hash,
@@ -49,11 +48,6 @@ from .operators.dedup import (
     word_set,
 )
 from .operators.similarity import lsh_bucket_col, make_planes
-from .operators.spectral import (
-    cogroup_welch,
-    collected_welch,
-    orientation_scan,
-)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1988,106 +1982,6 @@ def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# §2.9 cogrouped two-stream UDF (apply_correlation_metric surface)
-# ===========================================================================
-
-
-_XCORR_ORACLE = """
-    WITH e AS (
-      SELECT user_id, list(value ORDER BY ts, event_id) AS ev
-      FROM events WHERE event_type = 'error' GROUP BY user_id
-    ), c AS (
-      SELECT user_id, list(value ORDER BY ts, event_id) AS cv
-      FROM events WHERE event_type = 'click' GROUP BY user_id
-    ), j AS (
-      SELECT e.user_id, ev, cv, len(ev) AS le, len(cv) AS lc
-      FROM e JOIN c USING (user_id)
-    ), lags AS (SELECT unnest([-2, -1, 0, 1, 2]) AS lag),
-    sl AS (
-      SELECT user_id, lag, ev, cv,
-             greatest(1, 1 - lag) AS lox,
-             least(le, lc - lag) AS hix
-      FROM j CROSS JOIN lags
-    ), p AS (
-      SELECT user_id, lag,
-             CAST(hix - lox + 1 AS INT) AS n,
-             ev[lox:hix] AS x,
-             cv[lox + lag:hix + lag] AS y
-      FROM sl WHERE hix - lox + 1 >= 4
-    ), s AS (
-      SELECT user_id, lag, n,
-             list_sum(x) AS sx, list_sum(y) AS sy,
-             list_sum(list_transform(x, v -> v * v)) AS sxx,
-             list_sum(list_transform(y, v -> v * v)) AS syy,
-             list_sum(list_transform(range(1, n + 1), i -> x[i] * y[i])) AS sxy
-      FROM p
-    ), r AS (
-      SELECT user_id, lag, n,
-             (n * sxy - sx * sy)
-               / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) AS corr
-      FROM s
-      WHERE sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy) > 0
-    ), b AS (
-      SELECT user_id, lag, corr, n,
-             -- argmax on the 6dp-ROUNDED r (round-before-argmax):
-             -- numpy's pairwise sums and list_sum's sequential sums can
-             -- differ in the last ulp, flipping a tied-lag pick
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY round(corr, 6) DESC, lag ASC) AS rn
-      FROM r
-    )
-    SELECT user_id, CAST(lag AS INT) AS best_lag,
-           round(corr, 6) AS peak_corr, n AS n_pairs
-    FROM b WHERE rn = 1
-    """
-
-
-def _event_stream(spark: SparkSession, sf_dir: str, evt: str) -> DataFrame:
-    """(user_id, ts, event_id, value) of one event type. Each call is its
-    own scan: a self-cogroup from a shared scan makes both sides carry the
-    same expression IDs, and Spark's attribute dedup then prunes the right
-    frame down to the key column."""
-    return (
-        t(spark, sf_dir, "events")
-        .where(F.col("event_type") == evt)
-        .select("user_id", "ts", "event_id", "value")
-    )
-
-
-def _xcorr_sides(spark: SparkSession, sf_dir: str):
-    return (
-        _event_stream(spark, sf_dir, "error"),
-        _event_stream(spark, sf_dir, "click"),
-    )
-
-
-@qdef("cogroup_xcorr", _XCORR_ORACLE)
-def q_cogroup_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """polarity_check two-stream peak cross-correlation
-    (IRISMustangMetrics/R/crossCorrelationMetric.R:46-161, dispatched via
-    apply_correlation_metric ispaq/irismustangmetrics.py:160-187) as a
-    cogrouped applyInPandas: one Arrow batch per user carries both series;
-    Pearson r over index lags -2..2, one-pass sum formula shared with the
-    oracle (operators/crosscorr.py)."""
-    out = cogroup_xcorr(*_xcorr_sides(spark, sf_dir))
-    return out.select(
-        "user_id", "best_lag", r6(F.col("peak_corr")).alias("peak_corr"), "n_pairs"
-    )
-
-
-@qdef("xcorr_collected", _XCORR_ORACLE)
-def q_xcorr_collected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same two-stream peak cross-correlation, batch-vectorized: JVM-side
-    sort_array(collect_list) per side -> equi-join -> one scalar pandas UDF
-    scoring thousands of keys per Arrow batch (operators/crosscorr.py
-    collected_xcorr). Identical oracle, identical results."""
-    out = collected_xcorr(*_xcorr_sides(spark, sf_dir))
-    return out.select(
-        "user_id", "best_lag", r6(F.col("peak_corr")).alias("peak_corr"), "n_pairs"
-    )
-
-
-# ===========================================================================
 # Round-2 additions: as-of join, C4-style span dedup, near-dup clustering
 # (iterative connected components), skew-salted aggregation, int8-quantized
 # ANN.
@@ -3148,175 +3042,8 @@ def q_pivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-3 additions: frequency-domain Welch cross-spectra (gain / phase /
-# coherence), 360-angle orientation scan, PSD windowing policy, LSH-fed
-# jaccard verify.
+# Round-3 additions: PSD windowing policy, LSH-fed jaccard verify.
 # ===========================================================================
-
-_WELCH_ORACLE = """
-    WITH e AS (
-      SELECT user_id, value,
-             row_number() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) - 1 AS t
-      FROM events WHERE event_type = 'error'
-    ), c AS (
-      SELECT user_id, value,
-             row_number() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) - 1 AS t
-      FROM events WHERE event_type = 'click'
-    ), lens AS (
-      SELECT le.user_id, least(le.n, lc.n) AS L
-      FROM (SELECT user_id, count(*) AS n FROM e GROUP BY user_id) le
-      JOIN (SELECT user_id, count(*) AS n FROM c GROUP BY user_id) lc
-        USING (user_id)
-      WHERE least(le.n, lc.n) >= 8
-    ), pos AS (
-      SELECT user_id, seg, unnest(range(0, 8)) AS p
-      FROM (
-        SELECT user_id,
-               unnest(range(0, ((L - 8) // 4) + 1)) AS seg
-        FROM lens
-      )
-    ), samp AS (
-      SELECT pos.user_id, pos.seg, pos.p,
-             (0.5 - 0.5 * cos(2 * pi() * pos.p / 7)) AS w,
-             e.value AS xv, c.value AS yv
-      FROM pos
-      JOIN e ON e.user_id = pos.user_id AND e.t = pos.seg * 4 + pos.p
-      JOIN c ON c.user_id = pos.user_id AND c.t = pos.seg * 4 + pos.p
-    ), dft AS (
-      SELECT user_id, seg, k,
-             sum(w * xv * cos(2 * pi() * k * p / 8))  AS rex,
-             -sum(w * xv * sin(2 * pi() * k * p / 8)) AS imx,
-             sum(w * yv * cos(2 * pi() * k * p / 8))  AS rey,
-             -sum(w * yv * sin(2 * pi() * k * p / 8)) AS imy
-      FROM samp CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) bins
-      GROUP BY user_id, seg, k
-    ), spec AS (
-      SELECT user_id, k,
-             avg(rex * rex + imx * imx) AS pxx,
-             avg(rey * rey + imy * imy) AS pyy,
-             avg(rex * rey + imx * imy) AS pxy_re,
-             avg(imx * rey - rex * imy) AS pxy_im
-      FROM dft GROUP BY user_id, k
-    )
-    SELECT user_id, CAST(k AS INT) AS freq_bin,
-           round((pxy_re * pxy_re + pxy_im * pxy_im) / (pxx * pyy), 6)
-             AS coherence,
-           round(sqrt(pxy_re * pxy_re + pxy_im * pxy_im) / pxx, 6) AS gain,
-           CASE WHEN (pxy_re * pxy_re + pxy_im * pxy_im) / (pxx * pyy)
-                     >= 0.001
-                THEN round(atan2(pxy_im, pxy_re), 6) END AS phase
-    FROM spec WHERE pxx > 0 AND pyy > 0
-"""
-
-
-def _welch_out(out: DataFrame) -> DataFrame:
-    return out.select(
-        "user_id",
-        "freq_bin",
-        r6("coherence").alias("coherence"),
-        r6("gain").alias("gain"),
-        r6("phase").alias("phase"),
-    )
-
-
-@qdef("welch_coherence", _WELCH_ORACLE)
-def q_welch_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequency-domain Welch cross-spectrum between two streams per user:
-    Hann-windowed 8-sample segments at 50% overlap, numpy rFFT per segment,
-    segment-averaged auto/cross spectra -> transfer-function gain
-    |Pxy|/Pxx, phase atan2(Im Pxy, Re Pxy), and magnitude-squared coherence
-    |Pxy|^2/(Pxx*Pyy) at bins 1..3 — the semantics of `crossSpectrum`
-    (IRISSeismic/R/spectralUtils.R:44-214) feeding `transferFunctionMetric`
-    (IRISMustangMetrics/R/transferFunctionMetric.R:252-280), as a cogrouped
-    applyInPandas (operators/spectral.py:cogroup_welch). The oracle states
-    the DFT as explicit windowed cos/sin sums — the same numbers the FFT
-    computes. Phase is NULL below coherence 1e-3 on both sides."""
-    return _welch_out(cogroup_welch(*_xcorr_sides(spark, sf_dir)))
-
-
-@qdef("welch_collected", _WELCH_ORACLE)
-def q_welch_collected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same Welch semantics and oracle as `welch_coherence`, restructured
-    for group-count scale: JVM-side sort_array(collect_list) per side,
-    equi-join, ONE scalar pandas UDF scoring thousands of keys per Arrow
-    batch (operators/spectral.py:collected_welch)."""
-    return _welch_out(collected_welch(*_xcorr_sides(spark, sf_dir)))
-
-
-@qdef(
-    "orientation_scan",
-    """
-    WITH ix AS (
-      SELECT user_id, event_type, value,
-             row_number() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) - 1
-               AS t
-      FROM events WHERE event_type IN ('error', 'click', 'view')
-    ), tri AS (
-      SELECT n.user_id, n.value AS nv, e.value AS ev, r.value AS rv
-      FROM ix n
-      JOIN ix e ON e.user_id = n.user_id AND e.t = n.t
-               AND e.event_type = 'click'
-      JOIN ix r ON r.user_id = n.user_id AND r.t = n.t
-               AND r.event_type = 'view'
-      WHERE n.event_type = 'error'
-    ), sums AS (
-      -- decimal sums: exact and associative, so the closed-form corr is
-      -- accumulation-order-independent on both engines (see dsum)
-      SELECT user_id, count(*) AS cnt,
-             CAST(sum(CAST(nv AS DECIMAL(38,9))) AS DOUBLE) AS sn,
-             CAST(sum(CAST(ev AS DECIMAL(38,9))) AS DOUBLE) AS se,
-             CAST(sum(CAST(rv AS DECIMAL(38,9))) AS DOUBLE) AS sr,
-             CAST(sum(CAST(nv * nv AS DECIMAL(38,9))) AS DOUBLE) AS snn,
-             CAST(sum(CAST(ev * ev AS DECIMAL(38,9))) AS DOUBLE) AS see,
-             CAST(sum(CAST(nv * ev AS DECIMAL(38,9))) AS DOUBLE) AS sne,
-             CAST(sum(CAST(nv * rv AS DECIMAL(38,9))) AS DOUBLE) AS snr,
-             CAST(sum(CAST(ev * rv AS DECIMAL(38,9))) AS DOUBLE) AS ser,
-             CAST(sum(CAST(rv * rv AS DECIMAL(38,9))) AS DOUBLE) AS srr
-      FROM tri GROUP BY user_id HAVING count(*) >= 8
-    ), ang AS (
-      SELECT s.*, a.angle,
-             cos(radians(a.angle)) AS cth, sin(radians(a.angle)) AS sth
-      FROM sums s
-      CROSS JOIN (SELECT unnest(range(0, 360)) AS angle) a
-    ), terms AS (
-      SELECT user_id, cnt, angle, sr, srr,
-             cth * sn + sth * se AS sbr,
-             cth * cth * snn + 2 * cth * sth * sne + sth * sth * see
-               AS sbrr,
-             cth * snr + sth * ser AS sbrf
-      FROM ang
-    ), scored AS (
-      SELECT user_id, cnt, angle,
-             round((cnt * sbrf - sbr * sr)
-               / (sqrt(cnt * sbrr - sbr * sbr)
-                  * sqrt(cnt * srr - sr * sr)), 6) AS corr
-      FROM terms
-      WHERE cnt * sbrr - sbr * sbr > 0 AND cnt * srr - sr * sr > 0
-    )
-    SELECT user_id, angle AS best_angle, corr AS best_corr,
-           cnt AS n_samples
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY user_id ORDER BY corr DESC, angle ASC) AS rn
-      FROM scored
-    ) WHERE rn = 1
-    """,
-)
-def q_orientation_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """360-angle orientation scan (orientationCheck_metrics.py:298-368):
-    rotate the horizontal pair (error, click streams as N/E analogs)
-    through every integer azimuth and keep the angle maximizing Pearson
-    correlation with the reference stream (view), all JVM-side
-    (operators/spectral.py:orientation_scan). Ties break to the smaller
-    angle on both engines."""
-    return orientation_scan(
-        _event_stream(spark, sf_dir, "error"),
-        _event_stream(spark, sf_dir, "click"),
-        _event_stream(spark, sf_dir, "view"),
-    )
 
 
 @qdef(
@@ -4370,11 +4097,6 @@ _DRIVER_PRIORITY: list[str] = [
     "split_assign",
     "domain_cap",
     "curation_report",
-    "cogroup_xcorr",
-    "xcorr_collected",
-    "welch_coherence",
-    "welch_collected",
-    "orientation_scan",
     "bpe_pair_counts",
     "geo_radius_banded",
     "intradoc_dedup",
@@ -4405,6 +4127,11 @@ _DRIVER_PRIORITY: list[str] = [
     "interval_join",
     "inverted_index",
     "psd_quantiles",
+    "sessionize",
+    "top1_per_key",
+    "semi_anti",
+    "pairs_self_join",
+    "rlike_filter",
 ]
 
 

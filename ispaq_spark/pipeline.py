@@ -10,8 +10,9 @@ JVM<->Python boundary. There is no day loop — `ds` is a partition column
 and Spark parallelizes across all days and documents at once.
 
 Scale posture (north rule): optional salting repartition for skewed domains
-*before* the metric stages, AQE enabled in the session, model broadcast,
-quarantine instead of failure, idempotent partition-overwrite sink.
+*before* the metric stages (run_request's `salt_buckets` preference), AQE
+enabled in the session, model broadcast, quarantine instead of failure,
+idempotent partition-overwrite sink.
 """
 
 from __future__ import annotations
@@ -42,7 +43,6 @@ def run_pipeline(
     metric_sets: tuple[str, ...] | str = "default",
     model: NgramLM | None = None,
     lid_model: dict | None = None,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> DOC_METRICS-shaped DataFrame.
 
@@ -54,12 +54,10 @@ def run_pipeline(
     another."""
     ctx = PipelineContext(spark=spark, model=model, lid_model=lid_model)
 
-    df = salt_repartition(pages, salt_buckets) if salt_buckets else pages
-
     # The union of the requested columns, computed once: one Arrow stage
     # however many sets ask for Python-computed columns.
     produced = frozenset(c for ms in resolve(metric_sets) for c in ms.columns)
-    df = apply_columns(df, ctx, produced)
+    df = apply_columns(pages, ctx, produced)
     out = session_memo(
         spark.sparkContext, ("output", produced), lambda: _output_columns(produced)
     )

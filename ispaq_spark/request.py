@@ -262,10 +262,7 @@ def run_request(
     pages = select_pages(pages, req)
     salt = int(req.preferences.get("salt_buckets") or 0)
     if salt > 0:
-        pages = salt_repartition(
-            pages.withColumn("ds", F.date_format("warc_ts", "yyyy-MM-dd")),
-            salt,
-        )
+        pages = salt_repartition(pages, salt)
     if req.output_path and resumable:
         return run_resumable(
             spark,

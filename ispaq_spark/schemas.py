@@ -63,15 +63,3 @@ DOC_METRICS = StructType(
         StructField("quality_flag", IntegerType(), False),
     ]
 )
-
-# Per-partition lineage/rollup (graft analog of the psd/pdf aggregate tables,
-# DDL pattern ispaq/utils.py:119-147; FIXTURES.md §3).
-ROLLUP = StructType(
-    [
-        StructField("partition_id", StringType(), False),
-        StructField("docs_in", LongType(), False),
-        StructField("docs_kept", LongType(), False),
-        StructField("docs_dropped", LongType(), False),
-        StructField("docs_error", LongType(), False),
-    ]
-)

@@ -139,11 +139,6 @@ class ParquetManifestSink(MetricSink):
         return bool(fs.isDirectory(jp))
 
 
-def write_metrics(metrics: DataFrame, path: str) -> None:
-    """Upsert-by-partition convenience over the parquet backend."""
-    ParquetManifestSink(metrics.sparkSession, path).merge(metrics)
-
-
 def input_fingerprints(pages: DataFrame) -> dict[str, str]:
     """Per-day content fingerprint of the input: row count + bit_xor of
     xxhash64(url, warc_ts). Commutative/associative, so partition order and

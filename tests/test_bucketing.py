@@ -10,8 +10,6 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from ispaq_spark.catalog import write_bucketed
-
 
 @contextlib.contextmanager
 def _tmp_db(spark, tmp_path):
@@ -48,10 +46,10 @@ def bucketed_pair(spark, tmp_path):
             F.col("id").alias("doc_id"),
             (F.col("id") % 11).alias("y"),
         )
-        write_bucketed(left, f"{db}.l", ["doc_id"], num_buckets=8,
-                       sort_by=["doc_id"])
-        write_bucketed(right, f"{db}.r", ["doc_id"], num_buckets=8,
-                       sort_by=["doc_id"])
+        for df, name in ((left, "l"), (right, "r")):
+            (df.write.mode("overwrite").format("parquet")
+             .bucketBy(8, "doc_id").sortBy("doc_id")
+             .saveAsTable(f"{db}.{name}"))
         yield db
 
 
@@ -84,8 +82,9 @@ def test_mismatched_bucket_counts_still_correct(spark, tmp_path):
     with _tmp_db(spark, tmp_path) as db:
         left = spark.range(0, 500).select(F.col("id").alias("k"))
         right = spark.range(0, 500).select(F.col("id").alias("k"))
-        write_bucketed(left, f"{db}.a", ["k"], num_buckets=8)
-        write_bucketed(right, f"{db}.b", ["k"], num_buckets=4)
+        for df, name, n in ((left, "a", 8), (right, "b", 4)):
+            (df.write.mode("overwrite").format("parquet")
+             .bucketBy(n, "k").saveAsTable(f"{db}.{name}"))
         with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
             j = spark.table(f"{db}.a").join(spark.table(f"{db}.b"), "k")
             assert j.count() == 500

@@ -25,7 +25,6 @@ ROOT_MODULES = (f"{PKG}.request", f"{PKG}.driver_queries")
 # and `functions.perplexity` hold distributed trainers that only tests call.
 UNREACHED = frozenset(
     {
-        "catalog",
         "functions.langid",
         "functions.perplexity",
         "streaming.stream_pipeline",

@@ -12,6 +12,7 @@ from ispaq_spark.pipeline import (
     rollup_lineage,
     run_pipeline,
 )
+from ispaq_spark.request import UserRequest, run_request
 
 
 @pytest.fixture(scope="module")
@@ -87,7 +88,10 @@ def test_eav_unpivot(spark, fixture_pages, model):
 
 
 def test_salted_run_same_result(spark, fixture_pages, model, pipeline_rows):
-    salted = run_pipeline(spark, fixture_pages, model=model, salt_buckets=16)
+    """The `salt_buckets` preference repartitions before the metric stages
+    and changes no row."""
+    req = UserRequest(metric_sets=("default",), preferences={"salt_buckets": 16})
+    salted = run_request(spark, req, pages=fixture_pages, model=model)
     rows = {r["url"]: r for r in salted.collect()}
     assert len(rows) == len(pipeline_rows)
     for url, r in rows.items():
