@@ -3,8 +3,8 @@
 entry()    — flagship: the quality-filter metric stage over `documents`.
 queries()  — the queries of ispaq_spark/driver_queries.py: library
              operators certified against DuckDB (dedup, curation,
-             similarity, BPE, langid), then the remaining relational and
-             text catalogue queries.
+             similarity, BPE, langid, two-stream cross-correlation), then the
+             remaining relational and text catalogue queries.
 oracle_sql() — DuckDB-equivalent SQL per query.
 """
 

@@ -67,6 +67,7 @@ BENCH_QUERIES = (
     "piecewise_model",
     "state_flags",
     "rollup_periods",
+    "cogroup_xcorr",
     "minhash_lsh_neardup",
     "asof_join",
     "chunk_dedup",

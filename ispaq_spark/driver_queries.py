@@ -33,6 +33,7 @@ from .curation import (
 from .functions.heuristics import with_stopword_langid
 from .operators.bpe import pair_counts, word_frequencies
 from .operators.components import alternating_star_components
+from .operators.crosscorr import cogroup_xcorr
 from .operators.dedup import (
     N_MINHASH_DEFAULT,
     content_hash,
@@ -1978,6 +1979,90 @@ def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _scored_candidates(docs, grams)
         .where(jac >= 0.5)
         .select("doc_a", "doc_b", r6(jac).alias("jaccard"))
+    )
+
+
+# ===========================================================================
+# §2.9 cogrouped two-stream UDF (apply_correlation_metric surface)
+# ===========================================================================
+
+
+_XCORR_ORACLE = """
+    WITH e AS (
+      SELECT user_id, list(value ORDER BY ts, event_id) AS ev
+      FROM events WHERE event_type = 'error' GROUP BY user_id
+    ), c AS (
+      SELECT user_id, list(value ORDER BY ts, event_id) AS cv
+      FROM events WHERE event_type = 'click' GROUP BY user_id
+    ), j AS (
+      SELECT e.user_id, ev, cv, len(ev) AS le, len(cv) AS lc
+      FROM e JOIN c USING (user_id)
+    ), lags AS (SELECT unnest([-2, -1, 0, 1, 2]) AS lag),
+    sl AS (
+      SELECT user_id, lag, ev, cv,
+             greatest(1, 1 - lag) AS lox,
+             least(le, lc - lag) AS hix
+      FROM j CROSS JOIN lags
+    ), p AS (
+      SELECT user_id, lag,
+             CAST(hix - lox + 1 AS INT) AS n,
+             ev[lox:hix] AS x,
+             cv[lox + lag:hix + lag] AS y
+      FROM sl WHERE hix - lox + 1 >= 4
+    ), s AS (
+      SELECT user_id, lag, n,
+             list_sum(x) AS sx, list_sum(y) AS sy,
+             list_sum(list_transform(x, v -> v * v)) AS sxx,
+             list_sum(list_transform(y, v -> v * v)) AS syy,
+             list_sum(list_transform(range(1, n + 1), i -> x[i] * y[i])) AS sxy
+      FROM p
+    ), r AS (
+      SELECT user_id, lag, n,
+             (n * sxy - sx * sy)
+               / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) AS corr
+      FROM s
+      WHERE sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy) > 0
+    ), b AS (
+      SELECT user_id, lag, corr, n,
+             -- argmax on the 6dp-ROUNDED r (round-before-argmax):
+             -- numpy's pairwise sums and list_sum's sequential sums can
+             -- differ in the last ulp, flipping a tied-lag pick
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY round(corr, 6) DESC, lag ASC) AS rn
+      FROM r
+    )
+    SELECT user_id, CAST(lag AS INT) AS best_lag,
+           round(corr, 6) AS peak_corr, n AS n_pairs
+    FROM b WHERE rn = 1
+    """
+
+
+def _event_stream(spark: SparkSession, sf_dir: str, evt: str) -> DataFrame:
+    """(user_id, ts, event_id, value) of one event type. Each call is its
+    own scan: a self-cogroup from a shared scan makes both sides carry the
+    same expression IDs, and Spark's attribute dedup then prunes the right
+    frame down to the key column."""
+    return (
+        t(spark, sf_dir, "events")
+        .where(F.col("event_type") == evt)
+        .select("user_id", "ts", "event_id", "value")
+    )
+
+
+@qdef("cogroup_xcorr", _XCORR_ORACLE)
+def q_cogroup_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """polarity_check two-stream peak cross-correlation
+    (IRISMustangMetrics/R/crossCorrelationMetric.R:46-161, dispatched via
+    apply_correlation_metric ispaq/irismustangmetrics.py:160-187) as a
+    cogrouped applyInPandas: one Arrow batch per user carries both series;
+    Pearson r over index lags -2..2, one-pass sum formula shared with the
+    oracle (operators/crosscorr.py)."""
+    out = cogroup_xcorr(
+        _event_stream(spark, sf_dir, "error"),
+        _event_stream(spark, sf_dir, "click"),
+    )
+    return out.select(
+        "user_id", "best_lag", r6(F.col("peak_corr")).alias("peak_corr"), "n_pairs"
     )
 
 
@@ -4097,6 +4182,7 @@ _DRIVER_PRIORITY: list[str] = [
     "split_assign",
     "domain_cap",
     "curation_report",
+    "cogroup_xcorr",
     "bpe_pair_counts",
     "geo_radius_banded",
     "intradoc_dedup",
@@ -4131,7 +4217,6 @@ _DRIVER_PRIORITY: list[str] = [
     "top1_per_key",
     "semi_anti",
     "pairs_self_join",
-    "rlike_filter",
 ]
 
 

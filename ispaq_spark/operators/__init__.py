@@ -1,4 +1,5 @@
 """Distributed operators beyond the reference's own set: exact and
 MinHash-LSH dedup (`curate_corpus` runs it), connected components,
-hyperplane-LSH similarity buckets and the BPE trainer.
+hyperplane-LSH similarity buckets, the BPE trainer and the two-stream
+cross-correlation.
 driver_queries.py certifies each one against a DuckDB oracle."""

@@ -71,57 +71,6 @@ def lagged_peak(e, c) -> tuple[int, float, int] | None:
     return best
 
 
-def collected_xcorr(
-    left: DataFrame, right: DataFrame, key: str = "user_id"
-) -> DataFrame:
-    """Same semantics as cogroup_xcorr, restructured for group-count scale:
-    each side pre-aggregates to (key, ordered value array) JVM-side
-    (sort_array(collect_list(struct)) — map-side combinable), the two sides
-    equi-join on the key, and ONE scalar pandas UDF scores thousands of
-    keys per Arrow batch. cogroup.applyInPandas dispatches Python once per
-    KEY (~10 ms each); this dispatches once per BATCH — at 10^9 keys that
-    is the difference between hours and minutes. Kept alongside the
-    cogroup form because the cogroup is the idiomatic shape when per-group
-    frames are large (here they are tiny)."""
-    from pyspark.sql import functions as F
-
-    def seq(df: DataFrame, out: str) -> DataFrame:
-        arr = F.transform(
-            F.sort_array(F.collect_list(F.struct("ts", "event_id", "value"))),
-            lambda s: s["value"],
-        )
-        return df.groupBy(key).agg(arr.alias(out))
-
-    j = seq(left, "eseq").join(seq(right, "cseq"), key)
-
-    @F.pandas_udf("struct<best_lag:int, peak_corr:double, n_pairs:int>")
-    def score(eseq: pd.Series, cseq: pd.Series) -> pd.DataFrame:
-        rows = []
-        for e, c in zip(eseq, cseq):
-            best = lagged_peak(list(e), list(c))
-            rows.append(
-                {"best_lag": None, "peak_corr": None, "n_pairs": None}
-                if best is None
-                else {
-                    "best_lag": best[0],
-                    "peak_corr": best[1],
-                    "n_pairs": best[2],
-                }
-            )
-        return pd.DataFrame(rows, columns=["best_lag", "peak_corr", "n_pairs"])
-
-    out = j.select(key, score("eseq", "cseq").alias("r"))
-    return (
-        out.where(out["r"]["best_lag"].isNotNull())
-        .select(
-            key,
-            out["r"]["best_lag"].alias("best_lag"),
-            out["r"]["peak_corr"].alias("peak_corr"),
-            out["r"]["n_pairs"].alias("n_pairs"),
-        )
-    )
-
-
 def cogroup_xcorr(
     left: DataFrame, right: DataFrame, key: str = "user_id"
 ) -> DataFrame:
