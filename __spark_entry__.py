@@ -1,10 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry()    — flagship: the quality-filter metric stage over `documents`.
-queries()  — the queries of ispaq_spark/driver_queries.py: library
-             operators certified against DuckDB (dedup, curation,
-             similarity, BPE, langid, two-stream cross-correlation), then the
-             remaining relational and text catalogue queries.
+queries()  — the 45 queries of ispaq_spark/driver_queries.py, in file
+             order: library operators certified against DuckDB (dedup,
+             curation, similarity, BPE, langid, two-stream
+             cross-correlation) and the remaining relational and text
+             catalogue queries.
 oracle_sql() — DuckDB-equivalent SQL per query.
 """
 

@@ -28,6 +28,7 @@ timings stay recoverable from the earlier line and the sidecar file.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -40,32 +41,17 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 BENCH_QUERIES = (
-    "basic_stats",
-    "gaps",
-    "sessionize",
     "dim_join_agg",
     "interval_join",
     "top1_per_key",
     "semi_anti",
-    "pairs_self_join",
-    "hist2d",
-    "mode_per_group",
-    "corr_per_group",
     "langid_confusion",
     "minhash_signatures",
     "simhash16",
     "jaccard_pairs",
     "ann_lsh_buckets",
-    "rolling_range",
-    "max_stalta",
-    "spikes_hampel",
-    "snr_window",
     "geo_radius",
-    "merge_upsert",
     "ivf_topk",
-    "ols_resid",
-    "piecewise_model",
-    "state_flags",
     "rollup_periods",
     "cogroup_xcorr",
     "minhash_lsh_neardup",
@@ -76,12 +62,10 @@ BENCH_QUERIES = (
     "int8_topk",
     "bm25_rank",
     "stratified_sample",
-    "variant_extract",
     "vocab_topk",
     "decontaminate",
     "pack_sequences",
     # round-3 additions
-    "psd_windows",
     "lsh_jaccard_verify",
     "geo_radius_banded",
     "dsir_resample",
@@ -279,4 +263,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    ).parse_args()
     main()

@@ -3,7 +3,9 @@ SQL) pairs. The library-backed queries run a library operator —
 `operators/`, `curation.py` or `functions/` — so the DuckDB oracle
 certifies the code users run, not a copy of it. The rest are catalogue
 queries: relational queries over the TPC-H-style fixtures, and text or
-embedding operators that exist only here. Those that reach no library
+embedding operators that exist only here. Of the 45 queries, 17 are
+library-backed and 28 are catalogue queries; queries() and oracle_sql()
+return them in file order. Those that reach no library
 function are listed in `tests/test_driver_contract.py`, which gates that
 no other query skips the library.
 
@@ -66,7 +68,7 @@ def dsum(c) -> F.Column:
     order cannot change the result), and returned as double. A raw double
     sum() differs by ~n ulps between Spark's partial-aggregation tree and
     DuckDB's sequential scan, which flips round(,6) when the total sits at
-    a .0000005 boundary (fuzz seed 101 hit exactly that in psd_windows).
+    a .0000005 boundary (fuzz seed 101 hit exactly that).
     DuckDB twin: CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE)."""
     if isinstance(c, str):
         c = F.col(c)
@@ -98,344 +100,6 @@ def qdef(name: str, oracle: str):
         return fn
 
     return deco
-
-
-# ===========================================================================
-# §2.4 aggregations
-# ===========================================================================
-
-
-@qdef(
-    "basic_stats",
-    """
-    WITH a AS (
-      SELECT l_returnflag,
-             count(*) AS n,
-             round(min(l_quantity), 6)               AS sample_min,
-             round(quantile_cont(l_quantity, 0.5), 6) AS sample_median,
-             round(avg(l_quantity), 6)               AS sample_mean,
-             round(max(l_quantity), 6)               AS sample_max,
-             count(l_quantity) AS nq,
-             CAST(sum(CAST(l_quantity AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-             CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(38,9)))
-                  AS DOUBLE) AS sxx,
-             count(DISTINCT l_quantity)              AS sample_unique
-      FROM lineitem GROUP BY l_returnflag
-    ), b AS (
-      SELECT *,
-             CASE WHEN nq > 0
-                  THEN sxx / CAST(nq AS DOUBLE)
-                       - (sx / CAST(nq AS DOUBLE)) * (sx / CAST(nq AS DOUBLE))
-             END AS vx
-      FROM a
-    )
-    SELECT l_returnflag, n, sample_min, sample_median, sample_mean,
-           sample_max,
-           round(sqrt(CASE WHEN vx < 0 THEN 0 ELSE vx END), 6)
-             AS sample_rms_var,
-           sample_unique
-    FROM b
-    """,
-)
-def q_basic_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """basicStats (IRISMustangMetrics/R/basicStatsMetric.R:25-59; rmsVariance
-    Class-Stream.R:281-290 = population stddev; sample_unique :44-48) as one
-    hash-aggregate with exact median via sort-based percentile. rmsVariance
-    is the closed form sqrt(E[x^2] - E[x]^2) over decimal sums (dsum) with
-    the identical expression shape in the oracle: Spark's Welford-style
-    central-moment merge and DuckDB's sequential recurrence accumulate in
-    different orders, so the built-in stddev_pop can land 1 ulp apart and
-    flip round(,6) at a .0000005 boundary — the psd_windows fuzz finding,
-    applied to the second-moment class."""
-    li = t(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity")
-    nq = F.col("nq")
-    vx = F.when(
-        nq > 0,
-        F.col("sxx") / nq.cast("double")
-        - (F.col("sx") / nq.cast("double")) * (F.col("sx") / nq.cast("double")),
-    )
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            r6(F.min("l_quantity")).alias("sample_min"),
-            r6(F.percentile("l_quantity", F.lit(0.5))).alias("sample_median"),
-            r6(F.avg("l_quantity")).alias("sample_mean"),
-            r6(F.max("l_quantity")).alias("sample_max"),
-            F.count("l_quantity").alias("nq"),
-            dsum(q).alias("sx"),
-            dsum(q * q).alias("sxx"),
-            F.countDistinct("l_quantity").alias("sample_unique"),
-        )
-        .withColumn("vx", vx)
-        .select(
-            "l_returnflag",
-            "n",
-            "sample_min",
-            "sample_median",
-            "sample_mean",
-            "sample_max",
-            r6(
-                F.sqrt(F.when(F.col("vx") < 0, F.lit(0.0)).otherwise(F.col("vx")))
-            ).alias("sample_rms_var"),
-            "sample_unique",
-        )
-    )
-
-
-@qdef(
-    "gaps",
-    """
-    WITH d AS (
-      SELECT user_id,
-             date_diff('microsecond',
-                       lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-                       ts) AS gap_us
-      FROM events
-    )
-    SELECT user_id,
-           count(*) AS n_events,
-           CAST(sum(CASE WHEN gap_us > 600000000 THEN 1 ELSE 0 END) AS BIGINT)
-             AS num_gaps,
-           max(gap_us) AS max_gap_us
-    FROM d GROUP BY user_id
-    """,
-)
-def q_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """gaps/overlaps metric (IRISMustangMetrics/R/gapsMetric.R:31-93; gap
-    detection via inter-trace deltas Class-Stream.R:328-417) as a lag()
-    analytic window + conditional aggregation — no per-group loops."""
-    # events.ts is TIMESTAMP_NTZ in the parquet; session TZ is UTC, so the
-    # cast to TIMESTAMP is value-preserving.
-    ev = t(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    return (
-        ev.withColumn("gap_us", gap)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.when(F.col("gap_us") > 600_000_000, 1).otherwise(0)).alias(
-                "num_gaps"
-            ),
-            F.max("gap_us").alias("max_gap_us"),
-        )
-    )
-
-
-@qdef(
-    "sessionize",
-    """
-    WITH d AS (
-      SELECT user_id,
-             CASE WHEN date_diff('microsecond',
-                    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-                    ts) > 1800000000 THEN 1 ELSE 0 END AS brk
-      FROM events
-    )
-    SELECT user_id, CAST(sum(brk) + 1 AS BIGINT) AS n_sessions
-    FROM d GROUP BY user_id
-    """,
-)
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (the batch analog of the reference's day-window loop,
-    ispaq/simple_metrics.py:83-89): a 30-min-gap break flag summed per key."""
-    ev = t(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    brk = F.when(gap > 1_800_000_000, 1).otherwise(0)
-    return (
-        ev.withColumn("brk", brk)
-        .groupBy("user_id")
-        .agg((F.sum("brk") + F.lit(1)).alias("n_sessions"))
-    )
-
-
-@qdef(
-    "hist2d",
-    """
-    SELECT event_type, CAST(floor(value / 10) AS BIGINT) AS bin,
-           count(*) AS hits
-    FROM events GROUP BY event_type, bin
-    """,
-)
-def q_hist2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PDF 2-D histogram (ispaq/PDF_aggregator.py:73-108: value_counts of
-    (freq, round(power))) = groupBy(key, bin).count()."""
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            "event_type",
-            F.floor(F.col("value") / 10).cast("bigint").alias("bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-
-
-@qdef(
-    "mode_per_group",
-    """
-    WITH h AS (
-      SELECT event_type, CAST(floor(value / 10) AS BIGINT) AS bin,
-             count(*) AS hits
-      FROM events GROUP BY event_type, bin
-    ), r AS (
-      SELECT event_type, bin, hits,
-             -- NULLS LAST pinned: DuckDB's ASC default is nulls-last,
-             -- Spark's is nulls-FIRST — a NULL-value bin tying for the
-             -- mode would otherwise resolve to opposite winners
-             row_number() OVER (PARTITION BY event_type
-                                ORDER BY hits DESC, bin ASC NULLS LAST) AS rn
-      FROM h
-    )
-    SELECT event_type, bin AS mode_bin, hits AS mode_hits FROM r WHERE rn = 1
-    """,
-)
-def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group histogram mode (ispaq/PDF_aggregator.py:122-124 per-freq
-    mode) via deterministic row_number over (hits desc, bin asc)."""
-    ev = t(spark, sf_dir, "events")
-    h = ev.groupBy(
-        "event_type", F.floor(F.col("value") / 10).cast("bigint").alias("bin")
-    ).agg(F.count(F.lit(1)).alias("hits"))
-    # asc_nulls_last matches DuckDB's ASC default; Spark's bare asc()
-    # sorts NULLs first, flipping a mode tie against a NULL bin
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("hits").desc(), F.col("bin").asc_nulls_last()
-    )
-    return (
-        h.withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .select(
-            "event_type",
-            F.col("bin").alias("mode_bin"),
-            F.col("hits").alias("mode_hits"),
-        )
-    )
-
-
-@qdef(
-    "psd_quantiles",
-    """
-    SELECT event_type,
-           count(*) AS n,
-           round(quantile_cont(value, 0.05), 6) AS pct_5,
-           round(quantile_cont(value, 0.10), 6) AS pct_10,
-           round(quantile_cont(value, 0.50), 6) AS pct_50,
-           round(quantile_cont(value, 0.90), 6) AS pct_90,
-           round(quantile_cont(value, 0.95), 6) AS pct_95
-    FROM events GROUP BY event_type
-    """,
-)
-def q_psd_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """psdStatistics percentile columns (IRISMustangMetrics/R/
-    psdStatisticsMetric.R percent_5/10/50/90/95 per frequency bin) as ONE
-    exact sort-based percentile aggregate: all five fractions share a single
-    per-group sort, so the plan is one shuffle on the group key — no repeated
-    scans and no approx sketch (psdStatistics is exact in the reference).
-    At 100 TB the unbounded-group variant would swap to approx_percentile;
-    per-frequency groups here are day-bounded, so exact is the right call."""
-    ev = t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        r6(F.percentile("value", F.lit(0.05))).alias("pct_5"),
-        r6(F.percentile("value", F.lit(0.10))).alias("pct_10"),
-        r6(F.percentile("value", F.lit(0.50))).alias("pct_50"),
-        r6(F.percentile("value", F.lit(0.90))).alias("pct_90"),
-        r6(F.percentile("value", F.lit(0.95))).alias("pct_95"),
-    )
-
-
-@qdef(
-    "corr_per_group",
-    """
-    WITH p AS (
-      SELECT l_returnflag,
-             CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-                  THEN l_quantity END AS x,
-             CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-                  THEN l_extendedprice END AS y
-      FROM lineitem
-    ), a AS (
-      SELECT l_returnflag,
-             count(x) AS np,
-             CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-             CAST(sum(CAST(y AS DECIMAL(38,9))) AS DOUBLE) AS sy,
-             CAST(sum(CAST(x * x AS DECIMAL(38,9))) AS DOUBLE) AS sxx,
-             CAST(sum(CAST(y * y AS DECIMAL(38,9))) AS DOUBLE) AS syy,
-             CAST(sum(CAST(x * y AS DECIMAL(38,9))) AS DOUBLE) AS sxy
-      FROM p GROUP BY l_returnflag
-    ), m AS (
-      SELECT l_returnflag, np,
-             sx / CAST(np AS DOUBLE) AS mx,
-             sy / CAST(np AS DOUBLE) AS my,
-             sxx / CAST(np AS DOUBLE) AS mxx,
-             syy / CAST(np AS DOUBLE) AS myy,
-             sxy / CAST(np AS DOUBLE) AS mxy
-      FROM a
-    ), v AS (
-      SELECT l_returnflag, np,
-             mxx - mx * mx AS vx,
-             myy - my * my AS vy,
-             mxy - mx * my AS cxy
-      FROM m
-    )
-    SELECT l_returnflag,
-           round(CASE WHEN np > 0 AND vx > 0 AND vy > 0
-                      THEN cxy / (sqrt(vx) * sqrt(vy)) END, 6) AS qp_corr
-    FROM v
-    """,
-)
-def q_corr_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """cross_talk Pearson correlation (IRISMustangMetrics/R/
-    correlationMetric.R:25-99, cor at :92) in closed form over decimal sums
-    of x, y, x*x, y*y, x*y (dsum), with the identical expression shape in
-    the oracle — the built-in corr's central-moment merge is accumulation-
-    order-dependent, so it can differ by 1 ulp between engines and flip
-    round(,6) at a boundary (the psd_windows fuzz finding, applied to the
-    second-moment class). Pair semantics match corr: rows where either
-    side is NULL are excluded from every sum."""
-    li = t(spark, sf_dir, "lineitem")
-    both = F.col("l_quantity").isNotNull() & F.col("l_extendedprice").isNotNull()
-    x, y = F.col("x"), F.col("y")
-    npd = F.col("np").cast("double")
-    mx, my = F.col("sx") / npd, F.col("sy") / npd
-    vx = F.col("sxx") / npd - mx * mx
-    vy = F.col("syy") / npd - my * my
-    cxy = F.col("sxy") / npd - mx * my
-    return (
-        li.select(
-            "l_returnflag",
-            F.when(both, F.col("l_quantity")).alias("x"),
-            F.when(both, F.col("l_extendedprice")).alias("y"),
-        )
-        .groupBy("l_returnflag")
-        .agg(
-            F.count("x").alias("np"),
-            dsum(x).alias("sx"),
-            dsum(y).alias("sy"),
-            dsum(x * x).alias("sxx"),
-            dsum(y * y).alias("syy"),
-            dsum(x * y).alias("sxy"),
-        )
-        .withColumn("vx", vx)
-        .withColumn("vy", vy)
-        .withColumn("cxy", cxy)
-        .select(
-            "l_returnflag",
-            r6(
-                F.when(
-                    (F.col("np") > 0) & (F.col("vx") > 0) & (F.col("vy") > 0),
-                    F.col("cxy") / (F.sqrt("vx") * F.sqrt("vy")),
-                )
-            ).alias("qp_corr"),
-        )
-    )
 
 
 # ===========================================================================
@@ -588,118 +252,6 @@ def q_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("with_orders", F.lit(0)).alias("with_orders"),
             F.coalesce("without_orders", F.lit(0)).alias("without_orders"),
         )
-    )
-
-
-@qdef(
-    "pairs_self_join",
-    """
-    SELECT n.n_name, count(*) AS n_pairs
-    FROM supplier s1
-    JOIN supplier s2 ON s1.s_nationkey = s2.s_nationkey
-                    AND s1.s_suppkey < s2.s_suppkey
-    JOIN nation n ON n.n_nationkey = s1.s_nationkey
-    GROUP BY n.n_name
-    """,
-)
-def q_pairs_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """channel-pairs-at-same-SN.L self-join (ispaq/crossTalk_metrics.py:
-    158-260: all 2-3 channel pairs per group) as a self-equi-join with
-    key1 < key2 — itertools.combinations as a relational operator."""
-    s = t(spark, sf_dir, "supplier")
-    s1, s2 = s.alias("s1"), s.alias("s2")
-    n = F.broadcast(t(spark, sf_dir, "nation"))
-    return (
-        s1.join(
-            s2,
-            (F.col("s1.s_nationkey") == F.col("s2.s_nationkey"))
-            & (F.col("s1.s_suppkey") < F.col("s2.s_suppkey")),
-        )
-        .join(n, F.col("s1.s_nationkey") == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-    )
-
-
-# ===========================================================================
-# §2.2 / §2.7 filters, dedup, sort/limit, set ops
-# ===========================================================================
-
-
-@qdef(
-    "rlike_filter",
-    """
-    SELECT event_type, count(*) AS n
-    FROM events
-    WHERE regexp_matches(event_type, '^(cl|er)')
-      AND json_extract(props, '$.k') IS NOT NULL
-    GROUP BY event_type
-    """,
-)
-def q_rlike_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """channelFilter regex predicate (ispaq/simple_metrics.py:43,73-78 e.g.
-    '[BH][HX].') as rlike, plus JSON field access on the props column."""
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.where(
-            F.col("event_type").rlike("^(cl|er)")
-            & F.get_json_object("props", "$.k").isNotNull()
-        )
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@qdef(
-    "unpivot_eav",
-    """
-    WITH a AS (
-      SELECT l_returnflag,
-             round(min(l_quantity), 6) AS min_qty,
-             round(max(l_quantity), 6) AS max_qty,
-             round(avg(l_quantity), 6) AS avg_qty
-      FROM lineitem GROUP BY l_returnflag
-    )
-    SELECT l_returnflag, 'min_qty' AS metricName, min_qty AS value FROM a
-    UNION ALL
-    SELECT l_returnflag, 'max_qty', max_qty FROM a
-    UNION ALL
-    SELECT l_returnflag, 'avg_qty', avg_qty FROM a
-    """,
-)
-def q_unpivot_eav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """wide -> long EAV (metricList2DF, IRISMustangMetrics/R/
-    Class-Metric.R:487-573) via the built-in unpivot operator."""
-    li = t(spark, sf_dir, "lineitem")
-    a = li.groupBy("l_returnflag").agg(
-        r6(F.min("l_quantity")).alias("min_qty"),
-        r6(F.max("l_quantity")).alias("max_qty"),
-        r6(F.avg("l_quantity")).alias("avg_qty"),
-    )
-    return a.unpivot(
-        ["l_returnflag"], ["min_qty", "max_qty", "avg_qty"], "metricName", "value"
-    )
-
-
-@qdef(
-    "sigfig",
-    """
-    SELECT o_orderkey,
-           round(o_totalprice / pow(10, floor(log10(abs(o_totalprice))) - 5))
-             * pow(10, floor(log10(abs(o_totalprice))) - 5) AS sig6
-    FROM orders
-    """,
-)
-def q_sigfig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """6-significant-figure output formatting (ispaq/utils.py:364-370) as a
-    closed-form scale-shift/round/unshift column expression (round's scale
-    argument must be a literal in both engines, so the shift is explicit)."""
-    o = t(spark, sf_dir, "orders")
-    x = F.col("o_totalprice")
-    p = F.pow(F.lit(10.0), F.floor(F.log10(F.abs(x))) - F.lit(5))
-    return o.select(
-        "o_orderkey",
-        (F.round(x / p, 0) * p).alias("sig6"),
     )
 
 
@@ -918,306 +470,8 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# §2.5 batch window functions (rolling kernels -> SQL window frames)
+# §2.4 grouping-set aggregations
 # ===========================================================================
-
-
-def _evw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events with the NTZ->UTC timestamp cast used by every window query."""
-    return t(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-
-
-_W_ORDER = "PARTITION BY user_id ORDER BY ts, event_id"
-
-
-@qdef(
-    "rolling_range",
-    f"""
-    WITH d AS (
-      SELECT user_id,
-             max(value) OVER w - min(value) OVER w AS rng
-      FROM events
-      WINDOW w AS ({_W_ORDER} ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-    )
-    SELECT user_id, round(max(rng), 6) AS max_range
-    FROM d GROUP BY user_id
-    """,
-)
-def q_rolling_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """max_range metric (IRISMustangMetrics/R/maxRangeMetric.R:5-31: max of
-    rolling max-min; C++ kernel seismicRoll/src/source_files.cpp:336-420) as
-    a SQL window frame — the 150 s stride of the reference is a compute
-    shortcut, not a semantic; the frame version is exact."""
-    ev = _evw(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-4, 0)
-    rng = F.max("value").over(w) - F.min("value").over(w)
-    return (
-        ev.withColumn("rng", rng)
-        .groupBy("user_id")
-        .agg(r6(F.max("rng")).alias("max_range"))
-    )
-
-
-@qdef(
-    "max_stalta",
-    f"""
-    WITH d AS (
-      SELECT user_id,
-             avg(value * value) OVER sta AS sta,
-             avg(value * value) OVER lta AS lta
-      FROM events
-      WINDOW sta AS ({_W_ORDER} ROWS BETWEEN 1 PRECEDING AND CURRENT ROW),
-             lta AS ({_W_ORDER} ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-    )
-    SELECT user_id, round(max(sta / lta), 6) AS max_stalta
-    FROM d WHERE lta > 0 GROUP BY user_id
-    """,
-)
-def q_max_stalta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """max_stalta (IRISMustangMetrics/R/STALTAMetric.R:30-93: max over a
-    short-term/long-term rolling mean ratio of the squared signal; kernel
-    source_files.cpp:289-331) as two window-frame averages + a ratio max.
-    The reference's `increment` stride (simple_metrics.py:196-198) is a
-    performance knob only and is dropped for exactness."""
-    ev = _evw(spark, sf_dir)
-    base = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    v2 = F.col("value") * F.col("value")
-    sta = F.avg(v2).over(base.rowsBetween(-1, 0))
-    lta = F.avg(v2).over(base.rowsBetween(-9, 0))
-    return (
-        ev.withColumn("sta", sta)
-        .withColumn("lta", lta)
-        .where(F.col("lta") > 0)
-        .groupBy("user_id")
-        .agg(r6(F.max(F.col("sta") / F.col("lta"))).alias("max_stalta"))
-    )
-
-
-@qdef(
-    "spikes_hampel",
-    f"""
-    WITH d AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN abs(value - median(value) OVER
-                    ({_W_ORDER} ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING))
-                  > 100 THEN 1 ELSE 0 END AS is_out
-      FROM events
-    ), runs AS (
-      SELECT user_id, is_out,
-             lag(is_out, 1, 0) OVER ({_W_ORDER}) AS prev_out
-      FROM d
-    )
-    SELECT user_id,
-           CAST(sum(is_out) AS BIGINT) AS n_outliers,
-           CAST(sum(CASE WHEN is_out = 1 AND prev_out = 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS num_spikes
-    FROM runs GROUP BY user_id
-    """,
-)
-def q_spikes_hampel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """num_spikes (IRISMustangMetrics/R/spikesMetric.R:30-62: rolling-median
-    outliers, counting runs of adjacent outliers once — `count(diff(idx)>1)+1`;
-    hampel kernel seismicRoll/R/findOutliers.R:48-89) as a rolling exact
-    median window frame + a lag() run-start counter."""
-    ev = _evw(spark, sf_dir)
-    base = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    med = F.percentile("value", F.lit(0.5)).over(base.rowsBetween(-2, 2))
-    is_out = F.when(F.abs(F.col("value") - med) > 100, 1).otherwise(0)
-    d = ev.withColumn("is_out", is_out)
-    d = d.withColumn("prev_out", F.lag("is_out", 1, 0).over(base))
-    return d.groupBy("user_id").agg(
-        F.sum("is_out").alias("n_outliers"),
-        F.sum(
-            F.when((F.col("is_out") == 1) & (F.col("prev_out") == 0), 1)
-            .otherwise(0)
-        ).alias("num_spikes"),
-    )
-
-
-@qdef(
-    "argmax_peak",
-    """
-    SELECT user_id,
-           arg_max(event_id, value) AS peak_event,
-           round(max(value), 6) AS peak_value
-    FROM events GROUP BY user_id
-    """,
-)
-def q_argmax_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """argmax — 'time of max STALTA' (STALTAMetric.R:78-79), peak-lag
-    (crossCorrelationMetric.R:152-153) — as the built-in max_by aggregate
-    (no self-join, no window). Max values are unique per key in the fixture,
-    so the tie-free result is deterministic."""
-    ev = t(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.max_by("event_id", "value").alias("peak_event"),
-        r6(F.max("value")).alias("peak_value"),
-    )
-
-
-# ===========================================================================
-# §2.4 regression / model-table aggregations
-# ===========================================================================
-
-
-@qdef(
-    "ols_resid",
-    """
-    WITH p AS (
-      SELECT l_returnflag,
-             CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-                  THEN l_quantity END AS x,
-             CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-                  THEN l_extendedprice END AS y
-      FROM lineitem
-    ), a AS (
-      SELECT l_returnflag,
-             count(x) AS np,
-             CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-             CAST(sum(CAST(y AS DECIMAL(38,9))) AS DOUBLE) AS sy,
-             CAST(sum(CAST(x * x AS DECIMAL(38,9))) AS DOUBLE) AS sxx,
-             CAST(sum(CAST(y * y AS DECIMAL(38,9))) AS DOUBLE) AS syy,
-             CAST(sum(CAST(x * y AS DECIMAL(38,9))) AS DOUBLE) AS sxy
-      FROM p GROUP BY l_returnflag
-    ), v AS (
-      SELECT l_returnflag, np,
-             sx / CAST(np AS DOUBLE) AS mx,
-             sy / CAST(np AS DOUBLE) AS my,
-             sxx / CAST(np AS DOUBLE)
-               - (sx / CAST(np AS DOUBLE)) * (sx / CAST(np AS DOUBLE)) AS vx,
-             syy / CAST(np AS DOUBLE)
-               - (sy / CAST(np AS DOUBLE)) * (sy / CAST(np AS DOUBLE)) AS vy,
-             sxy / CAST(np AS DOUBLE)
-               - (sx / CAST(np AS DOUBLE)) * (sy / CAST(np AS DOUBLE)) AS cxy
-      FROM a
-    ), s AS (
-      SELECT l_returnflag, np, mx, my, vx, vy, cxy,
-             CASE WHEN np > 0 AND vx > 0 THEN cxy / vx END AS slope
-      FROM v
-    ), r AS (
-      SELECT l_returnflag, slope,
-             my - slope * mx AS intercept,
-             CASE WHEN slope IS NOT NULL
-                  THEN vy - slope * cxy END AS rvar
-      FROM s
-    )
-    SELECT l_returnflag,
-           round(slope, 6) AS slope,
-           round(intercept, 6) AS intercept,
-           round(sqrt(CASE WHEN rvar < 0 THEN 0 ELSE rvar END), 6)
-             AS resid_std
-    FROM r
-    """,
-)
-def q_ols_resid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dead_channel_lin (IRISMustangMetrics/R/PSDMetric.R:186-190: stddev of
-    OLS-fit residuals) in closed form — single-pass algebraic aggregates
-    over decimal sums of x, y, x*x, y*y, x*y (dsum) with the identical
-    expression shape in the oracle: slope = cov/var(x),
-    intercept = mean(y) - slope*mean(x), residual variance
-    = var(y) - slope*cov (algebraically var(y)*(1-corr^2)). The built-in
-    regr_slope/corr central-moment merges are accumulation-order-dependent
-    and can flip round(,6) at a boundary between engines (the psd_windows
-    fuzz finding, applied to the second-moment class). Pair semantics match
-    regr_*: rows where either side is NULL are excluded from every sum."""
-    li = t(spark, sf_dir, "lineitem")
-    both = F.col("l_quantity").isNotNull() & F.col("l_extendedprice").isNotNull()
-    x, y = F.col("x"), F.col("y")
-    npd = F.col("np").cast("double")
-    return (
-        li.select(
-            "l_returnflag",
-            F.when(both, F.col("l_quantity")).alias("x"),
-            F.when(both, F.col("l_extendedprice")).alias("y"),
-        )
-        .groupBy("l_returnflag")
-        .agg(
-            F.count("x").alias("np"),
-            dsum(x).alias("sx"),
-            dsum(y).alias("sy"),
-            dsum(x * x).alias("sxx"),
-            dsum(y * y).alias("syy"),
-            dsum(x * y).alias("sxy"),
-        )
-        .withColumn("mx", F.col("sx") / npd)
-        .withColumn("my", F.col("sy") / npd)
-        .withColumn(
-            "vx",
-            F.col("sxx") / npd - (F.col("sx") / npd) * (F.col("sx") / npd),
-        )
-        .withColumn(
-            "vy",
-            F.col("syy") / npd - (F.col("sy") / npd) * (F.col("sy") / npd),
-        )
-        .withColumn(
-            "cxy",
-            F.col("sxy") / npd - (F.col("sx") / npd) * (F.col("sy") / npd),
-        )
-        .withColumn(
-            "slope",
-            F.when((F.col("np") > 0) & (F.col("vx") > 0), F.col("cxy") / F.col("vx")),
-        )
-        .withColumn("intercept", F.col("my") - F.col("slope") * F.col("mx"))
-        .withColumn(
-            "rvar",
-            F.when(
-                F.col("slope").isNotNull(),
-                F.col("vy") - F.col("slope") * F.col("cxy"),
-            ),
-        )
-        .select(
-            "l_returnflag",
-            r6("slope").alias("slope"),
-            r6("intercept").alias("intercept"),
-            r6(
-                F.sqrt(
-                    F.when(F.col("rvar") < 0, F.lit(0.0)).otherwise(F.col("rvar"))
-                )
-            ).alias("resid_std"),
-        )
-    )
-
-
-_MODEL_ROWS = [(0, 6, 40.0), (6, 12, 55.0), (12, 18, 60.0), (18, 24, 45.0)]
-_MODEL_SQL = ", ".join(f"({lo}, {hi}, {lv})" for lo, hi, lv in _MODEL_ROWS)
-
-
-@qdef(
-    "piecewise_model",
-    f"""
-    WITH model(lo, hi, level) AS (VALUES {_MODEL_SQL})
-    SELECT e.event_type,
-           round(100.0 * avg(CASE WHEN e.value > m.level THEN 1.0 ELSE 0.0 END), 6)
-             AS pct_above_model
-    FROM events e
-    JOIN model m ON extract(hour FROM e.ts) >= m.lo
-                AND extract(hour FROM e.ts) < m.hi
-    GROUP BY e.event_type
-    """,
-)
-def q_piecewise_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSD ⋈ NLNM/NHNM noise-model comparison (IRISSeismic/R/
-    spectralUtils.R:801-820; pct_above_nhnm psdStatistics :766-854): a
-    broadcast range-join against a piecewise-constant literal table + a
-    conditional average. The model table is a module constant shared
-    verbatim with the oracle."""
-    ev = _evw(spark, sf_dir)
-    model = F.broadcast(
-        spark.createDataFrame(_MODEL_ROWS, "lo INT, hi INT, level DOUBLE")
-    )
-    h = F.hour("ts")
-    return (
-        ev.join(model, (h >= F.col("lo")) & (h < F.col("hi")))
-        .groupBy("event_type")
-        .agg(
-            r6(
-                100.0
-                * F.avg(F.when(F.col("value") > F.col("level"), 1.0).otherwise(0.0))
-            ).alias("pct_above_model")
-        )
-    )
 
 
 @qdef(
@@ -1282,41 +536,6 @@ def q_cube_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @qdef(
-    "state_flags",
-    """
-    SELECT user_id,
-           CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-           CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
-           CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-           CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-           CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-           -- decimal-sum mean: accumulation-order-independent (see dsum)
-           round(CAST(sum(CAST(value AS DECIMAL(38,9))) AS DOUBLE)
-                 / count(value), 6) AS avg_value
-    FROM events GROUP BY user_id
-    """,
-)
-def q_state_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """stateOfHealth flag-counter pass-through + timing-quality mean
-    (IRISMustangMetrics/R/stateOfHealthMetric.R:25-105: 15 flag counts +
-    avg) as a pivot over a fixed category list + avg — one hash aggregate,
-    no shuffle per flag."""
-    types = ["click", "error", "purchase", "signup", "view"]
-    ev = t(spark, sf_dir, "events")
-    counts = (
-        ev.groupBy("user_id")
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))
-    )
-    for ty in types:
-        counts = counts.withColumnRenamed(ty, f"n_{ty}").withColumn(
-            f"n_{ty}", F.coalesce(F.col(f"n_{ty}"), F.lit(0))
-        )
-    avgv = ev.groupBy("user_id").agg(r6(davg("value")).alias("avg_value"))
-    return counts.join(avgv, "user_id")
-
-
-@qdef(
     "rollup_periods",
     """
     SELECT coalesce(strftime(date_trunc('month', l_shipdate), '%Y-%m'), 'ALL')
@@ -1359,81 +578,7 @@ def q_rollup_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# §2.2 predicate surfaces: glob subset, epoch overlap
-# ===========================================================================
-
-
-def glob_to_regex(glob: str) -> str:
-    """SNCL glob -> regex (ispaq/concierge.py:888-894: `*`->`.*`, `?`->`.`,
-    anchored)."""
-    out = []
-    for ch in glob:
-        if ch == "*":
-            out.append(".*")
-        elif ch == "?":
-            out.append(".")
-        elif ch in ".^$+{}[]()|\\":
-            out.append("\\" + ch)
-        else:
-            out.append(ch)
-    return "^" + "".join(out) + "$"
-
-
-_GLOBS = ("P*O", "?CONOMY")
-_GLOB_RE = "|".join(f"({glob_to_regex(g)})" for g in _GLOBS)
-
-
-@qdef(
-    "glob_subset",
-    f"""
-    SELECT p_type, p_brand, count(*) AS n
-    FROM part
-    WHERE regexp_matches(p_type, '{_GLOB_RE}')
-    GROUP BY p_type, p_brand
-    """,
-)
-def q_glob_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SNCL glob -> regex target subsetting (ispaq/concierge.py:888-894) —
-    the translated pattern is a module constant shared with the oracle, and
-    the rlike predicate is pushed into the scan by Catalyst."""
-    p = t(spark, sf_dir, "part")
-    return (
-        p.where(F.col("p_type").rlike(_GLOB_RE))
-        .groupBy("p_type", "p_brand")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@qdef(
-    "epoch_overlap",
-    """
-    SELECT o_orderpriority, count(*) AS n_overlapping
-    FROM orders
-    WHERE o_orderdate < TIMESTAMP '1996-03-01'
-      AND o_orderdate + INTERVAL 30 DAY > TIMESTAMP '1996-01-01'
-    GROUP BY o_orderpriority
-    """,
-)
-def q_epoch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """time-range epoch filter (ispaq/concierge.py:771-777: keep rows iff
-    starttime < end AND endtime > start — there a mutating iterrows loop,
-    here one sargable predicate)."""
-    o = t(spark, sf_dir, "orders")
-    start = F.col("o_orderdate")
-    end = start + F.expr("INTERVAL 30 DAYS")
-    return (
-        o.where(
-            (start < F.lit("1996-03-01").cast("timestamp"))
-            & (end > F.lit("1996-01-01").cast("timestamp"))
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_overlapping"))
-    )
-
-
-# ===========================================================================
-# §2.3 remaining join shapes: geo-radius theta join, SNR event windows,
-# idempotent upsert merge
+# §2.3 remaining join shapes: geo-radius theta join
 # ===========================================================================
 
 
@@ -1639,172 +784,6 @@ def q_geo_radius_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("c_custkey") * 104729 % 36000) / 100.0 - 180.0).alias("clon"),
     )
     return _geo_banded_count(sup, cust)
-
-
-@qdef(
-    "snr_window",
-    """
-    WITH j AS (
-      SELECT e1.event_id,
-             CASE WHEN e2.ts < e1.ts THEN e2.value END AS pre,
-             CASE WHEN e2.ts > e1.ts THEN e2.value END AS post
-      FROM events e1 JOIN events e2
-        ON e1.user_id = e2.user_id
-       AND e2.ts >= e1.ts - INTERVAL 3 DAY
-       AND e2.ts <= e1.ts + INTERVAL 3 DAY
-       AND e2.event_id <> e1.event_id
-      WHERE e1.event_type = 'error'
-    ), a AS (
-      SELECT event_id,
-             count(pre) AS npre,
-             count(post) AS npost,
-             CAST(sum(CAST(pre AS DECIMAL(38,9))) AS DOUBLE) AS s1,
-             CAST(sum(CAST(pre * pre AS DECIMAL(38,9))) AS DOUBLE) AS s2,
-             CAST(sum(CAST(post AS DECIMAL(38,9))) AS DOUBLE) AS t1,
-             CAST(sum(CAST(post * post AS DECIMAL(38,9))) AS DOUBLE) AS t2
-      FROM j GROUP BY event_id
-    ), v AS (
-      SELECT event_id, npre, npost,
-             s2 / CAST(npre AS DOUBLE)
-               - (s1 / CAST(npre AS DOUBLE)) * (s1 / CAST(npre AS DOUBLE))
-               AS vpre,
-             t2 / CAST(npost AS DOUBLE)
-               - (t1 / CAST(npost AS DOUBLE)) * (t1 / CAST(npost AS DOUBLE))
-               AS vpost
-      FROM a WHERE npre >= 2 AND npost >= 2
-    ), s AS (
-      SELECT event_id,
-             sqrt(CASE WHEN vpre < 0 THEN 0 ELSE vpre END) AS sdpre,
-             sqrt(CASE WHEN vpost < 0 THEN 0 ELSE vpost END) AS sdpost
-      FROM v
-    )
-    SELECT event_id, round(sdpost / sdpre, 6) AS snr
-    FROM s WHERE sdpre > 0
-    """,
-)
-def q_snr_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sample_snr (IRISMustangMetrics/R/SNRMetric.R:28-91: rmsVariance of the
-    signal half over rmsVariance of the noise half of an event-centered
-    window; window placement SNR_metrics.py:156-209) as an interval self-join
-    + two conditional population stddevs in closed form over decimal sums
-    (dsum of v and v*v per half) with the identical expression shape in the
-    oracle — the built-in stddev_pop's central-moment merge is accumulation-
-    order-dependent, so it can differ by 1 ulp between engines and flip
-    round(,6) at a boundary (the psd_windows fuzz finding, applied to the
-    second-moment class)."""
-    ev = _evw(spark, sf_dir)
-    e1 = ev.where(F.col("event_type") == "error").alias("e1")
-    e2 = ev.alias("e2")
-    cond = (
-        (F.col("e1.user_id") == F.col("e2.user_id"))
-        & (F.col("e2.ts") >= F.col("e1.ts") - F.expr("INTERVAL 3 DAYS"))
-        & (F.col("e2.ts") <= F.col("e1.ts") + F.expr("INTERVAL 3 DAYS"))
-        & (F.col("e2.event_id") != F.col("e1.event_id"))
-    )
-    pre, post = F.col("pre"), F.col("post")
-    npre_d = F.col("npre").cast("double")
-    npost_d = F.col("npost").cast("double")
-    vpre = F.col("s2") / npre_d - (F.col("s1") / npre_d) * (F.col("s1") / npre_d)
-    vpost = (
-        F.col("t2") / npost_d - (F.col("t1") / npost_d) * (F.col("t1") / npost_d)
-    )
-    return (
-        e1.join(e2, cond)
-        .select(
-            F.col("e1.event_id").alias("event_id"),
-            F.when(F.col("e2.ts") < F.col("e1.ts"), F.col("e2.value")).alias(
-                "pre"
-            ),
-            F.when(F.col("e2.ts") > F.col("e1.ts"), F.col("e2.value")).alias(
-                "post"
-            ),
-        )
-        .groupBy("event_id")
-        .agg(
-            F.count(pre).alias("npre"),
-            F.count(post).alias("npost"),
-            dsum(pre).alias("s1"),
-            dsum(pre * pre).alias("s2"),
-            dsum(post).alias("t1"),
-            dsum(post * post).alias("t2"),
-        )
-        .where((F.col("npre") >= 2) & (F.col("npost") >= 2))
-        .withColumn("vpre", vpre)
-        .withColumn("vpost", vpost)
-        .withColumn(
-            "sdpre",
-            F.sqrt(F.when(F.col("vpre") < 0, F.lit(0.0)).otherwise(F.col("vpre"))),
-        )
-        .withColumn(
-            "sdpost",
-            F.sqrt(
-                F.when(F.col("vpost") < 0, F.lit(0.0)).otherwise(F.col("vpost"))
-            ),
-        )
-        .where(F.col("sdpre") > 0)
-        .select("event_id", r6(F.col("sdpost") / F.col("sdpre")).alias("snr"))
-    )
-
-
-@qdef(
-    "merge_upsert",
-    """
-    WITH run1 AS (
-      SELECT o_orderpriority, CAST(extract(year FROM o_orderdate) AS BIGINT) AS yr,
-             count(*) AS n,
-             round(CAST(sum(CAST(o_totalprice AS DECIMAL(38,9))) AS DOUBLE), 6)
-               AS total
-      FROM orders WHERE o_orderdate < TIMESTAMP '1999-01-01'
-      GROUP BY 1, 2
-    ), run2 AS (
-      SELECT o_orderpriority, CAST(extract(year FROM o_orderdate) AS BIGINT) AS yr,
-             count(*) AS n,
-             round(CAST(sum(CAST(o_totalprice AS DECIMAL(38,9))) AS DOUBLE), 6)
-               AS total
-      FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-      GROUP BY 1, 2
-    )
-    SELECT coalesce(r2.o_orderpriority, r1.o_orderpriority) AS o_orderpriority,
-           coalesce(r2.yr, r1.yr) AS yr,
-           coalesce(r2.n, r1.n) AS n,
-           coalesce(r2.total, r1.total) AS total
-    FROM run1 r1 FULL OUTER JOIN run2 r2
-      ON r1.o_orderpriority = r2.o_orderpriority AND r1.yr = r2.yr
-    """,
-)
-def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """idempotent-rerun upsert (ispaq/utils.py:157-272: SQLite
-    `INSERT ... ON CONFLICT(target,start,end) DO UPDATE`) as a keyed MERGE:
-    full-outer join of the existing and new runs with new-wins coalesce —
-    the relational core of Iceberg MERGE INTO. Overlapping 1997-1998 keys
-    are recomputed identically, so the rerun is a no-op on them."""
-    o = t(spark, sf_dir, "orders")
-
-    def agg_run(df: DataFrame) -> DataFrame:
-        return df.groupBy(
-            "o_orderpriority",
-            F.year("o_orderdate").cast("bigint").alias("yr"),
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: order-independent (see dsum)
-            r6(dsum("o_totalprice")).alias("total"),
-        )
-
-    r1 = agg_run(o.where(F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))).alias("r1")
-    r2 = agg_run(o.where(F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))).alias("r2")
-    return r1.join(
-        r2,
-        (F.col("r1.o_orderpriority") == F.col("r2.o_orderpriority"))
-        & (F.col("r1.yr") == F.col("r2.yr")),
-        "full_outer",
-    ).select(
-        F.coalesce("r2.o_orderpriority", "r1.o_orderpriority").alias(
-            "o_orderpriority"
-        ),
-        F.coalesce("r2.yr", "r1.yr").alias("yr"),
-        F.coalesce("r2.n", "r1.n").alias("n"),
-        F.coalesce("r2.total", "r1.total").alias("total"),
-    )
 
 
 # ===========================================================================
@@ -2860,54 +1839,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @qdef(
-    "variant_extract",
-    """
-    -- TRY_CAST, not CAST: $.k can hold a non-scalar (hostile props carry
-    -- nested objects) and DuckDB's CAST hard-errors where Spark's
-    -- try_variant_get yields NULL; TRY matches the try_ semantics.
-    -- Integrality gate via the DOUBLE twin: on a fractional k the engines'
-    -- bigint casts DISAGREE (DuckDB rounds 5.5->6, Spark truncates 5.5->5),
-    -- so both sides keep the exact BIGINT value only when the double view
-    -- is integral — fractional k is excluded by both engines identically.
-    WITH e AS (
-      SELECT event_id,
-             TRY_CAST(json_extract(props, '$.k') AS BIGINT) AS kb,
-             TRY_CAST(json_extract(props, '$.k') AS DOUBLE) AS kd
-      FROM events
-    )
-    SELECT event_id, kb AS k
-    FROM e
-    WHERE kb IS NOT NULL AND kd = floor(kd) AND kb % 10 = 0
-    """,
-)
-def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured props via the VARIANT type (Spark 4): parse_json once
-    into Variant, then typed variant_get extraction with a pushable
-    predicate. Versus get_json_object (string re-parse per access, used by
-    `rlike_filter`), Variant parses once into a binary encoding and every
-    subsequent field access is an O(log fields) binary probe — the right
-    storage for web-page metadata bags (crawl headers, per-domain
-    annotations) read by many metric stages at 10^12 rows. Oracle uses
-    DuckDB's JSON extraction over the same column."""
-    ev = t(spark, sf_dir, "events")
-    v = ev.select(
-        "event_id", F.parse_json("props").alias("pv")
-    ).select(
-        "event_id",
-        # BIGINT carries the exact value (a >2^53 integer survives);
-        # the DOUBLE twin gates integrality, because the engines' bigint
-        # casts of a FRACTIONAL value disagree (truncate vs round).
-        F.try_variant_get(F.col("pv"), "$.k", "bigint").alias("kb"),
-        F.try_variant_get(F.col("pv"), "$.k", "double").alias("kd"),
-    )
-    return v.where(
-        F.col("kb").isNotNull()
-        & (F.col("kd") == F.floor("kd"))
-        & (F.col("kb") % 10 == 0)
-    ).select("event_id", F.col("kb").alias("k"))
-
-
-@qdef(
     "vocab_topk",
     """
     WITH tok AS (
@@ -3095,10 +2026,10 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long -> wide pivot (the inverse of `unpivot_eav`): per-user mean
-    value per event type as columns — the EAV-to-wide reshaping every
-    metric sink consumer does (the reference renders its long metricName
-    table wide for reports, ispaq/utils.py:119-147).
+    """Long -> wide pivot: per-user mean value per event type as columns —
+    the EAV-to-wide reshaping every metric sink consumer does (the
+    reference renders its long metricName table wide for reports,
+    ispaq/utils.py:119-147).
 
     Written as explicit conditional aggregation, NOT `groupBy().pivot()`:
     an unpinned pivot adds a distinct-collect JOB to discover the columns
@@ -3127,147 +2058,8 @@ def q_pivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-3 additions: PSD windowing policy, LSH-fed jaccard verify.
+# Round-3 additions: LSH-fed jaccard verify.
 # ===========================================================================
-
-
-@qdef(
-    "psd_windows",
-    """
-    WITH ev AS (
-      SELECT user_id, event_type, epoch(ts) AS tsec, value FROM events
-    ), tr AS (
-      SELECT user_id, event_type,
-             min(tsec) AS t0, max(tsec) AS t1, count(*) AS n
-      FROM ev GROUP BY user_id, event_type HAVING count(*) >= 2
-    ), bands AS (
-      SELECT *, CASE
-               WHEN event_type IN ('click', 'error') THEN 172800.0
-               WHEN event_type IN ('purchase', 'view') THEN 345600.0
-               ELSE 691200.0 END AS wlen
-      FROM tr
-    ), wins AS (
-      SELECT user_id, event_type, wlen, t0, t1, n,
-             unnest(range(0,
-               CAST(floor((t1 - t0 - wlen) / (wlen / 2.0)) AS BIGINT) + 1))
-               AS widx
-      FROM bands WHERE t1 - t0 >= wlen
-    ), win2 AS (
-      SELECT *, t0 + widx * wlen / 2.0 AS ws FROM wins
-    ), agg AS (
-      SELECT w.user_id, w.event_type, w.widx, w.ws, w.wlen,
-             any_value(w.n) AS n_tr, any_value(w.t0) AS t0,
-             any_value(w.t1) AS t1,
-             count(*) AS n_obs,
-             -- decimal sum: exact and associative, so the mean is
-             -- independent of accumulation order on both engines (a raw
-             -- double avg() can differ by 1 ulp and flip round(,6) at a
-             -- .0000005 boundary — fuzz seed 101 hit exactly that)
-             CAST(sum(CAST(ev.value AS DECIMAL(38,9))) AS DOUBLE)
-               / count(*) AS vmean
-      FROM win2 w JOIN ev
-        ON ev.user_id = w.user_id AND ev.event_type = w.event_type
-       AND ev.tsec >= w.ws AND ev.tsec < w.ws + wlen
-      GROUP BY w.user_id, w.event_type, w.widx, w.ws, w.wlen
-    )
-    SELECT user_id, event_type, widx,
-           round(ws, 6) AS win_start, n_obs,
-           round(vmean, 6) AS mean_value,
-           round(n_obs * ((t1 - t0) / (n_tr - 1)) / wlen, 6) AS coverage
-    FROM agg
-    WHERE n_obs * ((t1 - t0) / (n_tr - 1)) / wlen >= 0.99
-    """,
-)
-def q_psd_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSD windowing policy (IRISSeismic/R/spectralUtils.R:395-461):
-    band-dependent window length (here keyed by event_type, the channel
-    band-code analog), 50% overlap, and the >=99% coverage rule (:437) —
-    a window is kept only when observed samples cover >=99% of the
-    window at the trace's nominal spacing (span/(n-1)). Windows generate
-    relationally (sequence + explode off the per-trace extent aggregate,
-    no Python); window aggregates (count, mean) feed from an equi-join on
-    the trace key with the range condition as a residual filter — the
-    windows side is trace-count-sized (a dimension even at 10^12 events),
-    never the fact side."""
-    # events.ts is TIMESTAMP_NTZ; session TZ is UTC, so the cast to
-    # TIMESTAMP is value-preserving and epoch seconds match DuckDB epoch().
-    ev = t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        (F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(1e6)).alias(
-            "tsec"
-        ),
-        "value",
-    )
-    tr = (
-        ev.groupBy("user_id", "event_type")
-        .agg(
-            F.min("tsec").alias("t0"),
-            F.max("tsec").alias("t1"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .where(F.col("n") >= 2)
-    )
-    wlen = (
-        F.when(F.col("event_type").isin("click", "error"), 172800.0)
-        .when(F.col("event_type").isin("purchase", "view"), 345600.0)
-        .otherwise(691200.0)
-    )
-    bands = tr.withColumn("wlen", wlen).where(
-        F.col("t1") - F.col("t0") >= F.col("wlen")
-    )
-    nwin_last = F.floor(
-        (F.col("t1") - F.col("t0") - F.col("wlen")) / (F.col("wlen") / 2.0)
-    )
-    wins = bands.select(
-        "user_id", "event_type", "wlen", "t0", "t1", "n",
-        F.explode(
-            F.sequence(F.lit(0).cast("bigint"), nwin_last)
-        ).alias("widx"),
-    ).withColumn(
-        "ws", F.col("t0") + F.col("widx") * F.col("wlen") / 2.0
-    )
-    w, e = wins.alias("w"), ev.alias("e")
-    joined = w.join(
-        e,
-        (F.col("w.user_id") == F.col("e.user_id"))
-        & (F.col("w.event_type") == F.col("e.event_type"))
-        & (F.col("e.tsec") >= F.col("w.ws"))
-        & (F.col("e.tsec") < F.col("w.ws") + F.col("w.wlen")),
-    )
-    agg = joined.groupBy(
-        F.col("w.user_id").alias("user_id"),
-        F.col("w.event_type").alias("event_type"),
-        F.col("w.widx").alias("widx"),
-        F.col("w.ws").alias("ws"),
-        F.col("w.wlen").alias("wlen"),
-    ).agg(
-        F.any_value(F.col("w.n")).alias("n_tr"),
-        F.any_value(F.col("w.t0")).alias("t0"),
-        F.any_value(F.col("w.t1")).alias("t1"),
-        F.count(F.lit(1)).alias("n_obs"),
-        # decimal sum -> one double division: exact, associative, and
-        # therefore identical across engines regardless of partial-agg
-        # order (see the oracle's matching comment; fuzz seed 101)
-        (
-            F.sum(F.col("e.value").cast("decimal(38,9)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("vmean"),
-    )
-    coverage = (
-        F.col("n_obs")
-        * ((F.col("t1") - F.col("t0")) / (F.col("n_tr") - 1))
-        / F.col("wlen")
-    )
-    return agg.where(coverage >= 0.99).select(
-        "user_id",
-        "event_type",
-        "widx",
-        r6("ws").alias("win_start"),
-        "n_obs",
-        r6("vmean").alias("mean_value"),
-        r6(coverage).alias("coverage"),
-    )
 
 
 _LSH_VERIFY_ORACLE = """
@@ -4163,75 +2955,12 @@ def q_dup_cluster_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-# The driver certifies only the first 50 entries of queries() per round, in
-# this order: every library-backed query first, then catalogue queries.
+# Only the first 50 entries of queries() are certified per round, so every
+# query must fit (tests/test_plans.py gates the count);
 # scripts/check_oracle.py sweeps all of queries() locally.
-_DRIVER_PRIORITY: list[str] = [
-    "langid_confusion",
-    "fingerprint",
-    "minhash_signatures",
-    "simhash16",
-    "jaccard_pairs",
-    "ann_lsh_buckets",
-    "minhash_lsh_neardup",
-    "lsh_jaccard_verify",
-    "lsh_containment_verify",
-    "canonical_docs",
-    "neardup_components",
-    "decontaminate",
-    "split_assign",
-    "domain_cap",
-    "curation_report",
-    "cogroup_xcorr",
-    "bpe_pair_counts",
-    "geo_radius_banded",
-    "intradoc_dedup",
-    "char_entropy",
-    "chunk_dedup",
-    "int8_topk",
-    "ivf_topk",
-    "pmi_bigrams",
-    "substring_dedup",
-    "cube_totals",
-    "merge_upsert",
-    "mode_per_group",
-    "psd_windows",
-    "basic_stats",
-    "corr_per_group",
-    "ols_resid",
-    "snr_window",
-    "dim_join_agg",
-    "salted_skew_agg",
-    "source_overlap",
-    "variant_extract",
-    "adaptive_quality_cut",
-    "asof_join",
-    "bm25_rank",
-    "funnel_steps",
-    "gaps",
-    "hist2d",
-    "interval_join",
-    "inverted_index",
-    "psd_quantiles",
-    "sessionize",
-    "top1_per_key",
-    "semi_anti",
-    "pairs_self_join",
-]
-
-
-def _ordered_defs() -> list[QueryDef]:
-    rank = {n: i for i, n in enumerate(_DRIVER_PRIORITY)}
-    order = sorted(
-        range(len(_DEFS)),
-        key=lambda i: (rank.get(_DEFS[i].name, len(rank)), i),
-    )
-    return [_DEFS[i] for i in order]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {d.name: d.spark for d in _ordered_defs()}
+    return {d.name: d.spark for d in _DEFS}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {d.name: d.oracle for d in _ordered_defs()}
+    return {d.name: d.oracle for d in _DEFS}

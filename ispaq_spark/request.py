@@ -210,8 +210,8 @@ def _parse_ts(s: str, what: str) -> dt.datetime:
 
 
 def _glob_to_regex(glob: str) -> str:
-    # SNCL glob -> regex (ispaq/concierge.py:888-894), shared contract with
-    # driver_queries.glob_to_regex
+    # SNCL glob -> regex (ispaq/concierge.py:888-894): `*` -> `.*`, `?` -> `.`,
+    # regex metacharacters escaped, anchored at both ends
     out = []
     for ch in glob:
         if ch == "*":

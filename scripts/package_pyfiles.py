@@ -15,8 +15,8 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import os
-import sys
 import zipfile
 
 EXCLUDE_DIRS = {"__pycache__"}
@@ -39,8 +39,16 @@ def build(repo: str, dist: str) -> str:
 
 if __name__ == "__main__":
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    dist = sys.argv[1] if len(sys.argv) > 1 else os.path.join(repo, "dist")
-    path = build(repo, dist)
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument(
+        "dist_dir",
+        nargs="?",
+        default=os.path.join(repo, "dist"),
+        help="directory to write ispaq_spark.zip into (default: <repo>/dist)",
+    )
+    path = build(repo, ap.parse_args().dist_dir)
     print(path)
     print(
         "submit: spark-submit --master <cluster> "

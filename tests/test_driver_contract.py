@@ -86,51 +86,27 @@ def _library_calls(fn, seen=None) -> set[str]:
 CATALOGUE = frozenset(
     {
         "adaptive_quality_cut",
-        "argmax_peak",
         "asof_join",
-        "basic_stats",
         "bm25_rank",
         "char_entropy",
         "chunk_dedup",
-        "corr_per_group",
         "cube_totals",
         "dim_join_agg",
         "dup_cluster_hist",
-        "epoch_overlap",
         "funnel_steps",
-        "gaps",
         "geo_radius",
         "geo_radius_banded",
-        "glob_subset",
-        "hist2d",
         "int8_topk",
         "interval_join",
         "inverted_index",
         "ivf_topk",
-        "max_stalta",
-        "merge_upsert",
-        "mode_per_group",
-        "ols_resid",
         "pack_sequences",
-        "pairs_self_join",
-        "piecewise_model",
         "pivot_metrics",
-        "psd_quantiles",
-        "psd_windows",
-        "rlike_filter",
-        "rolling_range",
         "rollup_periods",
         "salted_skew_agg",
         "semi_anti",
-        "sessionize",
-        "sigfig",
-        "snr_window",
         "source_overlap",
-        "spikes_hampel",
-        "state_flags",
         "top1_per_key",
-        "unpivot_eav",
-        "variant_extract",
         "vocab_topk",
     }
 )

@@ -7,10 +7,12 @@ ispaq's `ispaq.py -P prefs -M alias -S alias --starttime` workflow
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 
 from ispaq_spark.request import (
+    _glob_to_regex,
     build_request,
     parse_preferences,
     run_request,
@@ -88,6 +90,29 @@ def test_time_range_defaults_one_day():
         build_request(PREFS, endtime="2024-03-02")
     with pytest.raises(ValueError, match="invalid start time"):
         build_request(PREFS, starttime="tomorrow")
+
+
+def test_glob_to_regex_translation():
+    """SNCL glob semantics, checked with find (not full-match) semantics as
+    Spark's rlike applies them: `?` is exactly one character, `*` any run,
+    regex metacharacters match only themselves, and the pattern is
+    anchored at both ends."""
+
+    def hit(glob: str, s: str) -> bool:
+        return re.search(_glob_to_regex(glob), s) is not None
+
+    assert hit("a?c", "abc") and hit("a?c", "a.c")
+    assert not hit("a?c", "ac") and not hit("a?c", "abbc")
+    assert hit("a*c", "ac") and hit("a*c", "abbbc") and hit("a*", "a")
+    assert not hit("a*c", "abd")
+    for lit in ("a.b", "(a)", "a+b", "a|b"):
+        assert hit(lit, lit)
+    assert not hit("a.b", "axb")
+    assert not hit("(a)", "a")
+    assert not hit("a+b", "aab")
+    assert not hit("a|b", "a") and not hit("a|b", "b")
+    assert not hit("abc", "xabc") and not hit("abc", "abcx")
+    assert not hit("https://x.org/*", "ftp://https://x.org/p")
 
 
 def test_select_pages_filters(spark):
