@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import hashlib
 import pickle
+import sys
+import zipimport
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -35,6 +37,28 @@ ARROW_COLUMNS = {
     "pred_lang": "string",
     "lang_conf": "double",
 }
+
+
+def _drop_zip_finders() -> None:
+    """Delete every ``zipimport.zipimporter`` from ``sys.path_importer_cache``.
+
+    At the start of every task PySpark's worker
+    (``pyspark.worker_util.setup_spark_files``) calls
+    ``importlib.invalidate_caches()``. On CPython 3.11 that makes every
+    cached ``zipimporter`` re-read its archive's whole central directory in
+    pure Python, and a reused worker holds one such finder per package
+    directory it imported from ``pyspark.zip`` (1,328 entries) and the py4j
+    zip: 16 re-reads per task, most of a small task's CPU. It also covers a
+    ``spark-submit --py-files`` deployment, where ``ispaq_spark`` itself is
+    imported from a zip. With the finders gone the next task's
+    ``invalidate_caches()`` finds none to re-read, and Python builds a
+    finder again (from the already parsed directory) only when an import
+    needs one. The cache is a plain dict that CPython documents as safe to
+    clear, so where ``invalidate_caches`` is cheap this costs nothing."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
 
 
 def _model_broadcast(sc, slot: str, model):
@@ -79,6 +103,7 @@ def arrow_stage_udf(
     def build():
         @F.pandas_udf(", ".join(f"{c} {ARROW_COLUMNS[c]}" for c in cols))
         def stage(html: pd.Series) -> pd.DataFrame:
+            _drop_zip_finders()
             # html arrives as a Series of bytes/None (Arrow binary);
             # extract_text returns None for undecodable bytes and every
             # score keeps None.

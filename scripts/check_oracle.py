@@ -21,7 +21,7 @@ import pandas as pd
 sys.path.insert(0, ".")
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events "
+    "region nation customer supplier orders lineitem events "
     "documents embeddings"
 ).split()
 

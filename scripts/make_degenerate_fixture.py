@@ -22,8 +22,8 @@ oracle:
   lineitem    build sides; grouping sets see singleton groups).
   customer /  first 6 / 4 rows (geo bands mostly EMPTY — the banded join
   supplier    must tolerate bands with zero customers).
-  part        first 5 rows; region/nation copied whole (dimensions don't
-              shrink with a bad day).
+  region /    copied whole (dimensions don't shrink with a bad day).
+  nation
 
 Everything is sliced or constructed deterministically from
 /root/testdata/sf0.001 — no wall clock, no randomness. Output defaults to
@@ -116,7 +116,7 @@ def build_events(base: pa.Table) -> pa.Table:
 
 FACTS = [
     "documents", "embeddings", "events", "orders", "lineitem",
-    "customer", "supplier", "part",
+    "customer", "supplier",
 ]
 
 
@@ -137,7 +137,6 @@ def main() -> None:
         ("lineitem", 8),
         ("customer", 6),
         ("supplier", 4),
-        ("part", 5),
     ]:
         write(name, load(name).slice(0, n))
     for name in ["region", "nation"]:

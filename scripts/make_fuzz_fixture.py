@@ -193,7 +193,7 @@ def main() -> None:
         "supplier": lambda t, r: fuzz_balances(t, r, "s_acctbal"),
     }
     tables = (
-        "region nation customer supplier part orders lineitem events "
+        "region nation customer supplier orders lineitem events "
         "documents embeddings"
     ).split()
     perm_rng = np.random.Generator(np.random.PCG64(seed))

@@ -238,7 +238,7 @@ def build_supplier(base: pa.Table) -> pa.Table:
 
 def main() -> None:
     os.makedirs(OUT, exist_ok=True)
-    passthrough = ["region", "nation", "part"]
+    passthrough = ["region", "nation"]
     for name in passthrough:
         t = load(name)
         write(name, t, t)
