@@ -41,21 +41,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 BENCH_QUERIES = (
-    "dim_join_agg",
-    "interval_join",
-    "top1_per_key",
-    "semi_anti",
     "langid_confusion",
     "minhash_signatures",
     "simhash16",
     "jaccard_pairs",
     "ann_lsh_buckets",
-    "geo_radius",
     "ivf_topk",
-    "rollup_periods",
     "cogroup_xcorr",
     "minhash_lsh_neardup",
-    "asof_join",
     "chunk_dedup",
     "neardup_components",
     "salted_skew_agg",
@@ -67,7 +60,6 @@ BENCH_QUERIES = (
     "pack_sequences",
     # round-3 additions
     "lsh_jaccard_verify",
-    "geo_radius_banded",
     "dsir_resample",
     "canonical_docs",
     "split_assign",
@@ -78,7 +70,6 @@ BENCH_QUERIES = (
     "inverted_index",
     "bpe_pair_counts",
     "char_entropy",
-    "funnel_steps",
     "curation_report",
     "lsh_containment_verify",
     # round-4 additions

@@ -2,10 +2,9 @@
 SQL) pairs. The library-backed queries run a library operator —
 `operators/`, `curation.py` or `functions/` — so the DuckDB oracle
 certifies the code users run, not a copy of it. The rest are catalogue
-queries: relational queries over the TPC-H-style fixtures, and text or
-embedding operators that exist only here. Of the 45 queries, 17 are
-library-backed and 28 are catalogue queries; queries() and oracle_sql()
-return them in file order. Those that reach no library
+queries: text or embedding operators that exist only here. Of the 34
+queries, 17 are library-backed and 17 are catalogue queries; queries() and
+oracle_sql() return them in file order. Those that reach no library
 function are listed in `tests/test_driver_contract.py`, which gates that
 no other query skips the library.
 
@@ -100,159 +99,6 @@ def qdef(name: str, oracle: str):
         return fn
 
     return deco
-
-
-# ===========================================================================
-# §2.3 joins
-# ===========================================================================
-
-
-@qdef(
-    "dim_join_agg",
-    """
-    SELECT r.r_name,
-           count(*) AS n_customers,
-           -- decimal sums: order-independent (see dsum); c_acctbal is
-           -- fractional, so a raw double sum is accumulation-order noise
-           round(CAST(sum(CAST(c.c_acctbal AS DECIMAL(38,9))) AS DOUBLE), 6)
-             AS sum_acctbal,
-           round(CAST(sum(CAST(c.c_acctbal AS DECIMAL(38,9))) AS DOUBLE)
-                 / count(c.c_acctbal), 6) AS avg_acctbal
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name
-    """,
-)
-def q_dim_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """availability ⋈ waveform dimension join (ispaq/simple_metrics.py:113-121
-    does it as iterrows + per-row fetch) as broadcast-hash joins: both dims
-    are tiny, so no shuffle of the fact side."""
-    c = t(spark, sf_dir, "customer")
-    n = F.broadcast(t(spark, sf_dir, "nation"))
-    r = F.broadcast(t(spark, sf_dir, "region"))
-    return (
-        c.join(n, c.c_nationkey == n.n_nationkey)
-        .join(r, n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            r6(dsum("c_acctbal")).alias("sum_acctbal"),
-            r6(davg("c_acctbal")).alias("avg_acctbal"),
-        )
-    )
-
-
-@qdef(
-    "interval_join",
-    """
-    SELECT e1.user_id, count(*) AS n_follow_clicks
-    FROM events e1 JOIN events e2
-      ON e1.user_id = e2.user_id
-     AND e2.ts > e1.ts
-     AND e2.ts <= e1.ts + INTERVAL 10 MINUTE
-    WHERE e1.event_type = 'error' AND e2.event_type = 'click'
-    GROUP BY e1.user_id
-    """,
-)
-def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """event ⋈ waveform time-window interval join (ispaq/SNR_metrics.py:
-    146-168: per-event [t+tt-w/2, t+tt+w/2] windows): equi-join on the key +
-    range predicate on time, so Spark plans a hash join with the range as a
-    post-filter instead of a cartesian product."""
-    ev = t(spark, sf_dir, "events")
-    e1 = ev.where(F.col("event_type") == "error").alias("e1")
-    e2 = ev.where(F.col("event_type") == "click").alias("e2")
-    cond = (
-        (F.col("e1.user_id") == F.col("e2.user_id"))
-        & (F.col("e2.ts") > F.col("e1.ts"))
-        & (F.col("e2.ts") <= F.col("e1.ts") + F.expr("INTERVAL 10 MINUTES"))
-    )
-    return (
-        e1.join(e2, cond)
-        .groupBy(F.col("e1.user_id").alias("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_follow_clicks"))
-    )
-
-
-@qdef(
-    "top1_per_key",
-    """
-    WITH r AS (
-      SELECT o_custkey, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_custkey
-                                ORDER BY o_totalprice DESC, o_orderkey ASC) rn
-      FROM orders
-    )
-    SELECT o_custkey, o_orderkey AS best_order,
-           round(o_totalprice, 6) AS best_total
-    FROM r WHERE rn = 1
-    """,
-)
-def q_top1_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first-neighbor-with-data top-1-per-key (ispaq/crossCorrelation_
-    metrics.py:258-323: sort by distance, take first) as row_number()=1."""
-    o = t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .select(
-            "o_custkey",
-            F.col("o_orderkey").alias("best_order"),
-            r6(F.col("o_totalprice")).alias("best_total"),
-        )
-    )
-
-
-@qdef(
-    "semi_anti",
-    """
-    WITH w AS (
-      SELECT c.c_custkey, c.c_nationkey FROM customer c
-      WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    ), wo AS (
-      SELECT c.c_custkey, c.c_nationkey FROM customer c
-      WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    )
-    SELECT n.n_name,
-           coalesce(ww.n, 0) AS with_orders,
-           coalesce(aa.n, 0) AS without_orders
-    FROM nation n
-    LEFT JOIN (SELECT c_nationkey, count(*) n FROM w GROUP BY 1) ww
-      ON ww.c_nationkey = n.n_nationkey
-    LEFT JOIN (SELECT c_nationkey, count(*) n FROM wo GROUP BY 1) aa
-      ON aa.c_nationkey = n.n_nationkey
-    """,
-)
-def q_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """semi/anti joins ('only targets with metadata' ispaq/SNR_metrics.py:
-    140-142; 'skip targets with no data' simple_metrics.py:122-140) as real
-    left_semi / left_anti operators, stitched per nation."""
-    c = t(spark, sf_dir, "customer")
-    o = t(spark, sf_dir, "orders").select("o_custkey")
-    n = F.broadcast(t(spark, sf_dir, "nation"))
-    semi = (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .groupBy(F.col("c_nationkey").alias("nk_semi"))
-        .agg(F.count(F.lit(1)).alias("with_orders"))
-    )
-    anti = (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy(F.col("c_nationkey").alias("nk_anti"))
-        .agg(F.count(F.lit(1)).alias("without_orders"))
-    )
-    return (
-        n.join(semi, n.n_nationkey == semi.nk_semi, "left")
-        .join(anti, n.n_nationkey == anti.nk_anti, "left")
-        .select(
-            "n_name",
-            F.coalesce("with_orders", F.lit(0)).alias("with_orders"),
-            F.coalesce("without_orders", F.lit(0)).alias("without_orders"),
-        )
-    )
 
 
 # ===========================================================================
@@ -467,323 +313,6 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.groupBy(
         lsh_bucket_col("embedding", _LSH_PLANES).alias("bucket")
     ).agg(F.count(F.lit(1)).alias("n"))
-
-
-# ===========================================================================
-# §2.4 grouping-set aggregations
-# ===========================================================================
-
-
-@qdef(
-    "cube_totals",
-    """
-    SELECT event_type,
-           CAST(extract(month FROM ts) AS BIGINT) AS m,
-           count(*) AS n,
-           -- decimal sum: order-independent at every grouping-set level
-           round(CAST(sum(CAST(value AS DECIMAL(38,9))) AS DOUBLE), 6)
-             AS sum_value
-    FROM events
-    GROUP BY CUBE (event_type, m)
-    """,
-)
-def q_cube_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-dimensional CUBE report (extends the rollup_periods grouping-sets
-    family; the reference emits per-channel, per-month, and grand-total rows
-    from separate R passes over the metrics frame, `ispaq/utils.py:119-147`).
-
-    NOT Spark's .cube(): all four grouping sets are derived from ONE
-    finest-grain aggregate. Two reasons. (1) Empty-day standard
-    compliance: Spark's Expand-based CUBE emits ZERO rows on empty input,
-    where the SQL standard (and DuckDB) emit the () grand-total row with
-    count 0 — a production empty day would silently drop its rollup row
-    (found by the zero-row fixture sweep). A global .agg() always emits
-    one row, so the derived form matches the standard. (2) Scale: Expand
-    multiplies EVERY input row x4 through the exchange; here the full
-    fact stream shuffles once at (event_type, m) grain and the coarser
-    sets re-aggregate the tiny grouped result."""
-    ev = t(spark, sf_dir, "events").withColumn(
-        "m", F.month("ts").cast("bigint")
-    )
-    # _s stays DECIMAL through the re-aggregation: decimal addition is
-    # exact and associative, so every grouping-set level is independent of
-    # accumulation order (see dsum); cast to double only at emission
-    per = ev.groupBy("event_type", "m").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(F.col("value").cast("decimal(38,9)")).alias("_s"),
-    )
-
-    def roll(keys: list[str]) -> DataFrame:
-        g = per.groupBy(*keys) if keys else per.groupBy()
-        out = g.agg(
-            F.coalesce(F.sum("_n"), F.lit(0)).cast("bigint").alias("n"),
-            r6(F.sum("_s").cast("double")).alias("sum_value"),
-        )
-        if "event_type" not in keys:
-            out = out.withColumn(
-                "event_type", F.lit(None).cast("string")
-            )
-        if "m" not in keys:
-            out = out.withColumn("m", F.lit(None).cast("bigint"))
-        return out.select("event_type", "m", "n", "sum_value")
-
-    return (
-        roll(["event_type", "m"])
-        .unionByName(roll(["event_type"]))
-        .unionByName(roll(["m"]))
-        .unionByName(roll([]))
-    )
-
-
-@qdef(
-    "rollup_periods",
-    """
-    SELECT coalesce(strftime(date_trunc('month', l_shipdate), '%Y-%m'), 'ALL')
-             AS period,
-           count(*) AS n,
-           round(sum(l_quantity), 6) AS sum_qty
-    FROM lineitem
-    GROUP BY ROLLUP(date_trunc('month', l_shipdate))
-    """,
-)
-def q_rollup_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """daily + aggregated PDF intervals (ispaq/PSD_metrics.py:337-365 runs
-    the same aggregation at two granularities) — grouping sets
-    ((month), ()) derived from one per-month aggregate, NOT .rollup():
-    Spark's Expand-based ROLLUP emits zero rows on an empty day where
-    the SQL standard (and the DuckDB oracle) emit the grand-total row
-    with count 0 (zero-row fixture finding; see q_cube_totals). The
-    fact stream shuffles once at month grain; the total re-aggregates
-    the months-sized result."""
-    li = t(spark, sf_dir, "lineitem")
-    month = F.date_format(F.date_trunc("month", "l_shipdate"), "yyyy-MM")
-    per = (
-        li.withColumn("period_m", month)
-        .groupBy("period_m")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("l_quantity").alias("_s"),
-        )
-    )
-    months = per.select(
-        F.coalesce("period_m", F.lit("ALL")).alias("period"),
-        F.col("_n").alias("n"),
-        r6(F.col("_s")).alias("sum_qty"),
-    )
-    total = per.agg(
-        F.coalesce(F.sum("_n"), F.lit(0)).cast("bigint").alias("n"),
-        r6(F.sum("_s")).alias("sum_qty"),
-    ).select(F.lit("ALL").alias("period"), "n", "sum_qty")
-    return months.unionByName(total)
-
-
-# ===========================================================================
-# §2.3 remaining join shapes: geo-radius theta join
-# ===========================================================================
-
-
-_GEO_RADIUS_ORACLE = """
-    WITH s AS (
-      SELECT s_suppkey,
-             (s_suppkey * 7919 % 18000) / 100.0 - 90.0 AS lat,
-             (s_suppkey * 104729 % 36000) / 100.0 - 180.0 AS lon
-      FROM supplier
-    ), c AS (
-      SELECT c_custkey,
-             (c_custkey * 7919 % 18000) / 100.0 - 90.0 AS lat,
-             (c_custkey * 104729 % 36000) / 100.0 - 180.0 AS lon
-      FROM customer
-    )
-    SELECT s.s_suppkey, count(*) AS n_within
-    FROM s JOIN c
-      ON degrees(acos(least(1.0, greatest(-1.0,
-           sin(radians(s.lat)) * sin(radians(c.lat))
-           + cos(radians(s.lat)) * cos(radians(c.lat))
-             * cos(radians(s.lon - c.lon)))))) <= 20.0
-    GROUP BY s.s_suppkey
-    """
-
-
-@qdef("geo_radius", _GEO_RADIUS_ORACLE)
-def q_geo_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events ⋈ availability geo-radius theta join (ispaq/concierge.py:
-    954-980: stations within [minradius,maxradius] degrees of the epicenter;
-    callers SNR_metrics.py:106-108). Coordinates are derived
-    deterministically from the keys.
-
-    SIZE CONTRACT: this form is a deliberate broadcast nested-loop and is
-    correct ONLY while BOTH sides are dimension-sized (station/epicenter
-    catalogs — thousands to low millions of rows; the broadcast side must
-    fit the autoBroadcastJoinThreshold). It must never be pointed at a
-    fact table: the NLJ evaluates every pair. The fact-scale form is
-    `geo_radius_banded` below — a lat-band equi-join with the same
-    results — and a plan gate (tests/test_plans.py) pins this one to
-    BroadcastNestedLoopJoin so a silent fallback to a cartesian product
-    can't land."""
-    sup = t(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        ((F.col("s_suppkey") * 7919 % 18000) / 100.0 - 90.0).alias("slat"),
-        ((F.col("s_suppkey") * 104729 % 36000) / 100.0 - 180.0).alias("slon"),
-    )
-    cust = t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        ((F.col("c_custkey") * 7919 % 18000) / 100.0 - 90.0).alias("clat"),
-        ((F.col("c_custkey") * 104729 % 36000) / 100.0 - 180.0).alias("clon"),
-    )
-    central = F.degrees(
-        F.acos(
-            F.least(
-                F.lit(1.0),
-                F.greatest(
-                    F.lit(-1.0),
-                    F.sin(F.radians("slat")) * F.sin(F.radians("clat"))
-                    + F.cos(F.radians("slat"))
-                    * F.cos(F.radians("clat"))
-                    * F.cos(F.radians(F.col("slon") - F.col("clon"))),
-                ),
-            )
-        )
-    )
-    # |Δlat| <= radius is a necessary condition for central angle <= radius:
-    # the cheap comparison short-circuits the trig for ~2/3 of pairs. (With
-    # fact-sized sides this would instead become a banded equi-join on
-    # floor(lat/radius) ±1 so the pairs never materialize.)
-    cond = (F.abs(F.col("slat") - F.col("clat")) <= 20.0) & (central <= 20.0)
-    return (
-        F.broadcast(sup)
-        .join(cust, cond)
-        .groupBy("s_suppkey")
-        .agg(F.count(F.lit(1)).alias("n_within"))
-    )
-
-
-# Density dial for the banded geo join: the largest per-band customer
-# sample evaluated exactly. Below the cap (every oracle/fixture scale —
-# sf0.01's hottest band holds 168 customers) the lottery keeps EVERYTHING
-# (p = 1) and the query is exact; above it, each band is thinned to ~CAP
-# rows by a deterministic hash lottery and the per-band matches are
-# Horvitz-Thompson scaled back up (weight = band_total / band_kept), so
-# join work stays LINEAR in supplier count as corpus density grows while
-# the true within-radius pair count grows quadratically. Relative SE per
-# supplier ≈ 1/sqrt(matched_sampled); at 10x bench density that is ~5%.
-_GEO_BAND_CAP = 600
-_GEO_LOTTERY_M = 1_000_000  # lottery resolution
-
-
-def _geo_banded_count(
-    sup: DataFrame,
-    cust: DataFrame,
-    radius_deg: float = 20.0,
-    cap: int = _GEO_BAND_CAP,
-) -> DataFrame:
-    """Latitude-band equi-join great-circle radius count with the
-    density-capped estimator described above. `sup` needs columns
-    (s_suppkey, slat, slon); `cust` (c_custkey, clat, clon). Exact when no
-    band exceeds `cap`; a deterministic stratified estimate otherwise."""
-    band = F.lit(float(radius_deg))
-    sup = sup.select(
-        "*",
-        F.explode(
-            F.array(
-                F.floor(F.col("slat") / band) - 1,
-                F.floor(F.col("slat") / band),
-                F.floor(F.col("slat") / band) + 1,
-            )
-        ).alias("band"),
-    )
-    cust = cust.withColumn("band", F.floor(F.col("clat") / band))
-    # Band stats are |bands| rows (a handful) — broadcast both ways. The
-    # lottery threshold is ceil'd so a capped band can't round to p = 0.
-    tot = cust.groupBy("band").agg(F.count(F.lit(1)).alias("n_tot"))
-    thr = tot.withColumn(
-        "thr",
-        F.when(
-            F.col("n_tot") <= cap, F.lit(_GEO_LOTTERY_M)
-        ).otherwise(
-            F.ceil(F.lit(_GEO_LOTTERY_M) * F.lit(cap) / F.col("n_tot"))
-        ),
-    )
-    kept = (
-        cust.join(F.broadcast(thr), "band")
-        .where(
-            F.pmod(F.xxhash64("c_custkey"), F.lit(_GEO_LOTTERY_M))
-            < F.col("thr")
-        )
-        .drop("thr")
-    )
-    # n_kept as a window count, not a separate aggregate re-joined back:
-    # `kept` is an uncached plan (cust scan + broadcast-thr join + hash
-    # filter) and a groupBy+join would EXECUTE it twice — two full
-    # customer scans. The window computes it in one pass, and its
-    # per-band partitions are bounded by the lottery cap (~`cap` rows),
-    # so the band shuffle cannot skew.
-    kept = kept.withColumn(
-        "w",
-        F.col("n_tot")
-        / F.count(F.lit(1)).over(Window.partitionBy("band")),
-    )
-    central = F.degrees(
-        F.acos(
-            F.least(
-                F.lit(1.0),
-                F.greatest(
-                    F.lit(-1.0),
-                    F.sin(F.radians("slat")) * F.sin(F.radians("clat"))
-                    + F.cos(F.radians("slat"))
-                    * F.cos(F.radians("clat"))
-                    * F.cos(F.radians(F.col("slon") - F.col("clon"))),
-                ),
-            )
-        )
-    )
-    return (
-        sup.hint("shuffle_hash")
-        .join(kept, "band")
-        .where(
-            (F.abs(F.col("slat") - F.col("clat")) <= band) & (central <= band)
-        )
-        .groupBy("s_suppkey")
-        .agg(F.round(F.sum("w")).cast("bigint").alias("n_within"))
-    )
-
-
-@qdef("geo_radius_banded", _GEO_RADIUS_ORACLE)
-def q_geo_radius_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact-scale form of `geo_radius`: the same great-circle radius query
-    (ispaq/concierge.py:954-980) expressed as a latitude-band EQUI-join so
-    neither side needs to broadcast and no pair outside adjacent bands is
-    ever materialized.
-
-    A central angle <= R degrees requires |Δlat| <= R, so with band width
-    R=20° a matching pair's bands differ by at most 1. Each "station" row
-    is exploded to its 3 candidate bands (3× a dimension-or-fact table —
-    bounded, map-side), then an equi-join on the band key shuffles both
-    sides by band and the exact great-circle predicate filters within each
-    band. The plan is a plain shuffled equi-join + partial-agg count:
-    survives both sides fact-sized, and AQE can skew-split hot bands
-    (equatorial pileups). Shares `geo_radius`'s oracle — identical output.
-
-    DENSITY DIAL (see `_geo_banded_count`): with a FIXED radius, a k×
-    denser corpus has k² more true within-radius pairs — no exact
-    algorithm's work can grow slower than its answer, so at high density
-    the customer side of each band is thinned to ~`_GEO_BAND_CAP` rows by
-    a deterministic hash lottery and matches are stratified-scaled back
-    (weight = band_total/band_kept). Below the cap the lottery keeps all
-    rows and the result is EXACT — every oracle fixture runs in that
-    regime; the 10x scale-tail runs in the estimator regime with join
-    work linear in suppliers. tests/test_round3_ops.py pins both regimes.
-    """
-    sup = t(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        ((F.col("s_suppkey") * 7919 % 18000) / 100.0 - 90.0).alias("slat"),
-        ((F.col("s_suppkey") * 104729 % 36000) / 100.0 - 180.0).alias("slon"),
-    )
-    cust = t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        ((F.col("c_custkey") * 7919 % 18000) / 100.0 - 90.0).alias("clat"),
-        ((F.col("c_custkey") * 104729 % 36000) / 100.0 - 180.0).alias("clon"),
-    )
-    return _geo_banded_count(sup, cust)
 
 
 # ===========================================================================
@@ -1046,79 +575,9 @@ def q_cogroup_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-2 additions: as-of join, C4-style span dedup, near-dup clustering
-# (iterative connected components), skew-salted aggregation, int8-quantized
-# ANN.
+# Round-2 additions: C4-style span dedup, near-dup clustering (iterative
+# connected components), skew-salted aggregation, int8-quantized ANN.
 # ===========================================================================
-
-
-@qdef(
-    "asof_join",
-    """
-    WITH errors AS (
-      SELECT event_id, ts, user_id, value FROM events
-      WHERE event_type = 'error'
-    ), clicks AS (
-      -- one row per (user_id, ts): ties on click timestamp resolve to the
-      -- max-event_id click, the same rule the Spark window applies
-      SELECT user_id, ts, max_by(value, event_id) AS value
-      FROM events WHERE event_type = 'click'
-      GROUP BY user_id, ts
-    )
-    SELECT e.event_id,
-           e.user_id,
-           round(e.value, 6)  AS error_value,
-           c.ts               AS last_click_ts,
-           round(c.value, 6)  AS last_click_value
-    FROM errors e ASOF LEFT JOIN clicks c
-      ON e.user_id = c.user_id AND e.ts >= c.ts
-    """,
-)
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: for every 'error' event, the most recent 'click' by the
-    same user at or before the error's timestamp (inclusive). Spark has no
-    ASOF JOIN operator (the oracle uses DuckDB's native one); a range
-    self-join plans as a broadcast-nested-loop or explodes per-key pairs.
-    The scalable formulation used here is union + window: tag both streams,
-    sort once per user, and carry the latest click forward with
-    last_value(..., ignorenulls) — ONE shuffle on user_id, zero joins,
-    linear in the event count regardless of how many clicks precede each
-    error. Tie rule (shared with the oracle): among clicks with the same
-    (user_id, ts), the max-event_id click wins — here because clicks sort
-    by event_id ascending inside the frame and last() takes the latest;
-    the oracle pre-reduces clicks with max_by(value, event_id). Grafts the
-    reference's event-window association
-    (ispaq/crossCorrelation_metrics.py:120-181: closest preceding arrival
-    per event)."""
-    ev = t(spark, sf_dir, "events")
-    tagged = ev.where(F.col("event_type").isin("error", "click")).select(
-        "event_id",
-        "ts",
-        "user_id",
-        "value",
-        (F.col("event_type") == "error").alias("is_err"),
-        F.when(F.col("event_type") == "click", F.col("ts")).alias("c_ts"),
-        F.when(F.col("event_type") == "click", F.col("value")).alias("c_val"),
-    )
-    # Clicks sort before errors at an equal timestamp (is_err ascending:
-    # false < true), matching ASOF's inclusive `e.ts >= c.ts` bound.
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "is_err", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        tagged.withColumn("last_click_ts", F.last("c_ts", ignorenulls=True).over(w))
-        .withColumn("last_click_value", F.last("c_val", ignorenulls=True).over(w))
-        .where("is_err")
-        .select(
-            "event_id",
-            "user_id",
-            r6("value").alias("error_value"),
-            "last_click_ts",
-            r6("last_click_value").alias("last_click_value"),
-        )
-    )
 
 
 _CHUNK_W = 8  # words per dedup span (C4 uses three-sentence spans)
@@ -2000,63 +1459,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@qdef(
-    "pivot_metrics",
-    """
-    SELECT user_id,
-           -- decimal-sum means: order-independent (see dsum); the CASE
-           -- yields NULL for other types, which both sum() and count(expr)
-           -- skip, preserving avg()'s NULL semantics
-           round(CAST(sum(CAST(CASE WHEN event_type = 'click' THEN value END
-                     AS DECIMAL(38,9))) AS DOUBLE)
-                 / count(CASE WHEN event_type = 'click' THEN value END), 6)
-             AS click_avg,
-           round(CAST(sum(CAST(CASE WHEN event_type = 'view' THEN value END
-                     AS DECIMAL(38,9))) AS DOUBLE)
-                 / count(CASE WHEN event_type = 'view' THEN value END), 6)
-             AS view_avg,
-           round(CAST(sum(CAST(CASE WHEN event_type = 'error' THEN value END
-                     AS DECIMAL(38,9))) AS DOUBLE)
-                 / count(CASE WHEN event_type = 'error' THEN value END), 6)
-             AS error_avg,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM events
-    WHERE event_type IN ('click', 'view', 'error')
-    GROUP BY user_id
-    """,
-)
-def q_pivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long -> wide pivot: per-user mean value per event type as columns —
-    the EAV-to-wide reshaping every metric sink consumer does (the
-    reference renders its long metricName table wide for reports,
-    ispaq/utils.py:119-147).
-
-    Written as explicit conditional aggregation, NOT `groupBy().pivot()`:
-    an unpinned pivot adds a distinct-collect JOB to discover the columns
-    (data-dependent schema — a drift hazard at 10^12 rows), and even a
-    pinned `pivot(col, VALUES)` plans a two-exchange `pivotfirst` — a
-    pre-aggregation on (user_id, event_type) followed by a second shuffle
-    on user_id (measured on Spark 4.1). `avg(when(...))` is one
-    partial+final aggregate and one exchange: strictly the better plan,
-    and the output schema is pinned in code."""
-    ev = t(spark, sf_dir, "events").where(
-        F.col("event_type").isin("click", "view", "error")
-    )
-
-    def avg_of(etype: str):
-        # davg over the conditional: sum and count both skip the NULLs the
-        # when() produces, so NULL semantics match avg(); the decimal sum
-        # makes the mean accumulation-order-independent (see dsum)
-        return davg(F.when(F.col("event_type") == etype, F.col("value")))
-
-    return ev.groupBy("user_id").agg(
-        r6(avg_of("click")).alias("click_avg"),
-        r6(avg_of("view")).alias("view_avg"),
-        r6(avg_of("error")).alias("error_avg"),
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-    )
-
-
 # ===========================================================================
 # Round-3 additions: LSH-fed jaccard verify.
 # ===========================================================================
@@ -2659,80 +2061,6 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         r6(davg("ent")).alias("avg_entropy"),
         r6(F.min("ent")).alias("min_entropy"),
         r6(F.max("ent")).alias("max_entropy"),
-    )
-
-
-@qdef(
-    "funnel_steps",
-    """
-    WITH x1 AS (
-      SELECT user_id, ts, event_type,
-             min(CASE WHEN event_type = 'signup' THEN ts END)
-               OVER (PARTITION BY user_id) AS t1
-      FROM events
-    ), x2 AS (
-      SELECT *, min(CASE WHEN event_type = 'view' AND ts > t1 THEN ts END)
-                  OVER (PARTITION BY user_id) AS t2 FROM x1
-    ), x3 AS (
-      SELECT *, min(CASE WHEN event_type = 'click' AND ts > t2 THEN ts END)
-                  OVER (PARTITION BY user_id) AS t3 FROM x2
-    ), x4 AS (
-      SELECT *, min(CASE WHEN event_type = 'purchase' AND ts > t3 THEN ts END)
-                  OVER (PARTITION BY user_id) AS t4 FROM x3
-    ), u AS (
-      SELECT user_id, min(t1) AS t1, min(t2) AS t2,
-             min(t3) AS t3, min(t4) AS t4
-      FROM x4 GROUP BY user_id
-    )
-    SELECT CAST(count(*) AS BIGINT)  AS n_users,
-           CAST(count(t1) AS BIGINT) AS n_signup,
-           CAST(count(t2) AS BIGINT) AS n_view,
-           CAST(count(t3) AS BIGINT) AS n_click,
-           CAST(count(t4) AS BIGINT) AS n_purchase
-    FROM u
-    """,
-)
-def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-funnel sequential pattern match: per user, the first signup,
-    then the first view strictly after it, the first click after that, and
-    the first purchase after that — counting users surviving each stage.
-    The strictly-greater chain means the stages must occur in order, not
-    merely all occur.
-
-    Scale shape: all four cascaded min-if windows PLUS the per-user
-    collapse share a single exchange on user_id (windows over the same
-    partitioning stack without re-shuffling); the final count is a
-    one-row reduce. No joins, no self-scans — the naive formulation
-    (4 self-joins on events) shuffles the fact table five times. Grafts
-    the reference's state-of-health transition checks
-    (ispaq/simple_metrics.py flag sequences) lifted to event funnels."""
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id")
-
-    def first_after(etype: str, prev):
-        cond = F.col("event_type") == etype
-        if prev is not None:
-            cond = cond & (F.col("ts") > F.col(prev))
-        return F.min(F.when(cond, F.col("ts"))).over(w)
-
-    x = (
-        ev.withColumn("t1", first_after("signup", None))
-        .withColumn("t2", first_after("view", "t1"))
-        .withColumn("t3", first_after("click", "t2"))
-        .withColumn("t4", first_after("purchase", "t3"))
-    )
-    u = x.groupBy("user_id").agg(
-        F.min("t1").alias("t1"),
-        F.min("t2").alias("t2"),
-        F.min("t3").alias("t3"),
-        F.min("t4").alias("t4"),
-    )
-    return u.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.count("t1").cast("bigint").alias("n_signup"),
-        F.count("t2").cast("bigint").alias("n_view"),
-        F.count("t3").cast("bigint").alias("n_click"),
-        F.count("t4").cast("bigint").alias("n_purchase"),
     )
 
 

@@ -20,10 +20,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = (
-    "region nation customer supplier orders lineitem events "
-    "documents embeddings"
-).split()
+TABLES = ("events", "documents", "embeddings")
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:

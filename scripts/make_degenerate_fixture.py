@@ -18,12 +18,6 @@ oracle:
               and fewer candidates than top-k asks for (k > n).
   events      5 rows from ONE user (single-partition windows; sessionize
               with no second key), including one same-timestamp pair.
-  orders /    first 5 / 8 rows of sf0.001 (joins hit mostly-empty
-  lineitem    build sides; grouping sets see singleton groups).
-  customer /  first 6 / 4 rows (geo bands mostly EMPTY — the banded join
-  supplier    must tolerate bands with zero customers).
-  region /    copied whole (dimensions don't shrink with a bad day).
-  nation
 
 Everything is sliced or constructed deterministically from
 /root/testdata/sf0.001 — no wall clock, no randomness. Output defaults to
@@ -32,12 +26,8 @@ testdata_degenerate/ at the repo root; sweep with
     python3 scripts/make_degenerate_fixture.py
     python3 scripts/check_oracle.py testdata_degenerate
 
-`--empty` writes the limiting case instead: ZERO-row fact tables
-(schemas intact, dimensions still populated) — the empty day partition.
-This sweep found the Spark CUBE/ROLLUP standard deviation (zero rows
-where the () grouping set owes a grand-total row); both queries now
-derive grouping sets from the finest aggregate and the full sweep
-passes:
+`--empty` writes the limiting case instead: ZERO-row tables (schemas
+intact) — the empty day partition:
 
     python3 scripts/make_degenerate_fixture.py /tmp/testdata_empty --empty
     python3 scripts/check_oracle.py /tmp/testdata_empty
@@ -114,35 +104,19 @@ def build_events(base: pa.Table) -> pa.Table:
     return pa.Table.from_arrays(cols, schema=base.schema)
 
 
-FACTS = [
-    "documents", "embeddings", "events", "orders", "lineitem",
-    "customer", "supplier",
-]
-
-
 def main() -> None:
     os.makedirs(OUT, exist_ok=True)
-    if "--empty" in sys.argv:
-        for name in FACTS:
-            write(name, load(name).slice(0, 0))
-        for name in ["region", "nation"]:
-            write(name, load(name))
-        print(f"zero-row fixture written to {OUT}")
-        return
-    write("documents", build_documents(load("documents")))
-    write("embeddings", build_embeddings(load("embeddings")))
-    write("events", build_events(load("events")))
-    for name, n in [
-        ("orders", 5),
-        ("lineitem", 8),
-        ("customer", 6),
-        ("supplier", 4),
-    ]:
-        write(name, load(name).slice(0, n))
-    for name in ["region", "nation"]:
-        write(name, load(name))
-    print(f"degenerate fixture written to {OUT}")
-
+    builders = {
+        "documents": build_documents,
+        "embeddings": build_embeddings,
+        "events": build_events,
+    }
+    empty = "--empty" in sys.argv
+    for name, build in builders.items():
+        base = load(name)
+        write(name, base.slice(0, 0) if empty else build(base))
+    kind = "zero-row" if empty else "degenerate"
+    print(f"{kind} fixture written to {OUT}")
 
 if __name__ == "__main__":
     main()

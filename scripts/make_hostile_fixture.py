@@ -4,7 +4,7 @@ The per-round driver gate proves Spark==DuckDB on two scales of the SAME
 friendly generator; this script builds the cheapest remaining way to find a
 wrong answer — a fixture that concentrates the classic cross-engine edge
 cases while keeping every schema and value domain identical to
-/root/testdata/sf0.01 so all 98 registered queries still apply:
+/root/testdata/sf0.01 so all registered queries still apply:
 
   documents   zipfian source skew (src0 carries ~45% of docs); empty and
               whitespace-only texts; single-token docs; astral-plane
@@ -19,15 +19,9 @@ cases while keeping every schema and value domain identical to
               50-event SAME-TIMESTAMP pileup (total-order tiebreaks);
               value ties; hostile props JSON (null value, 1e308, unicode
               key, deep nesting, empty object).
-  orders      one customer owns ~40% of orders; o_totalprice ties across
-              orderkeys (top-1 tiebreak discipline).
-  lineitem    zero / negative / 1e12 quantities and prices (ANSI overflow
-              and signed-agg hazards), duplicated (orderkey, linenumber).
   embeddings  an all-zero vector (zero-norm cosine), an exact duplicate
               pair (similarity ties), a 1e-30-scale and a 1e6-scale
               vector (float32 under/overflow in dot products).
-  customer /  acctbal ties, negatives and zeros; keys unchanged so the
-  supplier    geo band occupancy stays below the exactness cap.
 
 Everything is deterministic (fixed seed, no wall clock). Output dir
 defaults to testdata_hostile/ at the repo root; run the full sweep with
@@ -39,7 +33,6 @@ defaults to testdata_hostile/ at the repo root; run the full sweep with
 from __future__ import annotations
 
 import os
-import random
 import sys
 
 import numpy as np
@@ -52,13 +45,6 @@ OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
     REPO, "testdata_hostile"
 )
 
-rng = random.Random(5)
-
-WORDS = (
-    "key agg row scan slow fast table value part hash merge batch spark "
-    "window order data column join small line customer query the a big "
-    "vector group filter"
-).split()
 LANGS = ["en", "de", "zh", "fr", "es"]
 
 HOSTILE_TEXTS = [
@@ -180,35 +166,6 @@ def build_events(base: pa.Table) -> pa.Table:
     return pa.Table.from_pandas(df, preserve_index=False)
 
 
-def build_orders(base: pa.Table) -> pa.Table:
-    df = base.to_pandas()
-    n = len(df)
-    hot = df.index[: int(0.40 * n)]
-    df.loc[hot, "o_custkey"] = 13
-    # totalprice ties across many orderkeys (top-1 tiebreak hazard)
-    df.loc[df.index[500:560], "o_totalprice"] = 99_999.99
-    return pa.Table.from_pandas(df, preserve_index=False)
-
-
-def build_lineitem(base: pa.Table) -> pa.Table:
-    df = base.to_pandas()
-    df.loc[df.index[10:20], "l_quantity"] = 0.0
-    df.loc[df.index[20:30], "l_quantity"] = -5.0
-    # extreme magnitudes are capped at 1e6: the oracle's 6-ABSOLUTE-decimal
-    # rounding convention needs ~sig+6 digits of cross-engine float
-    # agreement, and doubles carry ~15-16 — 1e12-scale inputs push
-    # variance-family aggregates (stddev_pop) past what ANY two engines'
-    # summation orders reproduce to 6dp (measured: 1e-12 RELATIVE
-    # disagreement on sample_rms_var at 1e12 inputs). 1e6 still exercises
-    # the ANSI-overflow and signed-agg paths inside the certifiable range.
-    df.loc[df.index[30:35], "l_quantity"] = 1e6
-    df.loc[df.index[40:50], "l_extendedprice"] = 1e6
-    # duplicated (orderkey, linenumber) rows — key-uniqueness hazard
-    dup = df.iloc[60:65].copy()
-    df = __import__("pandas").concat([df.iloc[:-5], dup], ignore_index=True)
-    return pa.Table.from_pandas(df, preserve_index=False)
-
-
 def build_embeddings(base: pa.Table) -> pa.Table:
     df = base.to_pandas()
     dim = len(df.loc[0, "embedding"])
@@ -221,44 +178,20 @@ def build_embeddings(base: pa.Table) -> pa.Table:
     return pa.Table.from_pandas(df, preserve_index=False)
 
 
-def build_customer(base: pa.Table) -> pa.Table:
-    df = base.to_pandas()
-    df.loc[df.index[0:40], "c_acctbal"] = 0.0
-    df.loc[df.index[40:80], "c_acctbal"] = -1234.56
-    df.loc[df.index[80:120], "c_acctbal"] = 777.77  # ties
-    return pa.Table.from_pandas(df, preserve_index=False)
-
-
-def build_supplier(base: pa.Table) -> pa.Table:
-    df = base.to_pandas()
-    df.loc[df.index[0:5], "s_acctbal"] = 0.0
-    df.loc[df.index[5:10], "s_acctbal"] = -99.99
-    return pa.Table.from_pandas(df, preserve_index=False)
-
-
 def main() -> None:
     os.makedirs(OUT, exist_ok=True)
-    passthrough = ["region", "nation"]
-    for name in passthrough:
-        t = load(name)
-        write(name, t, t)
     builders = {
         "documents": build_documents,
         "events": build_events,
-        "orders": build_orders,
-        "lineitem": build_lineitem,
         "embeddings": build_embeddings,
-        "customer": build_customer,
-        "supplier": build_supplier,
     }
     for name, fn in builders.items():
         base = load(name)
         write(name, fn(base), base)
-    for name in passthrough + list(builders):
+    for name in builders:
         t = pq.read_table(f"{OUT}/{name}.parquet")
         print(f"{name}: {t.num_rows} rows, schema ok")
     print(f"hostile fixture written to {OUT}")
-
 
 if __name__ == "__main__":
     main()

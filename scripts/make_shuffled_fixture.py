@@ -49,12 +49,6 @@ OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
 # Each table's permutation seed, fixed per table rather than taken from its
 # position in the list, so the committed fixture reproduces byte for byte.
 SEEDS = {
-    "region": 1000,
-    "nation": 1001,
-    "customer": 1002,
-    "supplier": 1003,
-    "orders": 1005,
-    "lineitem": 1006,
     "events": 1007,
     "documents": 1008,
     "embeddings": 1009,

@@ -1,12 +1,15 @@
 """Driver-contract regression: every queries() entry runs and matches its
 DuckDB oracle at sf0.001 (the full sf0.01 gate is scripts/check_oracle.py /
-the round driver), and every query outside CATALOGUE runs a library
-operator on its Spark side."""
+the round driver), every query outside CATALOGUE runs a library
+operator on its Spark side, and the committed fixtures hold exactly the
+tables the oracle reads."""
 
 from __future__ import annotations
 
 import inspect
+import re
 import types
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -16,6 +19,7 @@ import __spark_entry__ as entry_mod
 from scripts.check_oracle import TABLES, normalize
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -86,27 +90,16 @@ def _library_calls(fn, seen=None) -> set[str]:
 CATALOGUE = frozenset(
     {
         "adaptive_quality_cut",
-        "asof_join",
         "bm25_rank",
         "char_entropy",
         "chunk_dedup",
-        "cube_totals",
-        "dim_join_agg",
         "dup_cluster_hist",
-        "funnel_steps",
-        "geo_radius",
-        "geo_radius_banded",
         "int8_topk",
-        "interval_join",
         "inverted_index",
         "ivf_topk",
         "pack_sequences",
-        "pivot_metrics",
-        "rollup_periods",
         "salted_skew_agg",
-        "semi_anti",
         "source_overlap",
-        "top1_per_key",
         "vocab_topk",
     }
 )
@@ -118,3 +111,17 @@ def test_every_query_calls_the_library():
     .curation or .functions, and CATALOGUE names exactly the rest."""
     qs = entry_mod.queries()
     assert {name for name, fn in qs.items() if not _library_calls(fn)} == CATALOGUE
+
+
+def test_fixtures_hold_exactly_the_tables_queries_read():
+    """Every table check_oracle registers is named in some oracle query,
+    and every testdata_*/ fixture holds exactly those tables, so a table
+    no query reads cannot linger in the fixtures."""
+    sqls = entry_mod.oracle_sql().values()
+    read = {t for t in TABLES for q in sqls if re.search(rf"\b{t}\b", q)}
+    assert set(TABLES) == read
+    fixtures = sorted(p for p in REPO.glob("testdata_*") if p.is_dir())
+    assert fixtures
+    want = {f"{t}.parquet" for t in TABLES}
+    for d in fixtures:
+        assert {p.name for p in d.iterdir()} == want, d.name

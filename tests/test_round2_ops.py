@@ -1,18 +1,15 @@
-"""Round-2 operators: as-of join, C4-style span dedup, near-dup connected
-components, skew-salted aggregation, int8-quantized cosine — edge cases the
-sf fixtures don't exercise (equal timestamps, multi-hop chains, fully
-duplicated documents)."""
+"""Round-2 operators: C4-style span dedup, near-dup connected components,
+skew-salted aggregation, int8-quantized cosine — edge cases the sf
+fixtures don't exercise (multi-hop chains, fully duplicated documents)."""
 
 from __future__ import annotations
 
-import datetime as dt
 import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from ispaq_spark.driver_queries import (
-    q_asof_join,
     q_chunk_dedup,
     q_int8_topk,
     q_neardup_components,
@@ -22,52 +19,6 @@ from ispaq_spark.driver_queries import (
 
 def _write(df, sf_dir: str, name: str) -> None:
     df.coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/{name}.parquet")
-
-
-TS = dt.datetime(2024, 1, 1)
-
-
-def _t(sec: int) -> dt.datetime:
-    return TS + dt.timedelta(seconds=sec)
-
-
-@pytest.fixture(scope="module")
-def events_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("ev"))
-    rows = [
-        # user 1: click@10 (v=10), error@20 -> matches 10; error@5 -> no click
-        (0, _t(5), 1, "error", 1.0, None),
-        (1, _t(10), 1, "click", 10.0, None),
-        (2, _t(20), 1, "error", 2.0, None),
-        # user 2: click and error at the SAME ts -> inclusive match
-        (3, _t(30), 2, "click", 30.0, None),
-        (4, _t(30), 2, "error", 3.0, None),
-        # user 3: later click must not leak backwards; 'view' rows ignored
-        (5, _t(40), 3, "view", 99.0, None),
-        (6, _t(50), 3, "error", 4.0, None),
-        (7, _t(60), 3, "click", 60.0, None),
-    ]
-    _write(
-        spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string"
-        ),
-        d,
-        "events",
-    )
-    return d
-
-
-def test_asof_inclusive_and_isolated(spark, events_dir):
-    out = {
-        r["event_id"]: r
-        for r in q_asof_join(spark, events_dir).collect()
-    }
-    assert set(out) == {0, 2, 4, 6}
-    assert out[0]["last_click_value"] is None  # error before any click
-    assert out[2]["last_click_value"] == 10.0
-    assert out[4]["last_click_value"] == 30.0  # equal-ts click counts (>=)
-    assert out[6]["last_click_value"] is None  # later click doesn't leak back
 
 
 @pytest.fixture(scope="module")

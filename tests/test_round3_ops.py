@@ -1,7 +1,7 @@
 """Round-3 operators: DSIR importance resampling, canonical-doc selection,
-deterministic splits, the density-capped geo estimator — semantic edge
-cases on hand-built fixtures (known target mixtures, tied cluster quality,
-split stability under corpus growth, geo counts around the cap)."""
+deterministic splits — semantic edge cases on hand-built fixtures (known
+target mixtures, tied cluster quality, split stability under corpus
+growth)."""
 
 from __future__ import annotations
 
@@ -122,90 +122,3 @@ def test_split_assignments_stable_under_corpus_growth(spark, fx):
     # and the rollup totals reconcile with the per-doc assignment
     got = q_split_assign(spark, sf2).collect()
     assert sum(r["n_docs"] for r in got) == len(after)
-
-
-def _geo_tables(spark, n_sup: int, n_cust: int):
-    """Key-derived coordinate tables matching the geo_radius family."""
-    sup = spark.range(1, n_sup + 1).select(
-        F.col("id").alias("s_suppkey"),
-        ((F.col("id") * 7919 % 18000) / 100.0 - 90.0).alias("slat"),
-        ((F.col("id") * 104729 % 36000) / 100.0 - 180.0).alias("slon"),
-    )
-    cust = spark.range(1, n_cust + 1).select(
-        F.col("id").alias("c_custkey"),
-        ((F.col("id") * 7919 % 18000) / 100.0 - 90.0).alias("clat"),
-        ((F.col("id") * 104729 % 36000) / 100.0 - 180.0).alias("clon"),
-    )
-    return sup, cust
-
-
-def _geo_exact(spark, sup, cust):
-    """Brute-force exact within-radius counts (test oracle)."""
-    central = F.degrees(
-        F.acos(
-            F.least(
-                F.lit(1.0),
-                F.greatest(
-                    F.lit(-1.0),
-                    F.sin(F.radians("slat")) * F.sin(F.radians("clat"))
-                    + F.cos(F.radians("slat"))
-                    * F.cos(F.radians("clat"))
-                    * F.cos(F.radians(F.col("slon") - F.col("clon"))),
-                ),
-            )
-        )
-    )
-    return (
-        sup.crossJoin(cust)
-        .where(central <= 20.0)
-        .groupBy("s_suppkey")
-        .agg(F.count(F.lit(1)).alias("n_within"))
-    )
-
-
-def test_geo_banded_exact_below_cap(spark):
-    """Density dial, exact regime: while no latitude band exceeds the cap
-    the lottery keeps everything and the banded count must equal the
-    brute-force count row for row."""
-    from ispaq_spark.driver_queries import _geo_banded_count
-
-    sup, cust = _geo_tables(spark, 40, 800)  # ~80/band << cap
-    got = {
-        r["s_suppkey"]: r["n_within"]
-        for r in _geo_banded_count(sup, cust).collect()
-    }
-    want = {
-        r["s_suppkey"]: r["n_within"]
-        for r in _geo_exact(spark, sup, cust).collect()
-    }
-    assert got == want
-
-
-def test_geo_banded_estimator_above_cap(spark):
-    """Density dial, estimator regime: with bands far above the cap the
-    result must be (a) deterministic across runs and (b) a stratified
-    estimate within a tight tolerance of the exact count per supplier —
-    while the join itself touches only ~cap rows per band."""
-    from ispaq_spark.driver_queries import _geo_banded_count
-
-    sup, cust = _geo_tables(spark, 25, 20_000)  # ~2000/band >> cap=600
-    got1 = {
-        r["s_suppkey"]: r["n_within"]
-        for r in _geo_banded_count(sup, cust).collect()
-    }
-    got2 = {
-        r["s_suppkey"]: r["n_within"]
-        for r in _geo_banded_count(sup, cust).collect()
-    }
-    assert got1 == got2  # hash lottery -> reproducible across retries
-    want = {
-        r["s_suppkey"]: r["n_within"]
-        for r in _geo_exact(spark, sup, cust).collect()
-    }
-    assert set(got1) == set(want)
-    for k, est in got1.items():
-        exact = want[k]
-        # matched-per-supplier is in the hundreds here -> SE ~ a few
-        # percent; 20% is a loose, flake-proof bound that still catches a
-        # broken weighting (estimates off by p or 1/p fail by miles)
-        assert abs(est - exact) <= max(0.20 * exact, 10), (k, est, exact)
