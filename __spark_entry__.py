@@ -1,10 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry()    — flagship: the quality-filter metric stage over `documents`.
-queries()  — the 34 queries of ispaq_spark/driver_queries.py, in file
+queries()  — the 33 queries of ispaq_spark/driver_queries.py, in file
              order: library operators certified against DuckDB (dedup,
-             curation, similarity, BPE, langid, two-stream
-             cross-correlation) and the remaining text and embedding
+             curation, connected components, similarity buckets, BPE pair
+             counts, langid) and the remaining text and embedding
              catalogue queries.
 oracle_sql() — DuckDB-equivalent SQL per query.
 """

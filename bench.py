@@ -47,7 +47,6 @@ BENCH_QUERIES = (
     "jaccard_pairs",
     "ann_lsh_buckets",
     "ivf_topk",
-    "cogroup_xcorr",
     "minhash_lsh_neardup",
     "chunk_dedup",
     "neardup_components",

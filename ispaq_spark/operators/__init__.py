@@ -1,5 +1,4 @@
 """Distributed operators beyond the reference's own set: exact and
 MinHash-LSH dedup (`curate_corpus` runs it), connected components,
-hyperplane-LSH similarity buckets, the BPE trainer and the two-stream
-cross-correlation.
+hyperplane-LSH similarity buckets and the BPE pair statistics.
 driver_queries.py certifies each one against a DuckDB oracle."""

@@ -1,22 +1,16 @@
-"""Connected components over edge DataFrames — the dedup-clustering endgame.
+"""Connected components over (a, b) edge DataFrames — the dedup-clustering
+endgame.
 
-Two algorithms over (a, b) edge pairs:
+``alternating_star_components`` is the large-star/small-star alternation
+(Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14):
+each round rewires every node toward the minimum of its neighborhood,
+converging in O(log d) rounds instead of the O(d) of min-label
+propagation. That keeps long chains (URL redirect chains, citation paths)
+to a handful of rounds. The `neardup_components` driver query runs it
+against a recursive-CTE oracle.
 
-* ``label_propagation_components`` — simple min-label propagation, one
-  shuffle round per graph-diameter step. Right for near-dup graphs (dense
-  clusters, tiny diameters).
-
-* ``alternating_star_components`` — the large-star/small-star alternation
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14): each round rewires every node toward the minimum of its
-  neighborhood, converging in O(log d) rounds instead of O(d). This is the
-  10^12-edge path: web-graph-scale components with long chains (URL
-  redirect chains, citation paths) where diameter-bound propagation would
-  take hundreds of rounds. The `neardup_components` driver query runs it
-  against a recursive-CTE oracle.
-
-Both cut per-round lineage with eager localCheckpoint — unpersist cascades
-to dependent cached plans, so a persist/unpersist loop silently recomputes
+Each round cuts lineage with eager localCheckpoint — unpersist cascades to
+dependent cached plans, so a persist/unpersist loop silently recomputes
 its whole history each round.
 
 Graft slot: the reference's channel-set grouping into equivalence classes
@@ -41,63 +35,6 @@ def _signature(e: DataFrame) -> tuple:
         F.expr("bit_xor(xxhash64(a, b))").alias("h"),  # overflow-free
     ).first()
     return (row["n"], row["h"])
-
-
-def label_propagation_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """(a, b) edges -> (node, comp) where comp is the component's min node.
-
-    One round per diameter step; convergence detected via the label-sum
-    invariant (labels only ever decrease). ``shuffle_partitions`` sizes the
-    per-round shuffle width to the edge count — iterating a tiny label
-    table across a cluster-wide default width spends more time scheduling
-    empty tasks than propagating labels."""
-
-    def cut(df: DataFrame) -> DataFrame:
-        if shuffle_partitions:
-            df = df.repartition(shuffle_partitions, df.columns[0])
-        return df.localCheckpoint(eager=True)
-
-    e = cut(_sym(edges).distinct())
-    labels = cut(
-        e.select(F.col("a").alias("n"))
-        .distinct()
-        .withColumn("c", F.col("n"))
-    )
-    prev_sum = None
-    converged = False
-    # max_iter + 1 rounds run in the worst case: detecting the fixed point
-    # costs one full extra propagation round whose labels don't change, so
-    # a graph needing exactly max_iter productive rounds must not exhaust
-    # the budget on that detection round.
-    for _ in range(max_iter + 1):
-        neighbor_min = (
-            labels.join(e, labels.n == e.a)
-            .groupBy(F.col("b").alias("n"))
-            .agg(F.min("c").alias("nc"))
-        )
-        labels = cut(
-            labels.join(neighbor_min, "n", "left")
-            .select("n", F.least("c", "nc").alias("c"))
-        )
-        cur = labels.agg(F.sum("c")).first()[0]
-        if cur == prev_sum:
-            converged = True
-            break
-        prev_sum = cur
-    if not converged:
-        # Diameter > max_iter would silently yield split components;
-        # surface it instead of returning wrong labels.
-        raise RuntimeError(
-            f"label propagation did not converge in {max_iter + 1} rounds "
-            f"(max_iter={max_iter} productive + 1 detection; graph "
-            "diameter exceeds max_iter); raise max_iter or use "
-            "alternating_star_components (O(log d) rounds)"
-        )
-    return labels.select(F.col("n").alias("node"), F.col("c").alias("comp"))
 
 
 def _large_star(e_undirected: DataFrame) -> DataFrame:
@@ -144,8 +81,9 @@ def alternating_star_components(
 
     Converges in O(log d) rounds; at the fixed point the edge set is a
     union of stars (node -> component minimum). ``shuffle_partitions``
-    sizes each round's exchange to the edge count, as in
-    ``label_propagation_components``."""
+    sizes each round's exchange to the edge count — iterating a tiny edge
+    table across a cluster-wide default width spends more time scheduling
+    empty tasks than rewiring edges."""
 
     def cut(df: DataFrame) -> DataFrame:
         if shuffle_partitions:
@@ -161,8 +99,10 @@ def alternating_star_components(
     nodes = _sym(e).select(F.col("a").alias("node")).distinct()
     prev_sig = None
     converged = False
-    # max_iter + 1 observations for max_iter productive rounds (see
-    # label_propagation_components).
+    # max_iter + 1 rounds run in the worst case: detecting the fixed point
+    # costs one extra round whose edges don't change, so a graph needing
+    # exactly max_iter productive rounds must not exhaust the budget on
+    # that detection round.
     for _ in range(max_iter + 1):
         e = cut(_large_star(e))
         e = cut(_small_star(e))

@@ -1,20 +1,16 @@
-"""Similarity search over embedding columns (array<float|double>).
+"""Random-hyperplane LSH buckets over embedding columns (array<float|double>).
 
-Baseline: brute-force cosine top-k — query vector broadcast, dot/norms via
-zip_with + aggregate entirely in-row (no explode, no shuffle except the
-final top-k sort of scores only).
-
-Scale path: random-hyperplane LSH — 8+ signed projections pack each vector
-into a bucket id; search touches only the query's bucket (and optionally
-Hamming-adjacent buckets). Hyperplanes are deterministic module constants
-so every executor, every run, and the DuckDB oracle agree.
+8+ signed projections pack each vector into a bucket id, computed in-row
+via zip_with + aggregate (no explode, no shuffle). Hyperplanes are
+deterministic module constants so every executor, every run, and the
+DuckDB oracle agree (the `ann_lsh_buckets` driver query).
 """
 
 from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 
 def _dot(a, b) -> F.Column:
@@ -22,29 +18,6 @@ def _dot(a, b) -> F.Column:
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    )
-
-
-def _norm(a) -> F.Column:
-    return F.sqrt(_dot(a, a))
-
-
-def cosine_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force exact top-k by cosine similarity to a literal query
-    vector. Deterministic order: (cos desc, id asc)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col).cast("array<double>")
-    cos = _dot(v, q) / (_norm(v) * _norm(q))
-    return (
-        emb.select(F.col(id_col), cos.alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col).asc())
-        .limit(k)
     )
 
 
@@ -64,27 +37,3 @@ def lsh_bucket_col(vec_col: str, planes: list[list[int]]) -> F.Column:
             F.lit(0)
         )
     return bucket
-
-
-def ann_lsh_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes: list[list[int]] | None = None,
-) -> DataFrame:
-    """Approximate top-k: score only vectors in the query's LSH bucket.
-    At 10^12 scale the bucket column is a partition/cluster key, so this is
-    a partition-pruned scan instead of a full pass."""
-    dim = len(query_vec)
-    planes = planes or make_planes(8, dim)
-    # compute the query's bucket driver-side (tiny, deterministic)
-    qb = 0
-    for j, p in enumerate(planes):
-        if sum(x * y for x, y in zip(query_vec, p)) >= 0:
-            qb |= 1 << j
-    bucketed = emb.withColumn("_bucket", lsh_bucket_col(vec_col, planes))
-    return cosine_topk(
-        bucketed.where(F.col("_bucket") == qb), query_vec, k, id_col, vec_col
-    )

@@ -19,6 +19,7 @@ Usage: python3 scripts/check_layout_invariance.py [base_dir] [shuffled_dir] [que
 
 from __future__ import annotations
 
+import argparse
 import sys
 import time
 import traceback
@@ -43,9 +44,24 @@ def normalize(df: pd.DataFrame, ndigits: int = 6) -> pd.DataFrame:
 
 
 def main() -> int:
-    base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    shuf = sys.argv[2] if len(sys.argv) > 2 else "testdata_shuffled"
-    only = set(sys.argv[3:])
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument(
+        "base_dir",
+        nargs="?",
+        default="/root/testdata/sf0.01",
+        help="original layout (default: %(default)s)",
+    )
+    ap.add_argument(
+        "shuffled_dir",
+        nargs="?",
+        default="testdata_shuffled",
+        help="layout-shuffled copy (default: %(default)s)",
+    )
+    ap.add_argument("query", nargs="*", help="queries to run (default: all)")
+    args = ap.parse_args()
+    base, shuf, only = args.base_dir, args.shuffled_dir, set(args.query)
 
     import __spark_entry__ as entry_mod
     from ispaq_spark.session import get_spark

@@ -11,6 +11,7 @@ Usage: python3 scripts/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import argparse
 import sys
 import time
 import traceback
@@ -20,7 +21,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = ("events", "documents", "embeddings")
+TABLES = ("documents", "embeddings")
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -39,8 +40,19 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument(
+        "sf_dir",
+        nargs="?",
+        default="/root/testdata/sf0.01",
+        help="directory of the fixture tables (default: %(default)s)",
+    )
+    ap.add_argument("query", nargs="*", help="queries to run (default: all)")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
+    only = set(args.query)
 
     import __spark_entry__ as entry_mod
     from ispaq_spark.session import get_spark

@@ -16,8 +16,6 @@ oracle:
   embeddings  4 rows: one exact-duplicate pair + two ordinary vectors —
               fewer points than the IVF trainer's usual centroid count
               and fewer candidates than top-k asks for (k > n).
-  events      5 rows from ONE user (single-partition windows; sessionize
-              with no second key), including one same-timestamp pair.
 
 Everything is sliced or constructed deterministically from
 /root/testdata/sf0.001 — no wall clock, no randomness. Output defaults to
@@ -35,25 +33,22 @@ intact) — the empty day partition:
 
 from __future__ import annotations
 
+import argparse
 import os
-import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR_BASE", "/root/testdata/sf0.001")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-    REPO, "testdata_degenerate"
-)
 
 
 def load(name: str) -> pa.Table:
     return pq.read_table(os.path.join(SRC, f"{name}.parquet"))
 
 
-def write(name: str, table: pa.Table) -> None:
-    pq.write_table(table, os.path.join(OUT, f"{name}.parquet"))
+def write(out: str, name: str, table: pa.Table) -> None:
+    pq.write_table(table, os.path.join(out, f"{name}.parquet"))
 
 
 DUP_TEXT = (
@@ -95,28 +90,30 @@ def build_embeddings(base: pa.Table) -> pa.Table:
     return pa.Table.from_arrays(cols, schema=base.schema)
 
 
-def build_events(base: pa.Table) -> pa.Table:
-    ev = base.slice(0, 5).to_pydict()
-    uid = ev["user_id"][0]
-    ev["user_id"] = [uid] * 5  # single-user day: one window partition
-    ev["ts"][1] = ev["ts"][0]  # same-timestamp pair (tiebreak discipline)
-    cols = [pa.array(ev[f.name], type=f.type) for f in base.schema]
-    return pa.Table.from_arrays(cols, schema=base.schema)
-
-
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument(
+        "out_dir",
+        nargs="?",
+        default=os.path.join(REPO, "testdata_degenerate"),
+        help="output directory (default: testdata_degenerate at the repo root)",
+    )
+    ap.add_argument(
+        "--empty", action="store_true", help="write zero-row tables instead"
+    )
+    args = ap.parse_args()
+    os.makedirs(args.out_dir, exist_ok=True)
     builders = {
         "documents": build_documents,
         "embeddings": build_embeddings,
-        "events": build_events,
     }
-    empty = "--empty" in sys.argv
     for name, build in builders.items():
         base = load(name)
-        write(name, base.slice(0, 0) if empty else build(base))
-    kind = "zero-row" if empty else "degenerate"
-    print(f"{kind} fixture written to {OUT}")
+        write(args.out_dir, name, base.slice(0, 0) if args.empty else build(base))
+    kind = "zero-row" if args.empty else "degenerate"
+    print(f"{kind} fixture written to {args.out_dir}")
 
 if __name__ == "__main__":
     main()

@@ -2,13 +2,12 @@
 
 The hostile fixture hand-places each cross-engine hazard once, at a fixed
 row, in a fixed combination. This fuzzer draws the SAME hazard classes
-(NULL/empty/whitespace/unicode/metachar texts, duplicate clusters, value
-ties, same-timestamp pileups, duplicate and near-zero embeddings, skewed
-hot keys) but places them at seeded-random rows with seeded-random
-parameters, so every seed exercises a different interaction mix — a NULL
-text that lands in the densest LSH band, a value tie that straddles a
-window frame boundary, a duplicate pair whose copies fall in the same
-stratified-sample cell. Schemas and value domains stay
+(NULL/empty/whitespace/unicode/metachar texts, duplicate clusters,
+duplicate and near-zero embeddings, skewed hot keys) but places them at
+seeded-random rows with seeded-random parameters, so every seed exercises
+a different interaction mix — a NULL text that lands in the densest LSH
+band, a duplicate pair whose copies fall in the same stratified-sample
+cell. Schemas and value domains stay
 identical to the base fixture so all registered queries apply, and the
 invariants the repo's oracles assume are preserved:
 
@@ -29,9 +28,9 @@ Deterministic per seed; no wall clock.
 
 from __future__ import annotations
 
+import argparse
 import os
 import random
-import sys
 import zlib
 
 import numpy as np
@@ -89,31 +88,6 @@ def fuzz_documents(t: pa.Table, rng: random.Random) -> pa.Table:
     return pa.Table.from_pandas(df, preserve_index=False)
 
 
-def fuzz_events(t: pa.Table, rng: random.Random) -> pa.Table:
-    df = t.to_pandas()
-    n = len(df)
-    idx = list(range(n))
-    # hot user owns a random fraction
-    hot_user = int(df.loc[rng.randrange(n), "user_id"])
-    for i in rng.sample(idx, int(rng.uniform(0.05, 0.35) * n)):
-        df.loc[i, "user_id"] = hot_user
-    # same-timestamp pileups: p pileups of random size at random ts
-    for _ in range(rng.randint(1, 4)):
-        members = rng.sample(idx, rng.randint(5, 40))
-        ts = df.loc[rng.randrange(n), "ts"]
-        user = hot_user if rng.random() < 0.5 else int(
-            df.loc[rng.randrange(n), "user_id"]
-        )
-        for i in members:
-            df.loc[i, "ts"] = ts
-            df.loc[i, "user_id"] = user
-    # value ties
-    tie = round(rng.uniform(0, 100), 2)
-    for i in rng.sample(idx, rng.randint(10, 60)):
-        df.loc[i, "value"] = tie
-    return pa.Table.from_pandas(df, preserve_index=False)
-
-
 def fuzz_embeddings(t: pa.Table, rng: random.Random) -> pa.Table:
     df = t.to_pandas()
     n = len(df)
@@ -137,15 +111,20 @@ def fuzz_embeddings(t: pa.Table, rng: random.Random) -> pa.Table:
 
 
 def main() -> None:
-    if len(sys.argv) < 2:
-        raise SystemExit("usage: make_fuzz_fixture.py SEED [out_dir]")
-    seed = int(sys.argv[1])
-    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-        REPO, f"testdata_fuzz_s{seed}"
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
     )
+    ap.add_argument("seed", type=int, help="fuzz seed")
+    ap.add_argument(
+        "out_dir",
+        nargs="?",
+        help="output directory (default: testdata_fuzz_s<SEED> at the repo root)",
+    )
+    args = ap.parse_args()
+    seed = args.seed
+    out = args.out_dir or os.path.join(REPO, f"testdata_fuzz_s{seed}")
     os.makedirs(out, exist_ok=True)
     fuzzers = {
-        "events": fuzz_events,
         "documents": fuzz_documents,
         "embeddings": fuzz_embeddings,
     }

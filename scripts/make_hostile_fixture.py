@@ -15,10 +15,6 @@ cases while keeping every schema and value domain identical to
               spanning sources; ONE 10^6-token document built from a
               3-token cycle + unique tail (repeat structure dedup must
               find, with O(n) not O(n^2) first-occurrence probes).
-  events      one user owns ~30% of events (window/sessionize skew); a
-              50-event SAME-TIMESTAMP pileup (total-order tiebreaks);
-              value ties; hostile props JSON (null value, 1e308, unicode
-              key, deep nesting, empty object).
   embeddings  an all-zero vector (zero-norm cosine), an exact duplicate
               pair (similarity ties), a 1e-30-scale and a 1e6-scale
               vector (float32 under/overflow in dot products).
@@ -32,8 +28,8 @@ defaults to testdata_hostile/ at the repo root; run the full sweep with
 
 from __future__ import annotations
 
+import argparse
 import os
-import sys
 
 import numpy as np
 import pyarrow as pa
@@ -41,9 +37,6 @@ import pyarrow.parquet as pq
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR_BASE", "/root/testdata/sf0.01")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-    REPO, "testdata_hostile"
-)
 
 LANGS = ["en", "de", "zh", "fr", "es"]
 
@@ -68,9 +61,9 @@ def load(name: str) -> pa.Table:
     return pq.read_table(f"{SRC}/{name}.parquet")
 
 
-def write(name: str, table: pa.Table, like: pa.Table) -> None:
+def write(out: str, name: str, table: pa.Table, like: pa.Table) -> None:
     table = table.select(like.column_names).cast(like.schema)
-    pq.write_table(table, f"{OUT}/{name}.parquet")
+    pq.write_table(table, f"{out}/{name}.parquet")
 
 
 def zipf_source(i: int) -> str:
@@ -141,31 +134,6 @@ def build_documents(base: pa.Table) -> pa.Table:
     )
 
 
-def build_events(base: pa.Table) -> pa.Table:
-    df = base.to_pandas()
-    n = len(df)
-    # one hot user owns ~30% of events
-    hot = df.index[: int(0.30 * n)]
-    df.loc[hot, "user_id"] = 7
-    # 50-event same-timestamp pileup for the hot user
-    pile = df.index[100:150]
-    df.loc[pile, "ts"] = df.loc[100, "ts"]
-    df.loc[pile, "user_id"] = 7
-    # value ties
-    df.loc[df.index[200:240], "value"] = 42.0
-    hostile_props = [
-        '{"k": null}',
-        '{"k": 1e308}',
-        '{"k": -0.0}',
-        '{"üñî": "\U0001F980"}',
-        '{"k": {"nested": {"deep": [1, 2, {"x": "y"}]}}}',
-        "{}",
-    ]
-    for j, p in enumerate(hostile_props):
-        df.loc[df.index[300 + j], "props"] = p
-    return pa.Table.from_pandas(df, preserve_index=False)
-
-
 def build_embeddings(base: pa.Table) -> pa.Table:
     df = base.to_pandas()
     dim = len(df.loc[0, "embedding"])
@@ -179,19 +147,28 @@ def build_embeddings(base: pa.Table) -> pa.Table:
 
 
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument(
+        "out_dir",
+        nargs="?",
+        default=os.path.join(REPO, "testdata_hostile"),
+        help="output directory (default: testdata_hostile at the repo root)",
+    )
+    out = ap.parse_args().out_dir
+    os.makedirs(out, exist_ok=True)
     builders = {
         "documents": build_documents,
-        "events": build_events,
         "embeddings": build_embeddings,
     }
     for name, fn in builders.items():
         base = load(name)
-        write(name, fn(base), base)
+        write(out, name, fn(base), base)
     for name in builders:
-        t = pq.read_table(f"{OUT}/{name}.parquet")
+        t = pq.read_table(f"{out}/{name}.parquet")
         print(f"{name}: {t.num_rows} rows, schema ok")
-    print(f"hostile fixture written to {OUT}")
+    print(f"hostile fixture written to {out}")
 
 if __name__ == "__main__":
     main()

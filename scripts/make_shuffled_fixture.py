@@ -34,29 +34,35 @@ testdata_shuffled/ at the repo root.
 
 from __future__ import annotations
 
+import argparse
 import os
-import sys
 
 import numpy as np
 import pyarrow.parquet as pq
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR_BASE", "/root/testdata/sf0.01")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-    REPO, "testdata_shuffled"
-)
 
 # Each table's permutation seed, fixed per table rather than taken from its
 # position in the list, so the committed fixture reproduces byte for byte.
 SEEDS = {
-    "events": 1007,
     "documents": 1008,
     "embeddings": 1009,
 }
 
 
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument(
+        "out_dir",
+        nargs="?",
+        default=os.path.join(REPO, "testdata_shuffled"),
+        help="output directory (default: testdata_shuffled at the repo root)",
+    )
+    out = ap.parse_args().out_dir
+    os.makedirs(out, exist_ok=True)
     for name, seed in SEEDS.items():
         t = pq.read_table(f"{SRC}/{name}.parquet")
         n = t.num_rows
@@ -67,15 +73,15 @@ def main() -> None:
         shuffled = t.take(perm)
         pq.write_table(
             shuffled,
-            f"{OUT}/{name}.parquet",
+            f"{out}/{name}.parquet",
             row_group_size=37,
             data_page_size=1024,
         )
-        back = pq.ParquetFile(f"{OUT}/{name}.parquet")
+        back = pq.ParquetFile(f"{out}/{name}.parquet")
         assert back.metadata.num_rows == n
         assert back.schema_arrow == t.schema
         print(f"{name}: {n} rows permuted, {back.metadata.num_row_groups} row groups")
-    print(f"shuffled fixture written to {OUT}")
+    print(f"shuffled fixture written to {out}")
 
 
 if __name__ == "__main__":

@@ -1,15 +1,9 @@
-"""Distributed BPE trainer parity vs the pure-Python twin, plus the merge
-rewrite's left-to-right non-overlap rule."""
+"""BPE word-frequency table: the corpus pass of the pair statistic the
+`bpe_pair_counts` driver query certifies."""
 
 from __future__ import annotations
 
-from collections import Counter
-
-from ispaq_spark.operators.bpe import (
-    train_bpe,
-    train_bpe_local,
-    word_frequencies,
-)
+from ispaq_spark.operators.bpe import word_frequencies
 
 CORPUS = [
     "low low low low low lower lower newest newest newest",
@@ -24,16 +18,6 @@ def _docs(spark):
     )
 
 
-def test_train_bpe_matches_local_twin(spark):
-    freqs = Counter(w for s in CORPUS for w in s.split() if len(w) >= 2)
-    expected = train_bpe_local(dict(freqs), num_merges=8)
-    got = train_bpe(_docs(spark), num_merges=8)
-    assert got == expected
-    assert len(got) == 8
-    # the fixture's dominant pair must surface in round 1
-    assert got[0] in {("e", "s"), ("l", "o"), ("n", "e")}
-
-
 def test_word_frequencies_min_len(spark):
     rows = {
         r["word"]: r["freq"]
@@ -41,68 +25,3 @@ def test_word_frequencies_min_len(spark):
     }
     assert rows["newest"] == 7
     assert "hug" not in rows  # len 3 < min_len 4
-
-
-def test_merge_is_left_to_right_non_overlapping(spark):
-    # "aaaa" with merge (a,a): left-to-right gives [aa, aa]; "aaa" -> [aa, a]
-    docs = spark.createDataFrame(
-        [(0, "aaaa aaa aaaa aaa")], "doc_id long, text string"
-    )
-    merges = train_bpe(docs, num_merges=2)
-    local = train_bpe_local({"aaaa": 2, "aaa": 2}, num_merges=2)
-    assert merges == local
-    assert merges[0] == ("a", "a")
-    # second round re-counts on the rewritten vocab: aaaa->[aa,aa],
-    # aaa->[aa,a] so the top pair is (aa,aa) vs (aa,a) by weighted count
-    assert merges[1] in {("aa", "aa"), ("aa", "a")}
-
-
-def test_encode_text_udf_matches_local(spark):
-    from pyspark.sql import functions as F
-
-    from ispaq_spark.operators.bpe import encode_text_udf, encode_word
-
-    merges = train_bpe(_docs(spark), num_merges=6)
-    ranks = {p: i for i, p in enumerate(merges)}
-    enc = encode_text_udf(spark, merges)
-    got = {
-        r["doc_id"]: r["toks"]
-        for r in _docs(spark)
-        .select("doc_id", enc(F.col("text")).alias("toks"))
-        .collect()
-    }
-    for i, s in enumerate(CORPUS):
-        want = [t for w in s.split(" ") if w for t in encode_word(w, ranks)]
-        assert got[i] == want
-    # merged symbols actually appear (the table is being applied)
-    assert any(len(tok) > 1 for toks in got.values() for tok in toks)
-
-
-def test_encode_word_is_lossless_property():
-    """Property: for ANY word and ANY merge table, the encoded symbols
-    concatenate back to the word — BPE only regroups, never rewrites."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from ispaq_spark.operators.bpe import encode_word
-
-    words = st.text(alphabet="abcde", min_size=1, max_size=12)
-    pairs = st.lists(
-        st.tuples(
-            st.text(alphabet="abcde", min_size=1, max_size=2),
-            st.text(alphabet="abcde", min_size=1, max_size=2),
-        ),
-        max_size=8,
-    )
-
-    @settings(max_examples=200, deadline=None)
-    @given(word=words, merges=pairs)
-    def check(word, merges):
-        ranks = {}
-        for i, p in enumerate(merges):
-            ranks.setdefault(tuple(p), i)
-        toks = encode_word(word, ranks)
-        assert "".join(toks) == word
-        assert all(toks)
-
-    check()

@@ -1,10 +1,9 @@
-"""Dedup + similarity operator tests on deterministic corpora with known
+"""Dedup operator tests on a deterministic corpus with known
 near-duplicates."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from ispaq_spark.operators.dedup import (
     exact_dedup,
@@ -13,11 +12,6 @@ from ispaq_spark.operators.dedup import (
     minhash_dedup,
     minhash_signatures,
     simhash,
-)
-from ispaq_spark.operators.similarity import (
-    ann_lsh_topk,
-    cosine_topk,
-    make_planes,
 )
 
 
@@ -67,34 +61,3 @@ def test_simhash_near_dups_close(corpus):
         return bin(a ^ b).count("1")
     assert hamming(sh[0], sh[1]) == 0
     assert hamming(sh[0], sh[2]) <= hamming(sh[0], sh[3])
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    import math
-
-    rows = []
-    for i in range(50):
-        angle = i * math.pi / 100
-        v = [math.cos(angle), math.sin(angle)] + [0.0] * 6
-        rows.append((i, v))
-    return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-
-def test_cosine_topk_exact(emb):
-    q = [1.0, 0.0] + [0.0] * 6
-    top = cosine_topk(emb, q, k=5)
-    ids = [r["vec_id"] for r in top.collect()]
-    assert ids == [0, 1, 2, 3, 4]  # closest angles first
-
-
-def test_ann_lsh_subset_of_bruteforce(emb):
-    q = [1.0, 0.0] + [0.0] * 6
-    planes = make_planes(4, 8)
-    approx = ann_lsh_topk(emb, q, k=5, planes=planes)
-    brute = cosine_topk(emb, q, k=50)
-    approx_ids = {r["vec_id"] for r in approx.collect()}
-    brute_order = [r["vec_id"] for r in brute.collect()]
-    # every ANN hit is a real vector, scored identically to brute force
-    assert approx_ids <= set(brute_order)
-    assert len(approx_ids) > 0

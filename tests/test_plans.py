@@ -44,12 +44,12 @@ def test_column_pruning_reaches_scan(spark):
 def test_filter_pushdown_reaches_scan(spark):
     """A plain comparison predicate lands in PushedFilters."""
     df = (
-        spark.read.parquet(f"{SF_DIR}/orders.parquet")
-        .where(F.col("o_orderstatus") == "F")
-        .select("o_orderkey")
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .where(F.col("lang") == "en")
+        .select("doc_id")
     )
     plan = plan_of(df)
-    assert "PushedFilters: [" in plan and "o_orderstatus" in plan.split(
+    assert "PushedFilters: [" in plan and "lang" in plan.split(
         "PushedFilters"
     )[1].split("]")[0]
 
