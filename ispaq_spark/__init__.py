@@ -5,7 +5,8 @@ sets -> per-target metric columns -> quality decision, driven by declarative
 config), re-expressed Spark-first for Common-Crawl-style web pages:
 
     pages(url, warc_ts, html, text, lang)
-      -> extraction -> langid -> perplexity -> heuristics -> scrub
+      -> one Arrow stage (extraction, langid, perplexity, heuristics)
+      -> scrub
       -> keep/drop + lineage rollups -> idempotent sink
 
 Architecture map (reference file:line -> here):

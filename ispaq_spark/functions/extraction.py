@@ -1,4 +1,5 @@
-"""The pipeline's one Arrow stage: html -> extraction + model scores.
+"""The pipeline's one Arrow stage: html -> extraction, model scores and
+heuristic metrics.
 
 Graft slot: mergeTraces gap-fill — the cleaning step that turns raw stored
 bytes into the analyzable signal (IRISSeismic/R/Class-Stream.R:583-700,
@@ -7,12 +8,16 @@ function that produces every metric its group owns in one call
 (ispaq/simple_metrics.py:146-239). The byte-identical-per-url contract
 (BASELINE.json input_hint) is enforced by wrapping the *reference
 implementation itself* (reference_impl.extract_text, perplexities,
-score_langid) instead of re-implementing it: one code path, two callers.
+score_langid, heuristic_metrics) instead of re-implementing it: one code
+path, two callers.
 
 This is inherently per-string work no Catalyst builtin expresses, so it is
 the sanctioned pandas-UDF slow path — Arrow-batched, never row-at-a-time,
 and crossed once per pipeline: every Python-computed column comes out of
-the same batch, and the LM scores the whole batch in one numpy call. Like
+the same batch, and the LM scores the whole batch in one numpy call. The
+heuristic metrics ride the same crossing, since their text is already in
+the batch: one call per text yields all eight, where the Catalyst twin
+(functions/heuristics.py) interprets a lambda per token. Like
 ispaq's metric catalog, looked up once and then called per target-day
 (ispaq/user_request.py:470-488), the UDF and its model broadcasts are made
 once per session and models, not once per job."""
@@ -27,8 +32,26 @@ import zipimport
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..reference_impl import NgramLM, extract_text, perplexities, score_langid
+from ..reference_impl import (
+    NgramLM,
+    extract_text,
+    heuristic_metrics,
+    perplexities,
+    score_langid,
+)
 from ..session import session_memo, session_state
+
+# The columns of reference_impl.heuristic_metrics, with their types.
+HEURISTIC_COLUMNS = {
+    "word_count": "bigint",
+    "mean_word_len": "double",
+    "max_word_len": "bigint",
+    "stopword_ratio": "double",
+    "symbol_word_ratio": "double",
+    "dup_5gram_frac": "double",
+    "num_pii": "bigint",
+    "num_tox": "bigint",
+}
 
 # Every column the stage can produce, in output order, with its type.
 ARROW_COLUMNS = {
@@ -36,6 +59,7 @@ ARROW_COLUMNS = {
     "perplexity": "double",
     "pred_lang": "string",
     "lang_conf": "double",
+    **HEURISTIC_COLUMNS,
 }
 
 
@@ -87,10 +111,11 @@ def arrow_stage_udf(
 ):
     """pandas UDF html -> struct of the requested ``columns`` (a subset of
     ARROW_COLUMNS), built once per session and models. Extraction always
-    runs, since every score reads the extracted text; the LM and the langid
-    model are broadcast and scored only when one of their columns is
-    requested."""
+    runs, since every other column reads the extracted text; the LM and the
+    langid model are broadcast and scored, and the heuristics computed,
+    only when one of their columns is requested."""
     cols = tuple(c for c in ARROW_COLUMNS if c in columns)
+    heur = tuple(c for c in cols if c in HEURISTIC_COLUMNS)
     sc = spark.sparkContext
     lm_digest, bcast = (
         _model_broadcast(sc, "lm", model) if "perplexity" in cols else (None, None)
@@ -121,6 +146,10 @@ def arrow_stage_udf(
                 ]
                 out["pred_lang"] = [p for p, _ in scored]
                 out["lang_conf"] = [c for _, c in scored]
+            if heur:
+                metrics = [heuristic_metrics(t) if t is not None else {} for t in texts]
+                for c in heur:
+                    out[c] = [m.get(c) for m in metrics]
             return pd.DataFrame({c: out[c] for c in cols})
 
         return stage

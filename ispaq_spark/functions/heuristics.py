@@ -1,13 +1,21 @@
 """Gopher/C4-style heuristic metrics + stopword langid as pure Catalyst
-column expressions — zero Python on this path.
+column expressions: the SQL twin of reference_impl.heuristic_metrics, with
+zero Python on the driver entry's path (__spark_entry__.entry) and the
+driver queries' (with_stopword_langid).
+
+The pipeline does not run these metric expressions: its one Arrow stage
+calls reference_impl.heuristic_metrics on the texts already in the batch
+(functions/extraction.py), because Spark interprets this twin's
+per-token lambdas element by element instead of code-generating them.
+The pipeline's keep/drop decision, keep_expr, stays here and in the JVM.
 
 Graft slot: ispaq's 'simple metrics' business logic (basicStats / gaps
 dispatched per group, ispaq/simple_metrics.py:146-239; metric math
-IRISMustangMetrics/R/basicStatsMetric.R:25-59). Where ispaq crosses into R
-per target-day, we stay inside WholeStageCodegen for every document.
+IRISMustangMetrics/R/basicStatsMetric.R:25-59).
 
-Formula contract (must match ispaq_spark.reference_impl exactly — integer
-arithmetic + single IEEE-754 double divisions):
+Formula contract (must match reference_impl.heuristic_metrics exactly —
+integer arithmetic + single IEEE-754 double divisions; the 5-grams here
+are hashed, see fivegram_col):
   word_count        = size(split(text, ' '))
   mean_word_len     = (length(text) - word_count + 1) / word_count
   stopword_ratio    = max_L |{t in tokens : t in STOPWORDS[L]}| / word_count
@@ -30,7 +38,7 @@ from ..contract import (
 )
 from ..session import session_memo
 
-TOKENS = "_tokens"  # internal working columns, dropped by the pipeline
+TOKENS = "_tokens"  # internal working columns, dropped by with_heuristics
 TOK_H = "_tok_h"
 GRAMS = "_grams"
 

@@ -3,11 +3,13 @@ scrub -> (metrics table, lineage rollups).
 
 Graft of ispaq's execute path (ispaq/ispaq.py:443-466 ->
 simple_metrics.py:83-258: day loop -> per-target fetch -> per-function rpy2
-calls -> concat -> sink) as ONE declarative DataFrame plan: Catalyst fuses
-every SQL metric set into the same WholeStageCodegen pass over the scan, and
-the one Arrow stage (extraction, perplexity, langid) batches through the
-JVM<->Python boundary. There is no day loop — `ds` is a partition column
-and Spark parallelizes across all days and documents at once.
+calls -> concat -> sink) as ONE declarative DataFrame plan: the one Arrow
+stage (extraction, perplexity, langid and the heuristic metrics, one
+reference-function call per group like ispaq's) batches through the
+JVM<->Python boundary, and Catalyst fuses the scrub and the keep decision
+into one projection over its output. There is no day loop — `ds` is a
+partition column and Spark parallelizes across all days and documents at
+once.
 
 Scale posture (north rule): optional salting repartition for skewed domains
 *before* the metric stages (run_request's `salt_buckets` preference), AQE

@@ -7,13 +7,15 @@ must reproduce these byte-identically / with F1 >= 0.99 (BASELINE.json
 north_rule); tests/test_pipeline_parity.py is the gate.
 
 Every constant comes from ispaq_spark.contract, and the pipeline's one
-Arrow stage (functions/extraction.py: extraction, perplexity, langid) calls
-the *same functions* defined here — the reference's pattern of one
-shared metric library dispatched from multiple entry points
-(IRISMustangMetrics/R/ISPAQUtils.R catalog consumed by every ispaq module).
-The SQL-expressible metrics are re-derived here with formulas chosen to be
-bit-identical to the Spark column expressions (integer arithmetic + one
-IEEE-754 double division).
+Arrow stage (functions/extraction.py: extraction, perplexity, langid, the
+heuristic metrics) calls the *same functions* defined here — the
+reference's pattern of one shared metric library dispatched from multiple
+entry points (IRISMustangMetrics/R/ISPAQUtils.R catalog consumed by every
+ispaq module). Only the scrub and the keep decision run as JVM expressions
+in the pipeline. The Catalyst heuristics twin (functions/heuristics.py,
+run by the driver entry) uses the same formulas (integer arithmetic + one
+IEEE-754 double division), and tests/test_heuristics.py holds it equal to
+heuristic_metrics.
 """
 
 from __future__ import annotations
@@ -400,8 +402,9 @@ def count_tox(text: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Heuristic metrics + decision. Formulas mirror the Spark column expressions
-# token-for-token (see functions/heuristics.py) so doubles match exactly.
+# Heuristic metrics + decision. The pipeline's Arrow stage calls
+# heuristic_metrics itself; the Catalyst twin (functions/heuristics.py)
+# mirrors its formulas token-for-token so doubles match exactly.
 # ---------------------------------------------------------------------------
 
 
@@ -421,6 +424,10 @@ class DocMetrics:
     keep: bool
 
 
+# Membership tests against a frozenset, not the contract's ordered tuples.
+_STOPWORD_SETS = {lang: frozenset(STOPWORDS[lang]) for lang in LANGS}
+
+
 def langid(tokens: list[str]) -> tuple[str, int]:
     """Stopword vote: (argmax lang, max stopword hits). Retained for the
     stopword_ratio heuristic (the Gopher stop-word rule) and as the
@@ -428,11 +435,40 @@ def langid(tokens: list[str]) -> tuple[str, int]:
     come from the fastText-capability classifier (score_langid)."""
     best_lang, best_c = UNKNOWN_LANG, 0
     for lang in LANGS:  # sorted order = deterministic tie-break
-        sw = STOPWORDS[lang]
-        c = sum(1 for t in tokens if t in sw)
+        c = sum(map(_STOPWORD_SETS[lang].__contains__, tokens))
         if c > best_c:
             best_lang, best_c = lang, c
     return best_lang, best_c
+
+
+def heuristic_metrics(text: str) -> dict[str, int | float]:
+    """The eight heuristic metrics of one extracted text, keyed by column.
+
+    One function for the oracle (compute_metrics) and the pipeline's Arrow
+    stage (functions/extraction.py). Integer arithmetic and one IEEE-754
+    double division per ratio, so the SQL twin (functions/heuristics.py)
+    can match it exactly."""
+    tokens = text.split(" ")
+    n = len(tokens)
+    if n >= 5:
+        # Distinct 5-grams as token tuples: tokens hold no space, so this
+        # counts exactly the distinct " "-joined 5-gram strings.
+        grams = set(zip(tokens, tokens[1:], tokens[2:], tokens[3:], tokens[4:]))
+        dup_frac = 1.0 - len(grams) / (n - 4)
+    else:
+        dup_frac = 0.0
+    return {
+        "word_count": n,
+        # the spaces identity: total word chars = len(text) - (n-1)
+        # single separators
+        "mean_word_len": (len(text) - n + 1) / n,
+        "max_word_len": max(map(len, tokens)),
+        "stopword_ratio": langid(tokens)[1] / n,
+        "symbol_word_ratio": len(COMPILED_SYMBOL.findall(text)) / n,
+        "dup_5gram_frac": dup_frac,
+        "num_pii": count_pii(text),
+        "num_tox": count_tox(text),
+    }
 
 
 def compute_metrics(
@@ -442,35 +478,12 @@ def compute_metrics(
         from .synthesize import default_lid_model
 
         lid_model = default_lid_model()
-    tokens = text.split(" ")
-    n = len(tokens)
-    # mean word length via the spaces identity: total word chars =
-    # len(text) - (n-1) single separators. One double division, exact parity
-    # with the Spark expression.
-    mean_wl = (len(text) - n + 1) / n
-    max_wl = max(len(t) for t in tokens)
-    _sw_lang, sw_hits = langid(tokens)
-    stop_ratio = sw_hits / n
     lang, lang_conf = score_langid(text, lid_model)
-    sym_ratio = len(COMPILED_SYMBOL.findall(text)) / n
-    if n >= 5:
-        grams = [" ".join(tokens[i : i + 5]) for i in range(n - 4)]
-        dup_frac = 1.0 - len(set(grams)) / len(grams)
-    else:
-        dup_frac = 0.0
-    ppl = perplexity(text, model)
     m = DocMetrics(
-        word_count=n,
-        mean_word_len=mean_wl,
-        max_word_len=max_wl,
-        stopword_ratio=stop_ratio,
-        symbol_word_ratio=sym_ratio,
-        dup_5gram_frac=dup_frac,
+        **heuristic_metrics(text),
         pred_lang=lang,
         lang_conf=lang_conf,
-        perplexity=ppl,
-        num_pii=count_pii(text),
-        num_tox=count_tox(text),
+        perplexity=perplexity(text, model),
         keep=False,
     )
     m.keep = decide_keep(m)

@@ -7,9 +7,10 @@ metrics (IRISMustangMetrics/R/ISPAQUtils.R:30-301, inverted to
 ``function_by_logic`` at user_request.py:470-488). Here each MetricSet is a
 named column request plus the columns it consumes; resolution pulls in a
 provider for every missing dependency, and the pipeline computes the union
-of the requested columns once: every Python-computed column in one Arrow
-stage, the rest as Catalyst expressions. Unrequested metric columns are
-never computed (the wide-layout version of ispaq's metricName filter,
+of the requested columns once: every metric column (extraction, scores and
+heuristics) in one Arrow stage, then the scrub and the keep decision as
+JVM expressions. Unrequested metric columns are never computed (the
+wide-layout version of ispaq's metricName filter,
 ispaq/simple_metrics.py:247-256).
 """
 
@@ -21,8 +22,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions.extraction import ARROW_COLUMNS, arrow_stage_udf
-from .functions.heuristics import keep_expr, with_heuristics
+from .functions.extraction import ARROW_COLUMNS, HEURISTIC_COLUMNS, arrow_stage_udf
+from .functions.heuristics import keep_expr
 from .functions.scrub import scrubbed_col
 from .reference_impl import NgramLM
 from .session import session_memo
@@ -60,26 +61,17 @@ class PipelineContext:
             self.lid_model = default_lid_model()
 
 
-_HEUR_COLS = (
-    "word_count",
-    "mean_word_len",
-    "max_word_len",
-    "stopword_ratio",
-    "symbol_word_ratio",
-    "dup_5gram_frac",
-    "num_pii",
-    "num_tox",
-)
+_HEUR_COLS = tuple(HEURISTIC_COLUMNS)
 
 
 def apply_columns(
     df: DataFrame, ctx: PipelineContext, columns: Collection[str]
 ) -> DataFrame:
-    """Append ``columns`` to ``df``: every Arrow column from ONE Python
-    crossing over ``html`` (functions/extraction.py), then the Catalyst
-    stages in dependency order — heuristics, then the JVM scrub and the
-    decision in one projection. The UDF and the heuristics, scrub and
-    decision expressions are built once per session (session.session_memo)."""
+    """Append ``columns`` to ``df``: every Arrow column (extraction, scores
+    and heuristics) from ONE Python crossing over ``html``
+    (functions/extraction.py), then the JVM scrub and the decision in one
+    projection. The UDF and the scrub and decision expressions are built
+    once per session (session.session_memo)."""
     sc = ctx.spark.sparkContext
     arrow = tuple(c for c in ARROW_COLUMNS if c in columns)
     if arrow:
@@ -89,8 +81,6 @@ def apply_columns(
         # ArrowEvalPython, gated by tests/test_plans.py)
         call = udf(F.col("html"))
         df = df.withColumns({c: call.getField(c) for c in arrow})
-    if any(c in columns for c in _HEUR_COLS):
-        df = with_heuristics(df, "extracted_text")
     tail = tuple(c for c in ("scrubbed_text", "keep") if c in columns)
     if tail:
         df = df.withColumns(session_memo(sc, ("tail", tail), lambda: _tail(tail)))
@@ -106,7 +96,7 @@ def _tail(names: tuple[str, ...]) -> dict:
     return out
 
 
-_SCORES = tuple(ARROW_COLUMNS)
+_SCORES = tuple(c for c in ARROW_COLUMNS if c not in HEURISTIC_COLUMNS)
 
 REGISTRY: dict[str, MetricSet] = {
     m.name: m

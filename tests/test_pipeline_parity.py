@@ -144,3 +144,30 @@ def test_alias_columns_match_reference(
             else:
                 want = None if m is None else getattr(m, c)
             assert rows[url][c] == want, (alias, url, c)
+
+
+@pytest.mark.parametrize("alias", ("heuristicsOnly", "default"))
+def test_unextractable_html_gives_null_heuristics(spark, model, alias):
+    """Undecodable and empty html quarantine with NULL heuristics: not NaN,
+    not 0, in the bigint columns as in the double ones."""
+    import datetime as dt
+
+    from ispaq_spark.functions.extraction import HEURISTIC_COLUMNS
+
+    ts = dt.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [
+            ("u-undecodable", ts, b"<p>caf\xe9 \xff</p>"),
+            ("u-empty", ts, b""),
+            ("u-no-text", ts, b"<html><script>x</script></html>"),
+            ("u-text", ts, b"<p>the cat and the dog</p>"),
+        ],
+        "url string, warc_ts timestamp, html binary",
+    )
+    rows = {r["url"]: r for r in run_pipeline(spark, pages, alias, model).collect()}
+    for url in ("u-undecodable", "u-empty", "u-no-text"):
+        assert rows[url]["quality_flag"] == -9, url
+        for c in HEURISTIC_COLUMNS:
+            assert rows[url][c] is None, (url, c)
+    assert rows["u-text"]["word_count"] == 5
+    assert rows["u-text"]["dup_5gram_frac"] == 0.0

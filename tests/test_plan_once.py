@@ -1,6 +1,7 @@
-"""Plan once per session: a repeat run_pipeline builds no new expressions
-and no new broadcasts; a changed model replaces its broadcast (destroying
-the old one) and is never served stale."""
+"""Plan once per session: a repeat with_heuristics builds no new
+expressions, a repeat run_pipeline no new broadcasts; a changed model
+replaces its broadcast (destroying the old one) and is never served
+stale."""
 
 from __future__ import annotations
 
@@ -26,12 +27,15 @@ def _count_calls(monkeypatch, owner, name):
     return calls
 
 
-def test_second_run_builds_no_heuristic_expressions(
-    spark, fixture_pages, model, monkeypatch
-):
-    run_pipeline(spark, fixture_pages, "default", model)
+def test_second_run_builds_no_heuristic_expressions(spark, monkeypatch):
+    """The Catalyst heuristics twin (the driver entry's path) builds its
+    expressions once per session and text column."""
+    from ispaq_spark.functions.heuristics import with_heuristics
+
+    df = spark.createDataFrame([("the cat and a dog",)], "body string")
+    with_heuristics(df, "body")
     calls = _count_calls(monkeypatch, F, "xxhash64")
-    run_pipeline(spark, fixture_pages, "default", model)
+    assert with_heuristics(df, "body").first()["word_count"] == 5
     assert calls == []
 
 

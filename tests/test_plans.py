@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ispaq_spark import driver_queries as dq
+from ispaq_spark.registry import ALIASES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -87,6 +88,24 @@ def test_every_request_plans_one_arrow_stage(spark, request_name):
     out = run_pipeline(spark, pages_df(spark, 20), req.metric_sets,
                        default_model(), default_lid_model())
     assert plan_of(out).count("ArrowEvalPython") == 1, request_name
+
+
+@pytest.mark.parametrize("alias", sorted(ALIASES))
+def test_pipeline_plans_no_heuristic_lambdas(spark, alias):
+    """The heuristics come out of the Arrow stage: no alias plans the
+    Catalyst twin's token hashes or per-element lambdas, and each plans
+    exactly one ArrowEvalPython."""
+    from ispaq_spark.functions.heuristics import with_heuristics
+    from ispaq_spark.pipeline import run_pipeline
+    from ispaq_spark.synthesize import default_lid_model, default_model, pages_df
+
+    twin = plan_of(with_heuristics(spark.read.parquet(
+        f"{SF_DIR}/documents.parquet"), "text"))
+    assert "xxhash64" in twin and "lambdafunction" in twin  # the markers
+    plan = plan_of(run_pipeline(spark, pages_df(spark, 20), alias,
+                                default_model(), default_lid_model()))
+    assert "xxhash64" not in plan and "lambdafunction" not in plan, alias
+    assert plan.count("ArrowEvalPython") == 1, alias
 
 
 def test_heuristics_only_builds_no_model(spark, monkeypatch):
