@@ -20,9 +20,11 @@ from ispaq_spark import driver_queries as _dq
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: heuristic quality metrics + langid + keep decision over the
-    documents table (the engine's core metric-set stage). Data dir defaults
-    to sf0.001 and is overridable via SPARK_GRAFT_SF_DIR for driver reuse at
-    other scale factors."""
+    documents table (the engine's core metric-set stage). The metrics come
+    from one Arrow stage running reference_impl.heuristic_metrics (the
+    pipeline's own function); the stopword langid and the keep rule are
+    Catalyst expressions. Data dir defaults to sf0.001 and is overridable
+    via SPARK_GRAFT_ENTRY_SF_DIR for driver reuse at other scale factors."""
     import os
 
     from pyspark.sql import functions as F

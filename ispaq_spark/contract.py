@@ -106,29 +106,27 @@ COMPILED_SYMBOL = re.compile(SYMBOL_PATTERN)
 # n-grams back off to a fixed floor logprob. Each token is hashed ONCE
 # (crc32 over its UTF-8 bytes — a C call, no PYTHONHASHSEED dependence —
 # spread to 64 bits by an odd multiplier), and a k-gram's key folds its
-# token hashes with the rotate-xor of functions/heuristics._combine5 plus a
-# per-order tag. So the scorer keys every gram of a whole batch with a few
-# numpy ops per order, never building a gram string. Keys that collide
-# merely merge two n-grams' counts, identically in both trainers and at
-# scoring time; tests/test_perplexity.py pins that the default LM corpus
-# has none.
+# token hashes with a rotate-xor (ngram_key below; reference_impl.ngram_keys
+# over uint64 arrays) plus a per-order tag. So the scorer keys every gram of
+# a whole batch with a few numpy ops per order, never building a gram
+# string. Keys that collide merely merge two n-grams' counts, identically
+# in the trainer and at scoring time; tests/test_perplexity.py pins that
+# the default LM corpus has none.
 # ---------------------------------------------------------------------------
 import zlib as _zlib
 
 LM_ORDER = 5
 LM_FLOOR_LOGPROB = -12.0
-# Prune n-grams below this count before the model leaves the cluster: at web
-# scale the *distinct* n-gram table is corpus-sized (singletons dominate,
+# Prune n-grams below this count before keying them: at web scale the
+# *distinct* n-gram table is corpus-sized (singletons dominate,
 # especially at order 5) while the *pruned* table is model-sized. A uniform
 # threshold preserves the stupid-backoff superset property — count(prefix)
-# >= count(kgram), so any kept k-gram's (k-1)-prefix is also kept — and is
-# applied identically by the pure-Python and the distributed trainer, so
-# parity is exact.
+# >= count(kgram), so any kept k-gram's (k-1)-prefix is also kept.
 LM_MIN_COUNT = 2
 
 _MASK64 = (1 << 64) - 1
 LM_TOKEN_MIX = 0x9E3779B97F4A7C15  # odd, so a bijection on 64-bit words
-LM_ROTATE = 13  # the rotate-xor step of heuristics._combine5
+LM_ROTATE = 13  # the rotate-xor step of ngram_key's fold
 
 
 def order_tag(k: int) -> int:

@@ -16,9 +16,9 @@ the sanctioned pandas-UDF slow path — Arrow-batched, never row-at-a-time,
 and crossed once per pipeline: every Python-computed column comes out of
 the same batch, and the LM scores the whole batch in one numpy call. The
 heuristic metrics ride the same crossing, since their text is already in
-the batch: one call per text yields all eight, where the Catalyst twin
-(functions/heuristics.py) interprets a lambda per token. Like
-ispaq's metric catalog, looked up once and then called per target-day
+the batch: one call per text yields all eight (heuristic_batch, which
+functions/heuristics.with_heuristics runs too). Like ispaq's metric
+catalog, looked up once and then called per target-day
 (ispaq/user_request.py:470-488), the UDF and its model broadcasts are made
 once per session and models, not once per job."""
 
@@ -85,6 +85,14 @@ def _drop_zip_finders() -> None:
             del cache[path]
 
 
+def heuristic_batch(texts, cols) -> dict[str, list]:
+    """The heuristic columns ``cols`` of a batch of texts, one value per
+    text: reference_impl.heuristic_metrics, None for a None text. The Arrow
+    stage and heuristics.with_heuristics both call it."""
+    metrics = [heuristic_metrics(t) if t is not None else {} for t in texts]
+    return {c: [m.get(c) for m in metrics] for c in cols}
+
+
 def _model_broadcast(sc, slot: str, model):
     """(digest, broadcast) of ``model`` in the session's ``slot`` ("lm" or
     "lid"). The digest is over the model's content, so the same model is
@@ -147,9 +155,7 @@ def arrow_stage_udf(
                 out["pred_lang"] = [p for p, _ in scored]
                 out["lang_conf"] = [c for _, c in scored]
             if heur:
-                metrics = [heuristic_metrics(t) if t is not None else {} for t in texts]
-                for c in heur:
-                    out[c] = [m.get(c) for m in metrics]
+                out.update(heuristic_batch(texts, heur))
             return pd.DataFrame({c: out[c] for c in cols})
 
         return stage

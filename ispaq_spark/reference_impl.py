@@ -12,10 +12,9 @@ heuristic metrics) calls the *same functions* defined here — the
 reference's pattern of one shared metric library dispatched from multiple
 entry points (IRISMustangMetrics/R/ISPAQUtils.R catalog consumed by every
 ispaq module). Only the scrub and the keep decision run as JVM expressions
-in the pipeline. The Catalyst heuristics twin (functions/heuristics.py,
-run by the driver entry) uses the same formulas (integer arithmetic + one
-IEEE-754 double division), and tests/test_heuristics.py holds it equal to
-heuristic_metrics.
+in the pipeline; functions/heuristics.with_heuristics (the driver entry's
+metrics) runs heuristic_metrics through the same per-batch helper as the
+Arrow stage.
 """
 
 from __future__ import annotations
@@ -110,21 +109,6 @@ class NgramLM:
     counts: np.ndarray
     total: float
 
-    @classmethod
-    def from_counts(cls, gram_counts: list[tuple[str, int]], total: int) -> "NgramLM":
-        """Key the surviving ("tok tok ...", count) grams, summing the
-        counts of grams whose keys collide. The one finalisation step of
-        both trainers (this module's train_lm and
-        functions/perplexity.train_lm_distributed)."""
-        n = len(gram_counts)
-        keys = np.fromiter(
-            (ngram_key(g.split(" ")) for g, _ in gram_counts), np.uint64, n
-        )
-        counts = np.fromiter((c for _, c in gram_counts), np.float64, n)
-        uniq, inverse = np.unique(keys, return_inverse=True)
-        merged = np.bincount(inverse, counts, len(uniq)).astype(np.float64)
-        return cls(uniq, merged, float(total))
-
     def __eq__(self, other: object) -> bool:
         return (
             isinstance(other, NgramLM)
@@ -143,14 +127,8 @@ def train_lm(
     min_count: int = LM_MIN_COUNT,
 ) -> NgramLM:
     """Count the n-grams (1..order) of the tokenized docs, prune grams below
-    ``min_count``, then key them (NgramLM.from_counts).
-
-    Prune-then-key ordering matters: the distributed trainer
-    (functions/perplexity.py) prunes per gram *string* in the cluster before
-    the driver keys anything, so this trainer does the same — under a key
-    collision both sides then merge the same surviving counts.
-    test_perplexity asserts table equality.
-    """
+    ``min_count``, then key the survivors, summing the counts of grams
+    whose keys collide."""
     counts: Counter[str] = Counter()
     total1 = 0
     for doc in corpus:
@@ -158,9 +136,13 @@ def train_lm(
         for k in range(1, order + 1):
             counts.update(" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1))
         total1 += len(toks)
-    return NgramLM.from_counts(
-        [(g, c) for g, c in counts.items() if c >= min_count], total1
+    kept = [(g, c) for g, c in counts.items() if c >= min_count]
+    keys = np.fromiter(
+        (ngram_key(g.split(" ")) for g, _ in kept), np.uint64, len(kept)
     )
+    uniq, inverse = np.unique(keys, return_inverse=True)
+    merged = np.bincount(inverse, [c for _, c in kept], len(uniq))
+    return NgramLM(uniq, merged.astype(np.float64), float(total1))
 
 
 def token_hashes(text: str) -> np.ndarray:
@@ -320,9 +302,7 @@ def train_langid(labeled: list[tuple[str, str]]) -> dict:
     """(lang, text) pairs -> NB model {langs, W(float64 L x B), prior}.
 
     W[l, b] = log((count[l, b] + alpha) / (total[l] + alpha * B));
-    prior[l] = log(docs[l] / docs_total). The distributed trainer
-    (functions/langid.py) produces identical integer count matrices and
-    then applies these exact numpy expressions, so models compare equal.
+    prior[l] = log(docs[l] / docs_total).
     """
     langs = tuple(sorted({lang for lang, _ in labeled}))
     idx = {lang: i for i, lang in enumerate(langs)}
@@ -331,13 +311,6 @@ def train_langid(labeled: list[tuple[str, str]]) -> dict:
     for lang, text in labeled:
         counts[idx[lang]] += langid_bucket_counts(text)
         docs[idx[lang]] += 1
-    return langid_model_from_counts(langs, counts, docs)
-
-
-def langid_model_from_counts(
-    langs: tuple[str, ...], counts: np.ndarray, docs: np.ndarray
-) -> dict:
-    """Shared model-finalization step (single code path for both trainers)."""
     totals = counts.sum(axis=1, keepdims=True).astype(np.float64)
     W = np.log(
         (counts.astype(np.float64) + LANGID_ALPHA)
@@ -402,9 +375,8 @@ def count_tox(text: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Heuristic metrics + decision. The pipeline's Arrow stage calls
-# heuristic_metrics itself; the Catalyst twin (functions/heuristics.py)
-# mirrors its formulas token-for-token so doubles match exactly.
+# Heuristic metrics + decision. The pipeline's Arrow stage and
+# functions/heuristics.with_heuristics call heuristic_metrics itself.
 # ---------------------------------------------------------------------------
 
 
@@ -444,10 +416,9 @@ def langid(tokens: list[str]) -> tuple[str, int]:
 def heuristic_metrics(text: str) -> dict[str, int | float]:
     """The eight heuristic metrics of one extracted text, keyed by column.
 
-    One function for the oracle (compute_metrics) and the pipeline's Arrow
-    stage (functions/extraction.py). Integer arithmetic and one IEEE-754
-    double division per ratio, so the SQL twin (functions/heuristics.py)
-    can match it exactly."""
+    One function for the oracle (compute_metrics), the pipeline's Arrow
+    stage and with_heuristics (functions/extraction.heuristic_batch).
+    Integer arithmetic and one IEEE-754 double division per ratio."""
     tokens = text.split(" ")
     n = len(tokens)
     if n >= 5:

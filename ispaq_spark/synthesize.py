@@ -179,9 +179,11 @@ def pages_df(spark, n: int, seed: int = SEED, partitions: int | None = None):
     """
     import pandas as pd
 
+    from .functions.extraction import _drop_zip_finders
     from .schemas import PAGES
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _drop_zip_finders()
         for pdf in batches:
             rows = [make_page(int(i), seed) for i in pdf["id"]]
             yield pd.DataFrame(rows, columns=[f.name for f in PAGES.fields])

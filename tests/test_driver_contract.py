@@ -9,6 +9,7 @@ from __future__ import annotations
 import inspect
 import re
 import types
+from decimal import ROUND_HALF_UP, Decimal
 from pathlib import Path
 
 import duckdb
@@ -34,6 +35,58 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert "keep" in df.columns
+
+
+def _spark_round6(x: float) -> float:
+    """Spark's round(x, 6): HALF_UP on the double's shortest decimal."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _entry_row(lang, text):
+    """entry()'s projection of one document, from reference_impl."""
+    from ispaq_spark.contract import UNKNOWN_LANG
+    from ispaq_spark.reference_impl import heuristic_metrics, langid
+
+    if text is None:  # NULL metrics, so keep is NULL too
+        return {"lang": lang, "word_count": None, "mean_word_len": None,
+                "max_word_len": None, "pred_lang": UNKNOWN_LANG,
+                "stopword_ratio": None, "dup_5gram_frac": None, "keep": None}
+    m = heuristic_metrics(text)
+    return {
+        "lang": lang,
+        "word_count": m["word_count"],
+        "mean_word_len": _spark_round6(m["mean_word_len"]),
+        "max_word_len": m["max_word_len"],
+        "pred_lang": langid(text.split(" "))[0],
+        "stopword_ratio": _spark_round6(m["stopword_ratio"]),
+        "dup_5gram_frac": _spark_round6(m["dup_5gram_frac"]),
+        "keep": m["word_count"] >= 15
+        and m["mean_word_len"] <= 12.0
+        and m["dup_5gram_frac"] <= 0.3,
+    }
+
+
+# sf0.001 has no NULL text and no repeated 5-gram; the hostile fixture has
+# both.
+@pytest.mark.parametrize(
+    "sf_dir", [SF_DIR, str(REPO / "testdata_hostile")], ids=["sf0.001", "hostile"]
+)
+def test_entry_values_equal_reference(spark, monkeypatch, sf_dir):
+    """Every entry() row equals the same projection built in Python from
+    reference_impl.heuristic_metrics and the stopword vote
+    reference_impl.langid."""
+    monkeypatch.setenv("SPARK_GRAFT_ENTRY_SF_DIR", sf_dir)
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
+    want = {
+        int(doc_id): _entry_row(lang, text)
+        for doc_id, lang, text in zip(docs["doc_id"], docs["lang"], docs["text"])
+    }
+    got = {r["doc_id"]: r.asDict() for r in entry_mod.entry(spark).collect()}
+    assert got.keys() == want.keys() and len(want) == len(docs) > 0
+    assert {r["pred_lang"] for r in want.values()} - {"und"}
+    assert {r["keep"] for r in want.values()} >= {True, False}
+    for doc_id, row in want.items():
+        assert {c: got[doc_id][c] for c in row} == row, doc_id
 
 
 @pytest.mark.parametrize("name", sorted(entry_mod.queries()))

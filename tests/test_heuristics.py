@@ -1,7 +1,7 @@
 """The heuristic metrics: reference_impl.heuristic_metrics (the pipeline's
-Arrow stage and the oracle) equals the formulas it replaced, and the SQL
-twin equals the Python reference metric-for-metric (exact doubles, not
-approximate) on the fixture corpus."""
+Arrow stage and the oracle) equals the formulas it replaced, and
+with_heuristics equals the Python reference metric-for-metric (exact
+doubles, not approximate) on the fixture corpus."""
 
 from __future__ import annotations
 
@@ -22,8 +22,8 @@ from ispaq_spark.functions.heuristics import with_heuristics
 from ispaq_spark.reference_impl import compute_metrics, heuristic_metrics
 
 
-# pred_lang/lang_conf moved to the langid classifier stage
-# (tests/test_langid.py); this file covers the pure-Catalyst heuristics.
+# pred_lang/lang_conf come from the langid classifier stage
+# (tests/test_langid.py); this file covers the heuristics.
 METRIC_COLS = (
     "word_count",
     "mean_word_len",

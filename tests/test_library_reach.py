@@ -22,15 +22,8 @@ ROOT_FILES = (
 ROOT_MODULES = (f"{PKG}.request", f"{PKG}.driver_queries")
 
 # Modules no entry point imports. The set only shrinks: an entry leaves it
-# when its module is deleted or a job starts running it. `functions.langid`
-# and `functions.perplexity` hold distributed trainers that only tests call.
-UNREACHED = frozenset(
-    {
-        "functions.langid",
-        "functions.perplexity",
-        "streaming.stream_pipeline",
-    }
-)
+# when its module is deleted or a job starts running it.
+UNREACHED = frozenset({"streaming.stream_pipeline"})
 
 
 # Top-level functions of reached modules that nothing reaches by name. The

@@ -1,43 +1,13 @@
-"""Distributed LM trainer must produce the identical model table as the
-pure-Python trainer (same hash keys, same counts, same min-count pruning),
-scoring must be deterministic across both, and the collected model must stay
-bounded as the corpus grows (the prune-before-collect contract)."""
+"""The n-gram LM: the pruned model stays bounded as the corpus grows, its
+keys do not collide on the default corpus, and the batch scorer is
+bit-for-bit the single-text scorer."""
 
 from __future__ import annotations
 
 import math
 
-from ispaq_spark.functions.perplexity import train_lm_distributed
 from ispaq_spark.reference_impl import perplexity, train_lm
 from ispaq_spark.synthesize import lm_corpus
-
-
-def test_distributed_trainer_matches_python(spark):
-    corpus = list(lm_corpus(200))
-    py_model = train_lm(corpus)
-    cdf = spark.createDataFrame([(c,) for c in corpus], ["text"])
-    sp_model = train_lm_distributed(cdf)
-    assert sp_model == py_model
-
-
-def test_distributed_trainer_matches_python_unpruned(spark):
-    corpus = list(lm_corpus(120))
-    py_model = train_lm(corpus, min_count=1)
-    cdf = spark.createDataFrame([(c,) for c in corpus], ["text"])
-    sp_model = train_lm_distributed(cdf, min_count=1)
-    assert sp_model == py_model
-
-
-def test_score_with_distributed_model(spark):
-    corpus = list(lm_corpus(200))
-    cdf = spark.createDataFrame([(c,) for c in corpus], ["text"])
-    sp_model = train_lm_distributed(cdf)
-    seen = perplexity(corpus[0], sp_model)
-    gibberish = perplexity("zzqq wwrr ttyy", sp_model)
-    # seen text scores far better than gibberish (every token of which
-    # bottoms out at the floor logprob)
-    assert seen < gibberish / 20
-    assert gibberish > 100_000
 
 
 def test_collected_model_size_bounded(spark):
@@ -71,7 +41,7 @@ def test_no_key_collisions_in_default_corpus():
 
 
 def test_python_key_equals_numpy_key():
-    """contract.ngram_key (Python ints, the trainers) equals
+    """contract.ngram_key (Python ints, the trainer) equals
     reference_impl.ngram_keys (uint64 arrays, the scorer) on random grams,
     non-ASCII tokens included."""
     import random

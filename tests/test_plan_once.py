@@ -1,7 +1,7 @@
-"""Plan once per session: a repeat with_heuristics builds no new
-expressions, a repeat run_pipeline no new broadcasts; a changed model
-replaces its broadcast (destroying the old one) and is never served
-stale."""
+"""Plan once per session: a repeat with_heuristics builds no new UDF, a
+repeat with_stopword_langid no new stopword arrays, a repeat run_pipeline
+no new broadcasts; a changed model replaces its broadcast (destroying the
+old one) and is never served stale."""
 
 from __future__ import annotations
 
@@ -28,25 +28,28 @@ def _count_calls(monkeypatch, owner, name):
 
 
 def test_second_run_builds_no_heuristic_expressions(spark, monkeypatch):
-    """The Catalyst heuristics twin (the driver entry's path) builds its
-    expressions once per session and text column."""
+    """with_heuristics (the driver entry's metrics) builds its pandas UDF
+    once per session, whatever the text column."""
+    from ispaq_spark import session
     from ispaq_spark.functions.heuristics import with_heuristics
 
+    monkeypatch.setattr(session, "_state", None)  # a session that built none
+    built = _count_calls(monkeypatch, F, "pandas_udf")
     df = spark.createDataFrame([("the cat and a dog",)], "body string")
     with_heuristics(df, "body")
-    calls = _count_calls(monkeypatch, F, "xxhash64")
+    assert len(built) == 1
     assert with_heuristics(df, "body").first()["word_count"] == 5
-    assert calls == []
+    assert with_heuristics(df.withColumnRenamed("body", "t"), "t").first()[
+        "max_word_len"
+    ] == 3
+    assert len(built) == 1
 
 
 def test_stopword_langid_reuses_stopword_arrays(spark, monkeypatch):
-    from ispaq_spark.functions.heuristics import (
-        with_heuristics,
-        with_stopword_langid,
-    )
+    from ispaq_spark.functions.heuristics import with_stopword_langid
 
     df = spark.createDataFrame([("the cat and a dog",)], "text string")
-    with_heuristics(df, "text")
+    with_stopword_langid(df, "text")
     calls = _count_calls(monkeypatch, F, "xxhash64")
     # the only hash built is the per-token one, not the 50 stopword literals
     out = with_stopword_langid(df, "text")

@@ -92,16 +92,17 @@ def test_every_request_plans_one_arrow_stage(spark, request_name):
 
 @pytest.mark.parametrize("alias", sorted(ALIASES))
 def test_pipeline_plans_no_heuristic_lambdas(spark, alias):
-    """The heuristics come out of the Arrow stage: no alias plans the
-    Catalyst twin's token hashes or per-element lambdas, and each plans
-    exactly one ArrowEvalPython."""
-    from ispaq_spark.functions.heuristics import with_heuristics
+    """The heuristics come out of the Arrow stage: no alias plans token
+    hashes or per-element lambdas, and each plans exactly one
+    ArrowEvalPython."""
+    from ispaq_spark.functions.heuristics import with_stopword_langid
     from ispaq_spark.pipeline import run_pipeline
     from ispaq_spark.synthesize import default_lid_model, default_model, pages_df
 
-    twin = plan_of(with_heuristics(spark.read.parquet(
+    # the stopword vote plans both markers, so the plan strings hold them
+    vote = plan_of(with_stopword_langid(spark.read.parquet(
         f"{SF_DIR}/documents.parquet"), "text"))
-    assert "xxhash64" in twin and "lambdafunction" in twin  # the markers
+    assert "xxhash64" in vote and "lambdafunction" in vote
     plan = plan_of(run_pipeline(spark, pages_df(spark, 20), alias,
                                 default_model(), default_lid_model()))
     assert "xxhash64" not in plan and "lambdafunction" not in plan, alias
@@ -124,14 +125,17 @@ def test_heuristics_only_builds_no_model(spark, monkeypatch):
     assert "perplexity" not in out.columns and "pred_lang" not in out.columns
 
 
-def test_heuristics_all_jvm(spark):
-    """The heuristics metric set is pure Catalyst: zero Python operators of
-    any kind in its plan."""
+def test_with_heuristics_plans_one_arrow_stage(spark):
+    """with_heuristics computes all eight metrics in one Arrow-batched
+    crossing: exactly one ArrowEvalPython, no row-at-a-time Python, and
+    no token hashes or per-element lambdas."""
     from ispaq_spark.functions.heuristics import with_heuristics
 
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = plan_of(with_heuristics(d, "text"))
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert plan.count("ArrowEvalPython") == 1
+    assert "BatchEvalPython" not in plan
+    assert "xxhash64" not in plan and "lambdafunction" not in plan
 
 
 def test_ivf_prunes_before_distance(spark):
