@@ -1,11 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry()    — flagship: the quality-filter metric stage over `documents`.
-queries()  — the 33 queries of ispaq_spark/driver_queries.py, in file
+queries()  — the 24 queries of ispaq_spark/driver_queries.py, in file
              order: library operators certified against DuckDB (dedup,
-             curation, connected components, similarity buckets, BPE pair
-             counts, langid) and the remaining text and embedding
-             catalogue queries.
+             curation, connected components, langid) and the remaining
+             text catalogue queries.
 oracle_sql() — DuckDB-equivalent SQL per query.
 """
 

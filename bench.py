@@ -45,29 +45,20 @@ BENCH_QUERIES = (
     "minhash_signatures",
     "simhash16",
     "jaccard_pairs",
-    "ann_lsh_buckets",
-    "ivf_topk",
     "minhash_lsh_neardup",
     "chunk_dedup",
     "neardup_components",
     "salted_skew_agg",
-    "int8_topk",
-    "bm25_rank",
     "stratified_sample",
-    "vocab_topk",
     "decontaminate",
-    "pack_sequences",
     # round-3 additions
     "lsh_jaccard_verify",
     "dsir_resample",
     "canonical_docs",
     "split_assign",
-    "pmi_bigrams",
     "adaptive_quality_cut",
     "source_overlap",
     "domain_cap",
-    "inverted_index",
-    "bpe_pair_counts",
     "char_entropy",
     "curation_report",
     "lsh_containment_verify",

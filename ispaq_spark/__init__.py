@@ -15,7 +15,7 @@ Architecture map (reference file:line -> here):
   * per-group business logic (ispaq/simple_metrics.py)   -> ispaq_spark.pipeline
   * metric math (IRISMustangMetrics R pkg)               -> ispaq_spark.functions
   * CSV/SQLite sink w/ upsert (ispaq/utils.py:157-272)   -> ispaq_spark.sinks
-  * training-data layer (dedup/ANN/BPE/components)       -> ispaq_spark.operators
+  * training-data layer (dedup/components)               -> ispaq_spark.operators
   * composed corpus-curation recipe                      -> ispaq_spark.curation
 Everything is DataFrame/Catalyst-first; Python appears only in Arrow-batched
 pandas UDFs (no per-row Python on the hot path).

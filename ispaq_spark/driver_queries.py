@@ -2,8 +2,8 @@
 SQL) pairs. The library-backed queries run a library operator —
 `operators/`, `curation.py` or `functions/` — so the DuckDB oracle
 certifies the code users run, not a copy of it. The rest are catalogue
-queries: text or embedding operators that exist only here. Of the 33
-queries, 16 are library-backed and 17 are catalogue queries; queries() and
+queries: text operators that exist only here. Of the 24 queries, 14 are
+library-backed and 10 are catalogue queries; queries() and
 oracle_sql() return them in file order. Those that reach no library
 function are listed in `tests/test_driver_contract.py`, which gates that
 no other query skips the library.
@@ -32,7 +32,6 @@ from .curation import (
     quality_filter,
 )
 from .functions.heuristics import with_stopword_langid
-from .operators.bpe import pair_counts, word_frequencies
 from .operators.components import alternating_star_components
 from .operators.dedup import (
     N_MINHASH_DEFAULT,
@@ -48,7 +47,6 @@ from .operators.dedup import (
     simhash,
     word_set,
 )
-from .operators.similarity import lsh_bucket_col, make_planes
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -270,165 +268,6 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ===========================================================================
-# Similarity search over `embeddings`
-# ===========================================================================
-
-
-_LSH_PLANES = make_planes(8, 64)
-
-
-def _dot_sql(vec_expr: str, plane: list[int]) -> str:
-    lit = "[" + ", ".join(str(v) for v in plane) + "]"
-    return (
-        f"list_sum(list_transform(range(1, 65), i -> "
-        f"{vec_expr}[i] * ({lit}::DOUBLE[])[i]))"
-    )
-
-
-@qdef(
-    "ann_lsh_buckets",
-    f"""
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    )
-    SELECT
-      { ' + '.join(f"(CASE WHEN {_dot_sql('v', p)} >= 0 THEN {1 << j} ELSE 0 END)" for j, p in enumerate(_LSH_PLANES)) }
-        AS bucket,
-      count(*) AS n
-    FROM e GROUP BY bucket
-    """,
-)
-def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH bucketing — the scale path for ANN: 8 signed
-    projections pack into a bucket id; search only needs the query's bucket
-    (+ neighbors). Hyperplanes are deterministic (`make_planes`), shared
-    verbatim with the oracle SQL; all-zero vectors have no direction and
-    are left out."""
-    e = t(spark, sf_dir, "embeddings").where(
-        F.exists("embedding", lambda x: x != F.lit(0.0))
-    )
-    return e.groupBy(
-        lsh_bucket_col("embedding", _LSH_PLANES).alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
-# ===========================================================================
-# Similarity search, continued: embedding near-dup + IVF-style ANN
-# ===========================================================================
-
-
-def _cos_cols(lhs: str, rhs: str) -> F.Column:
-    """Cosine over two array columns, JVM-side. CONTRACT: every similarity
-    query excludes zero-norm vectors AT THE SCAN (exists(x != 0), SQL twin
-    len(list_filter(...)) > 0) — a zero vector has no direction, and at
-    10^12 docs empty documents DO produce them; under Spark's default ANSI
-    mode the norm division then kills the whole job with DIVIDE_BY_ZERO
-    while DuckDB yields NaN, so exclusion is the only cross-engine-stable
-    semantics. Found by the hostile fixture (round 5)."""
-    dot = F.aggregate(
-        F.zip_with(lhs, rhs, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nl = F.sqrt(
-        F.aggregate(
-            F.zip_with(lhs, lhs, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    nr = F.sqrt(
-        F.aggregate(
-            F.zip_with(rhs, rhs, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return dot / (nl * nr)
-
-
-@qdef(
-    "ivf_topk",
-    """
-    WITH e AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    ), q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    cent AS (
-      SELECT label, i, avg(v[i]) AS c
-      FROM e CROSS JOIN range(1, 65) t(i) GROUP BY label, i
-    ), qpos AS (
-      SELECT i, qv[i] AS qx FROM q CROSS JOIN range(1, 65) t(i)
-    ), lc AS (
-      SELECT label,
-             sum(c * qx) / (sqrt(sum(c * c)) * sqrt(sum(qx * qx))) AS ccos
-      FROM cent JOIN qpos USING (i) GROUP BY label
-    ), top AS (
-      -- probe selection on the 6dp-ROUNDED centroid cosine: ccos comes
-      -- from avg() aggregates whose accumulation order differs per
-      -- engine, so a raw near-tie could flip the probe set entirely
-      SELECT label FROM lc ORDER BY round(ccos, 6) DESC, label ASC LIMIT 2
-    ), s AS (
-      SELECT a.vec_id,
-             round(list_sum(list_transform(range(1, 65), i -> a.v[i] * q.qv[i]))
-               / (sqrt(list_sum(list_transform(range(1, 65), i -> a.v[i] * a.v[i])))
-                  * sqrt(list_sum(list_transform(range(1, 65), i -> q.qv[i] * q.qv[i])))),
-               6) AS cos
-      FROM e a JOIN top USING (label) CROSS JOIN q
-      WHERE a.vec_id <> 0
-    )
-    SELECT vec_id, cos FROM s ORDER BY cos DESC, vec_id ASC LIMIT 10
-    """,
-)
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: coarse quantizer = per-label centroids (computed
-    relationally via posexplode + hash agg), probe the 2 closest centroids,
-    brute-force only inside those lists. At 10^12 scale the centroid table
-    is broadcast and the fact side is pruned to the probed buckets before
-    any distance math."""
-    e = t(spark, sf_dir, "embeddings").where(
-        F.exists("embedding", lambda x: x != F.lit(0.0))
-    ).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = e.where("vec_id = 0").select(F.col("v").alias("qv"))
-    cent = (
-        e.select("label", F.posexplode("v").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(F.avg("x").alias("c"))
-    )
-    qpos = q.select(F.posexplode("qv").alias("i", "qx"))
-    lc = (
-        cent.join(F.broadcast(qpos), "i")
-        .groupBy("label")
-        .agg(
-            (
-                F.sum(F.col("c") * F.col("qx"))
-                / (
-                    F.sqrt(F.sum(F.col("c") * F.col("c")))
-                    * F.sqrt(F.sum(F.col("qx") * F.col("qx")))
-                )
-            ).alias("ccos")
-        )
-    )
-    # round-before-argmax: centroid cosines derive from avg() partials
-    # whose accumulation order is engine- and partitioning-dependent; the
-    # probe cut must order on the same 6dp value both engines emit
-    top = lc.orderBy(r6("ccos").desc(), F.col("label").asc()).limit(2)
-    a = e.alias("a")
-    cos = _cos_cols("a.v", "qv")
-    return (
-        a.join(F.broadcast(top.select("label")), "label")
-        .where("vec_id <> 0")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", r6(cos).alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
-
-
 _LSH_SQL_BANDS = """
     WITH w AS (
       SELECT doc_id, str_split(text, ' ') AS words FROM documents
@@ -491,7 +330,7 @@ def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # Round-2 additions: C4-style span dedup, near-dup clustering (iterative
-# connected components), skew-salted aggregation, int8-quantized ANN.
+# connected components), skew-salted aggregation.
 # ===========================================================================
 
 
@@ -976,194 +815,6 @@ def q_salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@qdef(
-    "int8_topk",
-    """
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-    ), q8 AS (
-      SELECT vec_id,
-             127.0 / list_max(list_transform(v, x -> abs(x))) AS scale,
-             list_transform(
-               v, x -> CAST(floor(x * (127.0 / list_max(
-                 list_transform(v, y -> abs(y))))) AS BIGINT)) AS q
-      FROM e
-    ), qq AS (SELECT q AS qv, scale AS qs FROM q8 WHERE vec_id = 0),
-    s AS (
-      SELECT q8.vec_id,
-             round(
-               (list_sum(list_transform(range(1, 65),
-                  i -> CAST(q8.q[i] * qq.qv[i] AS DOUBLE))) / (q8.scale * qq.qs))
-               / (sqrt(list_sum(list_transform(range(1, 65),
-                    i -> CAST(q8.q[i] * q8.q[i] AS DOUBLE))) ) / q8.scale
-                  * sqrt(list_sum(list_transform(range(1, 65),
-                      i -> CAST(qq.qv[i] * qq.qv[i] AS DOUBLE))) ) / qq.qs),
-               6) AS cos
-      FROM q8, qq WHERE q8.vec_id <> 0
-    )
-    SELECT vec_id, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10
-    """,
-)
-def q_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """int8-quantized cosine top-k: per-vector symmetric quantization
-    (scale = 127 / max|x|, q_i = floor(x_i * scale)) then cosine over the
-    dequantized vectors. The quantized corpus is 4x smaller than fp32 —
-    at 10^12-embedding scale that is the difference between the ANN index
-    fitting in cluster RAM or not; int8 dot products also SIMD-vectorize
-    4-wide vs fp32 on the same registers. floor() (not round) on both
-    sides: Spark casts float->int by truncation while DuckDB casts by
-    rounding, so the quantizer pins the rounding mode explicitly.
-    Composes with `ivf_topk`/`ann_lsh_buckets` (quantize within each
-    bucket). Brute-force ranking here so the oracle is exact."""
-    e = t(spark, sf_dir, "embeddings").where(
-        F.exists("embedding", lambda x: x != F.lit(0.0))
-    ).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    scale = F.lit(127.0) / F.array_max(F.transform("v", F.abs))
-    q8 = e.select(
-        "vec_id",
-        scale.alias("scale"),
-        F.transform(
-            "v", lambda x: F.floor(x * scale).cast("bigint")
-        ).alias("q"),
-    )
-    qq = q8.where(F.col("vec_id") == 0).select(
-        F.col("q").alias("qv"), F.col("scale").alias("qs")
-    )
-    joined = q8.where(F.col("vec_id") != 0).crossJoin(F.broadcast(qq))
-    dot = F.aggregate(
-        F.zip_with("q", "qv", lambda a, b: (a * b).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_q = F.sqrt(
-        F.aggregate(
-            F.transform("q", lambda a: (a * a).cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    norm_qv = F.sqrt(
-        F.aggregate(
-            F.transform("qv", lambda a: (a * a).cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    cos = (dot / (F.col("scale") * F.col("qs"))) / (
-        (norm_q / F.col("scale")) * (norm_qv / F.col("qs"))
-    )
-    return (
-        joined.select("vec_id", r6(cos).alias("cos"))
-        .orderBy(F.desc("cos"), "vec_id")
-        .limit(10)
-    )
-
-
-_BM25_TERMS = ("spark", "table", "query")
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-
-
-def _bm25_oracle() -> str:
-    tf_cols = ",\n             ".join(
-        f"len(list_filter(ws, x -> x = '{t}')) AS tf{i}"
-        for i, t in enumerate(_BM25_TERMS)
-    )
-    df_cols = ",\n             ".join(
-        f"sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
-        for i in range(len(_BM25_TERMS))
-    )
-    score = " + ".join(
-        f"ln((s.n - s.df{i} + 0.5) / (s.df{i} + 0.5) + 1)"
-        f" * d.tf{i} * ({_BM25_K1} + 1)"
-        f" / (d.tf{i} + {_BM25_K1}"
-        f"    * (1 - {_BM25_B} + {_BM25_B} * d.dl / s.avgdl))"
-        for i in range(len(_BM25_TERMS))
-    )
-    return f"""
-    WITH d AS (
-      SELECT doc_id, len(str_split(text, ' ')) AS dl,
-             {tf_cols}
-      FROM (SELECT doc_id, text, str_split(text, ' ') AS ws
-            FROM documents WHERE text IS NOT NULL)
-    ), s AS (
-      SELECT count(*) AS n, avg(dl) AS avgdl,
-             {df_cols}
-      FROM d
-    )
-    SELECT d.doc_id, round({score}, 6) AS bm25
-    FROM d, s
-    WHERE d.tf0 + d.tf1 + d.tf2 > 0
-    ORDER BY bm25 DESC, d.doc_id LIMIT 20
-    """
-
-
-@qdef("bm25_rank", _bm25_oracle())
-def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 ranked retrieval for a fixed term set — the relevance-scoring
-    primitive behind quality-weighted corpus curation (retrieve docs about
-    a topic, upweight them in the training mixture). Okapi BM25 with
-    k1=1.2, b=0.75.
-
-    Scale shape: per-document term frequencies and length are map-side
-    array ops; the corpus-level statistics (N, avgdl, per-term df) reduce
-    to ONE tiny row that broadcasts back — so the whole query is one
-    partial-aggregating reduce plus a map, no explode of the posting list
-    and no join keyed on terms (which would hot-spot on stopword-frequency
-    terms). Grafts the reference's corpus-normalized metric scoring
-    (ispaq/simple_metrics.py:60-101: per-target values scaled by
-    network-wide statistics)."""
-    d = (
-        t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select("doc_id", F.split("text", " ").alias("ws"))
-    )
-    def _eq(tm: str):
-        # NB: a two-parameter lambda here would be bound as (element, index)
-        # by the higher-order-function API, not as a default-arg closure.
-        return lambda x: x == F.lit(tm)
-
-    for i, term in enumerate(_BM25_TERMS):
-        d = d.withColumn(f"tf{i}", F.size(F.filter("ws", _eq(term))))
-    d = d.withColumn("dl", F.size("ws")).drop("ws")
-    stats = d.agg(
-        F.count("*").alias("n"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(len(_BM25_TERMS))
-        ],
-    )
-    j = d.crossJoin(F.broadcast(stats))
-    score = None
-    for i in range(len(_BM25_TERMS)):
-        idf = F.log(
-            (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5) + 1
-        )
-        tf = F.col(f"tf{i}")
-        part = (
-            idf
-            * tf
-            * (_BM25_K1 + 1)
-            / (
-                tf
-                + _BM25_K1
-                * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-            )
-        )
-        score = part if score is None else score + part
-    return (
-        j.where(sum(F.col(f"tf{i}") for i in range(len(_BM25_TERMS))) > 0)
-        .select("doc_id", r6(score).alias("bm25"))
-        .orderBy(F.desc("bm25"), "doc_id")
-        .limit(20)
-    )
-
-
 # per-language sampling rates out of 100 (training-mixture weights)
 _SAMPLE_RATES = {"en": 30, "de": 60, "fr": 60}
 _SAMPLE_DEFAULT_RATE = 90
@@ -1213,55 +864,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @qdef(
-    "vocab_topk",
-    """
-    WITH tok AS (
-      SELECT lang, unnest(str_split(text, ' ')) AS token
-      FROM documents WHERE text IS NOT NULL
-    ), counts AS (
-      SELECT lang, token, count(*) AS cnt
-      FROM tok GROUP BY lang, token
-    ), ranked AS (
-      SELECT lang, token, cnt,
-             row_number() OVER (PARTITION BY lang
-                                ORDER BY cnt DESC, token ASC) AS rk
-      FROM counts
-    )
-    SELECT lang, token, cnt, CAST(rk AS BIGINT) AS rk
-    FROM ranked WHERE rk <= 10
-    """,
-)
-def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language top-K vocabulary — the tokenizer-training primitive
-    (BPE/WordPiece vocab induction starts from exactly this table).
-
-    Scale shape: explode is map-side; the first groupBy map-side-combines
-    so the shuffle carries (lang, token, partial_count) — vocab-sized, not
-    corpus-sized; the top-K window then runs over the COUNT table (again
-    vocab-sized), partitioned by lang. Nothing in the plan is proportional
-    to corpus length after the first partial aggregation. Deterministic
-    tie-break (count desc, token asc) so the oracle hash is stable.
-    Grafts the reference's per-target value ranking
-    (ispaq/simple_metrics.py:247-258)."""
-    toks = (
-        t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select("lang", F.explode(F.split("text", " ")).alias("token"))
-    )
-    counts = toks.groupBy("lang", "token").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    rk = F.row_number().over(
-        Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("token"))
-    )
-    return (
-        counts.withColumn("rk", rk.cast("bigint"))
-        .where(F.col("rk") <= 10)
-        .select("lang", "token", "cnt", "rk")
-    )
-
-
-@qdef(
     "decontaminate",
     """
     WITH bench AS (
@@ -1298,80 +900,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.where(F.col("doc_id") % 97 == 0)
     cand = docs.where(F.col("doc_id") % 97 != 0)
     return contamination_hits(cand, bench, 3).distinct()
-
-
-_PACK_BUDGET = 256  # tokens per training sequence (sandbox-sized)
-_PACK_BUCKET_DOCS = 128  # docs per packing window partition (bounds skew)
-
-
-@qdef(
-    "pack_sequences",
-    f"""
-    WITH toks AS (
-      SELECT doc_id, lang, len(str_split(text, ' ')) AS n_tokens,
-             CAST(floor(doc_id / {_PACK_BUCKET_DOCS}) AS BIGINT) AS bkt
-      FROM documents WHERE text IS NOT NULL
-    ), runs AS (
-      SELECT doc_id, lang, n_tokens, bkt,
-             sum(n_tokens) OVER (PARTITION BY lang, bkt ORDER BY doc_id
-                                 ROWS UNBOUNDED PRECEDING) AS cum
-      FROM toks
-    )
-    SELECT doc_id, lang, CAST(n_tokens AS BIGINT) AS n_tokens,
-           bkt * 4294967296
-             + CAST(floor((cum - n_tokens) / {_PACK_BUDGET}) AS BIGINT)
-             AS pack_id
-    FROM runs
-    """,
-)
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing: assign documents to fixed token-budget training
-    sequences (per language, in deterministic doc_id order) via a running
-    token count — the cumsum approximation of greedy packing (a doc may
-    straddle a budget boundary and be split at tokenization time), which
-    is what production packers do anyway — exact greedy is inherently
-    sequential.
-
-    Scale shape: ONE window over the token-count table, partitioned by
-    (lang, doc_id-bucket) — NOT lang alone, because at corpus scale the
-    dominant language is most of the corpus and a lang-only window sorts
-    it in one task. The bucket bounds every window instance to
-    _PACK_BUCKET_DOCS docs; packs never span a bucket boundary (one extra
-    partially-filled pack per bucket, the same boundary-split semantics as
-    the budget itself). pack_id stays globally unique within a language
-    via the bucket prefix: bucket * 2^32 + local pack index (valid while a
-    bucket's token total < budget * 2^32 — at 128 docs/bucket that allows
-    ~4e12 tokens per bucket). Grafts the reference's day-windowed segment
-    assembly (ispaq/simple_metrics.py:83-101)."""
-    toks = (
-        t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            "lang",
-            F.size(F.split("text", " ")).alias("n_tokens"),
-            F.floor(F.col("doc_id") / _PACK_BUCKET_DOCS)
-            .cast("bigint")
-            .alias("bkt"),
-        )
-    )
-    w = (
-        Window.partitionBy("lang", "bkt")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("n_tokens").over(w)
-    return toks.select(
-        "doc_id",
-        "lang",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        (
-            F.col("bkt") * F.lit(4294967296).cast("bigint")
-            + F.floor((cum - F.col("n_tokens")) / _PACK_BUDGET)
-        )
-        .cast("bigint")
-        .alias("pack_id"),
-    )
 
 
 # ===========================================================================
@@ -1600,90 +1128,6 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @qdef(
-    "pmi_bigrams",
-    """
-    WITH w AS (
-      SELECT str_split(text, ' ') AS words FROM documents
-    ), bg AS (
-      SELECT unnest(list_transform(range(1, len(words)),
-                     i -> words[i] || ' ' || words[i+1])) AS bigram
-      FROM w WHERE len(words) >= 2
-    ), uni AS (
-      SELECT unnest(words) AS w FROM w
-    ), bc AS (
-      SELECT bigram, count(*) AS c_ab FROM bg GROUP BY bigram
-    ), uc AS (
-      SELECT w, count(*) AS c FROM uni GROUP BY w
-    ), nb AS (SELECT sum(c_ab) AS n_b FROM bc),
-    nu AS (SELECT sum(c) AS n_u FROM uc),
-    scored AS (
-      SELECT bc.bigram, bc.c_ab,
-             ln(bc.c_ab / nb.n_b) - ln(ua.c / nu.n_u) - ln(ub.c / nu.n_u)
-               AS pmi
-      FROM bc, nb, nu
-      JOIN uc ua ON ua.w = str_split(bc.bigram, ' ')[1]
-      JOIN uc ub ON ub.w = str_split(bc.bigram, ' ')[2]
-      WHERE bc.c_ab >= 5
-    )
-    SELECT bigram, CAST(c_ab AS BIGINT) AS c_ab, round(pmi, 6) AS pmi
-    FROM scored ORDER BY round(pmi, 6) DESC, bigram LIMIT 50
-    """,
-)
-def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation mining: top-50 bigrams by pointwise mutual information
-    ln p(ab) - ln p(a) - ln p(b), minimum support 5 — the vocabulary/
-    tokenizer-analysis primitive (which word pairs behave as one token).
-    Companion to `vocab_topk` in the tokenizer-training family.
-
-    Scale shape: bigram generation is map-side (slice over the token
-    array); bigram and unigram counts are each ONE map-side-combined
-    aggregate whose output is vocab-sized (Zipf-sublinear in corpus
-    size), so the two count joins broadcast; totals are single rows; the
-    top-k is TakeOrderedAndProject. If vocab ever outgrows broadcast the
-    joins degrade gracefully to shuffle-hash on the word key. Tie-break
-    on the rounded PMI then bigram text keeps the k-cutoff deterministic
-    cross-engine. Grafts the reference's channel-pair metric family
-    (correlationMetric.R pairwise statistics) onto the text layer."""
-    d = t(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    bg = d.where(n >= 2).select(
-        F.explode(shingles_of(toks, 2)).alias("bigram")
-    )
-    uni = d.select(F.explode(toks).alias("w"))
-    bc = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c_ab"))
-    uc = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    nb = bc.agg(F.sum("c_ab").alias("n_b"))
-    nu = uc.agg(F.sum("c").alias("n_u"))
-    parts = F.split("bigram", " ")
-    scored = (
-        bc.where(F.col("c_ab") >= 5)
-        .withColumn("wa", parts.getItem(0))
-        .withColumn("wb", parts.getItem(1))
-        .join(
-            F.broadcast(uc.select(F.col("w").alias("wa"), F.col("c").alias("ca"))),
-            "wa",
-        )
-        .join(
-            F.broadcast(uc.select(F.col("w").alias("wb"), F.col("c").alias("cb"))),
-            "wb",
-        )
-        .crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(nu))
-        .select(
-            "bigram",
-            F.col("c_ab").cast("bigint").alias("c_ab"),
-            r6(
-                F.log(F.col("c_ab") / F.col("n_b"))
-                - F.log(F.col("ca") / F.col("n_u"))
-                - F.log(F.col("cb") / F.col("n_u"))
-            ).alias("pmi"),
-        )
-    )
-    return scored.orderBy(F.desc("pmi"), "bigram").limit(50)
-
-
-@qdef(
     "adaptive_quality_cut",
     """
     WITH th AS (
@@ -1809,104 +1253,6 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_docs").cast("bigint").alias("n_docs"),
         F.count(F.lit(1)).cast("bigint").alias("n_kept"),
         F.sum("n_chars").cast("bigint").alias("kept_chars"),
-    )
-
-
-@qdef(
-    "inverted_index",
-    """
-    WITH tok AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_filter(str_split(text, ' '),
-                                              w -> len(w) > 0))) AS token
-      FROM documents
-    ), r AS (
-      SELECT token, doc_id,
-             row_number() OVER (PARTITION BY token ORDER BY doc_id) AS rn
-      FROM tok
-    )
-    SELECT token,
-           CAST(count(*) AS BIGINT) AS df,
-           array_to_string(list_sort(list(doc_id) FILTER (WHERE rn <= 20)),
-                           ',') AS postings
-    FROM r GROUP BY token
-    """,
-)
-def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted-index build: token -> document frequency + a capped,
-    id-ordered posting list (first 20 doc_ids) — the materialization stage
-    of a retrieval index, complementing `bm25_rank` (which scores without
-    ever building postings). Postings are emitted as a joined string so
-    the cross-engine value hash is representation-stable.
-
-    Scale shape: per-doc tokenize+distinct is in-row (explode of
-    array_distinct — no pre-shuffle blowup from repeated tokens); then ONE
-    hash exchange on token feeds both the rank-window and the final
-    aggregate (same key → Catalyst reuses the partitioning, no second
-    exchange). The row_number cap bounds what collect_list materializes
-    per token — a stop-word token at 10^12 docs contributes 20 ids, not a
-    multi-GB list; df still counts every posting. Grafts the reference's
-    metric-store index tables (ispaq/utils.py:157-272) lifted from
-    metadata keys to content tokens."""
-    d = t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split("text", " "), lambda w: F.length(w) > 0)
-            )
-        ).alias("token"),
-    )
-    rn = F.row_number().over(Window.partitionBy("token").orderBy("doc_id"))
-    r = toks.withColumn("rn", rn)
-    return r.groupBy("token").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df"),
-        F.array_join(
-            F.array_sort(
-                F.collect_list(F.when(F.col("rn") <= 20, F.col("doc_id")))
-            ),
-            ",",
-        ).alias("postings"),
-    )
-
-
-@qdef(
-    "bpe_pair_counts",
-    """
-    WITH w AS (
-      SELECT unnest(str_split(text, ' ')) AS word FROM documents
-    ), f AS (
-      SELECT word, CAST(count(*) AS BIGINT) AS freq
-      FROM w WHERE len(word) >= 2 GROUP BY word
-    ), p AS (
-      SELECT unnest(list_transform(range(1, len(word)),
-                                   i -> substr(word, i, 2))) AS pair,
-             freq
-      FROM f
-    )
-    SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt
-    FROM p GROUP BY pair
-    ORDER BY cnt DESC, pair LIMIT 20
-    """,
-)
-def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First iteration of BPE tokenizer training: adjacent character-pair
-    counts weighted by word frequency, top-20 by (count, pair) — the
-    statistic a BPE merge round computes (`operators/bpe.py::pair_counts`).
-    Deterministic total order so the LIMIT is stable cross-engine.
-
-    Scale shape: the corpus collapses to the word-frequency table first
-    (map-side partial agg → vocab-sized shuffle), so pair generation runs
-    on |vocab| rows, not |corpus|; the pair aggregate is bounded by
-    alphabet² and the final top-k is a TakeOrdered (no global sort)."""
-    vocab = word_frequencies(t(spark, sf_dir, "documents")).select(
-        "freq", F.split("word", "").alias("sym")
-    )
-    return (
-        pair_counts(vocab)
-        .select(F.concat("a", "b").alias("pair"), "cnt")
-        .orderBy(F.desc("cnt"), "pair")
-        .limit(20)
     )
 
 

@@ -1,4 +1,3 @@
 """Distributed operators beyond the reference's own set: exact and
-MinHash-LSH dedup (`curate_corpus` runs it), connected components,
-hyperplane-LSH similarity buckets and the BPE pair statistics.
+MinHash-LSH dedup (`curate_corpus` runs it) and connected components.
 driver_queries.py certifies each one against a DuckDB oracle."""

@@ -80,18 +80,14 @@ def _output_columns(produced: frozenset[str]) -> list:
     if "extracted_text" in produced:
         flag = F.when(F.col("extracted_text").isNull(), F.lit(-9)).otherwise(flag)
     return [
-        F.col("url").cast(dict_field_type("url")),
+        F.col("url").cast(_TYPES["url"]),
         F.date_format("warc_ts", "yyyy-MM-dd").alias("ds"),
-        *[F.col(c).cast(dict_field_type(c)) for c in names],
-        flag.cast(dict_field_type("quality_flag")).alias("quality_flag"),
+        *[F.col(c).cast(_TYPES[c]) for c in names],
+        flag.cast(_TYPES["quality_flag"]).alias("quality_flag"),
     ]
 
 
 _TYPES = {f.name: f.dataType.simpleString() for f in DOC_METRICS.fields}
-
-
-def dict_field_type(name: str) -> str:
-    return _TYPES[name]
 
 
 def rollup_lineage(metrics: DataFrame) -> DataFrame:

@@ -24,9 +24,12 @@ from __future__ import annotations
 import datetime as dt
 import random
 from functools import lru_cache
-from typing import Iterator
+from typing import TYPE_CHECKING, Iterator
 
 from .contract import LANGS, STOPWORDS, TOX_LEXICON
+
+if TYPE_CHECKING:
+    from .reference_impl import NgramLM
 
 SEED = 42
 LM_CORPUS_SEED = 777
@@ -205,7 +208,7 @@ def lm_corpus(n: int = 2000, seed: int = LM_CORPUS_SEED) -> tuple[str, ...]:
 
 
 @lru_cache(maxsize=None)
-def default_model() -> dict:
+def default_model() -> NgramLM:
     from .reference_impl import train_lm
 
     return train_lm(list(lm_corpus()))

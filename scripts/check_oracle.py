@@ -21,7 +21,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = ("documents", "embeddings")
+TABLES = ("documents",)
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:

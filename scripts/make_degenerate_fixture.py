@@ -5,17 +5,13 @@ The hostile fixture (make_hostile_fixture.py) concentrates VALUE edge
 cases at normal cardinality; this one concentrates CARDINALITY edge
 cases — the shapes a per-day pipeline is guaranteed to hit in production
 (a nearly-empty day partition, a re-crawl day that is 100% duplicates, a
-single-source day) and that tiny-k algorithms (IVF centroids, LSH banding,
-stratified cuts) must survive without crashing or diverging from the SQL
-oracle:
+single-source day) and that tiny-k algorithms (LSH banding, stratified
+cuts) must survive without crashing or diverging from the SQL oracle:
 
   documents   6 rows: one 3-copy exact-duplicate cluster spanning two
               sources (the all-duplicate day), one single-token doc, one
               ordinary doc, one NULL text — every dedup/cluster/sample
               query runs with fewer rows than its usual strata/buckets.
-  embeddings  4 rows: one exact-duplicate pair + two ordinary vectors —
-              fewer points than the IVF trainer's usual centroid count
-              and fewer candidates than top-k asks for (k > n).
 
 Everything is sliced or constructed deterministically from
 /root/testdata/sf0.001 — no wall clock, no randomness. Output defaults to
@@ -80,16 +76,6 @@ def build_documents(base: pa.Table) -> pa.Table:
     return pa.Table.from_arrays(cols, schema=base.schema)
 
 
-def build_embeddings(base: pa.Table) -> pa.Table:
-    emb = base.slice(0, 4).to_pydict()
-    # rows 0 and 1 become an exact-duplicate pair (similarity ties at 1.0)
-    emb["embedding"][1] = list(emb["embedding"][0])
-    cols = [
-        pa.array(emb[f.name], type=f.type) for f in base.schema
-    ]
-    return pa.Table.from_arrays(cols, schema=base.schema)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
@@ -107,7 +93,6 @@ def main() -> None:
     os.makedirs(args.out_dir, exist_ok=True)
     builders = {
         "documents": build_documents,
-        "embeddings": build_embeddings,
     }
     for name, build in builders.items():
         base = load(name)

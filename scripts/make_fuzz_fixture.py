@@ -3,11 +3,10 @@
 The hostile fixture hand-places each cross-engine hazard once, at a fixed
 row, in a fixed combination. This fuzzer draws the SAME hazard classes
 (NULL/empty/whitespace/unicode/metachar texts, duplicate clusters,
-duplicate and near-zero embeddings, skewed hot keys) but places them at
-seeded-random rows with seeded-random parameters, so every seed exercises
-a different interaction mix — a NULL text that lands in the densest LSH
-band, a duplicate pair whose copies fall in the same stratified-sample
-cell. Schemas and value domains stay
+skewed hot keys) but places them at seeded-random rows with seeded-random
+parameters, so every seed exercises a different interaction mix — a NULL
+text that lands in the densest LSH band, a duplicate pair whose copies
+fall in the same stratified-sample cell. Schemas and value domains stay
 identical to the base fixture so all registered queries apply, and the
 invariants the repo's oracles assume are preserved:
 
@@ -88,28 +87,6 @@ def fuzz_documents(t: pa.Table, rng: random.Random) -> pa.Table:
     return pa.Table.from_pandas(df, preserve_index=False)
 
 
-def fuzz_embeddings(t: pa.Table, rng: random.Random) -> pa.Table:
-    df = t.to_pandas()
-    n = len(df)
-    idx = list(range(n))
-    # exact-duplicate pairs (similarity ties)
-    for _ in range(rng.randint(1, 4)):
-        a, b = rng.sample(idx, 2)
-        df.at[b, "embedding"] = df.at[a, "embedding"]
-    # near-zero-scale and large-scale vectors (within the 1e6 cap)
-    for i in rng.sample(idx, rng.randint(1, 3)):
-        v = np.asarray(df.at[i, "embedding"], dtype=np.float64)
-        df.at[i, "embedding"] = (v * 1e-6).tolist()
-    for i in rng.sample(idx, rng.randint(1, 3)):
-        v = np.asarray(df.at[i, "embedding"], dtype=np.float64)
-        df.at[i, "embedding"] = (v * 1e3).tolist()
-    # label skew
-    hot_label = df.loc[rng.randrange(n), "label"]
-    for i in rng.sample(idx, int(rng.uniform(0.1, 0.4) * n)):
-        df.loc[i, "label"] = hot_label
-    return pa.Table.from_pandas(df, preserve_index=False)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
@@ -126,7 +103,6 @@ def main() -> None:
     os.makedirs(out, exist_ok=True)
     fuzzers = {
         "documents": fuzz_documents,
-        "embeddings": fuzz_embeddings,
     }
     for name, fuzz in fuzzers.items():
         # each table draws from its own streams, keyed on (seed, name), so

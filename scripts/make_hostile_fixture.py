@@ -15,9 +15,6 @@ cases while keeping every schema and value domain identical to
               spanning sources; ONE 10^6-token document built from a
               3-token cycle + unique tail (repeat structure dedup must
               find, with O(n) not O(n^2) first-occurrence probes).
-  embeddings  an all-zero vector (zero-norm cosine), an exact duplicate
-              pair (similarity ties), a 1e-30-scale and a 1e6-scale
-              vector (float32 under/overflow in dot products).
 
 Everything is deterministic (fixed seed, no wall clock). Output dir
 defaults to testdata_hostile/ at the repo root; run the full sweep with
@@ -31,7 +28,6 @@ from __future__ import annotations
 import argparse
 import os
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -113,7 +109,7 @@ def build_documents(base: pa.Table) -> pa.Table:
     # full texts per candidate pair, and a 4.7MB text times hundreds of
     # same-block partners is a deliberate OOM, not a fairness test — the
     # singleton block keeps the giant doc on every LINEAR path (token
-    # explodes, gram grids, LSH signatures, ppl, BM25) while pair oracles
+    # explodes, gram grids, LSH signatures, ppl) while pair oracles
     # see it only as a block of one.
     giant = "spam ham eggs " * 333_330 + " ".join(
         f"uniq{k}" for k in range(10)
@@ -134,18 +130,6 @@ def build_documents(base: pa.Table) -> pa.Table:
     )
 
 
-def build_embeddings(base: pa.Table) -> pa.Table:
-    df = base.to_pandas()
-    dim = len(df.loc[0, "embedding"])
-    df.at[200, "embedding"] = np.zeros(dim, dtype=np.float32)  # zero norm
-    df.at[202, "embedding"] = np.array(
-        df.loc[201, "embedding"], dtype=np.float32
-    )  # exact duplicate pair 201/202
-    df.at[203, "embedding"] = np.full(dim, 1e-30, dtype=np.float32)
-    df.at[204, "embedding"] = np.full(dim, 1e6, dtype=np.float32)
-    return pa.Table.from_pandas(df, preserve_index=False)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
@@ -160,7 +144,6 @@ def main() -> None:
     os.makedirs(out, exist_ok=True)
     builders = {
         "documents": build_documents,
-        "embeddings": build_embeddings,
     }
     for name, fn in builders.items():
         base = load(name)

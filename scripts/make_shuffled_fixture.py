@@ -47,7 +47,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # position in the list, so the committed fixture reproduces byte for byte.
 SEEDS = {
     "documents": 1008,
-    "embeddings": 1009,
 }
 
 

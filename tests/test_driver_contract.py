@@ -143,17 +143,11 @@ def _library_calls(fn, seen=None) -> set[str]:
 CATALOGUE = frozenset(
     {
         "adaptive_quality_cut",
-        "bm25_rank",
         "char_entropy",
         "chunk_dedup",
         "dup_cluster_hist",
-        "int8_topk",
-        "inverted_index",
-        "ivf_topk",
-        "pack_sequences",
         "salted_skew_agg",
         "source_overlap",
-        "vocab_topk",
     }
 )
 

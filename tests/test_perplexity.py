@@ -10,11 +10,10 @@ from ispaq_spark.reference_impl import perplexity, train_lm
 from ispaq_spark.synthesize import lm_corpus
 
 
-def test_collected_model_size_bounded(spark):
-    """The prune keeps the collected table an order of magnitude below the
-    corpus-sized raw distinct-gram table at every corpus size (singleton
-    5-grams — the corpus-sized tail — never reach the driver). Guards the
-    train-path-collect scale contract."""
+def test_collected_model_size_bounded():
+    """The pruned NgramLM stays an order of magnitude below the
+    `min_count=1` one at every corpus size: the singleton grams, the
+    corpus-sized tail, never enter the model table."""
     for n in (150, 600):
         corpus = list(lm_corpus(n))
         pruned = train_lm(corpus)

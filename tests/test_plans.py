@@ -138,34 +138,11 @@ def test_with_heuristics_plans_one_arrow_stage(spark):
     assert "xxhash64" not in plan and "lambdafunction" not in plan
 
 
-def test_ivf_prunes_before_distance(spark):
-    """IVF ANN must join the probe labels BEFORE computing cosine: the
-    optimized plan joins on label with the broadcast probe set."""
-    plan = plan_of(dq.queries()["ivf_topk"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_bm25_stats_broadcast(spark):
-    """Corpus statistics (N, avgdl, per-term df) must reach the scoring map
-    as a broadcast single row, never a shuffle join keyed on anything."""
-    plan = plan_of(dq.queries()["bm25_rank"](spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_stratified_sample_no_shuffle(spark):
     """Hash-gated sampling is a pure scan+filter: zero exchanges, so it
     composes into any downstream stage without a barrier."""
     plan = plan_of(dq.queries()["stratified_sample"](spark, SF_DIR))
     assert "Exchange" not in plan
-
-
-def test_int8_query_vector_broadcast(spark):
-    """The quantized query vector rides a broadcast; the corpus side never
-    shuffles for the ranking (only the final top-k exchange)."""
-    plan = plan_of(dq.queries()["int8_topk"](spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_chunk_dedup_ranks_on_hash_key(spark):
@@ -237,36 +214,6 @@ def test_decontaminate_broadcast_semi_join(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_vocab_topk_partial_aggregation(spark):
-    """The token count must map-side combine before its shuffle (the
-    shuffle carries vocab-sized partials, never one row per token
-    instance) and the top-K window adds exactly one more exchange."""
-    plan = plan_of(dq.queries()["vocab_topk"](spark, SF_DIR))
-    assert plan.count("HashAggregate") >= 2
-    assert plan.count("Exchange") <= 2
-
-
-def test_pack_sequences_single_window_shuffle(spark):
-    """Sequence packing is one window over the token-count table: a single
-    exchange on the partition key, no joins, no iteration."""
-    plan = plan_of(dq.queries()["pack_sequences"](spark, SF_DIR))
-    assert plan.count("Exchange") == 1
-    assert "Join" not in plan
-
-
-def test_pack_sequences_window_key_includes_bucket(spark):
-    """The packing window must partition on (lang, doc_id-bucket), not lang
-    alone: a lang-only window sorts the dominant language's whole corpus in
-    ONE task at scale. Gate the exchange key itself."""
-    import re
-
-    plan = plan_of(dq.queries()["pack_sequences"](spark, SF_DIR))
-    m = re.search(r"hashpartitioning\(([^)]*)\)", plan)
-    assert m, plan
-    keys = m.group(1)
-    assert "lang" in keys and "bkt" in keys, keys
-
-
 def test_dsir_scoring_join_is_broadcast_topk_not_sort(spark):
     """dsir_resample: the 64-row log-ratio table must broadcast back onto
     the token stream (a shuffled join would repartition the whole corpus
@@ -297,15 +244,6 @@ def test_split_assign_map_side_only(spark):
     assert plan.count("Exchange") == 1
 
 
-def test_pmi_joins_broadcast_topk_not_sort(spark):
-    """pmi_bigrams: vocab-sized count tables must broadcast onto the
-    bigram counts, and the top-k must be TakeOrderedAndProject — a global
-    Sort of all bigrams or a shuffled vocab join is the scale failure."""
-    plan = plan_of(dq.queries()["pmi_bigrams"](spark, SF_DIR))
-    assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_adaptive_cut_threshold_broadcast(spark):
     """adaptive_quality_cut: the per-lang percentile table is |langs| rows
     and must broadcast back; the corpus shuffles only on the lang key."""
@@ -321,23 +259,6 @@ def test_source_overlap_hash_equi_join(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "HashJoin" in plan or "SortMergeJoin" in plan
-
-
-def test_inverted_index_single_exchange(spark):
-    """inverted_index: the rank window and the final aggregate share the
-    token hash partitioning — exactly ONE exchange in the whole plan (a
-    second would mean the window sort's distribution isn't being reused)."""
-    plan = plan_of(dq.queries()["inverted_index"](spark, SF_DIR))
-    assert plan.count("Exchange") == 1, plan
-
-
-def test_bpe_pair_counts_vocab_collapse_then_takeordered(spark):
-    """bpe_pair_counts: corpus collapses to the word-vocab aggregate before
-    pair generation (two exchanges total: word agg, pair agg) and the
-    top-20 is a TakeOrdered, not a global sort."""
-    plan = plan_of(dq.queries()["bpe_pair_counts"](spark, SF_DIR))
-    assert plan.count("Exchange") == 2, plan
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_char_entropy_exchange_budget(spark):

@@ -1,17 +1,14 @@
 """Round-2 operators: C4-style span dedup, near-dup connected components,
-skew-salted aggregation, int8-quantized cosine — edge cases the sf
-fixtures don't exercise (multi-hop chains, fully duplicated documents)."""
+skew-salted aggregation — edge cases the sf fixtures don't exercise
+(multi-hop chains, fully duplicated documents)."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from ispaq_spark.driver_queries import (
     q_chunk_dedup,
-    q_int8_topk,
     q_neardup_components,
     q_salted_skew_agg,
 )
@@ -113,38 +110,3 @@ def test_salted_agg_matches_plain(spark, chain_dir):
     for s in plain:
         assert salted[s]["n_docs"] == plain[s]["n_docs"]
         assert salted[s]["total_chars"] == plain[s]["total_chars"]
-
-
-@pytest.fixture(scope="module")
-def emb_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("emb"))
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.5], 0),  # query
-        (1, [0.9, 0.1, 0.0, 0.45], 0),  # near-parallel -> top-1
-        (2, [0.0, 1.0, 0.0, 0.0], 1),  # orthogonal-ish
-        (3, [-1.0, 0.0, 0.0, -0.5], 1),  # antipodal
-        (4, [0.8, 0.0, 0.3, 0.4], 0),
-    ]
-    _write(
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        ),
-        d,
-        "embeddings",
-    )
-    return d
-
-
-def test_int8_cosine_close_to_exact(spark, emb_dir):
-    out = q_int8_topk(spark, emb_dir).collect()
-    assert [r["vec_id"] for r in out][:2] == [1, 4]  # ranking preserved
-    # quantized cosine within int8 tolerance of the exact value
-    import numpy as np
-
-    vecs = {1: [0.9, 0.1, 0.0, 0.45], 4: [0.8, 0.0, 0.3, 0.4]}
-    q = np.array([1.0, 0.0, 0.0, 0.5])
-    for r in out:
-        if r["vec_id"] in vecs:
-            v = np.array(vecs[r["vec_id"]])
-            exact = float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q)))
-            assert math.isclose(r["cos"], exact, abs_tol=0.02)
