@@ -1,10 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry()    — flagship: the quality-filter metric stage over `documents`.
-queries()  — the 24 queries of ispaq_spark/driver_queries.py, in file
+queries()  — the 23 queries of ispaq_spark/driver_queries.py, in file
              order: library operators certified against DuckDB (dedup,
-             curation, connected components, langid) and the remaining
-             text catalogue queries.
+             curation, connected components, the stopword vote) and the
+             remaining text catalogue queries.
 oracle_sql() — DuckDB-equivalent SQL per query.
 """
 
@@ -18,31 +18,29 @@ from ispaq_spark import driver_queries as _dq
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: heuristic quality metrics + langid + keep decision over the
-    documents table (the engine's core metric-set stage). The metrics come
-    from one Arrow stage running reference_impl.heuristic_metrics (the
-    pipeline's own function); the stopword langid and the keep rule are
-    Catalyst expressions. Data dir defaults to sf0.001 and is overridable
-    via SPARK_GRAFT_ENTRY_SF_DIR for driver reuse at other scale factors."""
+    """Flagship: heuristic quality metrics + stopword langid + keep decision
+    over the documents table (the engine's core metric-set stage). The
+    metrics and the vote come from one Arrow stage running
+    reference_impl.heuristic_metrics (the pipeline's own function) and
+    reference_impl.langid; the keep rule is a Catalyst expression. Data dir
+    defaults to sf0.001 and is overridable via SPARK_GRAFT_ENTRY_SF_DIR for
+    driver reuse at other scale factors."""
     import os
 
     from pyspark.sql import functions as F
 
-    from ispaq_spark.functions.heuristics import (
-        with_heuristics,
-        with_stopword_langid,
-    )
+    from ispaq_spark.functions.heuristics import STOPWORD_LANG, with_heuristics
 
     sf_dir = os.environ.get("SPARK_GRAFT_ENTRY_SF_DIR", "/root/testdata/sf0.001")
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    h = with_stopword_langid(with_heuristics(d, "text"), "text")
+    h = with_heuristics(d, "text")
     return h.select(
         "doc_id",
         "lang",
         "word_count",
         F.round("mean_word_len", 6).alias("mean_word_len"),
         "max_word_len",
-        "pred_lang",
+        F.col(STOPWORD_LANG).alias("pred_lang"),
         F.round("stopword_ratio", 6).alias("stopword_ratio"),
         F.round("dup_5gram_frac", 6).alias("dup_5gram_frac"),
         (

@@ -43,7 +43,6 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_QUERIES = (
     "langid_confusion",
     "minhash_signatures",
-    "simhash16",
     "jaccard_pairs",
     "minhash_lsh_neardup",
     "chunk_dedup",
@@ -82,7 +81,7 @@ def main() -> None:
     from ispaq_spark import driver_queries as dq
     from ispaq_spark.pipeline import run_pipeline, rollup_lineage
     from ispaq_spark.session import get_spark
-    from ispaq_spark.synthesize import default_model
+    from ispaq_spark.synthesize import default_model, pages_df
 
     sf = sf_of(SF_DIR)
     spark = get_spark(
@@ -115,14 +114,16 @@ def main() -> None:
     gen_script = (
         "import sys; sys.path.insert(0, {repo!r})\n"
         "from ispaq_spark.session import get_spark\n"
-        "from ispaq_spark.synthesize import pages_df\n"
+        "from {gen_module} import {gen}\n"
         "spark = get_spark(app_name='bench_gen', master='local[{cpus}]')\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
-        "pages_df(spark, {n}, partitions={parts}).write.mode('overwrite')"
+        "{gen}(spark, {n}, partitions={parts}).write.mode('overwrite')"
         ".parquet({out!r})\n"
         "spark.stop()\n"
     ).format(
         repo=os.path.dirname(os.path.abspath(__file__)),
+        gen_module=pages_df.__module__,
+        gen=pages_df.__name__,
         cpus=CPUS,
         n=n_docs,
         parts=CPUS * 4,

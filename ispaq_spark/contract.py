@@ -62,9 +62,12 @@ THRESHOLDS = {
 TOX_LEXICON: tuple[str, ...] = ("frak", "gorram", "smeg", "drek", "felgercarb")
 
 # (name, pattern, replacement) — patterns restricted to constructs with
-# identical semantics in Python `re` and Java regex (ASCII classes, digit
-# lookarounds instead of \b next to punctuation, (?:)). Order is part of the
-# contract: each rule sees the previous rule's output.
+# identical semantics in Python `re` and Java regex: ASCII classes, (?:),
+# and lookarounds on an explicit ASCII class instead of \b, whose word
+# characters differ between the engines on non-ASCII text (Java counts ²,
+# ½ and Ⅻ as non-word and a combining mark after a letter as word; Python
+# the reverse). Order is part of the contract: each rule sees the previous
+# rule's output.
 SCRUB_RULES: tuple[tuple[str, str, str], ...] = (
     ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
     ("ssn", r"(?<![0-9])[0-9]{3}-[0-9]{2}-[0-9]{4}(?![0-9])", "<SSN>"),
@@ -74,7 +77,11 @@ SCRUB_RULES: tuple[tuple[str, str, str], ...] = (
         "<PHONE>",
     ),
     ("ip", r"(?<![0-9])(?:[0-9]{1,3}\.){3}[0-9]{1,3}(?![0-9])", "<IP>"),
-    ("tox", r"\b(?:" + "|".join(TOX_LEXICON) + r")\b", "<TOX>"),
+    (
+        "tox",
+        r"(?<![A-Za-z0-9_])(?:" + "|".join(TOX_LEXICON) + r")(?![A-Za-z0-9_])",
+        "<TOX>",
+    ),
 )
 
 COMPILED_SCRUB_RULES: tuple[tuple[str, re.Pattern[str], str], ...] = tuple(

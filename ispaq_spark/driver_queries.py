@@ -2,7 +2,7 @@
 SQL) pairs. The library-backed queries run a library operator —
 `operators/`, `curation.py` or `functions/` — so the DuckDB oracle
 certifies the code users run, not a copy of it. The rest are catalogue
-queries: text operators that exist only here. Of the 24 queries, 14 are
+queries: text operators that exist only here. Of the 23 queries, 13 are
 library-backed and 10 are catalogue queries; queries() and
 oracle_sql() return them in file order. Those that reach no library
 function are listed in `tests/test_driver_contract.py`, which gates that
@@ -31,7 +31,7 @@ from .curation import (
     contamination_hits,
     quality_filter,
 )
-from .functions.heuristics import with_stopword_langid
+from .functions.heuristics import STOPWORD_LANG, with_heuristics
 from .operators.components import alternating_star_components
 from .operators.dedup import (
     N_MINHASH_DEFAULT,
@@ -44,7 +44,6 @@ from .operators.dedup import (
     minhash_signatures,
     shingles_of,
     signatures,
-    simhash,
     word_set,
 )
 
@@ -131,11 +130,13 @@ def _langid_sql_cascade() -> str:
 
 @qdef("langid_confusion", _langid_sql_cascade())
 def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """stopword-vote langid (the SQL-expressible twin of the pipeline's
-    classifier langid stage) aggregated into a (labeled lang x predicted
+    """stopword-vote langid (reference_impl.langid, the vote behind the
+    stopword_ratio heuristic) aggregated into a (labeled lang x predicted
     lang) confusion table."""
-    h = with_stopword_langid(t(spark, sf_dir, "documents"), "text")
-    return h.groupBy("lang", "pred_lang").agg(F.count(F.lit(1)).alias("n"))
+    h = with_heuristics(t(spark, sf_dir, "documents"), "text")
+    return h.groupBy("lang", F.col(STOPWORD_LANG).alias("pred_lang")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
 
 
 @qdef(
@@ -153,7 +154,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Dedup: MinHash / SimHash / n-gram Jaccard (training-data-pipeline layer)
+# Dedup: MinHash / n-gram Jaccard (training-data-pipeline layer)
 # ===========================================================================
 
 
@@ -186,34 +187,6 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     min), k=4 permutations — the signature stage of MinHash-LSH near-dup
     detection. Pure Catalyst: transform/slice/array_min, no Python."""
     return minhash_signatures(t(spark, sf_dir, "documents"))
-
-
-@qdef(
-    "simhash16",
-    """
-    WITH tok AS (
-      SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) AS w
-      FROM documents
-    ), h AS (
-      SELECT doc_id, (('0x' || substr(md5(w), 1, 8))::BIGINT) AS hw FROM tok
-    ), bits AS (
-      SELECT doc_id, b.b AS b,
-             sum(CASE WHEN (hw >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      FROM h CROSS JOIN (SELECT unnest(range(0, 16)) AS b) b
-      GROUP BY doc_id, b.b
-    )
-    SELECT doc_id,
-           CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END)
-                AS BIGINT) AS simhash
-    FROM bits GROUP BY doc_id
-    """,
-)
-def q_simhash16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash (16-bit) near-dup fingerprint: per distinct token a content
-    hash votes +1/-1 on each bit; the sign vector packs into an int. A
-    NULL text explodes to no tokens and so has no row, as in the oracle's
-    unnest."""
-    return simhash(t(spark, sf_dir, "documents"), bits=16)
 
 
 _JACCARD_BLOCK_ORACLE = (

@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, n-gram Jaccard.
 
 Design for 10^12 documents:
   * exact: one groupBy on the content hash with `min_by` picking the
@@ -10,8 +10,6 @@ Design for 10^12 documents:
     bucket. Candidate pairs and the Jaccard check both live inside a
     bucket, so there is no self-join and no join back to the corpus; the
     only join left is the final anti-join against the dropped ids.
-  * SimHash: relational explode + conditional agg; the bit-vote shuffle
-    carries (doc, bit, ±1) longs only.
 All hashes derive from md5 (engine-portable) — swap for xxhash64 when DuckDB
 parity is not required.
 """
@@ -245,30 +243,3 @@ def minhash_dedup(
     dup_ids = F.transform(F.filter("members", dup), lambda x: x.id)
     dups = buckets.select(F.explode(dup_ids).alias(id_col))
     return df.join(dups, id_col, "left_anti")
-
-
-def simhash(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 16
-) -> DataFrame:
-    """Per-doc SimHash fingerprint via relational bit votes."""
-    spark = df.sparkSession
-    tok = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("w"),
-    )
-    h = tok.withColumn("hw", hex_hash(F.col("w")))
-    bit_df = spark.range(0, bits).select(F.col("id").cast("int").alias("b"))
-    votes = (
-        h.crossJoin(F.broadcast(bit_df))
-        .groupBy(id_col, "b")
-        .agg(
-            F.sum(F.when(F.expr("(hw >> b) & 1") == 1, 1).otherwise(-1)).alias(
-                "s"
-            )
-        )
-    )
-    return votes.groupBy(id_col).agg(
-        F.sum(
-            F.when(F.col("s") > 0, F.expr("shiftleft(1L, b)")).otherwise(0)
-        ).alias("simhash")
-    )

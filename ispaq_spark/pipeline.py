@@ -108,72 +108,3 @@ def rollup_lineage(metrics: DataFrame) -> DataFrame:
             ),
         )
     )
-
-
-HIST_METRICS = (
-    ("stopword_ratio", 0.01),
-    ("symbol_word_ratio", 0.01),
-    ("dup_5gram_frac", 0.01),
-    ("mean_word_len", 0.5),
-    ("perplexity", 100.0),
-)
-
-
-def rollup_histograms(metrics: DataFrame) -> DataFrame:
-    """2-D histogram rollup per metric: groupBy(metric, bin).count — the PDF
-    aggregation pattern (ispaq/PDF_aggregator.py:73-108: value_counts of
-    (freq, round(power)))."""
-    stacks = []
-    for name, width in HIST_METRICS:
-        if name in metrics.columns:
-            stacks.append(
-                metrics.select(
-                    F.col("ds").alias("partition_id"),
-                    F.lit(name).alias("metricName"),
-                    (F.floor(F.col(name) / width) * width).alias("hist_bin"),
-                )
-            )
-    if not stacks:
-        raise ValueError("no histogram metrics present")
-    unioned = stacks[0]
-    for s in stacks[1:]:
-        unioned = unioned.unionByName(s)
-    return (
-        unioned.where(F.col("hist_bin").isNotNull())
-        .groupBy("partition_id", "metricName", "hist_bin")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-
-
-def metrics_eav(metrics: DataFrame) -> DataFrame:
-    """Wide -> long EAV view (ispaq sink shape, metricList2DF
-    Class-Metric.R:487-573) via the built-in unpivot."""
-    value_cols = [
-        c
-        for c in (
-            "word_count",
-            "mean_word_len",
-            "max_word_len",
-            "stopword_ratio",
-            "lang_conf",
-            "symbol_word_ratio",
-            "dup_5gram_frac",
-            "perplexity",
-            "num_pii",
-            "num_tox",
-        )
-        if c in metrics.columns
-    ]
-    wide = metrics.select(
-        F.col("url").alias("target"),
-        F.to_timestamp("ds").alias("start"),
-        (F.to_timestamp("ds") + F.expr("INTERVAL 1 DAY")).alias("end"),
-        F.col("quality_flag").alias("qualityFlag"),
-        *[F.col(c).cast("double") for c in value_cols],
-    )
-    return wide.unpivot(
-        ["target", "start", "end", "qualityFlag"],
-        value_cols,
-        "metricName",
-        "value",
-    ).select("target", "start", "end", "metricName", "value", "qualityFlag")

@@ -14,7 +14,7 @@ entry points (IRISMustangMetrics/R/ISPAQUtils.R catalog consumed by every
 ispaq module). Only the scrub and the keep decision run as JVM expressions
 in the pipeline; functions/heuristics.with_heuristics (the driver entry's
 metrics) runs heuristic_metrics through the same per-batch helper as the
-Arrow stage.
+Arrow stage, and langid's stopword vote beside it.
 """
 
 from __future__ import annotations
@@ -401,10 +401,11 @@ _STOPWORD_SETS = {lang: frozenset(STOPWORDS[lang]) for lang in LANGS}
 
 
 def langid(tokens: list[str]) -> tuple[str, int]:
-    """Stopword vote: (argmax lang, max stopword hits). Retained for the
-    stopword_ratio heuristic (the Gopher stop-word rule) and as the
-    SQL-expressible langid twin; the pipeline's pred_lang/lang_conf now
-    come from the fastText-capability classifier (score_langid)."""
+    """Stopword vote: (argmax lang, max stopword hits). The hits feed the
+    stopword_ratio heuristic (the Gopher stop-word rule); the argmax is the
+    vote that with_heuristics returns for the driver entry and the
+    langid_confusion query. The pipeline's pred_lang/lang_conf come from
+    the fastText-capability classifier (score_langid)."""
     best_lang, best_c = UNKNOWN_LANG, 0
     for lang in LANGS:  # sorted order = deterministic tie-break
         c = sum(map(_STOPWORD_SETS[lang].__contains__, tokens))

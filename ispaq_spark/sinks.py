@@ -140,19 +140,26 @@ class ParquetManifestSink(MetricSink):
 
 
 def input_fingerprints(pages: DataFrame) -> dict[str, str]:
-    """Per-day content fingerprint of the input: row count + bit_xor of
-    xxhash64(url, warc_ts). Commutative/associative, so partition order and
-    parallelism never change it."""
+    """Per-day content fingerprint of the input, ``count:hi:lo``: the row
+    count and the sums of the high and the low 32 bits of
+    xxhash64(url, warc_ts) (together, the exact sum of the hashes).
+    Commutative and associative, so partition order and parallelism never
+    change it, and unlike an XOR, equal rows do not cancel. Each sum stays
+    below 2^63, so ANSI mode cannot overflow, up to 2^31 rows a day."""
     rows = (
-        pages.withColumn("ds", F.date_format("warc_ts", "yyyy-MM-dd"))
+        pages.select(
+            F.date_format("warc_ts", "yyyy-MM-dd").alias("ds"),
+            F.xxhash64("url", "warc_ts").alias("h"),
+        )
         .groupBy("ds")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(url, warc_ts))").alias("x"),
+            F.sum(F.shiftrightunsigned("h", 32)).alias("hi"),
+            F.sum(F.col("h").bitwiseAND(0xFFFFFFFF)).alias("lo"),
         )
         .collect()
     )
-    return {r["ds"]: f"{r['n']}:{r['x']}" for r in rows}
+    return {r["ds"]: f"{r['n']}:{r['hi']}:{r['lo']}" for r in rows}
 
 
 def read_manifest(path: str) -> dict[str, str]:

@@ -170,10 +170,6 @@ def make_page(i: int, seed: int = SEED) -> dict:
     return {"url": url, "warc_ts": ts, "html": html, "text": text, "lang": lang}
 
 
-def gen_pages_local(n: int, seed: int = SEED) -> list[dict]:
-    return [make_page(i, seed) for i in range(n)]
-
-
 def pages_df(spark, n: int, seed: int = SEED, partitions: int | None = None):
     """Distributed fixture: spark.range(n) -> mapInPandas(make_page).
 

@@ -8,6 +8,13 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
+def gen_pages_local(n: int) -> list[dict]:
+    """The first ``n`` rows of ``synthesize.pages_df``, built in Python."""
+    from ispaq_spark.synthesize import make_page
+
+    return [make_page(i) for i in range(n)]
+
+
 @pytest.fixture(scope="session")
 def spark():
     from ispaq_spark.session import get_spark
@@ -51,7 +58,6 @@ def fixture_pages(spark):
 def fixture_labels(model):
     """Reference-truth labels for the same 400 pages (FIXTURES.md §1)."""
     from ispaq_spark.reference_impl import label_document
-    from ispaq_spark.synthesize import gen_pages_local
 
     out = {}
     for p in gen_pages_local(400):

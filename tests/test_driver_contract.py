@@ -35,6 +35,10 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert "keep" in df.columns
+    # the metrics and the stopword vote cross into Python once, as a batch
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert "xxhash64" not in plan and "lambdafunction" not in plan
 
 
 def _spark_round6(x: float) -> float:

@@ -1,7 +1,7 @@
 """The library is what its jobs run: every module of ispaq_spark is reached
 by a static import walk from the code users and the benchmark run, and
 every top-level function of a reached module is reached by name from that
-code, except pinned sets that may only shrink."""
+code."""
 
 from __future__ import annotations
 
@@ -20,24 +20,6 @@ ROOT_FILES = (
     + [REPO / "bench.py", REPO / "__spark_entry__.py"]
 )
 ROOT_MODULES = (f"{PKG}.request", f"{PKG}.driver_queries")
-
-# Modules no entry point imports. The set only shrinks: an entry leaves it
-# when its module is deleted or a job starts running it.
-UNREACHED = frozenset({"streaming.stream_pipeline"})
-
-
-# Top-level functions of reached modules that nothing reaches by name. The
-# set only shrinks. The two rollups are run outputs no job writes yet;
-# `gen_pages_local` is the pure-Python twin of `pages_df`, which bench.py
-# names only inside a code string it runs.
-UNREACHED_FUNCTIONS = frozenset(
-    {
-        "pipeline.metrics_eav",
-        "pipeline.rollup_histograms",
-        "synthesize.gen_pages_local",
-        "synthesize.pages_df",
-    }
-)
 
 
 def _library_modules() -> dict[str, Path]:
@@ -103,10 +85,8 @@ def test_every_library_module_is_reached_from_an_entry_point():
     leaves = {
         name for name, path in modules.items() if path.name != "__init__.py"
     }
-    unreached = {
-        name.removeprefix(f"{PKG}.") for name in leaves - _reached(modules)
-    }
-    assert unreached == UNREACHED
+    unreached = leaves - _reached(modules)
+    assert not unreached, f"unreached: {sorted(unreached)}"
 
 
 def _names(*nodes: ast.AST) -> set[str]:
@@ -128,11 +108,7 @@ def test_every_library_function_is_reached_from_an_entry_point():
     `driver_queries`. A function is reached once its name is; its body's
     identifiers then count as reached too."""
     modules = _library_modules()
-    reached_modules = {
-        name
-        for name in _reached(modules)
-        if name.removeprefix(f"{PKG}.") not in UNREACHED
-    }
+    reached_modules = _reached(modules)
     bodies: dict[str, ast.AST] = {}  # "module.function" -> def node
     names: set[str] = set()
     for path in ROOT_FILES:
@@ -155,8 +131,4 @@ def test_every_library_function_is_reached_from_an_entry_point():
             break
         for key in hit:
             names |= _names(todo.pop(key))
-    unreached = set(todo)
-    assert unreached == UNREACHED_FUNCTIONS, (
-        f"unreached, not pinned: {sorted(unreached - UNREACHED_FUNCTIONS)}; "
-        f"pinned, not unreached: {sorted(UNREACHED_FUNCTIONS - unreached)}"
-    )
+    assert not todo, f"unreached: {sorted(todo)}"

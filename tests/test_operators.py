@@ -11,7 +11,6 @@ from ispaq_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_dedup,
     minhash_signatures,
-    simhash,
 )
 
 
@@ -53,11 +52,3 @@ def test_minhash_dedup_end_to_end(corpus):
     ids = {r["doc_id"] for r in out.collect()}
     assert 0 in ids and 1 not in ids
     assert 3 in ids and 4 in ids
-
-
-def test_simhash_near_dups_close(corpus):
-    sh = {r["doc_id"]: r["simhash"] for r in simhash(corpus).collect()}
-    def hamming(a, b):
-        return bin(a ^ b).count("1")
-    assert hamming(sh[0], sh[1]) == 0
-    assert hamming(sh[0], sh[2]) <= hamming(sh[0], sh[3])

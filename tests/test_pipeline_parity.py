@@ -6,12 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from ispaq_spark.pipeline import (
-    metrics_eav,
-    rollup_histograms,
-    rollup_lineage,
-    run_pipeline,
-)
+from ispaq_spark.pipeline import rollup_lineage, run_pipeline
 from ispaq_spark.request import UserRequest, run_request
 
 
@@ -70,21 +65,6 @@ def test_lineage_rollup_sums(spark, fixture_pages, model, pipeline_rows):
     assert sum(r["docs_in"] for r in roll.values()) == 400
     for r in roll.values():
         assert r["docs_in"] == r["docs_kept"] + r["docs_dropped"] + r["docs_error"]
-
-
-def test_histogram_rollup(spark, fixture_pages, model):
-    out = run_pipeline(spark, fixture_pages, model=model)
-    hist = rollup_histograms(out).collect()
-    names = {r["metricName"] for r in hist}
-    assert "stopword_ratio" in names and "perplexity" in names
-    assert all(r["hits"] > 0 for r in hist)
-
-
-def test_eav_unpivot(spark, fixture_pages, model):
-    out = run_pipeline(spark, fixture_pages, model=model)
-    eav = metrics_eav(out)
-    per_doc = eav.groupBy("target").count().collect()
-    assert all(r["count"] == 10 for r in per_doc)  # 10 metric names
 
 
 def test_salted_run_same_result(spark, fixture_pages, model, pipeline_rows):

@@ -1,17 +1,17 @@
 """Plan once per session: a repeat with_heuristics builds no new UDF, a
-repeat with_stopword_langid no new stopword arrays, a repeat run_pipeline
-no new broadcasts; a changed model replaces its broadcast (destroying the
-old one) and is never served stale."""
+repeat run_pipeline no new broadcasts; a changed model replaces its
+broadcast (destroying the old one) and is never served stale."""
 
 from __future__ import annotations
 
+from conftest import gen_pages_local
 from pyspark import SparkContext
 from pyspark.broadcast import Broadcast
 from pyspark.sql import functions as F
 
 from ispaq_spark.pipeline import run_pipeline
 from ispaq_spark.reference_impl import extract_text, perplexity, train_lm
-from ispaq_spark.synthesize import gen_pages_local, lm_corpus
+from ispaq_spark.synthesize import lm_corpus
 
 
 def _count_calls(monkeypatch, owner, name):
@@ -38,23 +38,12 @@ def test_second_run_builds_no_heuristic_expressions(spark, monkeypatch):
     df = spark.createDataFrame([("the cat and a dog",)], "body string")
     with_heuristics(df, "body")
     assert len(built) == 1
-    assert with_heuristics(df, "body").first()["word_count"] == 5
+    row = with_heuristics(df, "body").first()
+    assert row["word_count"] == 5 and row["stopword_lang"] == "en"
     assert with_heuristics(df.withColumnRenamed("body", "t"), "t").first()[
         "max_word_len"
     ] == 3
     assert len(built) == 1
-
-
-def test_stopword_langid_reuses_stopword_arrays(spark, monkeypatch):
-    from ispaq_spark.functions.heuristics import with_stopword_langid
-
-    df = spark.createDataFrame([("the cat and a dog",)], "text string")
-    with_stopword_langid(df, "text")
-    calls = _count_calls(monkeypatch, F, "xxhash64")
-    # the only hash built is the per-token one, not the 50 stopword literals
-    out = with_stopword_langid(df, "text")
-    assert len(calls) == 1
-    assert out.first()["pred_lang"] == "en"
 
 
 def test_same_models_broadcast_once(spark, fixture_pages, model, monkeypatch):

@@ -91,19 +91,26 @@ def test_every_request_plans_one_arrow_stage(spark, request_name):
 
 
 @pytest.mark.parametrize("alias", sorted(ALIASES))
-def test_pipeline_plans_no_heuristic_lambdas(spark, alias):
+def test_pipeline_plans_no_heuristic_lambdas(spark, alias, monkeypatch):
     """The heuristics come out of the Arrow stage: no alias plans token
     hashes or per-element lambdas, and each plans exactly one
     ArrowEvalPython."""
-    from ispaq_spark.functions.heuristics import with_stopword_langid
+    from ispaq_spark.operators.dedup import minhash_signatures
     from ispaq_spark.pipeline import run_pipeline
+    from ispaq_spark.sinks import input_fingerprints
     from ispaq_spark.synthesize import default_lid_model, default_model, pages_df
 
-    # the stopword vote plans both markers, so the plan strings hold them
-    vote = plan_of(with_stopword_langid(spark.read.parquet(
-        f"{SF_DIR}/documents.parquet"), "text"))
-    assert "xxhash64" in vote and "lambdafunction" in vote
-    plan = plan_of(run_pipeline(spark, pages_df(spark, 20), alias,
+    # the sink's fingerprint aggregate plans xxhash64 and MinHash plans
+    # per-element lambdas, so the plan strings hold the two markers
+    pages, fingerprint = pages_df(spark, 20), []
+    with monkeypatch.context() as m:
+        m.setattr(type(pages), "collect",
+                  lambda df: fingerprint.append(plan_of(df)) or [])
+        input_fingerprints(pages)
+    assert "xxhash64" in fingerprint[0]
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    assert "lambdafunction" in plan_of(minhash_signatures(docs))
+    plan = plan_of(run_pipeline(spark, pages, alias,
                                 default_model(), default_lid_model()))
     assert "xxhash64" not in plan and "lambdafunction" not in plan, alias
     assert plan.count("ArrowEvalPython") == 1, alias

@@ -1,7 +1,8 @@
-"""Property-based parity: the Catalyst heuristic expressions must equal the
-pure-Python reference (reference_impl.compute_metrics) EXACTLY — same
-integers, bit-identical doubles — on arbitrary token soups, not just the
-curated fixture corpus.
+"""Property-based parity: with_heuristics must equal the pure-Python
+reference (reference_impl.compute_metrics and the stopword vote
+reference_impl.langid) EXACTLY — same integers, bit-identical doubles,
+same vote — on arbitrary token soups, not just the curated fixture
+corpus.
 
 Batched: each hypothesis example is a whole corpus, so one Spark job
 checks ~40 documents at once.
@@ -42,7 +43,7 @@ _CHECK_COLS = (
 @settings(max_examples=5, deadline=None)
 @given(corpus=_corpus)
 def test_heuristics_bitwise_parity(spark, corpus):
-    from ispaq_spark.reference_impl import compute_metrics, train_lm
+    from ispaq_spark.reference_impl import compute_metrics, langid, train_lm
 
     # model only affects perplexity, which is not among _CHECK_COLS
     dummy_model = train_lm([])
@@ -61,22 +62,4 @@ def test_heuristics_bitwise_parity(spark, corpus):
         assert got["dup_5gram_frac"] == ref.dup_5gram_frac, text
         assert got["num_pii"] == ref.num_pii, text
         assert got["num_tox"] == ref.num_tox, text
-
-
-@settings(max_examples=3, deadline=None)
-@given(corpus=_corpus)
-def test_stopword_langid_cascade_parity(spark, corpus):
-    """The pure-Catalyst stopword-vote cascade (the SQL-expressible langid
-    twin) must match reference_impl.langid exactly — argmax + tie-break."""
-    from ispaq_spark.functions.heuristics import with_stopword_langid
-    from ispaq_spark.reference_impl import langid
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus)], "doc_id long, text string"
-    )
-    rows = {
-        r["doc_id"]: r["pred_lang"]
-        for r in with_stopword_langid(df, "text").collect()
-    }
-    for i, text in enumerate(corpus):
-        assert rows[i] == langid(text.split(" "))[0], text
+        assert got["stopword_lang"] == langid(text.split(" "))[0], text

@@ -103,6 +103,20 @@ def _group_by_ds(metrics):
     return by_ds.items()
 
 
+def test_equal_rows_replaced_by_equal_rows_invalidate_partition(spark, tmp_path):
+    """A day whose rows go from (A, A) to (B, B) keeps its row count, and
+    the fingerprint's equal hashes must not cancel: the day recomputes."""
+    out = str(tmp_path / "metrics")
+    page = pages_df(spark, 1)
+    a = page.unionByName(page)
+    b = a.withColumn("url", F.concat(F.col("url"), F.lit("-b")))
+    r1 = run_resumable(spark, a, out, model=default_model())
+    r2 = run_resumable(spark, b, out, model=default_model())
+    assert r2["computed"] == r1["computed"] and len(r1["computed"]) == 1
+    got = sorted(r["url"] for r in spark.read.parquet(out).collect())
+    assert got == sorted(r["url"] for r in b.collect())
+
+
 def test_run_resumable_drives_any_sink(spark):
     model = default_model()
     pages = pages_df(spark, 200).cache()

@@ -1,9 +1,7 @@
-"""Sink-side operators: value-based row routing (partitionBy write),
-day-partition pruning on read, and the sigfig CSV sink.
+"""Sink-side operators: day-partition pruning on read and the sigfig CSV
+sink.
 
 Reference surfaces grafted:
-  * per-metricName table dispatch in the db sink (ispaq/utils.py:333-348)
-    -> partitionBy(metricName) write;
   * filename-date day pruning before read (ispaq/concierge.py:682-687,
     925-930) -> Catalyst partition pruning on a ds= partitioned table;
   * sigfig-formatted CSV (ispaq/utils.py:293-349).
@@ -11,37 +9,14 @@ Reference surfaces grafted:
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import functions as F
 
-from ispaq_spark.pipeline import metrics_eav, run_pipeline
+from ispaq_spark.pipeline import run_pipeline
 from ispaq_spark.synthesize import default_model, pages_df
 
 
 def _metrics(spark):
     return run_pipeline(spark, pages_df(spark, 300), model=default_model())
-
-
-def test_partitioned_routing_write(spark, tmp_path):
-    out = str(tmp_path / "eav")
-    eav = metrics_eav(_metrics(spark))
-    eav.write.partitionBy("metricName").mode("overwrite").parquet(out)
-
-    dirs = sorted(
-        os.path.basename(p) for p in glob.glob(os.path.join(out, "metricName=*"))
-    )
-    expect = sorted(
-        f"metricName={r['metricName']}"
-        for r in eav.select("metricName").distinct().collect()
-    )
-    assert dirs == expect
-
-    # reading one metric's directory returns exactly that metric's rows
-    one = expect[0].split("=", 1)[1]
-    got = spark.read.parquet(out).where(F.col("metricName") == one)
-    assert got.count() == eav.where(F.col("metricName") == one).count()
 
 
 def test_partition_pruning_on_read(spark, tmp_path):
